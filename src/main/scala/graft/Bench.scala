@@ -33,7 +33,7 @@ object Bench {
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
     // untimed artifact pre-warm: invoking a query fn performs its eager
-    // side work — buildOnce index stores, model training — BEFORE the
+    // side work — build-once index stores, model training — BEFORE the
     // returned plan runs, so one invocation pass moves every per-JVM
     // build out of the timed region (a fresh bench JVM otherwise pays a
     // index build inside pass 1: 190 s for q_ann_pq vs its 5 s query;

@@ -9,9 +9,8 @@ package graft
  * the same scale factor could overwrite a store mid-read (`mode(
  * "overwrite")` deletes before it writes). `createTempDirectory` never
  * returns an existing path, so every JVM builds — and reads — only its own
- * copies; within a JVM the per-site `buildOnce`/`computeIfAbsent` guards
- * still amortize the build across bench passes. The root is removed on JVM
- * exit (best-effort, like any tmp artifact).
+ * copies; within a JVM [[once]] amortizes a build across bench passes. The
+ * root is removed on JVM exit (best-effort, like any tmp artifact).
  */
 object WorkDirs {
 
@@ -28,6 +27,18 @@ object WorkDirs {
     p
   }
 
-  /** Absolute path of a named scratch dir under this JVM's unique root. */
-  def dir(name: String): String = root.resolve(name).toString
+  /** Absolute path of a named scratch dir under this JVM's unique root;
+    * characters outside `[A-Za-z0-9_]` in `name` become `_`. */
+  def dir(name: String): String =
+    root.resolve(name.replaceAll("[^A-Za-z0-9_]", "_")).toString
+
+  private val built = new Memo[String, String]
+
+  /** [[dir]]`(name)`, after `write` has filled it once in this JVM (the
+    * [[Memo]] build-once policy: a write that throws leaves the dir
+    * unmarked, so the next call writes it again). */
+  def once(name: String)(write: String => Unit): String = {
+    val d = dir(name)
+    built(d) { write(d); d }
+  }
 }

@@ -53,7 +53,9 @@ object AnnKernels {
   }
 
   /** Per-subspace nearest-codeword ids (argmax of dot − ½|c|², ties →
-    * lowest code) — [[graft.operators.PqIndex]] `codesColumn`. */
+    * lowest code) — [[graft.operators.PqIndex]] `codesColumn`. A vector
+    * shorter than m×subDim is truncated like the reference's `slice`:
+    * missing elements contribute nothing to the dot. */
   def pqEncode(v: ArrayData, books: Array[Array[Array[Float]]],
       halves: Array[Array[Double]]): ArrayData = {
     val m = books.length
@@ -64,6 +66,7 @@ object AnnKernels {
       val half = halves(s)
       val subDim = book(0).length
       val off = s * subDim
+      val n = math.min(subDim, v.numElements() - off)
       var bestScore = 0.0
       var bestJ = 0
       var j = 0
@@ -71,7 +74,7 @@ object AnnKernels {
         val cw = book(j)
         var d = 0.0
         var i = 0
-        while (i < subDim) { d += v.getFloat(off + i).toDouble * cw(i).toDouble; i += 1 }
+        while (i < n) { d += v.getFloat(off + i).toDouble * cw(i).toDouble; i += 1 }
         val score = d - half(j)
         if (j == 0 || score > bestScore) { bestScore = score; bestJ = j }
         j += 1
@@ -84,7 +87,7 @@ object AnnKernels {
 
   /** (m × k) ADC lookup tables for a query vector — entry (s, j) is the
     * subvector-s dot codeword j ([[graft.operators.PqIndex]]
-    * `adcTablesColumn`). */
+    * `adcTablesColumn`); short vectors truncate as in [[pqEncode]]. */
   def adcTables(v: ArrayData, books: Array[Array[Array[Float]]]): ArrayData = {
     val m = books.length
     val out = new Array[Any](m)
@@ -93,13 +96,14 @@ object AnnKernels {
       val book = books(s)
       val subDim = book(0).length
       val off = s * subDim
+      val n = math.min(subDim, v.numElements() - off)
       val row = new Array[Double](book.length)
       var j = 0
       while (j < book.length) {
         val cw = book(j)
         var d = 0.0
         var i = 0
-        while (i < subDim) { d += v.getFloat(off + i).toDouble * cw(i).toDouble; i += 1 }
+        while (i < n) { d += v.getFloat(off + i).toDouble * cw(i).toDouble; i += 1 }
         row(j) = d
         j += 1
       }
@@ -111,8 +115,11 @@ object AnnKernels {
 
   /** ADC score: left fold from 0.0 of tables(i)(codes(i)) in ascending i —
     * the pinned add order of the `aggregate(zip_with(...))` form. Returns
-    * null exactly where that form did (length mismatch, null element,
-    * out-of-range code). */
+    * null on a length mismatch, a null element, or a code outside
+    * [0, table size). The reference form differs outside that range: its
+    * `element_at(tb, code + 1)` throws for code −1 (and, under ANSI, for
+    * codes past the table) and indexes from the end for codes below −1.
+    * [[pqEncode]] never emits such codes. */
   def adcScore(codes: ArrayData, tables: ArrayData): java.lang.Double = {
     val nc = codes.numElements()
     val nt = tables.numElements()

@@ -94,20 +94,12 @@ object BpeTrainer {
 
   /** Training memoized per (JVM, corpus dir) — train once, consume from
     * the merges query, the encode query, and any downstream tokenizer
-    * user (the docClustersCached / IVF model-cache contract; training is
-    * deterministic, so the cache is purely an optimization). */
-  private val trainCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Seq[Merge], DataFrame)]()
+    * user. The checkpointed words frame is rebuilt under a new session. */
+  private val trained =
+    new graft.Memo[String, (Seq[Merge], DataFrame)](t => graft.Memo.stopped(t._2))
 
-  private[graft] def trainCached(spark: SparkSession, sfDir: String): (Seq[Merge], DataFrame) = {
-    val cached = trainCache.get(sfDir)
-    if (cached != null && !cached._2.sparkSession.sparkContext.isStopped) cached
-    else {
-      val fresh = trainMerges(Tables.load(spark, sfDir, "documents"), numMerges = 6)
-      trainCache.put(sfDir, fresh)
-      fresh
-    }
-  }
+  private[graft] def trainCached(spark: SparkSession, sfDir: String): (Seq[Merge], DataFrame) =
+    trained(sfDir)(trainMerges(Tables.load(spark, sfDir, "documents"), numMerges = 6))
 
   /** Query-pack adapter: first 6 merges learned from the documents
     * corpus — (merge_rank, lhs, rhs, pair_count), re-derivable from

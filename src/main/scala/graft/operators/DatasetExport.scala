@@ -125,17 +125,11 @@ object DatasetExport {
   /** Query-pack adapter: export the documents corpus as 8 shards into
     * the per-JVM scratch root (build-once) and emit the verification. */
   def exportAuditQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val out = graft.WorkDirs.dir(
-      s"export_${sfDir.replaceAll("[^A-Za-z0-9]", "_")}")
-    exportOnce.computeIfAbsent(out, { _ =>
-      exportShards(Tables.load(spark, sfDir, "documents"), out, 8)
-      java.lang.Boolean.TRUE
-    })
+    val out = graft.WorkDirs.once(s"export_$sfDir") {
+      exportShards(Tables.load(spark, sfDir, "documents"), _, 8)
+    }
     verifyExport(spark, out)
   }
-
-  private val exportOnce =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
 
   /** Query-pack adapter for the INCREMENTAL export path: the corpus
     * arrives as three disjoint micro-batches (`doc_id % 3` — the
@@ -147,15 +141,12 @@ object DatasetExport {
     * shard recompute as q_export_audit — a green row proves the
     * delta manifests merge to exactly the batch-oblivious truth. */
   def exportIncrQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val out = graft.WorkDirs.dir(
-      s"export_incr_${sfDir.replaceAll("[^A-Za-z0-9]", "_")}")
-    exportOnce.computeIfAbsent(out, { _ =>
+    val out = graft.WorkDirs.once(s"export_incr_$sfDir") { out =>
       val docs = Tables.load(spark, sfDir, "documents").select("doc_id", "text")
       (0 until 3).foreach { b =>
         appendBatch(docs.filter(pmod(col("doc_id"), lit(3L)) === b), out, 8, b)
       }
-      java.lang.Boolean.TRUE
-    })
+    }
     verifyIncremental(spark, out)
   }
 
@@ -204,12 +195,9 @@ object DatasetExport {
         (max(col("bin")) + 1L).as("n_seqs"),
         sum(col("n_tokens")).as("n_tokens"))
 
-    val out = graft.WorkDirs.dir(
-      s"export_e2e_${sfDir.replaceAll("[^A-Za-z0-9]", "_")}")
-    exportOnce.computeIfAbsent(out, { _ =>
-      exportShards(cleaned.select("doc_id", "text"), out, 8)
-      java.lang.Boolean.TRUE
-    })
+    val out = graft.WorkDirs.once(s"export_e2e_$sfDir") {
+      exportShards(cleaned.select("doc_id", "text"), _, 8)
+    }
     val audit = verifyExport(spark, out).select(
       col("shard"), col("n_docs").as("x_docs"), col("manifest_ok").as("x_ok"))
     packStats.join(audit, Seq("shard"))

@@ -147,24 +147,16 @@ object Dsir {
       .orderBy(col("dsir_micro").desc, col("doc_id").asc)
       .limit(k)
 
-  /** One fitted model per (JVM, corpus dir) — the EmbeddingPca.fitCached
-    * contract, including the size==1 oracle-generation guard. */
-  private val modelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Model]()
+  /** One fitted model per (JVM, corpus dir). */
+  private val models = new graft.Memo[String, Model]
 
   val TargetSource = "src0"
 
   def fitCached(spark: SparkSession, sfDir: String): Model =
-    modelCache.computeIfAbsent(sfDir, { _ =>
-      fit(Tables.load(spark, sfDir, "documents"), TargetSource)
-    })
+    models(sfDir)(fit(Tables.load(spark, sfDir, "documents"), TargetSource))
 
-  /** The one fitted model of this session, for oracle-SQL generation —
-    * Some only when exactly one corpus has been fitted in this JVM. */
-  def cachedModel: Option[Model] = {
-    val vs = modelCache.values()
-    if (vs.size() == 1) Some(vs.iterator().next()) else None
-  }
+  /** The one fitted model of this session, for oracle-SQL generation. */
+  def cachedModel: Option[Model] = models.only
 
   /** Query-pack adapter: the oracle-recomputable bucket count table. */
   def dsirWeightsQuery(spark: SparkSession, sfDir: String): DataFrame =

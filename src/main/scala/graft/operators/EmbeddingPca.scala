@@ -158,29 +158,18 @@ object EmbeddingPca {
   private val NComponents = 8
 
   /** One fitted model per (JVM, corpus dir) — fit once, consume from the
-    * check query, the ANN tier, and the generated oracle SQL (the
-    * IvfIndex.cachedModel contract: Verify dumps oracle_sql.json after
-    * the queries run, so the model the oracle embeds is the one that
-    * produced the results). Deterministic fitting makes the cache purely
-    * an optimization. */
-  private val modelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Model]()
+    * check query, the ANN tier, and the generated oracle SQL. */
+  private val models = new graft.Memo[String, Model]
 
   def fitCached(spark: SparkSession, sfDir: String): Model =
-    modelCache.computeIfAbsent(sfDir, { _ =>
+    models(sfDir) {
       val corpus = Tables.load(spark, sfDir, "embeddings")
       val d = corpus.select(size(col("embedding"))).head.getInt(0)
       fit(corpus, d)
-    })
+    }
 
-  /** The one fitted model of this session, for oracle-SQL generation —
-    * the IvfIndex.cachedModel contract: Some only when exactly one corpus
-    * has been fitted in this JVM, so a session touching two sfDirs can
-    * never embed the wrong corpus's component literals into the oracle. */
-  def cachedModel: Option[Model] = {
-    val vs = modelCache.values()
-    if (vs.size() == 1) Some(vs.iterator().next()) else None
-  }
+  /** The one fitted model of this session, for oracle-SQL generation. */
+  def cachedModel: Option[Model] = models.only
 
   /** Uncentered projection onto one float-rounded component — a left
     * fold in ascending dimension order, the exact double sequence the

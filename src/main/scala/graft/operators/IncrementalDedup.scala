@@ -162,8 +162,7 @@ object IncrementalDedup {
     } finally batchCached.unpersist()
   }
 
-  private val queryCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val results = graft.Memo.frames[String]
 
   /** Query-pack adapter: replay the fixture corpus as TWO batches (even
     * then odd doc ids) through the incremental pipeline against fresh
@@ -174,7 +173,7 @@ object IncrementalDedup {
     * (appendBatch settles results eagerly), so Verify and the specs can
     * re-invoke without re-appending. */
   def incrementalQuery(spark: SparkSession, sfDir: String): DataFrame =
-    queryCache.computeIfAbsent(sfDir, _ => {
+    results(sfDir) {
       val docs = graft.sources.Tables.load(spark, sfDir, "documents")
       val base = java.nio.file.Files
         .createTempDirectory("graft_incr_query").toString
@@ -183,5 +182,5 @@ object IncrementalDedup {
       val b2 = appendBatch(spark, ix, cp, docs.filter(col("doc_id") % 2 =!= 0))
       b1.unionByName(b2)
         .groupBy("doc_a", "doc_b").agg(max(col("jaccard")).as("jaccard"))
-    })
+    }
 }

@@ -359,14 +359,11 @@ object InvertedIndex {
     * probe paid on EVERY search invocation, for cells that only change
     * when the store itself is mutated — and every in-JVM mutation entry
     * point ([[buildIndex]], [[purgeIndex]], [[compactIndex]]) invalidates
-    * the entry after its write. Same per-JVM staleness contract as the
-    * registry's buildOnce discipline; delta slices are write-once dirs,
-    * so streamed probes never see a stale entry. */
-  private val metaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Map[String, Long]]()
+    * the entry after its write. Delta slices are write-once dirs, so
+    * streamed probes never see a stale entry. */
+  private val storeMetas = new graft.Memo[String, Map[String, Long]]
 
-  private[operators] def invalidateMeta(dir: String): Unit =
-    metaCache.remove(dir)
+  private[operators] def invalidateMeta(dir: String): Unit = storeMetas.remove(dir)
 
   /** The probed postings/df frames + meta scalars shared by both ranking
     * functions: (postings with tf and dl, dfs, n_docs, sum_dl). */
@@ -374,7 +371,7 @@ object InvertedIndex {
       : (DataFrame, DataFrame, Long, Long) = {
     val keys = probeKeys(spark, uniq)
     val store = spark.read.format("cellstore").load(dir)
-    val metas = metaCache.computeIfAbsent(dir, _ => readMeta(store))
+    val metas = storeMetas(dir)(readMeta(store))
     val raw = store.filter(
       col("rowKey").isInCollection(keys) &&
         (col("family") === "post" || col("family") === "df"))

@@ -143,10 +143,6 @@ object IvfBqIndex {
     PqIndex.rerankExact(cands, corpus, queries, k)
   }
 
-  /** Built code layouts memoized per corpus (write once, search many). */
-  private val indexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Rerank pool for the composed tier: [[Similarity.scaledCandidates]]'s
     * corpus-fraction discipline applied to the PROBED mass `n·nprobe/
     * nlist` (flat bq scales its pool to the whole corpus because its
@@ -164,11 +160,7 @@ object IvfBqIndex {
   def ivfbqQuery(spark: SparkSession, sfDir: String): DataFrame = {
     val emb = Tables.load(spark, sfDir, "embeddings")
     val coarse = IvfIndex.packModel(spark, sfDir)
-    val dir = indexCache.computeIfAbsent(sfDir, _ => {
-      val d = graft.WorkDirs.dir(s"ivfbq_${sfDir.replaceAll("[^A-Za-z0-9]", "_")}")
-      writeIndex(emb, coarse, d)
-      d
-    })
+    val dir = graft.WorkDirs.once(s"ivfbq_$sfDir")(writeIndex(emb, coarse, _))
     val nprobe = IvfIndex.scaledNprobe(coarse.nlist)
     val r = scaledProbedPool(
       graft.sources.Tables.rowCount(spark, sfDir, "embeddings"),

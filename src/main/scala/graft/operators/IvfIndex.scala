@@ -652,26 +652,13 @@ object IvfIndex {
   /** Trained models memoized per (corpus, nlist, iters): an IVF index is
     * BUILT once and SEARCHED many times — amortizing the k-means fit across
     * queries is the production shape (at 100 TB the model would persist
-    * next to the cell-partitioned corpus, like any index artifact).
-    * Training is deterministic, so the cached and fresh models agree. */
-  private val modelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Model]()
+    * next to the cell-partitioned corpus, like any index artifact). */
+  private val models = new graft.Memo[String, Model]
 
-  /** The one cached model of this session, if any — lets SparkEntry
-    * generate the IVF oracle SQL from the exact centroids the query used
-    * (Verify runs queries first, then collects oracleSql). */
-  def cachedModel: Option[Model] = {
-    val vs = modelCache.values()
-    if (vs.size() == 1) Some(vs.iterator().next()) else None
-  }
+  /** The one model of this session, if any — lets SparkEntry generate the
+    * IVF oracle SQL from the exact centroids the query used. */
+  def cachedModel: Option[Model] = models.only
 
-  /** Built indexes memoized like the models: write once, search many. */
-  private val indexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Query-pack adapter: train (or reuse) a small index, persist it
-    * cell-partitioned (once), search the first 5 vectors through the
-    * partition-pruned layout. */
   /** The one session model the query pack shares (same key as
     * [[ivfQuery]], so `cachedModel` stays unambiguous for the oracle
     * generators no matter which query trains first). */
@@ -681,8 +668,7 @@ object IvfIndex {
     // size is the memoized catalog count (Tables.rowCount), and the model
     // is memoized so the fit amortizes across the whole ANN query pack
     val nl = scaledNlist(Tables.rowCount(spark, sfDir, "embeddings"))
-    modelCache.computeIfAbsent(s"$sfDir#nlist=$nl#iters=2",
-      _ => train(emb, nlist = nl, iters = 2))
+    models(s"$sfDir#nlist=$nl#iters=2")(train(emb, nlist = nl, iters = 2))
   }
 
   /** Query-pack adapter: per-cluster population + cosine mass. */
@@ -701,14 +687,12 @@ object IvfIndex {
   private def packIndex(spark: SparkSession, sfDir: String): (Model, String) = {
     val emb = Tables.load(spark, sfDir, "embeddings")
     val model = packModel(spark, sfDir)
-    val dir = indexCache.computeIfAbsent(sfDir, _ => {
-      val d = graft.WorkDirs.dir(s"ivf_${sfDir.replaceAll("[^A-Za-z0-9]", "_")}")
-      writeIndex(emb, model, d)
-      d
-    })
-    (model, dir)
+    (model, graft.WorkDirs.once(s"ivf_$sfDir")(writeIndex(emb, model, _)))
   }
 
+  /** Query-pack adapter: train (or reuse) a small index, persist it
+    * cell-partitioned (once), search the first 5 vectors through the
+    * partition-pruned layout. */
   def ivfQuery(spark: SparkSession, sfDir: String): DataFrame = {
     val emb = Tables.load(spark, sfDir, "embeddings")
     val (model, dir) = packIndex(spark, sfDir)
@@ -815,33 +799,21 @@ object IvfIndex {
     }.reduce(_.unionAll(_))
   }
 
-  /** The computed curve memoized per corpus as DRIVER DATA (schema +
-    * collected rows — the curve is ≤ log₂ nlist + 1 rows): the curve is
-    * the tuning ARTIFACT — q_ivf_probe_curve materializes it,
-    * q_ivf_autotune reads the decision off it. Without the cache the
-    * autotune re-executed the whole ladder (including the scan-bound
-    * exact baseline) that the curve query had just paid for — the same
-    * build-once/consume-many contract as the model and index caches,
-    * and deterministic for the same reason. Caching ROWS (not a
-    * localCheckpoint'ed DataFrame) keeps the entry valid across session
-    * restarts in one JVM — a checkpointed plan is bound to the executors
-    * that created it, so a restart left a permanently broken cached plan. */
-  private val curveCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (org.apache.spark.sql.types.StructType,
-             Seq[org.apache.spark.sql.Row])]()
+  /** The computed curve memoized per corpus as DRIVER ROWS (≤ log₂ nlist
+    * + 1 of them): the curve is the tuning ARTIFACT — q_ivf_probe_curve
+    * materializes it, q_ivf_autotune reads the decision off it. Without
+    * the memo the autotune re-executed the whole ladder (including the
+    * scan-bound exact baseline) that the curve query had just paid for. */
+  private val curves = new graft.Memo.Collected[String]
 
   /** Query-pack adapter: the probe curve over the pack index, k = 20,
     * first 5 vectors as queries. */
   def probeCurveQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val (schema, rows) = curveCache.computeIfAbsent(sfDir, { _ =>
+    curves(spark, sfDir) {
       val emb = Tables.load(spark, sfDir, "embeddings")
       val (model, dir) = packIndex(spark, sfDir)
-      val curve =
-        probeCurve(spark, dir, emb, emb.filter(col("vec_id") < 5), model, k = 20)
-      (curve.schema, curve.collect().toSeq)
-    })
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(rows.asJava, schema)
+      probeCurve(spark, dir, emb, emb.filter(col("vec_id") < 5), model, k = 20)
+    }
   }
 
   /** Close the tuning loop [[probeCurve]] opens: pick the CHEAPEST ladder
@@ -908,16 +880,12 @@ object IvfIndex {
   final case class RebuildAudit(dir: String, rebuilt: Model, nTotal: Long,
       beforeSkewMicro: Long, beforeDrifted: Boolean)
 
-  private val rebuildAuditCache =
-    new java.util.concurrent.ConcurrentHashMap[String, RebuildAudit]()
+  private val rebuildAudits = new graft.Memo[String, RebuildAudit]
 
   /** The one rebuilt model of this session, if any — the oracle generator
     * replays the AFTER-side populations and the recall probe from these
-    * exact centroids (the [[cachedModel]] contract, after-side). */
-  def cachedRebuiltModel: Option[Model] = {
-    val vs = rebuildAuditCache.values()
-    if (vs.size() == 1) Some(vs.iterator().next().rebuilt) else None
-  }
+    * exact centroids. */
+  def cachedRebuiltModel: Option[Model] = rebuildAudits.only.map(_.rebuilt)
 
   /** Delta id offsets for the audit's skewed ingest — far above every
     * fixture's vec_id domain (scaled fixtures reach ~9e9). */
@@ -945,12 +913,11 @@ object IvfIndex {
     * Every stage is the already-verified piece; q_ivf_rebuild's oracle
     * recomputes both verdicts from the cached before/after centroids. */
   private def rebuildAudit(spark: SparkSession, sfDir: String): RebuildAudit =
-    rebuildAuditCache.computeIfAbsent(sfDir, _ => {
+    rebuildAudits(sfDir) {
       val emb = Tables.load(spark, sfDir, "embeddings")
         .select("vec_id", "embedding")
       val before = packModel(spark, sfDir)
-      val dir = graft.WorkDirs.dir(
-        s"ivf_rebuild_${sfDir.replaceAll("[^A-Za-z0-9]", "_")}")
+      val dir = graft.WorkDirs.dir(s"ivf_rebuild_$sfDir")
       writeIndex(emb, before, dir)
       val assigned = assign(emb, before)
       val donorCell = assigned.groupBy("cell").count()
@@ -964,8 +931,7 @@ object IvfIndex {
         .reduce(_ unionByName _)
       // ops-shaped ingest: stage the delta as files, stream it through
       // VectorIngest's exactly-once slice appends, drain, stop
-      val staging = graft.WorkDirs.dir(
-        s"ivf_rebuild_delta_${sfDir.replaceAll("[^A-Za-z0-9]", "_")}")
+      val staging = graft.WorkDirs.dir(s"ivf_rebuild_delta_$sfDir")
       delta.write.mode("overwrite").parquet(staging)
       val q = graft.streaming.VectorIngest.start(
         spark.readStream.schema(delta.schema).parquet(staging),
@@ -975,7 +941,7 @@ object IvfIndex {
       val (_, nTotal, skew0) = skewStats(spark, dir)
       val rebuilt = rebuildIndex(spark, dir, scaledNlist(nTotal), iters = 2)
       RebuildAudit(dir, rebuilt, nTotal, skew0, skew0 > 2000000L)
-    })
+    }
 
   /** Probe depth for the post-rebuild verification search: 2× the
     * serving default (capped at nlist). The audit's recall floor asserts

@@ -249,20 +249,13 @@ object IvfPqIndex {
   }
 
   /** Models memoized per corpus (train once, search many — the production
-    * shape; both stages are deterministic so cached ≡ fresh). */
-  private val modelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Model]()
+    * shape). */
+  private val models = new graft.Memo[String, Model]
 
-  /** The one cached model of this session, if any — lets SparkEntry emit
-    * the composed oracle SQL from the exact centroids + codebooks the query
-    * used (Verify runs queries first, then collects oracleSql). */
-  def cachedModel: Option[Model] = {
-    val vs = modelCache.values()
-    if (vs.size() == 1) Some(vs.iterator().next()) else None
-  }
-
-  private val indexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** The one model of this session, if any — lets SparkEntry emit the
+    * composed oracle SQL from the exact centroids + codebooks the query
+    * used. */
+  def cachedModel: Option[Model] = models.only
 
   /** Query-pack adapter: train (or reuse) the composed model, persist the
     * cell-partitioned code layout (once), search the first 5 vectors with
@@ -273,32 +266,22 @@ object IvfPqIndex {
     val emb = Tables.load(spark, sfDir, "embeddings")
     val nl = IvfIndex.scaledNlist(
       graft.sources.Tables.rowCount(spark, sfDir, "embeddings"))
-    val model = modelCache.computeIfAbsent(s"$sfDir#nlist=$nl#m=8#k=16",
-      _ => train(emb, nlist = nl, dim = 64, m = 8, k = 16,
-        coarseIters = 2, pqIters = 2))
-    val dir = indexCache.computeIfAbsent(sfDir, _ => {
-      val d = graft.WorkDirs.dir(s"ivfpq_${sfDir.replaceAll("[^A-Za-z0-9]", "_")}")
-      writeIndex(emb, model, d)
-      d
-    })
+    val model = models(s"$sfDir#nlist=$nl#m=8#k=16") {
+      train(emb, nlist = nl, dim = 64, m = 8, k = 16,
+        coarseIters = 2, pqIters = 2)
+    }
+    val dir = graft.WorkDirs.once(s"ivfpq_$sfDir")(writeIndex(emb, model, _))
     searchIndex(spark, dir, emb, emb.filter(col("vec_id") < 5), model,
       k = 10, nprobe = IvfIndex.scaledNprobe(nl), r = 50)
   }
 
-  /** Residual models live in their OWN cache so [[cachedModel]]'s
-    * one-model contract (the global oracle generator) stays intact. */
-  private val residualModelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Model]()
+  /** Residual models live in their OWN memo so [[cachedModel]] stays
+    * the global model's. */
+  private val residualModels = new graft.Memo[String, Model]
 
-  /** The one cached RESIDUAL model of this session, if any — twin of
+  /** The one RESIDUAL model of this session, if any — twin of
     * [[cachedModel]] for the residual oracle generator. */
-  def cachedResidualModel: Option[Model] = {
-    val vs = residualModelCache.values()
-    if (vs.size() == 1) Some(vs.iterator().next()) else None
-  }
-
-  private val residualIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  def cachedResidualModel: Option[Model] = residualModels.only
 
   /** Query-pack adapter for the RESIDUAL composed index: same corpus,
     * probe, pool, and k as [[ivfpqQuery]], but codes quantize x̂ − c and
@@ -308,14 +291,11 @@ object IvfPqIndex {
     val emb = Tables.load(spark, sfDir, "embeddings")
     val nl = IvfIndex.scaledNlist(
       graft.sources.Tables.rowCount(spark, sfDir, "embeddings"))
-    val model = residualModelCache.computeIfAbsent(s"$sfDir#res#nlist=$nl#m=8#k=16",
-      _ => train(emb, nlist = nl, dim = 64, m = 8, k = 16,
-        coarseIters = 2, pqIters = 2, residual = true))
-    val dir = residualIndexCache.computeIfAbsent(sfDir, _ => {
-      val d = graft.WorkDirs.dir(s"ivfpqres_${sfDir.replaceAll("[^A-Za-z0-9]", "_")}")
-      writeIndex(emb, model, d)
-      d
-    })
+    val model = residualModels(s"$sfDir#res#nlist=$nl#m=8#k=16") {
+      train(emb, nlist = nl, dim = 64, m = 8, k = 16,
+        coarseIters = 2, pqIters = 2, residual = true)
+    }
+    val dir = graft.WorkDirs.once(s"ivfpqres_$sfDir")(writeIndex(emb, model, _))
     searchIndex(spark, dir, emb, emb.filter(col("vec_id") < 5), model,
       k = 10, nprobe = IvfIndex.scaledNprobe(nl), r = 50)
   }

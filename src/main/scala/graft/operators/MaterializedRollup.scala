@@ -34,17 +34,12 @@ object MaterializedRollup {
 
   private val Dec = DecimalType(18, 4)
 
-  private val built =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Materialize the (l_returnflag, l_linestatus) rollup once per
     * (JVM, corpus dir), register it with the rewrite rule, and make
     * sure the rule is injected into the session. Returns its path. */
   def ensure(spark: SparkSession, sfDir: String): String =
-    built.computeIfAbsent(sfDir, { _ =>
+    WorkDirs.once(s"rollup_$sfDir") { path =>
       val li = Tables.load(spark, sfDir, "lineitem")
-      val path = WorkDirs.dir(
-        "rollup_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_"))
       li.groupBy("l_returnflag", "l_linestatus")
         .agg(
           sum(col("l_quantity").cast(Dec)).as("sum_qty_p"),
@@ -63,8 +58,7 @@ object MaterializedRollup {
         maxs = Map.empty,
         rollupPath = path))
       RollupRewrite.ensureInjected(spark)
-      path
-    })
+    }
 
   /** The base-shaped report the rule serves from the rollup. */
   def servedAggregate(spark: SparkSession, sfDir: String): DataFrame =

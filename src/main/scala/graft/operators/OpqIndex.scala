@@ -127,28 +127,18 @@ object OpqIndex {
     PqIndex.rerankExact(cands, corpus, queries, k)
   }
 
-  /** Models memoized per corpus (the [[PqIndex.pqQuery]] contract):
-    * train once, search many; deterministic fitting makes the cache
-    * purely an optimization. */
-  private val modelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Model]()
+  /** Models memoized per corpus: train once, search many. */
+  private val models = new graft.Memo[String, Model]
 
-  /** The one cached model of this session, for oracle-SQL generation
-    * (the [[IvfIndex.cachedModel]] contract: None unless exactly one
-    * corpus was fitted in this JVM, so a two-corpus session can never
-    * embed the wrong rotation into the oracle). */
-  def cachedModel: Option[Model] = {
-    val vs = modelCache.values()
-    if (vs.size() == 1) Some(vs.iterator().next()) else None
-  }
+  /** The one model of this session, for oracle-SQL generation. */
+  def cachedModel: Option[Model] = models.only
 
   /** Query-pack adapter — the q_ann_pq shape (same m/k/iters/r/k cuts)
     * with the learned rotation in front, so the two tiers' recall rows
     * isolate exactly what the rotation buys. */
   def opqQuery(spark: SparkSession, sfDir: String): DataFrame = {
     val emb = Tables.load(spark, sfDir, "embeddings")
-    val model = modelCache.computeIfAbsent(sfDir,
-      _ => train(spark, sfDir, emb))
+    val model = models(sfDir)(train(spark, sfDir, emb))
     searchWithRerank(emb, emb.filter(col("vec_id") < 5), model, k = 10, r = 50)
   }
 }

@@ -250,17 +250,11 @@ object PqIndex {
   }
 
   /** Models memoized per corpus, like IVF: train once, search many. */
-  private val modelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Codebooks]()
+  private val models = new graft.Memo[String, Codebooks]
 
-  /** The one cached model of this session, if any — lets SparkEntry emit
-    * the PQ oracle SQL from the exact codebooks the query used (Verify runs
-    * queries first, then collects oracleSql — same contract as
-    * [[IvfIndex.cachedModel]]). */
-  def cachedModel: Option[Codebooks] = {
-    val vs = modelCache.values()
-    if (vs.size() == 1) Some(vs.iterator().next()) else None
-  }
+  /** The one model of this session, if any — lets SparkEntry emit the PQ
+    * oracle SQL from the exact codebooks the query used. */
+  def cachedModel: Option[Codebooks] = models.only
 
   /** Query-pack adapter: PQ-compress the corpus, ADC-search the first 5
     * vectors with exact rerank. Training is deterministic given the seed
@@ -268,8 +262,7 @@ object PqIndex {
     * [[cachedModel]] — a full hash oracle, not rows-only. */
   def pqQuery(spark: SparkSession, sfDir: String): DataFrame = {
     val emb = Tables.load(spark, sfDir, "embeddings")
-    val model = modelCache.computeIfAbsent(s"$sfDir#m=8#k=16",
-      _ => train(emb, dim = 64, m = 8, k = 16, iters = 2))
+    val model = models(s"$sfDir#m=8#k=16")(train(emb, dim = 64, m = 8, k = 16, iters = 2))
     searchWithRerank(emb, emb.filter(col("vec_id") < 5), model, k = 10, r = 50)
   }
 }

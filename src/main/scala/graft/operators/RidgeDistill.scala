@@ -89,15 +89,10 @@ object RidgeDistill {
     def gate(i: Int): Boolean = resid(i) <= 0 && resid(i) + rowSum(i) > 0
   }
 
-  private val modelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Model]()
+  private val models = new graft.Memo[String, Model]
 
-  /** Exactly one fitted corpus in this JVM → its model (the [[Dsir]]
-    * cachedModel contract for model-dependent oracles). */
-  def cachedModel: Option[Model] = {
-    val vs = modelCache.values()
-    if (vs.size() == 1) Some(vs.iterator().next()) else None
-  }
+  /** The one fitted model of this session, for model-dependent oracles. */
+  def cachedModel: Option[Model] = models.only
 
   private def det(m: Vector[Vector[BigInt]]): BigInt =
     if (m.size == 1) m(0)(0)
@@ -142,8 +137,7 @@ object RidgeDistill {
   }
 
   private def fitFor(spark: SparkSession, sfDir: String): Model =
-    modelCache.computeIfAbsent(sfDir,
-      _ => fit(Tables.load(spark, sfDir, "documents")))
+    models(sfDir)(fit(Tables.load(spark, sfDir, "documents")))
 
   /** Query-pack adapter: per-coefficient moments, residual, and the
     * quantization-bound gate — the oracle recomputes A and b from raw

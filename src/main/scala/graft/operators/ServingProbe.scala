@@ -30,8 +30,7 @@ object ServingProbe {
   /** Default per-index recall target in micro-units: 0.9. */
   val DefaultTargetMicro = 900000L
 
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+  private val decisions = new graft.Memo[String, Int]
 
   /** The serving probe for the index root `key` at `targetMicro`,
     * computed once from `curve` — callers pass their memoized curve, so
@@ -39,9 +38,8 @@ object ServingProbe {
     * the decision never depends on which query ran first. */
   def decide(key: String, nlist: Int,
       targetMicro: Long = DefaultTargetMicro)(curve: => DataFrame): Int =
-    cache.computeIfAbsent(s"$key@t$targetMicro", _ =>
-      Integer.valueOf(IvfIndex.servingDecision(curve, nlist, targetMicro)))
-      .intValue()
+    decisions(s"$key@t$targetMicro")(
+      IvfIndex.servingDecision(curve, nlist, targetMicro))
 
   /** The probe an ORACLE replay should use for roots under `prefix`:
     * the one cached decision when it is unambiguous; the heuristic when
@@ -53,7 +51,6 @@ object ServingProbe {
     * value-level oracle/engine divergence, so the caller omits the
     * oracle entry (rows-only check) instead. */
   def oracleProbe(prefix: String, heuristic: Int): Option[Int] = {
-    import scala.jdk.CollectionConverters._
     // DISTINCT decisions, matched at the key boundary: cache keys are
     // `<name>@t<target>`, and a raw startsWith let (a) a root that is a
     // proper prefix of another ("/idx" vs "/idx2") count both roots'
@@ -62,14 +59,14 @@ object ServingProbe {
     // rows-only for no reason. A name matches `prefix` only exactly, or
     // past a ':' namespace boundary ("pack:" matches every corpus under
     // the kind — the category callers' contract).
-    val hits = cache.asScala.toSeq.collect {
+    val hits = decisions.built.collect {
       case (k, v) if {
         val name = k.lastIndexOf("@t") match {
           case -1 => k
           case i  => k.substring(0, i)
         }
         name == prefix || (prefix.endsWith(":") && name.startsWith(prefix))
-      } => v.intValue()
+      } => v
     }.distinct
     hits.size match {
       case 0 => Some(heuristic)

@@ -100,22 +100,18 @@ object SqIndex {
       .filter(col("rank") <= k)
   }
 
-  /** Models memoized per corpus; the single cached model feeds the oracle
-    * generator (same contract as [[PqIndex.cachedModel]]). */
-  private val modelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Model]()
+  /** Models memoized per corpus; the single model feeds the oracle
+    * generator. */
+  private val models = new graft.Memo[String, Model]
 
-  def cachedModel: Option[Model] = {
-    val vs = modelCache.values()
-    if (vs.size() == 1) Some(vs.iterator().next()) else None
-  }
+  def cachedModel: Option[Model] = models.only
 
   /** Query-pack adapter: SQ8-compress the corpus, search the first 5
     * vectors asymmetrically with exact rerank — same probe/pool/k as the
     * PQ twin so the two compression points compare directly. */
   def sqQuery(spark: SparkSession, sfDir: String): DataFrame = {
     val emb = Tables.load(spark, sfDir, "embeddings")
-    val model = modelCache.computeIfAbsent(sfDir, _ => train(emb))
+    val model = models(sfDir)(train(emb))
     searchWithRerank(emb, emb.filter(col("vec_id") < 5), model, k = 10, r = 50)
   }
 }

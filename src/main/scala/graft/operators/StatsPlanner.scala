@@ -57,15 +57,13 @@ object StatsPlanner {
     * pair is consulted by every join that touches it. Cache key is the
     * canonicalized analyzed plan (same source + projection ⇒ same stats),
     * so two `Tables.load` calls of the same fixture table share one pass. */
-  private val statsCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), (Long, Long)]()
+  private val stats = new graft.Memo[(String, String), (Long, Long)]
 
   private def sideStats(df: DataFrame, key: String): (Long, Long) =
-    statsCache.computeIfAbsent(
-      (df.queryExecution.analyzed.canonicalized.toString, key), { _ =>
-        val r = df.agg(count(lit(1)), approx_count_distinct(col(key), 0.05)).head
-        (r.getLong(0), math.max(1L, r.getLong(1)))
-      })
+    stats((df.queryExecution.analyzed.canonicalized.toString, key)) {
+      val r = df.agg(count(lit(1)), approx_count_distinct(col(key), 0.05)).head
+      (r.getLong(0), math.max(1L, r.getLong(1)))
+    }
 
   /** The size arithmetic, pure so the overflow regime is testable:
     * |A join B| ~ |A|*|B| / max(ndv_A, ndv_B) (TableStats.joinEstimate)

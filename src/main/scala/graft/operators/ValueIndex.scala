@@ -79,21 +79,14 @@ object ValueIndex {
       .join(candidates, "rowKey")
   }
 
-  private val builtIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Build-once base store + index for the query adapters. */
-  private def ensureStore(spark: SparkSession, sfDir: String): String = {
-    val key = sfDir.replaceAll("[^A-Za-z0-9]", "_")
-    builtIndexes.computeIfAbsent(key, _ => {
-      val d = graft.WorkDirs.dir(s"vix_$key")
+  private def ensureStore(spark: SparkSession, sfDir: String): String =
+    graft.WorkDirs.once(s"vix_$sfDir") { d =>
       CellTable.fromTable(spark, sfDir, "customer")
         .write.format("cellstore").option("buckets", "4")
         .mode("overwrite").save(s"$d/base")
       build(spark.read.format("cellstore").load(s"$d/base"), s"$d/index")
-      d
-    })
-  }
+    }
 
   private def renderCells(df: DataFrame): DataFrame =
     df.select(

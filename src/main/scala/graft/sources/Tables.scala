@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Memo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
@@ -31,12 +32,10 @@ object Tables {
     * The scale-adaptive parameter ladders consult it on every query
     * construction; without the memo each ANN tier paid a count job per
     * invocation (13 of them inside one q_ann_recall pass). */
-  private val countCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  private val counts = new Memo[String, Long]
 
   def rowCount(spark: SparkSession, sfDir: String, name: String): Long =
-    countCache.computeIfAbsent(s"$sfDir/$name",
-      _ => load(spark, sfDir, name).count())
+    counts(s"$sfDir/$name")(load(spark, sfDir, name).count())
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     if (name == "events") {
@@ -52,8 +51,7 @@ object Tables {
 
   /** Natural scan split count per (path, session parallelism), memoized —
     * a driver-side plan inspection, no job. */
-  private val scanParts =
-    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+  private val scanParts = new Memo[String, Int]
 
   /**
    * Scale-adaptive scan parallelization (round 19; the guide's "one huge
@@ -86,22 +84,25 @@ object Tables {
     * q_redact 3.1x, q_rare_ngrams 2.5x, q_ann_bq 1.9x). */
   private val HeavyRowTables = Set("documents", "embeddings")
 
-  private val byteCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  private val tableSizes = new Memo[String, Long]
 
-  /** On-disk bytes of a fixture table (file or directory of files). */
+  /** On-disk bytes of a fixture table: a file, or every regular file
+    * under a directory tree. */
   private def tableBytes(path: String): Long =
-    byteCache.computeIfAbsent(path, { _ =>
-      val f = new java.io.File(path.stripPrefix("file:"))
-      if (f.isDirectory) f.listFiles().filter(_.isFile).map(_.length).sum
-      else f.length()
-    })
+    tableSizes(path)(fileBytes(new java.io.File(path.stripPrefix("file:"))))
+
+  private[graft] def fileBytes(f: java.io.File): Long =
+    if (f.isDirectory) {
+      val children = f.listFiles()
+      if (children == null)
+        throw new java.io.IOException(s"cannot list table directory $f")
+      children.iterator.map(fileBytes).sum
+    } else f.length()
 
   private def parallelized(spark: SparkSession, path: String, name: String,
       df: DataFrame): DataFrame = {
     val target = spark.sparkContext.defaultParallelism
-    val parts = scanParts.computeIfAbsent(s"$path#$target",
-      _ => Integer.valueOf(df.rdd.getNumPartitions)).intValue()
+    val parts = scanParts(s"$path#$target")(df.rdd.getNumPartitions)
     if (parts * 2 > target) return df // properly split input: no-op
     // heavy-per-row tables redistribute whenever under-split; the
     // relational tables additionally need ≥ ~1 MB of input per core —

@@ -141,14 +141,10 @@ object VectorService {
       d.getAs[Long]("next_nlist").toInt, streams, iters))
   }
 
-  /** The computed policy rows memoized per corpus as driver data (two
-    * rows) — the serving-probe decision's build-once discipline: the
+  /** The computed policy rows memoized per corpus as driver rows: the
     * policy is consulted per maintenance cycle, not recomputed per
-    * evaluation. Deterministic (assignments under the cached pack model
-    * are). */
-  private val policyCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (org.apache.spark.sql.types.StructType,
-             Seq[org.apache.spark.sql.Row])]()
+    * evaluation. */
+  private val policies = new graft.Memo.Collected[String]
 
   /** The targetCell of q_service_policy's third row: small enough that
     * the verify-scale pack layout (nlist at the ladder MINIMUM — 500
@@ -173,7 +169,7 @@ object VectorService {
     * health numbers, and every CHOICE from the cached pack centroids, so
     * a policy regression flips a driver hash, not a log line. */
   def servicePolicyQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val (schema, rows) = policyCache.computeIfAbsent(sfDir, { _ =>
+    policies(spark, sfDir) {
       val emb = Tables.load(spark, sfDir, "embeddings")
         .select("vec_id", "embedding")
       val m = IvfIndex.packModel(spark, sfDir)
@@ -186,21 +182,15 @@ object VectorService {
             .select((col("vec_id") + lit(off)).as("vec_id"), col("embedding")))
         .reduce(_ unionByName _)
       val drifted = IvfIndex.assign(emb.unionByName(delta), m)
-      val out = rebuildPolicy(assigned, "pack")
+      rebuildPolicy(assigned, "pack")
         .unionByName(rebuildPolicy(drifted, "drifted"))
         .unionByName(rebuildPolicy(assigned, "underladdered",
           targetCell = UnderladderedTargetCell))
-      (out.schema, out.collect().toSeq)
-    })
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(rows.asJava, schema)
+    }
   }
 
-  /** The computed fold-policy rows memoized per corpus as driver data —
-    * same discipline as [[policyCache]]. */
-  private val compactPolicyQueryCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (org.apache.spark.sql.types.StructType,
-             Seq[org.apache.spark.sql.Row])]()
+  /** The computed fold-policy rows memoized per corpus as driver rows. */
+  private val compactPolicies = new graft.Memo.Collected[String]
 
   /** Query-pack adapter: the fold-decision lifecycle over an output root
     * — [[DeltaLayout.compactPolicy]] + [[DeltaLayout.compactConcatIfNeeded]]
@@ -212,9 +202,8 @@ object VectorService {
     * or doubles rows flips `n_rows` under the driver hash, and a policy
     * regression flips `compact`. */
   def compactPolicyQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val (schema, rows) = compactPolicyQueryCache.computeIfAbsent(sfDir, { _ =>
-      val tag = sfDir.replaceAll("[^A-Za-z0-9]", "_")
-      val root = graft.WorkDirs.dir(s"compactpol_$tag")
+    compactPolicies(spark, sfDir) {
+      val root = graft.WorkDirs.dir(s"compactpol_$sfDir")
       val ids = Tables.load(spark, sfDir, "embeddings").select("vec_id")
       (0 until 4).foreach { i =>
         DeltaLayout.writeSlice(
@@ -234,12 +223,9 @@ object VectorService {
         "a just-folded root must be healthy — the policy must not re-fire")
       val after = stateRow("after")
       import spark.implicits._
-      val out = Seq(before, after)
+      Seq(before, after)
         .toDF("state", "n_batch_slices", "max_slices", "compact", "n_rows")
-      (out.schema, out.collect().toSeq)
-    })
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(rows.asJava, schema)
+    }
   }
 
   // --- service lifecycle audit (q_vector_service) ----------------------
@@ -256,17 +242,12 @@ object VectorService {
       fpBeforeOk: Boolean, fpAfterOk: Boolean, fpChanged: Boolean,
       truthPairs: Seq[(Long, Long)])
 
-  private val auditCache =
-    new java.util.concurrent.ConcurrentHashMap[String, ServiceAudit]()
+  private val audits = new graft.Memo[String, ServiceAudit]
 
   /** The one service audit of this session, if any — the oracle
     * generator replays both served answer sets and both drift verdicts
-    * from these exact before/after centroids (the
-    * [[IvfIndex.cachedModel]] contract, service side). */
-  def cachedServiceAudit: Option[ServiceAudit] = {
-    val vs = auditCache.values()
-    if (vs.size() == 1) Some(vs.iterator().next()) else None
-  }
+    * from these exact before/after centroids. */
+  def cachedServiceAudit: Option[ServiceAudit] = audits.only
 
   private def skewStats(spark: SparkSession, dir: String): (Long, Long) = {
     val pops = IvfIndex.cellStats(spark, dir).collect().map(_.getLong(1))
@@ -303,12 +284,11 @@ object VectorService {
    * of ingest, fold, or serve flips the driver hash.
    */
   private def serviceAudit(spark: SparkSession, sfDir: String): ServiceAudit =
-    auditCache.computeIfAbsent(sfDir, _ => {
-      val tag = sfDir.replaceAll("[^A-Za-z0-9]", "_")
+    audits(sfDir) {
       val emb = Tables.load(spark, sfDir, "embeddings")
         .select("vec_id", "embedding")
       val before = IvfIndex.packModel(spark, sfDir)
-      val dir = graft.WorkDirs.dir(s"vecsvc_$tag")
+      val dir = graft.WorkDirs.dir(s"vecsvc_$sfDir")
       IvfIndex.writeIndex(emb, before, dir)
 
       // the skewed delta: donor cell (largest population, lowest id
@@ -322,9 +302,9 @@ object VectorService {
           assigned.filter(col("cell") === donorCell)
             .select((col("vec_id") + lit(off)).as("vec_id"), col("embedding")))
         .reduce(_ unionByName _)
-      val deltaDir = graft.WorkDirs.dir(s"vecsvc_delta_$tag")
+      val deltaDir = graft.WorkDirs.dir(s"vecsvc_delta_$sfDir")
       delta.write.mode("overwrite").parquet(deltaDir)
-      val queryDir = graft.WorkDirs.dir(s"vecsvc_queries_$tag")
+      val queryDir = graft.WorkDirs.dir(s"vecsvc_queries_$sfDir")
       emb.filter(col("vec_id") < 5).write.mode("overwrite").parquet(queryDir)
 
       // live service: ingest stream + serve stream, both ACTIVE
@@ -333,7 +313,7 @@ object VectorService {
         spark.readStream.schema(delta.schema).parquet(deltaDir),
         before, dir, checkpoint = s"$dir.ingest.ckpt")
       ingest.processAllAvailable() // delta fully ingested BEFORE serving
-      val outBefore = graft.WorkDirs.dir(s"vecsvc_out_before_$tag")
+      val outBefore = graft.WorkDirs.dir(s"vecsvc_out_before_$sfDir")
       val npBefore = IvfIndex.auditNprobe(before.nlist)
       val serve = StreamAnnServe.start(
         spark.readStream.schema(emb.schema).parquet(queryDir),
@@ -351,7 +331,7 @@ object VectorService {
 
       // serving resumes on the new generation with the new model (fresh
       // checkpoint — a new stream, not a resume of the stopped one)
-      val outAfter = graft.WorkDirs.dir(s"vecsvc_out_after_$tag")
+      val outAfter = graft.WorkDirs.dir(s"vecsvc_out_after_$sfDir")
       val serve2 = StreamAnnServe.start(
         spark.readStream.schema(emb.schema).parquet(queryDir),
         after, dir, outAfter, checkpoint = s"$outAfter.ckpt",
@@ -361,8 +341,7 @@ object VectorService {
 
       // the audit's exact truth (top-20 over the ingested corpus) is a
       // deterministic build-once artifact — pay the scan here, not in
-      // every later evaluation of the audit row (the legTruthCache
-      // discipline)
+      // every later evaluation of the audit row
       val queries = emb.filter(col("vec_id") < 5)
       val contents = IvfIndex.readIndex(spark, dir)
         .select("vec_id", "embedding")
@@ -376,7 +355,7 @@ object VectorService {
         fpAfterOk = fpA.contains(after.fingerprint),
         fpChanged = fpB != fpA,
         truthPairs = truthPairs)
-    })
+    }
 
   /** Query-pack adapter: the one-row service-lifecycle artifact — ingest
     * totals, both drift verdicts, the three fingerprint verdicts, and

@@ -19,6 +19,11 @@ class AnnKernelsSpec extends AnyFunSuite with SparkTestBase {
   private lazy val pqModel = PqIndex.train(emb, dim = 64, m = 8, k = 16, iters = 1)
   private lazy val ivfModel = IvfIndex.train(emb, nlist = 8, iters = 1)
 
+  /** The corpus plus one vector shorter than m×subDim: its tail
+    * subspaces are partial or empty, which both forms truncate. */
+  private def embWithShort: DataFrame = emb.select(col("embedding"))
+    .unionByName(Seq(Tuple1(Array.tabulate(20)(i => (i + 1) / 20f))).toDF("embedding"))
+
   private def assertSame(df: DataFrame): Unit = {
     val rows = df.collect()
     assert(rows.nonEmpty)
@@ -34,14 +39,14 @@ class AnnKernelsSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("pq_encode == nearestCode/array_sort reference, bit-exact") {
-    val n = emb.select(col("vec_id"), PqIndex.normed(col("embedding")).as("_e"))
+    val n = embWithShort.select(PqIndex.normed(col("embedding")).as("_e"))
     assertSame(n.select(
       (PqIndex.codesColumn(pqModel, col("_e")) =!=
         PqIndex.codesColumnReference(pqModel, col("_e"))).as("diff")))
   }
 
   test("adc_tables == dot-literal reference, bit-exact") {
-    val n = emb.select(PqIndex.normed(col("embedding")).as("_e"))
+    val n = embWithShort.select(PqIndex.normed(col("embedding")).as("_e"))
     assertSame(n.select(
       (PqIndex.adcTablesColumn(pqModel, col("_e")) =!=
         PqIndex.adcTablesColumnReference(pqModel, col("_e"))).as("diff")))
