@@ -1,7 +1,8 @@
 package graft
 
-import graft.model.CellTable
-import graft.operators._
+import graft.queries._
+import graft.queries.CellQueries.copyRowQuery
+import graft.queries.QueryDef.sql
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -13,6 +14,10 @@ import org.apache.spark.sql.functions._
   * 1:1 between the Spark plan and the SQL. Aggregates over floating data are
   * computed on DECIMAL(18,4) casts in BOTH engines so sums are bit-exact
   * regardless of accumulation order.
+  *
+  * Each query is declared once, as a [[graft.queries.QueryDef]] (name,
+  * builder, oracle) in its family module under `graft.queries`; this
+  * object is the index that derives both maps from those declarations.
   */
 object SparkEntry {
 
@@ -21,1066 +26,11 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     copyRowQuery(spark, "/root/testdata/sf0.001")
 
-  /** CopyRow over the customer cell table: key = custkey 42 big-endian
-    * (`\x00`×7 then 0x2A = '*'), ts override on. Output string-rendered. */
-  private def copyRowQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val cells = CellTable.fromTable(spark, sfDir, "customer")
-    CopyRow.plan(cells, "\\x00\\x00\\x00\\x00\\x00\\x00\\x00*",
-        overrideTs = true, tsToUse = 1717200000000L)
-      .select(
-        graft.functions.GraftFunctions.to_string_binary(col("rowKey")).as("row_key"),
-        col("family"),
-        col("qualifier").cast("string").as("qualifier"),
-        col("ts"),
-        col("cellType"),
-        col("value").cast("string").as("value"))
-  }
-
-  /** Cell-model scan: multi-version injection + latest-version-wins read.
-    * Version injection targets every 10th key — the numeric key recovered
-    * from the big-endian rowKey bytes, so the rule is oracle-expressible
-    * (`c_custkey % 10 = 0`) while still being computed from the cell
-    * table's own binary key like a real multi-version store would. */
-  private def cellLatestQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = CellTable.fromTable(spark, sfDir, "customer")
-    val versioned = CellTable.withExtraVersions(
-      base, pmod(CellTable.keyToLong(col("rowKey")), lit(10)) === 0, n = 2)
-    CellTable.latestVersion(versioned)
-      .select(
-        graft.functions.GraftFunctions.to_string_binary(col("rowKey")).as("row_key"),
-        col("qualifier").cast("string").as("qualifier"),
-        col("ts"),
-        col("value").cast("string").as("value"))
-  }
-
-  /** Wide-row view over the same multi-version injection as
-    * [[cellLatestQuery]]: one row per customer with the qualifier→value
-    * map under latest-version visibility — closes SURVEY §1.4's optional
-    * `Result`/family-map shape.
-    *
-    * Contract packaging: `CellTable.wideRows` keeps its MapType API for
-    * programmatic consumers, but the DECLARED query renders the map as a
-    * scalar string — unit-separator-joined `q=v` entries in the map's
-    * (qualifier-sorted) order — because the driver's oracle harness
-    * canonicalizes by sorting raw column values in pandas, which throws
-    * on map/array cells (the round-9 red row). Every declared query's
-    * output schema is atomic-only; DeclaredSchemaSpec enforces this. */
-  private def wideRowQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = CellTable.fromTable(spark, sfDir, "customer")
-    val versioned = CellTable.withExtraVersions(
-      base, pmod(CellTable.keyToLong(col("rowKey")), lit(10)) === 0, n = 2)
-    CellTable.wideRows(versioned)
-      .select(
-        graft.functions.GraftFunctions.to_string_binary(col("rowKey")).as("row_key"),
-        col("family"),
-        array_join(
-          transform(map_entries(col("columns")),
-            e => concat(e("key"), lit("="), e("value"))),
-          "\u001f").as("columns"),
-        col("n_cols"), col("ts"))
-  }
-
-  /** Wide-row CONSUMER: filter + project THROUGH the map view
-    * (`element_at(columns, 'c_mktsegment')`), proving the wide shape
-    * composes as an input to further relational work rather than being a
-    * terminal rendering. The map never reaches the output (atomic-only
-    * contract): the query keeps machinery-segment customers with negative
-    * balance and emits scalar fields pulled out of the map. */
-  private def wideFilterQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = CellTable.fromTable(spark, sfDir, "customer")
-    val versioned = CellTable.withExtraVersions(
-      base, pmod(CellTable.keyToLong(col("rowKey")), lit(10)) === 0, n = 2)
-    CellTable.wideRows(versioned)
-      // predicates stay on the rendered strings (suffix-tolerant prefix
-      // tests) so both engines evaluate the identical derivation — a
-      // numeric cast would trip ANSI on the '#v2'-suffixed versions
-      .filter(element_at(col("columns"), "c_mktsegment").startsWith("MACHINERY") &&
-        element_at(col("columns"), "c_acctbal").startsWith("-"))
-      .select(
-        graft.functions.GraftFunctions.to_string_binary(col("rowKey")).as("row_key"),
-        element_at(col("columns"), "c_name").as("name"),
-        element_at(col("columns"), "c_acctbal").as("acctbal"),
-        col("n_cols"), col("ts"))
-  }
-
-  /** TimeRange (as-of) read: versions as in [[cellLatestQuery]] plus
-    * delete markers at BaseTs+1500 on every %7 key — but read AS OF
-    * BaseTs+1200: v2 (ts+2000) does not exist yet, the markers (ts+1500)
-    * do not mask yet, so %10 keys surface v1 and everything else the
-    * base version. Time-travel resurrects pre-delete data (HBase
-    * `setTimeRange`); CellModelSpec asserts the contrast with the
-    * present-time read, where %7 rows vanish. */
-  private def cellAsOfQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = CellTable.fromTable(spark, sfDir, "customer")
-    val versioned = CellTable.withExtraVersions(
-      base, pmod(CellTable.keyToLong(col("rowKey")), lit(10)) === 0, n = 2)
-    val marked = CellTable.withDeleteMarkers(
-      versioned, pmod(CellTable.keyToLong(col("rowKey")), lit(7)) === 0,
-      lit(CellTable.BaseTs + 1500L))
-    CellTable.visibleAsOf(marked, CellTable.BaseTs + 1200L)
-      .select(
-        graft.functions.GraftFunctions.to_string_binary(col("rowKey")).as("row_key"),
-        col("qualifier").cast("string").as("qualifier"),
-        col("ts"),
-        col("value").cast("string").as("value"))
-  }
-
-  /** Column-family TTL read: at now = base+2500 with ttl = 2000, every
-    * base-timestamp cell has aged out — only the %10 keys' fresher
-    * versions survive, and a %7 marker at base+2200 masks even the
-    * newest version (HBase TTL + delete-mask interaction). */
-  private def cellTtlQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = CellTable.fromTable(spark, sfDir, "customer")
-    val versioned = CellTable.withExtraVersions(
-      base, pmod(CellTable.keyToLong(col("rowKey")), lit(10)) === 0, n = 2)
-    val marked = CellTable.withDeleteMarkers(
-      versioned, pmod(CellTable.keyToLong(col("rowKey")), lit(7)) === 0,
-      lit(CellTable.BaseTs + 2200L))
-    CellTable.visibleWithTtl(marked,
-      nowTs = CellTable.BaseTs + 2500L, ttlMillis = 2000L)
-      .select(
-        graft.functions.GraftFunctions.to_string_binary(col("rowKey")).as("row_key"),
-        col("qualifier").cast("string").as("qualifier"),
-        col("ts"),
-        col("value").cast("string").as("value"))
-  }
-
-  /** VERSIONS=2 read over the same multi-version injection: %10 keys
-    * surface v2 then v1 (ranks 1, 2), everything else its single base
-    * version at rank 1 — HBase's scan-with-VERSIONS shape. */
-  private def cellVersionsQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = CellTable.fromTable(spark, sfDir, "customer")
-    val versioned = CellTable.withExtraVersions(
-      base, pmod(CellTable.keyToLong(col("rowKey")), lit(10)) === 0, n = 2)
-    CellTable.visibleVersions(versioned, n = 2)
-      .select(
-        graft.functions.GraftFunctions.to_string_binary(col("rowKey")).as("row_key"),
-        col("qualifier").cast("string").as("qualifier"),
-        col("ts"),
-        col("value").cast("string").as("value"),
-        col("version_rank"))
-  }
-
-  /** Delete-marker visibility: versions injected as in [[cellLatestQuery]],
-    * then a DeleteColumn marker at BaseTs+1500 on every custkey%7==0
-    * coordinate. %7∧%10 rows keep their v2 Put (ts 2000 > marker); %7-only
-    * rows lose their single base Put entirely — both mask regimes in one
-    * query. */
-  private def cellVisibleQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = CellTable.fromTable(spark, sfDir, "customer")
-    val versioned = CellTable.withExtraVersions(
-      base, pmod(CellTable.keyToLong(col("rowKey")), lit(10)) === 0, n = 2)
-    val marked = CellTable.withDeleteMarkers(
-      versioned, pmod(CellTable.keyToLong(col("rowKey")), lit(7)) === 0,
-      lit(CellTable.BaseTs + 1500L))
-    CellTable.visibleLatest(marked)
-      .select(
-        graft.functions.GraftFunctions.to_string_binary(col("rowKey")).as("row_key"),
-        col("qualifier").cast("string").as("qualifier"),
-        col("ts"),
-        col("value").cast("string").as("value"))
-  }
-
-  /** Authorized scan under cell visibility labels: each qualifier carries a
-    * deterministic label expression exercising every grammar branch
-    * (plain label, '&' conjunction, '|' alternative, '!' negation, empty
-    * = public); the scan runs with auths {internal, marketing}. */
-  private def cellAclQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val cells = CellTable.fromTable(spark, sfDir, "customer")
-    val keyL = CellTable.keyToLong(col("rowKey"))
-    val q = col("qualifier").cast("string")
-    val vis = when(q === "c_acctbal", lit("finance&internal"))
-      .when(q === "c_name",
-        when(pmod(keyL, lit(3)) === 0, lit("pii"))
-          .when(pmod(keyL, lit(3)) === 1, lit("!restricted&internal"))
-          .otherwise(lit("")))
-      .when(q === "c_mktsegment", lit("marketing|finance"))
-      .otherwise(lit("!partner"))
-    Visibility.scanWithAuths(cells.withColumn("vis", vis),
-        Seq("internal", "marketing"))
-      .select(
-        graft.functions.GraftFunctions.to_string_binary(col("rowKey")).as("row_key"),
-        q.as("qualifier"),
-        col("value").cast("string").as("value"))
-  }
-
-  /** Per-family compaction (HBase column-family TTL/VERSIONS): customer
-    * cells split into a 'num' family (c_acctbal, c_nationkey) and a
-    * 'txt' family; every %5 key gets 2 extra versions. num expires below
-    * BaseTs+1500 (base cells AND v1 die — non-%5 num cells vanish
-    * entirely) with 2 versions retained; txt keeps all ages, 1 version. */
-  private def familyCompactQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = CellTable.fromTable(spark, sfDir, "customer")
-      .withColumn("family",
-        when(col("qualifier").cast("string").isin("c_acctbal", "c_nationkey"), "num")
-          .otherwise("txt"))
-    val versioned = CellTable.withExtraVersions(
-      base, pmod(CellTable.keyToLong(col("rowKey")), lit(5)) === 0, n = 2)
-    Compaction.survivorsPerFamily(versioned,
-        Map(
-          "num" -> Compaction.FamilyPolicy(maxVersions = 2,
-            ttlWatermark = CellTable.BaseTs + 1500L),
-          "txt" -> Compaction.FamilyPolicy(maxVersions = 1)),
-        default = Compaction.FamilyPolicy())
-      .select(
-        graft.functions.GraftFunctions.to_string_binary(col("rowKey")).as("row_key"),
-        col("family"),
-        col("qualifier").cast("string").as("qualifier"),
-        col("ts"),
-        col("value").cast("string").as("value"))
-  }
-
-  /** Exact balanced split points (the RegionSplitter answer) over the
-    * orders-per-customer cell population — variable per-key weights, so
-    * the rank walk is non-trivial; n=8 regions. */
-  private def regionSplitsQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val cells = spark.read.parquet(s"$sfDir/orders.parquet")
-      .select(CellTable.bigEndianKey(col("o_custkey")).as("rowKey"))
-    StoreRebalance.splitPoints(cells, 8)
-      .select(col("split_idx"),
-        graft.functions.GraftFunctions.to_string_binary(col("split_key")).as("split_key"))
-  }
-
-  /** HBase Increment over counter cells: base = one order_count counter
-    * per customer seeded at custkey%100; the delta batch derives from
-    * orders (+1 order_count per order, +floor(totalprice) to a
-    * spend_floor counter that does not exist yet — increments create it
-    * from 0). Output: the new counter versions, values decoded. */
-  private def counterIncrQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val cust = spark.read.parquet(s"$sfDir/customer.parquet")
-    val base = cust.select(
-      CellTable.bigEndianKey(col("c_custkey")).as("rowKey"),
-      lit("counters").as("family"),
-      lit("order_count").cast("binary").as("qualifier"),
-      lit(CellTable.BaseTs).as("ts"),
-      lit("Put").as("cellType"),
-      StoreCounters.encodeCounter(pmod(col("c_custkey"), lit(100))).as("value"))
-    // %9 customers' counters are DELETED before the batch: the marker
-    // masks the seed value, so those resume from 0 + delta — the HBase
-    // GET-visibility contract the raw max_by read used to violate
-    val marked = CellTable.withDeleteMarkers(
-      base,
-      pmod(CellTable.keyToLong(col("rowKey")), lit(9)) === 0,
-      lit(CellTable.BaseTs))
-    val orders = spark.read.parquet(s"$sfDir/orders.parquet")
-    val deltas = orders.select(
-        CellTable.bigEndianKey(col("o_custkey")).as("rowKey"),
-        lit("counters").as("family"),
-        lit("order_count").cast("binary").as("qualifier"),
-        lit(1L).as("delta"))
-      .unionByName(orders.select(
-        CellTable.bigEndianKey(col("o_custkey")).as("rowKey"),
-        lit("counters").as("family"),
-        lit("spend_floor").cast("binary").as("qualifier"),
-        floor(col("o_totalprice")).cast("bigint").as("delta")))
-    StoreCounters.applyIncrements(marked, deltas, CellTable.BaseTs + 1000L)
-      .select(
-        graft.functions.GraftFunctions.to_string_binary(col("rowKey")).as("row_key"),
-        col("qualifier").cast("string").as("qualifier"),
-        StoreCounters.decodeCounter(col("value")).as("value_long"))
-  }
-
-  /** checkAndPut batch over the customer cells: promote BUILDING
-    * segments (check passes only there — and NOT on %5 customers, whose
-    * c_mktsegment is delete-masked, i.e. absent), stamp a c_flag cell
-    * gated on its own absence (always applies), a doomed write checked
-    * against a wrong expected value (always rejected), and an
-    * absent-gated write on c_mktsegment that applies EXACTLY on the
-    * deleted %5 rows (a marker must read as "absent", not as the
-    * marker's empty value). Output: every mutation with its
-    * applied/rejected decision. */
-  private def checkAndPutQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = CellTable.withDeleteMarkers(
-      CellTable.fromTable(spark, sfDir, "customer"),
-      col("qualifier").cast("string") === "c_mktsegment" &&
-        pmod(CellTable.keyToLong(col("rowKey")), lit(5)) === 0,
-      lit(CellTable.BaseTs))
-    val cust = spark.read.parquet(s"$sfDir/customer.parquet")
-    def mut(target: String, value: String, check: String, expected: Option[String],
-        onlyEven: Boolean) = {
-      val src = if (onlyEven) cust.filter(pmod(col("c_custkey"), lit(2)) === 0) else cust
-      src.select(
-        CellTable.bigEndianKey(col("c_custkey")).as("rowKey"),
-        lit("customer").as("family"),
-        lit(check).cast("binary").as("checkQualifier"),
-        expected.map(e => lit(e).cast("binary")).getOrElse(lit(null).cast("binary"))
-          .as("expected"),
-        lit(target).cast("binary").as("qualifier"),
-        lit(value).cast("binary").as("value"))
-    }
-    val muts = mut("c_mktsegment", "PROMOTED", "c_mktsegment", Some("BUILDING"), onlyEven = false)
-      .unionByName(mut("c_flag", "NEW", "c_flag", None, onlyEven = false))
-      .unionByName(mut("c_name", "X", "c_nationkey", Some("no-such-value"), onlyEven = true))
-      .unionByName(mut("c_seg2", "RESET", "c_mktsegment", None, onlyEven = false))
-    StoreMutations.checkAndPut(base, muts, CellTable.BaseTs + 1000L)
-      .select(
-        graft.functions.GraftFunctions.to_string_binary(col("rowKey")).as("row_key"),
-        col("qualifier").cast("string").as("qualifier"),
-        col("value").cast("string").as("value"),
-        col("applied"))
-  }
-
-  /** Append batch: '#a' onto every %4 customer's c_name, plus '#b' for
-    * the %8 subset — multi-append coordinates concatenate in suffix byte
-    * order, so %8 rows read name#a#b. */
-  private def cellAppendQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    // %10 customers' c_name is delete-masked → their appends start from
-    // empty (deleted ≡ absent, Append creates the cell)
-    val base = CellTable.withDeleteMarkers(
-      CellTable.fromTable(spark, sfDir, "customer"),
-      col("qualifier").cast("string") === "c_name" &&
-        pmod(CellTable.keyToLong(col("rowKey")), lit(10)) === 0,
-      lit(CellTable.BaseTs))
-    val cust = spark.read.parquet(s"$sfDir/customer.parquet")
-    def app(suffix: String, mod: Int) = cust
-      .filter(pmod(col("c_custkey"), lit(mod)) === 0)
-      .select(
-        CellTable.bigEndianKey(col("c_custkey")).as("rowKey"),
-        lit("customer").as("family"),
-        lit("c_name").cast("binary").as("qualifier"),
-        lit(suffix).cast("binary").as("suffix"))
-    val appends = app("#a", 4).unionByName(app("#b", 8))
-    StoreMutations.applyAppends(base, appends, CellTable.BaseTs + 1000L)
-      .select(
-        graft.functions.GraftFunctions.to_string_binary(col("rowKey")).as("row_key"),
-        col("qualifier").cast("string").as("qualifier"),
-        col("value").cast("string").as("value"))
-  }
-
-  /** Copy verification (the reference's CopyRow closed loop): the "copy"
-    * drops every custkey%17==0 row and corrupts the c_acctbal cell of
-    * every remaining custkey%13==0 row; the diff reports exactly those
-    * cells — 4 ONLY_SOURCE cells per dropped row, 1 VALUE_MISMATCH per
-    * corrupted one. */
-  private def storeDiffQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val src = CellTable.fromTable(spark, sfDir, "customer")
-    val keyL = CellTable.keyToLong(col("rowKey"))
-    val copied = src.filter(pmod(keyL, lit(17)) =!= 0)
-      .withColumn("value",
-        when(pmod(keyL, lit(13)) === 0 &&
-            col("qualifier").cast("string") === "c_acctbal",
-          concat(col("value").cast("string"), lit("#corrupt")).cast("binary"))
-        .otherwise(col("value")))
-    StoreDiff.report(src, copied)
-      .select(
-        graft.functions.GraftFunctions.to_string_binary(col("rowKey")).as("row_key"),
-        col("qualifier").cast("string").as("qualifier"),
-        col("status"))
-  }
-
-  /** Per-doc tf-idf keywords: rational idf (N+1)/(df+1) — two IEEE ops
-    * per score, no sums, bit-exact cross-engine. Top 3 per doc. */
-  private def tfidfQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    InvertedIndex.tfidfTopTerms(docs, k = 3)
-      .select(col("doc_id"), col("term"), col("score"), col("rank"))
-  }
-
-  /** Keyword search THROUGH the inverted-index cell store: build once,
-    * probe the three query terms' buckets via pushed GETs, rank by the
-    * decimal-summed tf·idf score. The oracle replays the same ranking
-    * straight from the documents table — the index is lossless, so the
-    * two must agree exactly. */
-  private def invIndexDir(spark: SparkSession, sfDir: String): String =
-    WorkDirs.once(s"invidx_$sfDir") { dir =>
-      InvertedIndex.buildIndex(spark,
-        spark.read.parquet(s"$sfDir/documents.parquet"), dir)
-    }
-
-  private def keywordSearchQuery(spark: SparkSession, sfDir: String): DataFrame =
-    InvertedIndex.search(spark, invIndexDir(spark, sfDir),
-      Seq("merge", "sort", "window"), k = 20)
-
-  /** Wildcard (`s*`) search through the index's LEXICON family: the
-    * prefix resolves to its term set via one pushed rowKey range scan,
-    * then ranks with the same tf·idf probe as [[keywordSearchQuery]]. */
-  private def prefixSearchQuery(spark: SparkSession, sfDir: String): DataFrame =
-    InvertedIndex.prefixSearch(spark, invIndexDir(spark, sfDir), "s", k = 20)
-
-  /** BM25 through the same index store: length-normalized Okapi ranking
-    * (rational idf), same probe, same terms — compares directly with the
-    * plain tf·idf ranking of [[keywordSearchQuery]]. */
-  private def bm25SearchQuery(spark: SparkSession, sfDir: String): DataFrame =
-    // lnIdf = false: the rational-idf twin is the DRIVER-COMPARED form (a
-    // libm ln in the score would reopen cross-engine ulp drift); the
-    // production ln-idf default is spec-pinned to the same ranking order
-    InvertedIndex.searchBm25(spark, invIndexDir(spark, sfDir),
-      Seq("merge", "sort", "window"), k = 20, lnIdf = false)
-
-  /** Pseudo-relevance-feedback expansion over the same index: seeds
-    * merge/sort/window, top-5 feedback docs, 3 mined expansion terms,
-    * expanded BM25 top-20 (rational idf — the driver-compared form). */
-  private def prfSearchQuery(spark: SparkSession, sfDir: String): DataFrame =
-    InvertedIndex.searchPrf(spark, invIndexDir(spark, sfDir),
-      graft.sources.Tables.load(spark, sfDir, "documents"),
-      Seq("merge", "sort", "window"), k = 20, fbDocs = 5, fbTerms = 3,
-      lnIdf = false)
-
-  /** Exact phrase query through the index's positional layer — probes
-    * only the two terms' `pos` cells; the oracle re-derives matches by
-    * scanning adjacent token pairs in the raw text, so a green row
-    * proves the positional index is lossless. */
-  private def phraseSearchQuery(spark: SparkSession, sfDir: String): DataFrame =
-    InvertedIndex.searchPhrase(spark, invIndexDir(spark, sfDir),
-      Seq("sort", "merge"), k = 20)
-
-  /** Keyword-in-context snippets for the top phrase hits: ±3 tokens
-    * around the first "sort merge" occurrence, hit text fetched via a
-    * broadcast semi-join of the 20-row hit list. */
-  private def searchSnippetsQuery(spark: SparkSession, sfDir: String): DataFrame =
-    InvertedIndex.phraseSnippets(spark, invIndexDir(spark, sfDir),
-      graft.sources.Tables.load(spark, sfDir, "documents"),
-      Seq("sort", "merge"), k = 20, context = 3)
-
-  /** Proximity query (NEAR/5) through the same positional layer —
-    * 'merge' anchors with a 'window' occurrence within 4 tokens. */
-  private def nearSearchQuery(spark: SparkSession, sfDir: String): DataFrame =
-    InvertedIndex.searchNear(spark, invIndexDir(spark, sfDir),
-      Seq("merge", "window"), window = 5, k = 20)
-
-  /** Hybrid retrieval: RRF fusion of the BM25 lexical leg (the
-    * q_bm25_search ranking — terms merge/sort/window, rational idf) with
-    * a semantic embedding-cosine leg (corpus vectors against the vec_id-0
-    * probe, the more-like-this shape; the fixture's vec ids share the
-    * documents' key space). Both legs are top-20 lists, so the fusion
-    * join is constant work at any corpus size — the legs themselves are
-    * the measured index-probe / ANN plans. The semantic leg is SERVED
-    * FROM THE SHARED IVF INDEX ([[operators.IvfIndex.packSearch]] —
-    * partition-pruned cell layout at the serving probe) since round 15:
-    * the scan-bound exact pass survives only as q_ann_leg_recall's truth,
-    * so per-query retrieval cost is ≈√decade instead of linear. */
-  private def hybridSearchQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val lex = InvertedIndex.searchBm25(spark, invIndexDir(spark, sfDir),
-        Seq("merge", "sort", "window"), k = 20, lnIdf = false)
-      .select(col("doc_id"), col("rank"))
-    val sem = IvfIndex.packSearch(spark, sfDir, col("vec_id") === 0L, k = 20)
-      .select(col("vec_id").as("doc_id"), col("rank"))
-    HybridSearch.fuseTopK(lex, sem, k = 20)
-  }
-
-  /** RAG retrieval capstone: lexical BM25 + semantic cosine fused by RRF
-    * (the exact q_hybrid_search ranking), then MMR-diversified to 10 via
-    * [[operators.Similarity.mmrSelect]] — relevance for the greedy
-    * tradeoff is the fused-rank linear decay `(21 − rank)·50000`
-    * micro-units (integer, so the λ=0.7 argmax stays exact), diversity
-    * geometry from the embedding column. One declared query proving the
-    * retrieval tier composes end-to-end: index probe → ANN → fusion →
-    * diversity, every stage the already-verified piece. */
-  private def ragE2eQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val cand = hybridSearchQuery(spark, sfDir)
-      .select(lit(0L).as("query_id"), col("doc_id").as("vec_id"),
-        ((lit(21L) - col("rank")) * lit(50000L)).as("rel"))
-    val emb = graft.sources.Tables.load(spark, sfDir, "embeddings")
-      .select(col("vec_id"), col("embedding"))
-    Similarity.mmrSelect(cand, emb, k = 10, lambdaTenths = 7)
-      .select(col("vec_id").as("doc_id"), col("rel"), col("mmr_rank"))
-  }
-
-  /** A twin index store purged of the subject's documents (doc_id
-    * divisible by 7 — ranks 1/4/8/11/20 of the unpurged BM25 top-20, so
-    * the purge is observable in the ranking, and df/n_docs corrections
-    * shift every surviving score): built once, then
-    * [[InvertedIndex.purgeIndex]] masks the subject via tombstones +
-    * corrected stats cells. The shared [[invIndexDir]] store stays
-    * untouched. */
-  private def purgedIndexDir(spark: SparkSession, sfDir: String): String =
-    WorkDirs.once(s"invidx_purged_$sfDir") { dir =>
-      val docs = graft.sources.Tables.load(spark, sfDir, "documents")
-      InvertedIndex.buildIndex(spark, docs, dir)
-      InvertedIndex.purgeIndex(spark, dir, docs.filter(col("doc_id") % 7 === 0))
-    }
-
-  /** BM25 ranking through the PURGED index — must equal (and the oracle
-    * recomputes) the ranking of an index that never contained the
-    * subject's documents: purge propagation to derived artifacts,
-    * driver-verified. */
-  private def indexPurgeQuery(spark: SparkSession, sfDir: String): DataFrame =
-    InvertedIndex.searchBm25(spark, purgedIndexDir(spark, sfDir),
-      Seq("merge", "sort", "window"), k = 20, lnIdf = false)
-
-  /** The purged index MAJOR-COMPACTED: tombstones and superseded stats
-    * cells folded into the files, fast-path probing restored. */
-  private def compactedIndexDir(spark: SparkSession, sfDir: String): String =
-    WorkDirs.once(s"invidx_compacted_$sfDir") { dir =>
-      val docs = graft.sources.Tables.load(spark, sfDir, "documents")
-      InvertedIndex.buildIndex(spark, docs, dir)
-      InvertedIndex.purgeIndex(spark, dir, docs.filter(col("doc_id") % 7 === 0))
-      InvertedIndex.compactIndex(spark, dir)
-    }
-
-  /** The SAME ground truth as q_index_purge, served from the compacted
-    * store through the raw fast-path probe (no visibility pass left to
-    * apply) — the delete-fold is only correct if this still matches. */
-  private def indexCompactQuery(spark: SparkSession, sfDir: String): DataFrame =
-    InvertedIndex.searchBm25(spark, compactedIndexDir(spark, sfDir),
-      Seq("merge", "sort", "window"), k = 20, lnIdf = false)
-
-  /** ColumnPaginationFilter page: per customer row, qualifiers at
-    * positions [1, 3) in byte order — of (c_acctbal, c_mktsegment,
-    * c_name, c_nationkey) that is c_mktsegment and c_name. */
-  private def columnPaginateQuery(spark: SparkSession, sfDir: String): DataFrame =
-    Relational.columnPaginate(
-        CellTable.fromTable(spark, sfDir, "customer"), offset = 1, limit = 2)
-      .select(
-        graft.functions.GraftFunctions.to_string_binary(col("rowKey")).as("row_key"),
-        col("qualifier").cast("string").as("qualifier"),
-        col("ts"),
-        col("value").cast("string").as("value"))
-
-  /** CellCounter: per-(family, qualifier) cell totals, row counts, and
-    * version depth over the same multi-version injection as
-    * [[cellLatestQuery]] (%10 keys carry 3 versions). */
-  private def cellCountsQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = CellTable.fromTable(spark, sfDir, "customer")
-    val versioned = CellTable.withExtraVersions(
-      base, pmod(CellTable.keyToLong(col("rowKey")), lit(10)) === 0, n = 2)
-    StoreStats.cellCounts(versioned)
-      .select(col("family"), col("qualifier").cast("string").as("qualifier"),
-        col("n_cells"), col("n_rows"), col("max_versions"))
-  }
-
-  /** SyncTable repair closing the diff loop: diverge a copy the same way
-    * as [[storeDiffQuery]] (drop %17 rows, corrupt %13 acctbals) plus a
-    * spurious %19 `c_bogus` qualifier only the copy has, repair it back to
-    * the source, read the repaired view — repaired cells carry the sync
-    * timestamp, untouched cells their original one, the spurious
-    * qualifier is masked away. */
-  private def syncTableQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val src = CellTable.fromTable(spark, sfDir, "customer")
-    val keyL = CellTable.keyToLong(col("rowKey"))
-    val copied = src.filter(pmod(keyL, lit(17)) =!= 0)
-      .withColumn("value",
-        when(pmod(keyL, lit(13)) === 0 &&
-            col("qualifier").cast("string") === "c_acctbal",
-          concat(col("value").cast("string"), lit("#corrupt")).cast("binary"))
-        .otherwise(col("value")))
-    val bogus = src
-      .filter(pmod(keyL, lit(19)) === 0 &&
-        col("qualifier").cast("string") === "c_name")
-      .select(col("rowKey"), col("family"),
-        lit("c_bogus").cast("binary").as("qualifier"), col("ts"),
-        col("cellType"), lit("spurious").cast("binary").as("value"))
-    StoreSync.syncedView(src, copied.unionByName(bogus),
-        syncTs = 1800000000000L)
-      .select(
-        graft.functions.GraftFunctions.to_string_binary(col("rowKey")).as("row_key"),
-        col("qualifier").cast("string").as("qualifier"),
-        col("ts"),
-        col("value").cast("string").as("value"))
-  }
-
-  /** The customer cells in an 8-region layout, written once per
-    * (JVM, corpus) and shared by the store scan queries. */
-  private def regionStoreDir(spark: SparkSession, sfDir: String): String =
-    WorkDirs.once(s"cellstore_$sfDir") { dir =>
-      CellTable.writeRegionLayout(
-        CellTable.fromTable(spark, sfDir, "customer"), dir, numRegions = 8)
-    }
-
-  /** DSv2 cell-store scan (S1 region splits + S2 pushdown): range-scan
-    * keys [100, 200) of the region store through the `cellstore` source —
-    * the filter prunes regions via parquet footer stats and row groups via
-    * block stats before any row is read. */
-  private def storeScanQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = regionStoreDir(spark, sfDir)
-    def key(k: Long): Array[Byte] =
-      java.nio.ByteBuffer.allocate(8).putLong(k).array()
-    spark.read.format("cellstore").load(dir)
-      .filter(col("rowKey") >= lit(key(100L)) && col("rowKey") < lit(key(200L)))
-      .select(
-        graft.functions.GraftFunctions.to_string_binary(col("rowKey")).as("row_key"),
-        col("qualifier").cast("string").as("qualifier"),
-        col("ts"),
-        col("value").cast("string").as("value"))
-  }
-
-  /** MultiRowRangeFilter scan: two DISJOINT key ranges in one pass over
-    * the region store — the pushed `Or(And(≥,<), And(≥,<))` expands to a
-    * bounds disjunction (CellStoreSource.boundsSetOf), so only region
-    * files/row groups overlapping EITHER range are read; the gap between
-    * the ranges is never touched (asserted in CellStoreSourceSpec). */
-  private def multiRangeQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = regionStoreDir(spark, sfDir)
-    def key(k: Long): Array[Byte] =
-      java.nio.ByteBuffer.allocate(8).putLong(k).array()
-    def range(lo: Long, hi: Long) =
-      col("rowKey") >= lit(key(lo)) && col("rowKey") < lit(key(hi))
-    spark.read.format("cellstore").load(dir)
-      .filter(range(20L, 60L) || range(100L, 140L))
-      .select(
-        graft.functions.GraftFunctions.to_string_binary(col("rowKey")).as("row_key"),
-        col("qualifier").cast("string").as("qualifier"),
-        col("ts"),
-        col("value").cast("string").as("value"))
-  }
-
-  /** FuzzyRowFilter scan (two pairs, OR semantics) over the region store:
-    * pair A fixes key bytes 0-3 to zero and byte 7 to 0x2A with bytes 4-6
-    * wildcarded (custkey % 256 == 42 for any custkey < 2^32 — the
-    * "bucket byte fixed, id wildcarded" shape the HBase filter exists
-    * for); pair B fixes bytes 0-6 with byte 6 = 0x03 and wildcards byte 7
-    * (the degenerate prefix form, custkey in [768, 1024)). The derived
-    * prefix-range disjunction is pushed and prunes regions/row groups
-    * (FuzzyScanSpec asserts the pushed bounds); the byte-position match
-    * runs as a codegen'd residual. */
-  private def fuzzyScanQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = regionStoreDir(spark, sfDir)
-    def b(xs: Int*): Array[Byte] = xs.map(_.toByte).toArray
-    val pairs = Seq(
-      (b(0, 0, 0, 0, 0, 0, 0, 0x2A), b(0, 0, 0, 0, 1, 1, 1, 0)),
-      (b(0, 0, 0, 0, 0, 0, 0x03, 0), b(0, 0, 0, 0, 0, 0, 0, 1)))
-    operators.FuzzyScan
-      .fuzzyRowScan(spark.read.format("cellstore").load(dir), pairs)
-      .select(
-        graft.functions.GraftFunctions.to_string_binary(col("rowKey")).as("row_key"),
-        col("qualifier").cast("string").as("qualifier"),
-        col("ts"),
-        col("value").cast("string").as("value"))
-  }
-
-  /** MOB storage round trip: document text cells at or above 300 bytes
-    * live in the content-addressed side table ([[operators.MobStore]]),
-    * the main store keeps small ref cells; the resolved read must hand
-    * back the exact original bytes. Emitted as (key, byte length, md5,
-    * is_mob) so the oracle recomputes the digests from the raw corpus —
-    * any byte lost or duplicated in the split/resolve path flips a hash. */
-  private def mobRoundtripQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = WorkDirs.once(s"mob_$sfDir") { dir =>
-      operators.MobStore.writeMob(
-        CellTable.fromTable(spark, sfDir, "documents"), dir, threshold = 300)
-    }
-    val resolved = operators.MobStore.readResolved(spark, dir)
-      .filter(col("qualifier").cast("string") === "text")
-      .select(col("rowKey"), col("value"))
-    // is_mob comes from the STORAGE truth (the main store's cellType),
-    // not from the resolved value's length — a regression that stored
-    // every cell inline would flip these booleans and fail the hash,
-    // where a length-derived flag would tautologically agree
-    val flags = operators.MobStore.readMain(spark, dir)
-      .filter(col("qualifier").cast("string") === "text")
-      .select(col("rowKey"),
-        (col("cellType") === operators.MobStore.RefType).as("is_mob"))
-    resolved.join(flags, "rowKey")
-      .select(
-        graft.functions.GraftFunctions.to_string_binary(col("rowKey")).as("row_key"),
-        length(col("value")).cast("bigint").as("n_bytes"),
-        md5(col("value")).as("value_md5"),
-        col("is_mob"))
-  }
-
-  /** The full MOB right-to-be-forgotten lifecycle, oracle-audited: purge
-    * one subject class (doc_id ≡ 3 mod 10) with delete markers, major-
-    * compact the main store (masked refs and markers fold away), then
-    * [[operators.MobStore.reclaimMob]] physically drops the blobs only
-    * that subject reached. The emitted accounting row (visible docs, big
-    * docs, surviving distinct blobs, surviving blob bytes) is recomputed
-    * by DuckDB from the raw corpus minus the subject — a blob leaked or
-    * over-deleted anywhere in the pipeline flips a count. */
-  private def mobReclaimQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = WorkDirs.once(s"mob_gc_$sfDir") { dir =>
-      val cells = CellTable.fromTable(spark, sfDir, "documents")
-      operators.MobStore.writeMob(cells, dir, threshold = 300)
-      val markers = CellTable.withDeleteMarkers(
-          cells.filter(pmod(CellTable.keyToLong(col("rowKey")), lit(10)) === 3),
-          lit(true), lit(CellTable.BaseTs + 10))
-        .filter(col("cellType") === "Delete")
-      markers.write.format("cellstore").mode("append")
-        .option("numRegions", "8").save(s"$dir/main")
-      operators.MobStore.compactMain(spark, dir, maxVersions = 1)
-      operators.MobStore.reclaimMob(spark, dir)
-    }
-    val visTexts = CellTable.visibleLatest(
-        operators.MobStore.readResolved(spark, dir))
-      .filter(col("qualifier").cast("string") === "text")
-    val docs = visTexts.agg(
-      count(lit(1)).as("n_docs"),
-      count(when(length(col("value")) >= 300, 1)).as("n_big"))
-    val blobs = spark.read.parquet(s"$dir/mob").agg(
-      count(lit(1)).as("n_blobs"),
-      sum(col("mob_len")).as("blob_bytes"))
-    docs.crossJoin(blobs) // both sides are single aggregate rows
-  }
-
-  /** ColumnRangeFilter scan over a WIDE-ROW store: events laid out one
-    * logical row per user with one CELL per event (qualifier = 8-byte
-    * big-endian event_id), so a qualifier byte range is pushed and prunes
-    * row groups whose column slice lies outside it — the shape HBase's
-    * ColumnRangeFilter serves on wide rows (QualifierPruningSpec measures
-    * the chunk pruning; this query pins the semantics to DuckDB). */
-  private def qualRangeQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = WorkDirs.once(s"widecells_$sfDir") { dir =>
-      val ev = spark.read.parquet(s"$sfDir/events.parquet")
-      CellTable.writeRegionLayout(
-        ev.select(
-          CellTable.bigEndianKey(col("user_id")).as("rowKey"),
-          lit("events").as("family"),
-          CellTable.bigEndianKey(col("event_id")).as("qualifier"),
-          lit(CellTable.BaseTs).as("ts"),
-          lit("Put").as("cellType"),
-          col("event_type").cast("string").cast("binary").as("value")),
-        dir, numRegions = 8)
-    }
-    def k(v: Long): Array[Byte] =
-      java.nio.ByteBuffer.allocate(8).putLong(v).array()
-    spark.read.format("cellstore").load(dir)
-      .filter(col("qualifier") >= lit(k(100L)) && col("qualifier") < lit(k(700L)))
-      .select(
-        graft.functions.GraftFunctions.to_string_binary(col("rowKey")).as("row_key"),
-        graft.functions.GraftFunctions.to_string_binary(col("qualifier")).as("qualifier"),
-        col("ts"),
-        col("value").cast("string").as("value"))
-  }
-
-  /** The multimodal tier riding MOB storage, end to end in the declared
-    * surface: media payload cells MOB at a 64-byte media-family
-    * threshold, resolve back through the content-key join, and decode
-    * through the stub codec — the ORACLE IS q_media_decode's (the same
-    * stub replay over the raw corpus), so a byte lost anywhere in the
-    * split/resolve path flips a fake dimension or digest. */
-  /** The MOB-backed media store (media payload cells MOB'd at the
-    * 64-byte media-family threshold), built once per (JVM, corpus) and
-    * shared by [[mediaMobQuery]] and [[ragMediaQuery]]'s media leg. */
-  private def mediaMobDir(spark: SparkSession, sfDir: String): String =
-    WorkDirs.once(s"media_mob_$sfDir") { dir =>
-      operators.MobStore.writeMobPerFamily(
-        operators.Multimodal.mediaCells(
-          operators.Multimodal.deriveMedia(spark, sfDir)),
-        dir,
-        thresholds = Map("media" -> operators.Multimodal.MediaMobThreshold),
-        default = 1 << 20)
-    }
-
-  private def mediaMobQuery(spark: SparkSession, sfDir: String): DataFrame =
-    operators.Multimodal.decodeMeta(
-      operators.Multimodal.mediaFromCells(
-        operators.MobStore.readResolved(spark, mediaMobDir(spark, sfDir)))).toDF()
-
-  /** The media FEATURE table, resolved THROUGH the MOB store (q_media_mob's
-    * split/resolve path) and stub-encoded — shared by the media ANN
-    * index, q_media_ann, and q_rag_media's semantic leg, so a byte lost
-    * anywhere in the MOB path shifts every downstream cosine. */
-  private def mediaFeats(spark: SparkSession, sfDir: String): DataFrame =
-    operators.Multimodal.extractFeatures(
-        operators.Multimodal.mediaFromCells(
-          operators.MobStore.readResolved(spark, mediaMobDir(spark, sfDir))))
-      .select(col("media_id").as("vec_id"), col("embedding"))
-
-  /** The one media-feature IVF index per (JVM, corpus) — the
-    * [[operators.IvfIndex]] pack-index discipline applied to the
-    * multimodal tier: corpus-scaled nlist, cell-partitioned layout,
-    * model kept for the oracle generators. */
-  private val mediaIndexes = new Memo[String, (IvfIndex.Model, String)]
-
-  private def mediaIndex(spark: SparkSession, sfDir: String): (IvfIndex.Model, String) =
-    mediaIndexes(sfDir) {
-      val feats = mediaFeats(spark, sfDir)
-      val model = IvfIndex.train(feats, IvfIndex.scaledNlist(feats.count()),
-        iters = 2)
-      val dir = WorkDirs.dir(s"ivf_media_$sfDir")
-      IvfIndex.writeIndex(feats, model, dir)
-      (model, dir)
-    }
-
-  /** The one media model of this session, if any ([[Memo.only]]). */
-  private def cachedMediaModel: Option[IvfIndex.Model] = mediaIndexes.only.map(_._1)
-
-  /** QUERY-side media features: the `media_id` predicate applies BEFORE
-    * the stub-encode `mapPartitions` (and pushes through the MOB resolve
-    * join onto the main-store side), so fetching 1–3 query vectors costs
-    * 1–3 decodes — a filter placed after [[mediaFeats]] cannot cross the
-    * opaque per-partition encoder and re-encoded the whole corpus per
-    * capstone run (the sf3 slope this fixes). */
-  private def mediaQueryFeats(spark: SparkSession, sfDir: String,
-      pred: org.apache.spark.sql.Column): DataFrame =
-    operators.Multimodal.extractFeatures(
-        operators.Multimodal.mediaFromCells(
-          operators.MobStore.readResolved(spark, mediaMobDir(spark, sfDir)))
-          .filter(pred))
-      .select(col("media_id").as("vec_id"), col("embedding"))
-
-  /** The media index's serving probe — [[operators.ServingProbe.decide]]
-    * keyed `media:<corpus>`: a probe curve measured ONCE over the media
-    * index (exact baseline paid at build, like the pack curve), the
-    * autotuned decision bounded to the 2×√nlist band. Every serving
-    * probe in the engine rides this one module; `targetMicro` is the
-    * per-index recall-target knob (default 0.9 — the capstone floors
-    * are pinned at it). */
-  private def mediaServingNprobe(spark: SparkSession, sfDir: String,
-      targetMicro: Long = operators.ServingProbe.DefaultTargetMicro): Int = {
-    val (model, dir) = mediaIndex(spark, sfDir)
-    operators.ServingProbe.decide(s"media:$sfDir", model.nlist, targetMicro) {
-      val feats = mediaFeats(spark, sfDir)
-      IvfIndex.probeCurve(spark, dir, feats,
-        feats.filter(col("vec_id") < 5), model, k = 20)
-    }
-  }
-
-  /** The probe the media oracle replays at — [[operators.ServingProbe
-    * .oracleProbe]]: the served decision when unambiguous, the heuristic
-    * for sessions that never served, None (oracle omitted → rows-only)
-    * when a multi-corpus JVM holds several media serving decisions. */
-  private def mediaOracleNprobe(m: operators.IvfIndex.Model): Option[Int] =
-    operators.ServingProbe.oracleProbe("media:",
-      operators.IvfIndex.scaledNprobe(m.nlist))
-
-  /** Index-served media ANN leg: search the media-feature IVF index at
-    * the serving probe (autotuned — [[mediaServingNprobe]]); `pred`
-    * (over `media_id`) selects the queries. */
-  private def mediaIndexSearch(spark: SparkSession, sfDir: String,
-      pred: org.apache.spark.sql.Column, k: Int): DataFrame = {
-    val (model, dir) = mediaIndex(spark, sfDir)
-    IvfIndex.searchIndex(spark, dir, mediaQueryFeats(spark, sfDir, pred),
-      model, k, nprobe = mediaServingNprobe(spark, sfDir))
-  }
-
-  /** Media features piped into ANN search — SERVED FROM THE MEDIA IVF
-    * INDEX since round 15 (the multimodal → similarity composition at
-    * index scale; [[operators.Multimodal.mediaAnnQuery]] remains the
-    * scan-bound exact composition and q_ann_leg_recall's truth). */
-  private def mediaAnnQuery(spark: SparkSession, sfDir: String): DataFrame =
-    mediaIndexSearch(spark, sfDir, col("media_id") < 3, k = 10)
-
-  /** Cross-modal retrieval capstone: a TEXT query's BM25 leg (the
-    * q_bm25_search index probe) fused by RRF with a MEDIA-feature ANN leg
-    * — payloads resolved THROUGH the MOB store (q_media_mob's split/
-    * resolve path), stub-encoded to feature vectors (q_media_ann's
-    * encoder), cosine top-20 against media 0 — then MMR-diversified to 10
-    * with the MEDIA feature space as the diversity geometry. Every stage
-    * is an already-verified piece; the oracle recomputes the feature
-    * space from the RAW corpus (the shared q_media_ann replay), so a byte
-    * lost anywhere in the MOB path shifts a cosine and flips the round.
-    * Scale shape: both legs are ≤20-row lists when they reach the fusion
-    * join; corpus size enters only through the audited BM25-probe and
-    * scan-bound feature/ANN legs.
-    *
-    * INVARIANT (pinned in MediaMobSpec): the RRF join fuses the lexical
-    * leg's `doc_id` with the media leg's `media_id` — the two id domains
-    * coincide ONLY because [[operators.Multimodal.deriveMedia]] maps
-    * doc_id → media_id 1:1 (and every BM25 hit has non-empty text, so
-    * every fused candidate owns a feature vector for mmrSelect's inner
-    * joins). A deriveMedia change that breaks the 1:1 mapping would fuse
-    * unrelated entities while engine and oracle still agree — the spec
-    * fails it instead. */
-  private def ragMediaQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    // THE q_bm25_search leg, by call — the capstone reuses the verified
-    // query, so its seeds/k/idf can never silently diverge from it
-    val lex = bm25SearchQuery(spark, sfDir).select(col("doc_id"), col("rank"))
-    // the media ANN leg rides the MEDIA IVF INDEX (round 15) — the
-    // scan-bound exact pass survives only as q_ann_leg_recall's truth
-    val sem = mediaIndexSearch(spark, sfDir, col("media_id") === 0L, k = 20)
-      .select(col("vec_id").as("doc_id"), col("rank"))
-    val cand = HybridSearch.fuseTopK(lex, sem, k = 20)
-      .select(lit(0L).as("query_id"), col("doc_id").as("vec_id"),
-        ((lit(21L) - col("rank")) * lit(50000L)).as("rel"))
-    // diversity geometry from the STORED index vectors (identical values,
-    // already encoded) — re-deriving the full feature table here would
-    // re-encode the whole corpus for a ≤20-row join
-    val feats = IvfIndex.readIndex(spark, mediaIndex(spark, sfDir)._2)
-      .select(col("vec_id"), col("embedding"))
-    Similarity.mmrSelect(cand, feats, k = 10, lambdaTenths = 7)
-      .select(col("vec_id").as("doc_id"), col("rel"), col("mmr_rank"))
-  }
-
-  /** (tier, recall floor in micro-units) for each INDEX-SERVED capstone
-    * leg — the quality contract that lets the capstones drop their
-    * scan-bound exact legs: hybrid_sem (q_hybrid_search / q_rag_e2e's
-    * embedding leg through the pack IVF index), media_sem (q_rag_media's
-    * media leg through the media IVF index), media_ann (q_media_ann).
-    * Floors are comfortably under the measured values (see scaladoc of
-    * [[legRecallQuery]]) but far above a broken probe. */
-  private val LegFloors: Seq[(String, Long)] = Seq(
-    ("hybrid_sem", 500000L),
-    ("media_sem", 500000L),
-    ("media_ann", 500000L))
-
-  /** The gate's exact truth sets, memoized per corpus as DRIVER DATA
-    * (≤100 (query_id, vec_id) pairs each): the scan-bound exact passes
-    * are paid ONCE per (JVM, corpus), so the gate's steady-state cost is
-    * CONSTANT across decades while its SEMANTICS stay the true top-k
-    * recall. (A fixed md5 AUDIT PANEL — the dedupRecall device — was
-    * tried first and measured: panel-restricted truth dilutes neighbor
-    * strength as the corpus grows past the panel, and probe retention of
-    * rank-diluted neighbors decays with scale — floors tripped at sf1
-    * (0.25/0.40/0.47 vs 0.50). Per-pair sampling arguments do not
-    * transfer to top-k truth; memoization does.) */
-  private val legTruths = new Memo[String, Seq[(Long, Long)]]
-
-  /** Driver-verified recall gate for the index-served capstone legs (the
-    * AnnRecall pattern applied to the legs that replaced bruteForceTopK
-    * in round 15): each leg joins the exact scan-bound truth it
-    * displaced, recall = matches·1e6 div truth-count, and the oracle
-    * replays legs AND truths relationally — so a probe regression in any
-    * capstone flips a driver hash, not just a slow drift in fused
-    * rankings. The exact passes live HERE (paid once, as gate truth)
-    * instead of inside every capstone execution — and since round 16
-    * they are paid once PER SESSION ([[legTruths]]) and the two
-    * media truths share ONE scan (vec_id<3 at k=20, rank-cut per leg),
-    * so the gate's steady-state cost is decade-flat. */
-  private def legRecallQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    implicit val s: SparkSession = spark
-    import spark.implicits._
-    val emb = graft.sources.Tables.load(spark, sfDir, "embeddings")
-    def leg(tier: String, got: DataFrame, truthRows: Seq[(Long, Long)]): DataFrame = {
-      val floor = LegFloors.toMap.apply(tier)
-      // denominator = the truth set's OWN size, inlined as a literal —
-      // the truths are cached driver rows, so the former
-      // crossJoin(truth.agg(count)) re-counted a driver-local sequence
-      // inside the plan (the AnnRecall round-18 cut)
-      val denom = truthRows.size.toLong
-      got.select("query_id", "vec_id")
-        .join(truthRows.toDF("query_id", "vec_id"), Seq("query_id", "vec_id"))
-        .agg(count(lit(1)).as("n_matches"))
-        .select(lit(tier).as("tier"), col("n_matches"),
-          expr(s"n_matches * 1000000 div ${denom}L").as("recall_micro"),
-          (expr(s"n_matches * 1000000 div ${denom}L") >= lit(floor))
-            .as("within_floor"))
-    }
-    val truthE = legTruths(s"$sfDir#emb0") {
-      Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") === 0L), k = 20)
-        .select("query_id", "vec_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    }
-    // ONE media exact pass serves both media legs: top-20 for the three
-    // query ids, rank-cut to each leg's (queries, k)
-    val mediaTruth20 = legTruths(s"$sfDir#media3") {
-      val feats = mediaFeats(spark, sfDir)
-      Similarity.bruteForceTopK(feats, feats.filter(col("vec_id") < 3), k = 20)
-        .select(col("query_id"), col("vec_id"), col("rank")).collect()
-        .map(r => (r.getLong(0), r.getLong(1) * 1000L + r.getLong(2))).toSeq
-    }
-    def mediaTruth(pred: (Long, Long) => Boolean): Seq[(Long, Long)] =
-      mediaTruth20.map { case (q, vr) => (q, vr / 1000L, vr % 1000L) }
-        .filter { case (q, _, r) => pred(q, r) }
-        .map { case (q, v, _) => (q, v) }
-    // the three probe legs are independent Dataset constructions — built
-    // concurrently like AnnRecall's 13 tiers (round 19, guide §2.6); the
-    // assembled union (and result) is identical to the sequential build's
-    DriverPool.buildAll("q_ann_leg_recall", Seq(
-      () => leg("hybrid_sem",
-        IvfIndex.packSearch(spark, sfDir, col("vec_id") === 0L, k = 20),
-        truthE),
-      () => leg("media_sem",
-        mediaIndexSearch(spark, sfDir, col("media_id") === 0L, k = 20),
-        mediaTruth((q, _) => q == 0L)),
-      () => leg("media_ann",
-        mediaAnnQuery(spark, sfDir),
-        mediaTruth((_, r) => r <= 10L))))
-      .reduce(_ unionAll _)
-  }
-
-  /** Composite-rowkey cell table (HBase multi-component keys): lineitem's
-    * key is `l_orderkey‖l_linenumber`, each 8-byte big-endian, so a range
-    * on the LEADING component is a plain prefix byte-range scan — pushed
-    * into the parquet read like any single-component key. */
-  private def cellCompositeQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val cells = CellTable.fromTable(spark, sfDir, "lineitem")
-    def k(orderkey: Long, line: Long): Array[Byte] =
-      java.nio.ByteBuffer.allocate(16).putLong(orderkey).putLong(line).array()
-    cells
-      .filter(col("rowKey") >= lit(k(100L, 0L)) && col("rowKey") < lit(k(200L, 0L)))
-      .filter(col("qualifier").cast("string").isin("l_returnflag", "l_suppkey"))
-      .select(
-        graft.functions.GraftFunctions.to_string_binary(col("rowKey")).as("row_key"),
-        col("qualifier").cast("string").as("qualifier"),
-        col("ts"),
-        col("value").cast("string").as("value"))
-  }
-
-  /** Storage-partitioned join over two SALTED cell stores (the HBase
-    * salted-table layout): both stores bucketed `bucket(8, rowKey)` via the
-    * DSv2 writer, registered through [[graft.sources.CellStoreCatalog]] so
-    * Spark's SPJ machinery resolves the bucket transform — with
-    * `spark.sql.sources.v2.bucketing.enabled` the equi-join on rowKey
-    * needs NO exchange on either side (asserted in CellStoreJoinSpec). */
-  private def storeJoinQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = WorkDirs.once(s"spj_$sfDir") { base =>
-      val cells = CellTable.fromTable(spark, sfDir, "customer")
-      cells.write.format("cellstore")
-        .option("buckets", "8").mode("overwrite").save(s"$base/cust")
-      cells.filter(col("qualifier").cast("string") === "c_mktsegment")
-        .withColumn("family", lit("audit"))
-        .write.format("cellstore")
-        .option("buckets", "8").mode("overwrite").save(s"$base/audit")
-    }
-    spark.conf.set("spark.sql.catalog.graftcells",
-      classOf[graft.sources.CellStoreCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graftcells.root", base)
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    val a = spark.table("graftcells.cust")
-      .filter(col("qualifier").cast("string") === "c_name")
-      .select(col("rowKey"), col("value").cast("string").as("name"))
-    val b = spark.table("graftcells.audit")
-      .select(col("rowKey"), col("value").cast("string").as("segment"))
-    a.join(b, "rowKey")
-      .select(
-        graft.functions.GraftFunctions.to_string_binary(col("rowKey")).as("row_key"),
-        col("name"), col("segment"))
-  }
-
-  /** Grouped-aggregate pushdown over the cell store: per-rowKey version
-    * count and ts bounds answered by the scan's run-length partial
-    * aggregation (CellStoreGroupByScan) — the store never decodes
-    * qualifier/value bytes. The store carries injected extra versions
-    * (keys ≡ 0 mod 10) so the aggregates are non-trivial. */
-  private def storeGroupByQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = WorkDirs.once(s"cellstore_gb_$sfDir") { dir =>
-      val base = CellTable.fromTable(spark, sfDir, "customer")
-      val versioned = CellTable.withExtraVersions(
-        base, pmod(CellTable.keyToLong(col("rowKey")), lit(10)) === 0, n = 2)
-      CellTable.writeRegionLayout(versioned, dir, numRegions = 8)
-    }
-    spark.read.format("cellstore").load(dir)
-      .groupBy("rowKey")
-      .agg(
-        count(lit(1)).as("n_cells"),
-        min(col("ts")).as("min_ts"),
-        max(col("ts")).as("max_ts"))
-      .select(
-        graft.functions.GraftFunctions.to_string_binary(col("rowKey")).as("row_key"),
-        col("n_cells"), col("min_ts"), col("max_ts"))
-  }
-
-  /** Z-order layout scan: lineitem clustered on (l_partkey, l_suppkey) —
-    * a 2-dim box filter a single-key sort can't serve; parquet min/max
-    * stats prune on BOTH dimensions (ZOrderSpec measures the per-file
-    * tightness; here the oracle checks the layout loses no rows). */
-  private def zorderScanQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = WorkDirs.once(s"zorder_$sfDir") { dir =>
-      operators.ZOrderLayout.write(
-        spark.read.parquet(s"$sfDir/lineitem.parquet")
-          .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey", "l_quantity"),
-        "l_partkey", "l_suppkey", dir, numFiles = 16)
-    }
-    spark.read.parquet(dir)
-      .filter(col("l_partkey").between(50, 150) && col("l_suppkey").between(2, 6))
-  }
-
-  /** CorruptRows pipeline over the cell table: negative account balance
-    * poisons the row; output = the reference's (row_key, error) TSV record. */
-  private def corruptScanQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val cells = CellTable.fromTable(spark, sfDir, "customer")
-    val poisoned = col("qualifier").cast("string") === "c_acctbal" &&
-      col("value").cast("string").cast("double") < 0
-    CorruptScan.pipeline(cells, poisoned)
-  }
-
-  /** The engine's SQL surface driven end-to-end through `spark.sql` — the
-    * registered functions ([[graft.functions.GraftFunctionRegistry]], same
-    * table `GraftExtensions` injects), a temp view, no Column API. The
-    * codec pair round-trips every rendered key; the oracle replicates the
-    * `\xHH` rendering ([[rowKeySql]]). */
-  private def sqlSurfaceQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.GraftFunctionRegistry.registerAll(spark)
-    spark.read.parquet(s"$sfDir/orders.parquet")
-      .createOrReplaceTempView("graft_orders_v")
-    spark.sql(
-      """SELECT o_orderkey,
-        |       to_string_binary(unhex(lpad(hex(o_orderkey), 16, '0'))) AS row_key,
-        |       length(to_bytes_binary(
-        |         to_string_binary(unhex(lpad(hex(o_orderkey), 16, '0'))))) AS key_len
-        |FROM graft_orders_v
-        |WHERE o_orderkey <= 800""".stripMargin)
-  }
+  /** Every declared query, family by family. */
+  val defs: Seq[QueryDef] =
+    CellQueries.defs ++ RelationalQueries.defs ++ SearchQueries.defs ++
+      TextQueries.defs ++ DedupQueries.defs ++ AnnQueries.defs ++
+      MediaQueries.defs ++ ServiceQueries.defs
 
   /** Literal doubles exercising exactly the cross-engine float mechanics
     * the oracle strategy relies on: round(x, 6)/round(x, 9) quantization
@@ -1114,1743 +64,27 @@ object SparkEntry {
         round(col("x"), 9).as("r9"))
   }
 
+  private val castCanary = QueryDef("zz_probe_cast_canary", castCanaryQuery _, sql {
+    val vals = CanaryDoubles.zipWithIndex.map { case (d, i) =>
+      s"($i, CAST($d AS DOUBLE))"
+    }.mkString(",\n             ")
+    s"""WITH t(case_id, x) AS (VALUES
+             $vals)
+          SELECT CAST(case_id AS BIGINT) AS case_id, x,
+                 CAST(round(x, 6) AS DECIMAL(18,6)) AS dec6,
+                 round(x, 9) AS r9
+          FROM t"""
+  })
+
   /** Diagnostic twins of the `zz_probe_` oracle entries — runnable by
     * hand when attributing a float mismatch, never part of the driver's
     * correctness loop (which iterates [[queries]]). */
-  def probeQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "zz_probe_cast_canary" -> (castCanaryQuery _))
+  def probeQueries: Map[String, (SparkSession, String) => DataFrame] =
+    Map(castCanary.name -> castCanary.build)
 
   /** One entry per implemented operator from SURVEY.md §2 (+ extensions). */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // Reference-parity pack (SURVEY §7.5) — all DuckDB-checkable
-    "q_point_lookup"   -> (Relational.pointLookup _),
-    "q_range_scan"     -> (Relational.rangeScan _),
-    "q_family_filter"  -> (Relational.familyFilter _),
-    "q_first_per_group"-> (Relational.firstPerGroup _),
-    "q_latest_version" -> (Relational.latestVersion _),
-    "q_probe_join"     -> (Relational.probeJoin _),
-    "q_probe_counters" -> (Relational.probeCounters _),
-    "q_msg_normalize"  -> (Relational.msgNormalize _),
-    "q_ts_override"    -> (Relational.tsOverride _),
-    "q_families"       -> (Relational.families _),
-    "q1_agg"           -> (Relational.q1Agg _),
-    "q_join_agg"       -> (Relational.joinAgg _),
-    "q_stats_join"     -> (StatsPlanner.statsJoinQuery _),
-    "q_topk"           -> (Relational.topK _),
-    "q_anti_join"      -> (Relational.antiJoin _),
-    "q_semi_join"      -> (Relational.semiJoin _),
-    "q_json_extract"   -> (Relational.jsonExtract _),
-    "q_link_rank"      -> (LinkRank.linkRankQuery _),
-    "q_ridge_fit"      -> (RidgeDistill.ridgeFitQuery _),
-    "q_ridge_score"    -> (RidgeDistill.ridgeScoreQuery _),
-    "q_epoch_shuffle"  -> (EpochShuffle.epochShuffleQuery _),
-    "q_label_prop"     -> (LinkRank.labelPropQuery _),
-    "q_next_item"      -> (LinkRank.nextItemQuery _),
-    "q_funnel"         -> (EventAnalytics.funnelQuery _),
-    "q_retention"      -> (EventAnalytics.retentionQuery _),
-    "q_event_windows"  -> (Relational.eventWindows _),
-    "q_sliding_windows"-> (Relational.slidingWindows _),
-    "q_session_window" -> (Relational.sessionWindowQuery _),
-    "q_asof_join"      -> (AsofJoin.asofQuery _),
-    "q_interval_join"  -> (IntervalJoin.intervalQuery _),
-    "q_interval_left"  -> (IntervalJoin.intervalLeftQuery _),
-    "q_rollup"         -> (Relational.rollupAgg _),
-    "q_window"         -> (Relational.runningTotals _),
-    "q_pivot"          -> (Relational.pivotCounts _),
-    "q_set_ops"        -> (Relational.setOps _),
-    "q_percentiles"    -> (Sketches.percentilesQuery _),
-    "q_percentiles_approx" -> (Sketches.percentilesApproxCheckQuery _),
-    "q_vocab_approx"   -> (Sketches.vocabApproxCheckQuery _),
-    "q_heavy_hitters"  -> (Sketches.heavyHittersQuery _),
-    // Cell-model pack (HBase semantics; custom codec ⇒ rows-only checks)
-    "q_copy_row"       -> (copyRowQuery _),
-    "q_cell_latest"    -> (cellLatestQuery _),
-    "q_cell_asof"      -> (cellAsOfQuery _),
-    "q_cell_ttl"       -> (cellTtlQuery _),
-    "q_cell_versions"  -> (cellVersionsQuery _),
-    "q_wide_row"       -> (wideRowQuery _),
-    "q_wide_filter"    -> (wideFilterQuery _),
-    "q_cell_visible"   -> (cellVisibleQuery _),
-    "q_cell_acl"       -> (cellAclQuery _),
-    "q_cell_composite" -> (cellCompositeQuery _),
-    "q_corrupt_scan"   -> (corruptScanQuery _),
-    "q_store_scan"     -> (storeScanQuery _),
-    "q_store_join"     -> (storeJoinQuery _),
-    "q_store_groupby"  -> (storeGroupByQuery _),
-    "q_value_lookup"   -> (ValueIndex.valueLookupQuery _),
-    "q_index_served"   -> (ValueIndex.indexServedQuery _),
-    "q_store_diff"     -> (storeDiffQuery _),
-    "q_sync_table"     -> (syncTableQuery _),
-    "q_cell_counts"    -> (cellCountsQuery _),
-    "q_col_paginate"   -> (columnPaginateQuery _),
-    "q_multi_range"    -> (multiRangeQuery _),
-    "q_fuzzy_scan"     -> (fuzzyScanQuery _),
-    "q_mob_roundtrip"  -> (mobRoundtripQuery _),
-    "q_mob_reclaim"    -> (mobReclaimQuery _),
-    "q_qual_range"     -> (qualRangeQuery _),
-    "q_media_mob"      -> (mediaMobQuery _),
-    "q_tfidf"          -> (tfidfQuery _),
-    "q_strat_sample"   -> (CorpusPipeline.stratSampleQuery _),
-    "q_quality_classifier" -> (TextAnalysis.qualityClassifierQuery _),
-    "q_keyword_search" -> (keywordSearchQuery _),
-    "q_prefix_search"  -> (prefixSearchQuery _),
-    "q_bm25_search"    -> (bm25SearchQuery _),
-    "q_prf_search"     -> (prfSearchQuery _),
-    "q_search_ndcg"    -> (RankMetrics.searchNdcgQuery _),
-    "q_counter_incr"   -> (counterIncrQuery _),
-    "q_check_and_put"  -> (checkAndPutQuery _),
-    "q_region_splits"  -> (regionSplitsQuery _),
-    "q_family_compact" -> (familyCompactQuery _),
-    "q_cell_append"    -> (cellAppendQuery _),
-    "q_sql_surface"    -> (sqlSurfaceQuery _),
-    "q_zorder_scan"    -> (zorderScanQuery _),
-    // LLM-pipeline extension tier
-    "q_dedup_exact"    -> (Dedup.exactQuery _),
-    "q_minhash_pairs"  -> (Dedup.minhashQuery _),
-    "q_incr_neardup"   -> (IncrementalDedup.incrementalQuery _),
-    "q_simhash_pairs"  -> (Dedup.simhashQuery _),
-    "q_ngram_jaccard"  -> (Dedup.ngramJaccardQuery _),
-    "q_source_overlap" -> (Dedup.sourceOverlapQuery _),
-    "q_dup_clusters"   -> (Dedup.clustersQuery _),
-    "q_dedup_by_source"-> (Dedup.dedupBySourceQuery _),
-    "q_length_buckets" -> (TextAnalysis.lengthBucketsQuery _),
-    "q_rep_windows"    -> (Dedup.repeatedWindowsQuery _),
-    "q_span_dedup"     -> (Dedup.spanDedupQuery _),
-    "q_suffix_dedup"   -> (Dedup.suffixDedupQuery _),
-    "q_cluster_survivors" -> (Dedup.clusterSurvivorsQuery _),
-    "q_dedup_recall"   -> (Dedup.dedupRecallQuery _),
-    "q_novelty"        -> (Dedup.noveltyQuery _),
-    "q_split_assign"   -> (CorpusPipeline.splitAssignQuery _),
-    "q_cluster_split"  -> (CorpusPipeline.clusterSplitQuery _),
-    "q_embed_neardup"  -> (Dedup.embeddingNearDupQuery _),
-    "q_embed_clusters" -> (Dedup.embeddingClustersQuery _),
-    "q_ann_topk"       -> (Similarity.bruteForceQuery _),
-    "q_mmr_rerank"     -> (Similarity.mmrQuery _),
-    "q_ann_lsh"        -> (Similarity.lshQuery _),
-    "q_ann_multiprobe" -> (Similarity.multiProbeQuery _),
-    "q_ann_mrl"        -> (Similarity.mrlQuery _),
-    "q_ann_filtered"   -> (Similarity.filteredQuery _),
-    "q_ann_ivf"        -> (IvfIndex.ivfQuery _),
-    "q_ann_ivf_filtered" -> (IvfIndex.ivfFilteredQuery _),
-    "q_ivf_probe_curve" -> (IvfIndex.probeCurveQuery _),
-    "q_ivf_autotune"   -> (IvfIndex.autotuneQuery _),
-    "q_ivf_rebuild"    -> (IvfIndex.rebuildAuditQuery _),
-    "q_vector_service" -> (graft.streaming.VectorService.serviceAuditQuery _),
-    "q_service_policy" -> (graft.streaming.VectorService.servicePolicyQuery _),
-    "q_compact_policy" -> (graft.streaming.VectorService.compactPolicyQuery _),
-    "q_ivf_drift"      -> (IvfIndex.driftCheckQuery _),
-    "q_doc_clusters"   -> (IvfIndex.clustersQuery _),
-    "q_embed_outliers" -> (IvfIndex.outliersQuery _),
-    "q_embed_stats"    -> (EmbeddingStats.dimStatsQuery _),
-    "q_pca_check"      -> (EmbeddingPca.pcaCheckQuery _),
-    "q_ann_pca"        -> (EmbeddingPca.annPcaQuery _),
-    "q_ann_pq"         -> (PqIndex.pqQuery _),
-    "q_ann_opq"        -> (OpqIndex.opqQuery _),
-    "q_ann_bq"         -> (BqIndex.bqQuery _),
-    "q_ann_ivf_bq"     -> (IvfBqIndex.ivfbqQuery _),
-    "q_ann_ivfpq"      -> (IvfPqIndex.ivfpqQuery _),
-    "q_ann_ivfpq_res"  -> (IvfPqIndex.ivfpqResidualQuery _),
-    "q_ann_sq"         -> (SqIndex.sqQuery _),
-    "q_ann_recall"     -> (AnnRecall.recallQuery _),
-    "q_sessionize"     -> (graft.streaming.Sessionize.sessionQuery _),
-    "q_text_stats"     -> (TextAnalysis.textStatsQuery _),
-    "q_chunk_docs"     -> (TextAnalysis.chunkQuery _),
-    "q_winnow"         -> (TextAnalysis.winnowQuery _),
-    "q_corpus_stats"   -> (TextAnalysis.corpusStatsQuery _),
-    "q_hard_negatives" -> (Similarity.hardNegativesQuery _),
-    "q_token_counts"   -> (TextAnalysis.tokenCountsQuery _),
-    "q_lang_id"        -> (TextAnalysis.langIdQuery _),
-    "q_vocab"          -> (TextAnalysis.vocabQuery _),
-    "q_quality"        -> (TextAnalysis.qualityQuery _),
-    "q_fingerprint"    -> (TextAnalysis.fingerprintQuery _),
-    "q_clean_corpus"   -> (CorpusPipeline.cleanQuery _),
-    "q_source_cap"     -> (CorpusPipeline.sourceCapQuery _),
-    "q_mix_sample"     -> (CorpusPipeline.mixSampleQuery _),
-    "q_mix_schedule"   -> (CorpusPipeline.mixScheduleQuery _),
-    "q_corpus_diff"    -> (CorpusDiff.diffQuery _),
-    "q_temp_sample"    -> (CorpusPipeline.tempSampleQuery _),
-    "q_shard_assign"   -> (CorpusPipeline.shardQuery _),
-    "q_weighted_sample" -> (CorpusPipeline.weightedSampleQuery _),
-    "q_dsir_weights"   -> (Dsir.dsirWeightsQuery _),
-    "q_dsir_select"    -> (Dsir.dsirSelectQuery _),
-    "q_rollup_served"  -> (MaterializedRollup.rollupServedQuery _),
-    "q_ppl_buckets"    -> (TextAnalysis.pplBucketsQuery _),
-    "q_rare_ngrams"    -> (Dedup.rareGramsQuery _),
-    "q_phrase_search"  -> (phraseSearchQuery _),
-    "q_near_search"    -> (nearSearchQuery _),
-    "q_search_snippets" -> (searchSnippetsQuery _),
-    "q_hybrid_search"  -> (hybridSearchQuery _),
-    "q_rag_e2e"        -> (ragE2eQuery _),
-    "q_index_purge"    -> (indexPurgeQuery _),
-    "q_index_compact"  -> (indexCompactQuery _),
-    "q_sketch_union"   -> (Sketches.sketchUnionCheckQuery _),
-    "q_table_stats"    -> (TableStats.tableStatsQuery _),
-    "q_corpus_drift"   -> (DriftMonitor.corpusDriftQuery _),
-    "q_join_estimate"  -> (TableStats.joinEstimateQuery _),
-    "q_purge_audit"    -> (Governance.purgeAuditQuery _),
-    "q_export_audit"   -> (DatasetExport.exportAuditQuery _),
-    "q_export_incr"    -> (DatasetExport.exportIncrQuery _),
-    "q_corpus_export_e2e" -> (DatasetExport.corpusExportE2eQuery _),
-    "q_theta_overlap"  -> (Sketches.thetaOverlapCheckQuery _),
-    "q_bpe_merges"     -> (BpeTrainer.bpeMergesQuery _),
-    "q_bpe_encode"     -> (BpeTrainer.bpeEncodeQuery _),
-    "q_bpe_fertility"  -> (BpeTrainer.bpeFertilityQuery _),
-    "q_decontam"       -> (CorpusPipeline.decontamQuery _),
-    "q_sem_decontam"   -> (CorpusPipeline.semDecontamQuery _),
-    "q_line_dedup"     -> (CorpusPipeline.lineDedupQuery _),
-    "q_token_budget"   -> (CorpusPipeline.tokenBudgetQuery _),
-    "q_semantic_dedup" -> (CorpusPipeline.semanticDedupQuery _),
-    "q_pipeline_e2e"   -> (CorpusPipeline.pipelineE2eQuery _),
-    "q_rep_stats"      -> (TextAnalysis.repStatsQuery _),
-    "q_lm_score"       -> (TextAnalysis.lmScoreQuery _),
-    "q_pack_sequences" -> (CorpusPipeline.packSequencesQuery _),
-    "q_pack_ffd"       -> (CorpusPipeline.packFfdQuery _),
-    "q_salted_distinct"-> (Skew.saltedDistinctQuery _),
-    "q_redact"         -> (TextAnalysis.redactQuery _),
-    "q_normalize_text" -> (TextAnalysis.normalizeQuery _),
-    "q_media_decode"   -> (Multimodal.decodeQuery _),
-    "q_frame_sample"   -> (Multimodal.frameSampleQuery _),
-    "q_media_ann"      -> (mediaAnnQuery _),
-    "q_rag_media"      -> (ragMediaQuery _),
-    "q_ann_leg_recall" -> (legRecallQuery _))
-
-  // Oracle-SQL building blocks ------------------------------------------
-  // Each replicates a Spark-side computation in DuckDB SQL exactly (same
-  // arithmetic in the same order over doubles ⇒ bit-identical results; see
-  // the per-query notes). Generated pieces (stopword lists, hyperplanes)
-  // come from the SAME Scala definitions the Spark plans use.
-
-  /** `to_string_binary(bigEndianKey(key))` in DuckDB: render each of the 8
-    * big-endian bytes — printable ASCII (0x20..0x7E, not backslash)
-    * verbatim, else `\xHH` uppercase (BytesBinaryCodec.encode). */
-  private def rowKeySql(key: String): String =
-    s"""list_aggregate(list_transform(range(8), i ->
-          CASE WHEN (($key >> ((7-i)*8)) & 255) BETWEEN 32 AND 126
-                AND (($key >> ((7-i)*8)) & 255) != 92
-               THEN chr(CAST((($key >> ((7-i)*8)) & 255) AS INTEGER))
-               ELSE printf('\\x%02X', (($key >> ((7-i)*8)) & 255)) END),
-        'string_agg', '')"""
-
-  /** VectorOps.cosine over DOUBLE[] columns: dot/(√na·√nb), 0 on zero norm.
-    * UNQUANTIZED — only for call sites that quantize differently (the
-    * DECIMAL-sum profiles round at the decimal's own scale). */
-  private def cosineRawSql(a: String, b: String): String =
-    s"""CASE WHEN list_dot_product($a,$a) = 0 OR list_dot_product($b,$b) = 0 THEN 0.0
-             ELSE list_dot_product($a,$b)
-                  / (sqrt(list_dot_product($a,$a)) * sqrt(list_dot_product($b,$b))) END"""
-
-  /** The cosine kernel QUANTIZED to 9 decimals — the twin of the engine's
-    * `round(cosine_sim(..), 9)` (Similarity.q9). Sequential double folds
-    * are not guaranteed to agree across engines at the last ulp (judge-
-    * reproduced in round 6), so every cosine that reaches a hash compare,
-    * a rank order, or a threshold filter is rounded identically on both
-    * sides; 1e-9 is ~7 orders above ulp noise. */
-  private def cosineSql(a: String, b: String): String =
-    s"round(${cosineRawSql(a, b)}, 9)"
-
-  /** Dedup.shingles (distinct word 3-grams, whole-string fallback) over a
-    * `text` column. */
-  private val ShingleSql: String =
-    """CASE WHEN len(regexp_split_to_array(lower(text), '\s+')) >= 3
-            THEN list_distinct(list_transform(
-                   generate_series(1, len(regexp_split_to_array(lower(text), '\s+')) - 2),
-                   i -> array_to_string(list_slice(regexp_split_to_array(lower(text), '\s+'), i, i + 2), ' ')))
-            ELSE [array_to_string(regexp_split_to_array(lower(text), '\s+'), ' ')] END"""
-
-  /** [[ShingleSql]] generalized to width-`n` windows (same whole-doc
-    * fallback for short texts) — mirrors `shingle_hashes(tokens, n)`
-    * membership, with string grams standing in for the 64-bit hashes. */
-  private def ngramSql(n: Int): String =
-    s"""CASE WHEN len(regexp_split_to_array(lower(text), '\\s+')) >= $n
-            THEN list_distinct(list_transform(
-                   generate_series(1, len(regexp_split_to_array(lower(text), '\\s+')) - ${n - 1}),
-                   i -> array_to_string(list_slice(regexp_split_to_array(lower(text), '\\s+'), i, i + ${n - 1}), ' ')))
-            ELSE [array_to_string(regexp_split_to_array(lower(text), '\\s+'), ' ')] END"""
-
-  /** Staged-SQL twin of `BpeTrainer.trainMerges(numMerges = n)`: the
-    * oracle RE-DERIVES every merge from scratch — stage k counts adjacent
-    * symbol pairs over the stage-(k−1) word table, takes the same total-
-    * order argmax, and applies the merge with a list fold — so a single
-    * diverging merge decision anywhere in the engine's training loop
-    * flips the hash. CTEs are MATERIALIZED: each stage is referenced
-    * twice (argmax chain + next word table), and inlining would double
-    * the subtree per stage. */
-  private def bpeStagesSql(n: Int): String = {
-    val stages = (1 to n).map { k =>
-      s"""px$k AS MATERIALIZED (SELECT cnt, syms,
-             unnest(generate_series(CAST(1 AS BIGINT), CAST(len(syms) AS BIGINT) - 1)) AS i
-           FROM w${k - 1} WHERE len(syms) >= 2),
-          p$k AS (SELECT syms[CAST(i AS INTEGER)] AS l, syms[CAST(i + 1 AS INTEGER)] AS r,
-                    CAST(sum(cnt) AS BIGINT) AS c
-                  FROM px$k GROUP BY 1, 2),
-          m$k AS MATERIALIZED (SELECT l, r, c FROM p$k
-                  ORDER BY c DESC, l ASC, r ASC LIMIT 1),
-          w$k AS MATERIALIZED (SELECT cnt, list_reduce(
-                    list_prepend(CAST([] AS VARCHAR[]), list_transform(syms, _bs -> [_bs])),
-                    (_ba, _be) -> CASE WHEN len(_ba) > 0 AND _ba[-1] = m$k.l AND _be[1] = m$k.r
-                                  THEN list_append(list_slice(_ba, 1, len(_ba) - 1), m$k.l || m$k.r)
-                                  ELSE list_append(_ba, _be[1]) END) AS syms
-                  FROM w${k - 1}, m$k)"""
-    }.mkString(",\n")
-    s"""wt AS MATERIALIZED (SELECT w, CAST(count(*) AS BIGINT) AS cnt
-          FROM (SELECT unnest(regexp_split_to_array(lower(text), '\\s+')) AS w
-                FROM documents) t
-          WHERE w <> '' GROUP BY w),
-        w0 AS MATERIALIZED (SELECT cnt,
-            list_transform(generate_series(CAST(1 AS BIGINT), CAST(length(w) AS BIGINT)),
-              _ci -> substr(w, CAST(_ci AS INTEGER), 1)) AS syms FROM wt),
-        $stages"""
-  }
-
-  private def bpeOracleSql(n: Int): String = {
-    val sel = (1 to n).map(k =>
-      s"SELECT CAST($k AS BIGINT) AS merge_rank, l AS lhs, r AS rhs, c AS pair_count FROM m$k")
-      .mkString("\nUNION ALL ")
-    s"""WITH ${bpeStagesSql(n)}
-        $sel"""
-  }
-
-  /** Encode twin: the subword vocabulary the trained merges induce over
-    * the corpus — re-derived from scratch through the same stages. */
-  private def bpeEncodeOracleSql(n: Int): String =
-    s"""WITH ${bpeStagesSql(n)}
-        SELECT s AS symbol, CAST(count(*) AS BIGINT) AS n_positions,
-               CAST(sum(cnt) AS BIGINT) AS total_count
-        FROM (SELECT cnt, unnest(syms) AS s FROM w$n) t
-        GROUP BY s"""
-
-  /** BM25 ranking replay (rational idf twin, micro-quantized per-term
-    * scores) — shared by q_bm25_search and the q_search_ndcg metric. */
-  private def bm25OracleSql: String = bm25OracleSqlOver("documents")
-
-  /** The same replay over an arbitrary document relation — q_index_purge
-    * passes the corpus MINUS the purged subject, recomputing the ranking
-    * the purged index must reproduce. */
-  private def bm25OracleSqlOver(rel: String): String = {
-    val k1 = 1.2; val b = 0.75
-    s"""WITH p AS (SELECT doc_id, w AS term, CAST(count(*) AS BIGINT) AS tf
-                  FROM (SELECT doc_id, unnest(regexp_split_to_array(text, ' ')) AS w
-                        FROM $rel)
-                  GROUP BY 1, 2),
-        d AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM p GROUP BY 1),
-        n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM $rel),
-        dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM p GROUP BY 1),
-        ad AS (SELECT CAST(sum(dl) AS DOUBLE) / (SELECT n FROM n) AS avgdl FROM dl),
-        s AS (SELECT p.doc_id,
-                     CAST(sum(CAST(floor(
-                       (((n.n + 1.0) / (d.df + 1)) *
-                        ((CAST(p.tf AS DOUBLE) * ${k1 + 1}) /
-                         (CAST(p.tf AS DOUBLE) + $k1 *
-                          (${1 - b} + $b * (CAST(dl.dl AS DOUBLE) / ad.avgdl)))))
-                       * 1000000.0 + 0.5)
-                       AS BIGINT)) AS BIGINT) AS score
-              FROM p JOIN d USING (term) JOIN dl USING (doc_id)
-                   CROSS JOIN n CROSS JOIN ad
-              WHERE p.term IN ('merge', 'sort', 'window')
-              GROUP BY 1),
-        r AS (SELECT doc_id, score,
-                     CAST(row_number() OVER (ORDER BY score DESC, doc_id ASC)
-                          AS BIGINT) AS rank
-              FROM s)
-        SELECT doc_id, score, rank FROM r WHERE rank <= 20"""
-  }
-
-  /** PRF oracle: the whole expansion loop replayed relationally from the
-    * shared token stats — seed BM25 rank, top-5 feedback docs, the 3
-    * highest-tf non-seed terms of length ≥ 4 mined from THOSE docs
-    * ((tf desc, term asc) tiebreak), expanded BM25 top-20. Same
-    * micro-quantized rational-idf score as [[bm25OracleSqlOver]]. */
-  private def prfOracleSql: String = {
-    val k1 = 1.2; val b = 0.75
-    val seeds = "'merge', 'sort', 'window'"
-    def scoreSql(termPred: String, out: String): String =
-      s"""$out AS (SELECT p.doc_id,
-                     CAST(sum(CAST(floor(
-                       (((n.n + 1.0) / (d.df + 1)) *
-                        ((CAST(p.tf AS DOUBLE) * ${k1 + 1}) /
-                         (CAST(p.tf AS DOUBLE) + $k1 *
-                          (${1 - b} + $b * (CAST(dl.dl AS DOUBLE) / ad.avgdl)))))
-                       * 1000000.0 + 0.5)
-                       AS BIGINT)) AS BIGINT) AS score
-              FROM p JOIN d USING (term) JOIN dl USING (doc_id)
-                   CROSS JOIN n CROSS JOIN ad
-              WHERE $termPred
-              GROUP BY 1)"""
-    s"""WITH p AS (SELECT doc_id, w AS term, CAST(count(*) AS BIGINT) AS tf
-                  FROM (SELECT doc_id, unnest(regexp_split_to_array(text, ' ')) AS w
-                        FROM documents)
-                  GROUP BY 1, 2),
-        d AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM p GROUP BY 1),
-        n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
-        dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM p GROUP BY 1),
-        ad AS (SELECT CAST(sum(dl) AS DOUBLE) / (SELECT n FROM n) AS avgdl FROM dl),
-        ${scoreSql(s"p.term IN ($seeds)", "s0")},
-        fb AS (SELECT doc_id FROM (
-                 SELECT doc_id,
-                        CAST(row_number() OVER (ORDER BY score DESC, doc_id ASC)
-                             AS BIGINT) AS rank
-                 FROM s0) t WHERE rank <= 5),
-        ex AS (SELECT term FROM (
-                 SELECT p.term, CAST(sum(p.tf) AS BIGINT) AS tf
-                 FROM p JOIN fb USING (doc_id)
-                 WHERE length(p.term) >= 4 AND p.term NOT IN ($seeds)
-                 GROUP BY 1) t
-               ORDER BY tf DESC, term ASC LIMIT 3),
-        ${scoreSql(s"(p.term IN ($seeds) OR p.term IN (SELECT term FROM ex))", "s1")},
-        r AS (SELECT doc_id, score,
-                     CAST(row_number() OVER (ORDER BY score DESC, doc_id ASC)
-                          AS BIGINT) AS rank
-              FROM s1)
-        SELECT doc_id, score, rank FROM r WHERE rank <= 20"""
-  }
-
-  /** nDCG@10 + MRR@10 of the BM25 ranking against term-presence gains.
-    * The discount weights 1/log2(r+1) are DRIVER literals emitted into
-    * both engines (RankMetrics.dcgWeights — no libm call on either
-    * side), per-rank terms micro-quantize before the long sum, and the
-    * final ratios divide the resulting integers — nothing float-ordered
-    * anywhere. */
-  /** The q_hybrid_search oracle — MODEL-DEPENDENT since round 15: the
-    * semantic leg replays the pack-IVF probe for query 0 (the engine's
-    * index-served leg) instead of a full-corpus cosine pass. Hoisted so
-    * the RAG capstone can embed the whole fused ranking as a subquery
-    * (DuckDB accepts WITH inside a parenthesized subquery — the
-    * AnnRecall composition pattern). */
-  private def hybridOracleSql(m: operators.IvfIndex.Model, np: Int): String =
-    s"""${cellsCteOf(m)},
-          lex AS ($bm25OracleSql),
-          probes0 AS (SELECT vec_id AS query_id, ev AS qv, cell FROM (
-              SELECT vec_id, ev, cell,
-                     row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, cell ASC) AS rn
-              FROM sc WHERE vec_id = 0) t
-            WHERE rn <= $np),
-          semscored AS (SELECT c.vec_id, ${cosineSql("c.ev", "p.qv")} AS cosine
-                        FROM cells c JOIN probes0 p
-                          ON c.cell = p.cell AND c.vec_id != p.query_id),
-          sem AS (SELECT vec_id AS doc_id, rank FROM (
-                    SELECT vec_id,
-                           CAST(row_number() OVER (ORDER BY cosine DESC,
-                             vec_id ASC) AS BIGINT) AS rank
-                    FROM semscored) t WHERE rank <= 20),
-          u AS (SELECT coalesce(l.doc_id, s.doc_id) AS doc_id,
-                       CAST(coalesce(l.rank, 0) AS BIGINT) AS lex_rank,
-                       CAST(coalesce(s.rank, 0) AS BIGINT) AS sem_rank
-                FROM lex l FULL OUTER JOIN sem s ON l.doc_id = s.doc_id),
-          f AS (SELECT doc_id, lex_rank, sem_rank,
-                       CAST(CASE WHEN lex_rank > 0
-                              THEN floor(1000000000000.0 / (60.0 + lex_rank))
-                              ELSE 0 END
-                          + CASE WHEN sem_rank > 0
-                              THEN floor(1000000000000.0 / (60.0 + sem_rank))
-                              ELSE 0 END AS BIGINT) AS rrf_score
-                FROM u)
-          SELECT doc_id, lex_rank, sem_rank, rrf_score,
-                 CAST(row_number() OVER (ORDER BY rrf_score DESC, doc_id ASC)
-                   AS BIGINT) AS rank
-          FROM f ORDER BY rrf_score DESC, doc_id ASC LIMIT 20"""
-
-  /** The unrolled MMR greedy steps (the PageRank-oracle convention):
-    * expects CTEs `cand`(query_id, vec_id, rel), `sims`(query_id, c, o,
-    * sim) and `r0`(query_id, vec_id, rel, pen=0) to be in scope; returns
-    * (step CTEs p1/r1…pk, the UNION ALL of the k picks). λ in tenths —
-    * exact integer argmax with the vec_id tiebreak. */
-  private def mmrUnrolledSql(k: Int, lambdaTenths: Int): (String, String) = {
-    val (lam, lamC) = (lambdaTenths, 10 - lambdaTenths)
-    val steps = (1 to k).map { t =>
-      val prev = s"r${t - 1}"
-      val pick =
-        s"""p$t AS (SELECT query_id, vec_id, rel FROM (
-              SELECT query_id, vec_id, rel,
-                     row_number() OVER (PARTITION BY query_id
-                       ORDER BY $lam*rel - $lamC*pen DESC, vec_id ASC) AS rn
-              FROM $prev) t WHERE rn = 1)"""
-      val fold = if (t < k)
-        s""",
-         r$t AS (SELECT r.query_id, r.vec_id, r.rel, greatest(r.pen, s.sim) AS pen
-                FROM $prev r
-                JOIN p$t p ON p.query_id = r.query_id AND r.vec_id != p.vec_id
-                JOIN sims s ON s.query_id = r.query_id AND s.c = r.vec_id AND s.o = p.vec_id)"""
-      else ""
-      pick + fold
-    }.mkString(",\n           ")
-    val union = (1 to k).map(t =>
-      s"SELECT query_id, vec_id, rel, CAST($t AS BIGINT) AS mmr_rank FROM p$t")
-      .mkString("\n          UNION ALL ")
-    (steps, union)
-  }
-
-  private def searchNdcgOracleSql: String = {
-    val w = operators.RankMetrics.dcgWeights(10)
-    val wList = w.map(_.toString).mkString("[", ", ", "]")
-    s"""WITH ranked AS ($bm25OracleSql),
-        g AS (SELECT doc_id, CAST(count(DISTINCT w) AS BIGINT) AS gain
-              FROM (SELECT doc_id, unnest(regexp_split_to_array(text, ' ')) AS w
-                    FROM documents) t
-              WHERE w IN ('merge', 'sort', 'window') GROUP BY doc_id),
-        wl AS (SELECT CAST($wList AS DOUBLE[]) AS ws),
-        dcg AS (SELECT
-                  CAST(sum(CAST(floor(CAST(coalesce(g.gain, 0) AS DOUBLE)
-                    * ws[CAST(r.rank AS INTEGER)] * 1000000.0 + 0.5) AS BIGINT))
-                    AS BIGINT) AS dcg_micro,
-                  min(CASE WHEN coalesce(g.gain, 0) > 0 THEN r.rank END) AS fr
-                FROM ranked r LEFT JOIN g USING (doc_id) CROSS JOIN wl
-                WHERE r.rank <= 10),
-        ig AS (SELECT gain, row_number() OVER (ORDER BY gain DESC, doc_id ASC) AS rk
-               FROM g),
-        idcg AS (SELECT
-                   CAST(sum(CAST(floor(CAST(gain AS DOUBLE)
-                     * ws[CAST(rk AS INTEGER)] * 1000000.0 + 0.5) AS BIGINT))
-                     AS BIGINT) AS idcg_micro
-                 FROM ig CROSS JOIN wl WHERE rk <= 10)
-        SELECT CAST(10 AS BIGINT) AS k, dcg.dcg_micro, idcg.idcg_micro,
-               CAST(floor(CAST(dcg.dcg_micro AS DOUBLE)
-                 / CAST(idcg.idcg_micro AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT)
-                 AS ndcg_micro,
-               CAST(CASE WHEN dcg.fr IS NULL THEN 0
-                    ELSE floor(1000000.0 / CAST(dcg.fr AS DOUBLE) + 0.5) END
-                 AS BIGINT) AS mrr_micro
-        FROM dcg CROSS JOIN idcg"""
-  }
-
-  /** First-24-bits-of-md5 fixed-point bucket (the `assignSplits` /
-    * `sampleMixture` hash), over a hex-string column `m`, mod `mod` —
-    * DuckDB twin of `conv(substring(md5(..),1,6),16,10) % mod`. */
-  private def md5BucketSql(m: String, mod: Long): String =
-    s"""list_reduce(
-          list_prepend(CAST(0 AS BIGINT),
-            list_transform(range(6), i ->
-              CAST(strpos('0123456789abcdef', substr($m, CAST(i + 1 AS INTEGER), 1)) - 1 AS BIGINT))),
-          (acc, d) -> acc * 16 + d) % $mod"""
-
-  /** 48-bit md5-prefix gram hash over a string expression `g` — DuckDB twin
-    * of `conv(substring(md5(g),1,12),16,10)` (TextAnalysis.gramHash48). */
-  private def md5Hash48Sql(g: String): String =
-    // lambda vars deliberately obscure: `g` is spliced into the inner lambda
-    // body, so a short name like `i` would capture the caller's variables
-    s"""list_reduce(
-          list_prepend(CAST(0 AS BIGINT),
-            list_transform(range(12), _hxd ->
-              CAST(strpos('0123456789abcdef', substr(md5($g), CAST(_hxd + 1 AS INTEGER), 1)) - 1 AS BIGINT))),
-          (_hxa, _hxv) -> _hxa * 16 + _hxv)"""
-
-  /** Exact-Jaccard all-pairs CTE over `documents`-shaped input `src` —
-    * ground truth for the MinHash/LSH near-dup queries. */
-  private def jaccardPairsSql(src: String): String =
-    s"""sh AS (SELECT doc_id, $ShingleSql AS shs FROM $src),
-        pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                    len(list_intersect(a.shs, b.shs)) AS inter,
-                    len(a.shs) + len(b.shs) - len(list_intersect(a.shs, b.shs)) AS uni
-                  FROM sh a JOIN sh b ON a.doc_id < b.doc_id)"""
-
-  /** TextAnalysis.qualityScore as a DuckDB expression (shared by q_quality
-    * and q_clean_corpus; double arithmetic matches Spark bit-for-bit). */
-  private val QualitySql: String =
-    """round(
-         CASE WHEN length(text) BETWEEN 100 AND 2000 THEN 1.0
-              WHEN length(text) BETWEEN 20 AND 5000 THEN 0.5
-              ELSE 0.0 END * 0.35
-         + least(length(regexp_replace(text, '[^\p{L} ]', '', 'g'))
-                 / greatest(CAST(length(text) AS DOUBLE), 1.0) * 1.2, 1.0) * 0.35
-         + CASE WHEN CAST(length(text) AS DOUBLE)
-                     / greatest(CAST(len(regexp_split_to_array(text, '\s+')) AS DOUBLE), 1.0)
-                     BETWEEN 3.0 AND 12.0 THEN 1.0 ELSE 0.3 END * 0.2
-         + least(length(regexp_replace(text, '[^.,;:!?]', '', 'g'))
-                 / greatest(CAST(len(regexp_split_to_array(text, '\s+')) AS DOUBLE), 1.0) * 4, 1.0) * 0.1,
-         6)"""
-
-  /** `SimHashImpl.fnv1a64` over the UTF-8 bytes of string expression `s`,
-    * as an UNSIGNED HUGEINT in [0, 2^64): byte-by-byte list_reduce with
-    * xor + modular multiply. (The FNV prime is ~2^40, so the 128-bit
-    * product never overflows INT128.) */
-  private def fnvUSql(s: String): String =
-    s"""list_reduce(
-          list_prepend(14695981039346656037::HUGEINT,
-            list_transform(range(octet_length(encode($s))),
-              i -> CAST((strpos('0123456789abcdef', substr(lower(hex(encode($s))), 2*i+1, 1)) - 1) * 16
-                      + (strpos('0123456789abcdef', substr(lower(hex(encode($s))), 2*i+2, 1)) - 1) AS HUGEINT))),
-          (acc, b) -> (xor(acc, b) * 1099511628211::HUGEINT) % 18446744073709551616::HUGEINT)"""
-
-  /** Two's-complement reinterpretation: unsigned HUGEINT in [0,2^64) →
-    * signed BIGINT (the JVM `Long` the engine computes with). */
-  private def signedSql(x: String): String =
-    s"""CASE WHEN $x >= 9223372036854775808::HUGEINT
-             THEN CAST($x - 18446744073709551616::HUGEINT AS BIGINT)
-             ELSE CAST($x AS BIGINT) END"""
-
-  /** `java.lang.Math.floorMod` over a signed BIGINT expression. */
-  private def floorModSql(v: String, m: Long): String =
-    s"((($v) % $m + $m) % $m)"
-
-  /** `h >>> k` (unsigned shift) from the unsigned HUGEINT form. */
-  private def ushiftSql(x: String, k: Int): String =
-    s"CAST(($x) // ${1L << k}::HUGEINT AS BIGINT)"
-
-  /** `(a * c) mod 2^64` for unsigned HUGEINT `a` and a 64-bit constant:
-    * split the constant into 32-bit halves so the 128-bit intermediate
-    * never overflows INT128 (needed for the splitmix64 constants ~2^63). */
-  private def mulModSql(a: String, c: java.lang.Long): String = {
-    val bh = c >>> 32
-    val bl = c & 0xffffffffL
-    s"""((($a) * $bl::HUGEINT) % 18446744073709551616::HUGEINT
-        + ((($a) * $bh::HUGEINT) % 4294967296::HUGEINT) * 4294967296::HUGEINT)
-        % 18446744073709551616::HUGEINT"""
-  }
-
-  /** `MinHashImpl.mix64` (the splitmix64 finalizer) over an unsigned
-    * HUGEINT expression. Built from [[mulModSql]]; each stage's input
-    * appears twice textually (x and x>>>k), so apply this to a short
-    * variable reference, not a computed expression. */
-  private def mix64Sql(z0: String): String = {
-    val z1 = s"(($z0) + 11400714819323198485::HUGEINT) % 18446744073709551616::HUGEINT"
-    val z2 = mulModSql(s"xor(($z1), ($z1) // 1073741824::HUGEINT)", 0xbf58476d1ce4e5b9L)
-    val z3 = mulModSql(s"xor(($z2), ($z2) // 134217728::HUGEINT)", 0x94d049bb133111ebL)
-    s"xor(($z3), ($z3) // 2147483648::HUGEINT)"
-  }
-
-  /** The media-feature CTE chain (`Multimodal.extractFeatures`'s stub
-    * encoder replayed exactly: per-dim splitmix64 over the payload fnv
-    * digest, double→float rounding, float normalization) ending in
-    * `emb`(vec_id, embedding FLOAT[]) — shared by the q_media_ann oracle
-    * and the q_rag_media capstone's media leg, so both replay the
-    * identical feature space. */
-  private def mediaEmbCtesSql: String =
-    s"""m AS ($mediaSql),
-           f1 AS (SELECT media_id, list_transform(range(64),
-                    i -> (hx + CAST(i AS HUGEINT) + 11400714819323198485::HUGEINT)
-                         % 18446744073709551616::HUGEINT) AS zs
-                  FROM m WHERE n_bytes > 0),
-           f2 AS (SELECT media_id, list_transform(zs, z -> ${mulModSql("xor(z, z // 1073741824::HUGEINT)", 0xbf58476d1ce4e5b9L)}) AS zs FROM f1),
-           f3 AS (SELECT media_id, list_transform(zs, z -> ${mulModSql("xor(z, z // 134217728::HUGEINT)", 0x94d049bb133111ebL)}) AS zs FROM f2),
-           f4 AS (SELECT media_id, list_transform(zs, z -> xor(z, z // 2147483648::HUGEINT)) AS zs FROM f3),
-           raw AS (SELECT media_id AS vec_id,
-             list_transform(zs, z -> CAST(CAST(${signedSql("z")} AS DOUBLE) / 9223372036854775807 AS FLOAT)) AS raw
-             FROM f4),
-           normed AS (SELECT vec_id,
-             CAST(sqrt(list_reduce(list_transform(raw, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (a,b) -> a+b)) AS FLOAT) AS nf, raw
-             FROM raw),
-           emb AS (SELECT vec_id, list_transform(raw, x -> CASE WHEN nf = 0 THEN x ELSE CAST(x / nf AS FLOAT) END) AS embedding FROM normed)"""
-
-  /** The derived-media CTE body (`Multimodal.deriveMedia` + fnv digest):
-    * media_id, kind (round-robin by id), payload size, unsigned hash. */
-  private def mediaSql: String =
-    s"""SELECT doc_id AS media_id,
-               ['image','audio','video'][CAST(doc_id % 3 AS INTEGER) + 1] AS kind,
-               octet_length(encode(text)) AS n_bytes,
-               ${fnvUSql("text")} AS hx
-        FROM documents"""
-
-  /** TextAnalysis.langId score columns (s_de, s_en, …), generated from the
-    * same Stopwords map the Spark plan uses. */
-  private def langScoresSql: String =
-    operators.TextAnalysis.Stopwords.toSeq.sortBy(_._1).map { case (lang, words) =>
-      val lst = words.map(w => s"'$w'").mkString("[", ",", "]")
-      val base = s"len(list_intersect(toks, $lst))"
-      val scored =
-        if (lang == "zh") base + " + len(regexp_extract_all(text, '[" + "\\x{4e00}-\\x{9fff}" + "]'))"
-        else base
-      s"$scored AS s_$lang"
-    }.mkString(",\n                ")
-
-  /** IVF oracle, generated from the SESSION'S trained model: Verify runs
-    * the queries first (training + memoizing the centroids), then collects
-    * oracleSql — so the exact centroid doubles the search used can be
-    * emitted as an inline table, and the assign/probe/search pipeline is
-    * replayed relationally (row_number argmax per vector, top-2 probe
-    * cells per query, cosine top-20 inside probed cells). Absent a cached
-    * model (e.g. the query never ran) the entry is omitted → rows-only. */
-  /** The shared IVF assignment CTE prefix for the session's pack model:
-    * centroid VALUES, the double-cast corpus, the per-(vector, centroid)
-    * scores `sc`, and the argmax cells. Every embedding-side IVF oracle
-    * (per-tier queries, the hybrid/RAG sem legs, the leg recall gate)
-    * composes on top of this one definition. */
-  private def cellsCteOf(m: operators.IvfIndex.Model): String = {
-    val cent = m.centroids.zipWithIndex.map { case (c, i) =>
-      s"($i, ${doubleArrSql(c)})"
-    }.mkString(",\n              ")
-    s"""WITH cent(cell, cv) AS (VALUES
-              $cent),
-             e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM embeddings),
-             sc AS (SELECT e.vec_id, e.ev, c.cell, list_dot_product(e.ev, c.cv) AS s
-                    FROM e CROSS JOIN cent c),
-             cells AS (SELECT vec_id, ev, cell FROM (
-               SELECT vec_id, ev, cell,
-                      row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, cell ASC) AS rn
-               FROM sc) t WHERE rn = 1)"""
-  }
-
-  /** The probe the PACK-SERVED legs replay at — [[operators.ServingProbe
-    * .oracleProbe]]: the session's autotuned decision when unambiguous
-    * (queries ran before oracle generation populated it — the
-    * cachedModel contract, probe side), the heuristic for sessions that
-    * never served a pack search, None (oracle omitted → rows-only) when
-    * a multi-corpus JVM holds several pack serving decisions. */
-  private def packOracleNprobe(m: operators.IvfIndex.Model): Option[Int] =
-    operators.ServingProbe.oracleProbe("pack:",
-      operators.IvfIndex.scaledNprobe(m.nlist))
-
-  /** One full IVF search statement over the pack model: probe the
-    * `nprobe` nearest cells for the queries `queryPred` selects,
-    * score within probed cells, rank to `k` — the replay of
-    * `IvfIndex.searchIndex` for an arbitrary query cut (q_ann_ivf is the
-    * vec_id<5/k=20 instantiation at the heuristic probe; the capstone
-    * sem legs are vec_id=0 at the autotuned serving probe). */
-  private def ivfSearchSql(m: operators.IvfIndex.Model, queryPred: String,
-      k: Int, nprobe: Int): String =
-    s"""${cellsCteOf(m)},
-             probes AS (SELECT vec_id AS query_id, ev AS qv, cell FROM (
-               SELECT vec_id, ev, cell,
-                      row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, cell ASC) AS rn
-               FROM sc WHERE $queryPred) t WHERE rn <= $nprobe),
-             scored AS (
-               SELECT p.query_id, c.vec_id, ${cosineSql("c.ev", "p.qv")} AS cosine
-               FROM cells c JOIN probes p ON c.cell = p.cell AND c.vec_id != p.query_id)
-            SELECT query_id, vec_id, cosine, rank FROM (
-              SELECT query_id, vec_id, cosine,
-                     row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id ASC) AS rank
-              FROM scored) t WHERE rank <= $k"""
-
-  private def ivfOracle: Map[String, String] =
-    operators.IvfIndex.cachedModel.map { m =>
-      val cellsCte = cellsCteOf(m)
-      Map(
-        "q_ann_ivf" -> ivfSearchSql(m, "vec_id < 5", 20,
-          operators.IvfIndex.scaledNprobe(m.nlist)),
-        // Cluster profiles: population + cosine mass in micro-units per
-        // assigned cell (same argmax, same cosine kernel). floor(x·1e6 +
-        // 0.5) as BIGINT — scaled-integer half-up — instead of round/
-        // DECIMAL: floor is exact IEEE and the multiply/add is the same
-        // double op in both engines, so the quantization carries NO
-        // tie rule for the engines to disagree on (round(x,6)'s half-up
-        // vs half-even on exact 7-digit ties was the r7 driver-only
-        // hash-FAIL).
-        "q_doc_clusters" ->
-          s"""$cellsCte,
-             cosd AS (SELECT cl.cell,
-                        CAST(floor((${cosineRawSql("cl.ev", "c.cv")}) * 1000000.0 + 0.5)
-                             AS BIGINT) AS cc
-                      FROM cells cl JOIN cent c USING (cell))
-            SELECT cell, CAST(count(*) AS BIGINT) AS n_vectors,
-                   CAST(sum(cc) AS BIGINT) AS cos_sum
-            FROM cosd GROUP BY cell""",
-        // Outliers: cosine to the OWN centroid below 0.25.
-        "q_embed_outliers" ->
-          s"""$cellsCte,
-             cosd AS (SELECT cl.vec_id, cl.cell,
-                             ${cosineSql("cl.ev", "c.cv")} AS centroid_cos
-                      FROM cells cl JOIN cent c USING (cell))
-            SELECT vec_id, cell, centroid_cos FROM cosd
-            WHERE centroid_cos < 0.25""",
-        // Pre-filtered IVF search: the same probed cells, scoring only
-        // same-label corpus vectors (labels re-joined from the raw table).
-        "q_ann_ivf_filtered" ->
-          s"""$cellsCte,
-             lbl AS (SELECT vec_id, label FROM embeddings),
-             probes AS (SELECT vec_id AS query_id, ev AS qv, cell FROM (
-               SELECT vec_id, ev, cell,
-                      row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, cell ASC) AS rn
-               FROM sc WHERE vec_id < 5) t WHERE rn <= ${operators.IvfIndex.scaledNprobe(m.nlist)}),
-             scored AS (
-               SELECT p.query_id, c.vec_id, ${cosineSql("c.ev", "p.qv")} AS cosine
-               FROM cells c
-               JOIN lbl cl ON cl.vec_id = c.vec_id
-               JOIN probes p ON c.cell = p.cell AND c.vec_id != p.query_id
-               JOIN lbl ql ON ql.vec_id = p.query_id AND ql.label = cl.label)
-            SELECT query_id, vec_id, cosine, rank FROM (
-              SELECT query_id, vec_id, cosine,
-                     row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id ASC) AS rank
-              FROM scored) t WHERE rank <= 10""",
-        // Index health: the physical cell layout's populations recomputed
-        // from the cached centroids' assignment — footer metadata on the
-        // engine side, the cells CTE here; means exact-integer, skew the
-        // standard scaled-integer half-up double.
-        "q_ivf_drift" ->
-          s"""$cellsCte,
-             cc AS (SELECT cell, CAST(count(*) AS BIGINT) AS n_vectors
-                    FROM cells GROUP BY 1),
-             a AS (SELECT CAST(count(*) AS BIGINT) AS n_cells,
-                          min(n_vectors) AS min_vectors,
-                          max(n_vectors) AS max_vectors,
-                          CAST(sum(n_vectors) AS BIGINT) AS s
-                   FROM cc)
-            SELECT n_cells, min_vectors, max_vectors,
-                   (s * 1000000) // n_cells AS mean_micro,
-                   CAST(floor(CAST(max_vectors * n_cells AS DOUBLE)
-                        / CAST(s AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT)
-                     AS skew_micro,
-                   CAST(floor(CAST(max_vectors * n_cells AS DOUBLE)
-                        / CAST(s AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT)
-                     > 2000000 AS drifted
-            FROM a""",
-        // IVF × BQ composed tier: the q_ann_ivf probe (same cells CTE)
-        // over literal sign codes (the q_ann_bq encode), Hamming-ranked
-        // within probed cells, rescore pool derived from the PROBED mass
-        // (count(*)·nprobe/nlist — exact integer, so the pool replays
-        // literally), exact-rerank tail shared with the PQ/BQ twins.
-        "q_ann_ivf_bq" -> {
-          val np = operators.IvfIndex.scaledNprobe(m.nlist)
-          s"""$cellsCte,
-             co AS (SELECT vec_id, cell, ${bqCodeSql("ev")} AS code FROM cells),
-             probes AS (SELECT vec_id AS query_id, cell FROM (
-               SELECT vec_id, cell,
-                      row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, cell ASC) AS rn
-               FROM sc WHERE vec_id < 5) t WHERE rn <= $np),
-             qc AS (SELECT vec_id AS query_id, code AS qcode FROM co WHERE vec_id < 5),
-             adc AS (SELECT p.query_id, c.vec_id,
-                       CAST(64 - bit_count(xor(c.code, q.qcode)) AS DOUBLE) AS adc_score
-                     FROM co c
-                     JOIN probes p ON c.cell = p.cell AND c.vec_id != p.query_id
-                     JOIN qc q ON q.query_id = p.query_id),
-             ${pqRerankTailSqlExpr(
-               s"greatest(CAST(100 AS BIGINT), " +
-                 s"(((SELECT count(*) FROM e) * $np) // ${m.nlist}) // 20)",
-               k = 10)}"""
-        },
-        // The nprobe recall/cost curve: per ladder step, probed-candidate
-        // count and recall@20 vs the exact baseline — counts, so the
-        // integer arithmetic carries no quantization rule at all.
-        "q_ivf_probe_curve" -> probeCurveOracleSql(m, cellsCte),
-        // The decision the curve exists to produce: cheapest step meeting
-        // the 0.9 recall target (fallback: the deepest step) — the oracle
-        // re-derives the CHOICE from the replayed curve, so a probe-
-        // selection regression flips a driver hash, not a chart.
-        "q_ivf_autotune" ->
-          s"""SELECT nprobe, n_candidates, n_matches, recall_micro,
-                   (recall_micro >= 900000) AS meets_target
-            FROM ( ${probeCurveOracleSql(m, cellsCte)} ) c
-            ORDER BY (recall_micro >= 900000) DESC,
-                     CASE WHEN recall_micro >= 900000 THEN nprobe
-                          ELSE -nprobe END ASC
-            LIMIT 1""")
-    }.getOrElse(Map.empty)
-
-  /** q_ivf_rebuild oracle — BOTH lifecycle verdicts recomputed from the
-    * session's cached BEFORE (pack) and AFTER (rebuilt) centroids: the
-    * skewed delta re-derives relationally (donor cell = largest
-    * population under the before model, lowest id tiebreak, cloned per
-    * [[operators.IvfIndex.RebuildDeltaOffsets]] offset), the populations
-    * re-assign under each model (before: drifted; after: balanced), and
-    * the rebuilt index's probe replays for recall@20 against the exact
-    * truth over the ingested corpus. A row lost or double-written
-    * anywhere in the ingest → rebuild pipeline makes the engine's
-    * footer-derived numbers disagree with this replay. Omitted
-    * (rows-only check) when either cached model is absent. */
-  private def ivfRebuildOracle: Map[String, String] =
-    (for (m1 <- operators.IvfIndex.cachedModel;
-          m2 <- operators.IvfIndex.cachedRebuiltModel) yield {
-      def centVals(m: operators.IvfIndex.Model) =
-        m.centroids.zipWithIndex.map { case (c, i) =>
-          s"($i, ${doubleArrSql(c)})"
-        }.mkString(",\n              ")
-      val np2 = operators.IvfIndex.auditNprobe(m2.nlist)
-      val deltaSelects = operators.IvfIndex.RebuildDeltaOffsets.map(off =>
-          s"SELECT vec_id + $off AS vec_id, ev FROM donors")
-        .mkString("\n             UNION ALL ")
-      def skewSql(t: String) =
-        s"CAST(floor(CAST($t.mx * $t.n_cells AS DOUBLE) / CAST($t.s AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT)"
-      def argmaxCells(sc: String, cols: String) =
-        s"""SELECT $cols, cell FROM (
-            SELECT $cols, cell,
-                   row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, cell ASC) AS rn
-            FROM $sc) t WHERE rn = 1"""
-      Map("q_ivf_rebuild" ->
-        s"""WITH cent1(cell, cv) AS (VALUES
-              ${centVals(m1)}),
-            cent2(cell, cv) AS (VALUES
-              ${centVals(m2)}),
-            e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM embeddings),
-            sc1 AS (SELECT e.vec_id, e.ev, c.cell, list_dot_product(e.ev, c.cv) AS s
-                    FROM e CROSS JOIN cent1 c),
-            cells1 AS MATERIALIZED (${argmaxCells("sc1", "vec_id, ev")}),
-            donor AS (SELECT cell FROM (
-                SELECT cell, count(*) AS c FROM cells1 GROUP BY 1) d
-              ORDER BY c DESC, cell ASC LIMIT 1),
-            donors AS (SELECT vec_id, ev FROM cells1
-                       WHERE cell = (SELECT cell FROM donor)),
-            delta AS ($deltaSelects),
-            un AS MATERIALIZED (SELECT vec_id, ev FROM e
-                 UNION ALL SELECT vec_id, ev FROM delta),
-            scb AS (SELECT u.vec_id, c.cell, list_dot_product(u.ev, c.cv) AS s
-                    FROM un u CROSS JOIN cent1 c),
-            cellsb AS (${argmaxCells("scb", "vec_id")}),
-            popb AS (SELECT cell, CAST(count(*) AS BIGINT) AS n FROM cellsb GROUP BY 1),
-            ab AS (SELECT CAST(count(*) AS BIGINT) AS n_cells, max(n) AS mx,
-                          CAST(sum(n) AS BIGINT) AS s FROM popb),
-            sca AS (SELECT u.vec_id, u.ev, c.cell, list_dot_product(u.ev, c.cv) AS s
-                    FROM un u CROSS JOIN cent2 c),
-            cellsa AS MATERIALIZED (${argmaxCells("sca", "vec_id, ev")}),
-            popa AS (SELECT cell, CAST(count(*) AS BIGINT) AS n FROM cellsa GROUP BY 1),
-            aa AS (SELECT CAST(count(*) AS BIGINT) AS n_cells, max(n) AS mx,
-                          CAST(sum(n) AS BIGINT) AS s FROM popa),
-            probes AS (SELECT vec_id AS query_id, ev AS qv, cell FROM (
-                SELECT vec_id, ev, cell,
-                       row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, cell ASC) AS rn
-                FROM sca WHERE vec_id < 5) t WHERE rn <= $np2),
-            got AS (SELECT query_id, vec_id FROM (
-                SELECT p.query_id, a.vec_id,
-                       row_number() OVER (PARTITION BY p.query_id
-                         ORDER BY ${cosineSql("a.ev", "p.qv")} DESC, a.vec_id ASC) AS rank
-                FROM cellsa a JOIN probes p ON a.cell = p.cell AND a.vec_id != p.query_id) t
-              WHERE rank <= 20),
-            truth AS (SELECT query_id, vec_id FROM (
-                SELECT q.vec_id AS query_id, c.vec_id,
-                       row_number() OVER (PARTITION BY q.vec_id
-                         ORDER BY ${cosineSql("c.ev", "q.ev")} DESC, c.vec_id ASC) AS rank
-                FROM un c JOIN e q ON q.vec_id < 5 AND c.vec_id != q.vec_id) t
-              WHERE rank <= 20),
-            nm AS (SELECT CAST(count(*) AS BIGINT) AS n_matches
-                   FROM got JOIN truth USING (query_id, vec_id)),
-            nt AS (SELECT CAST(count(*) AS BIGINT) AS n FROM truth)
-           SELECT ab.s AS n_total,
-                  ${skewSql("ab")} AS before_skew_micro,
-                  ${skewSql("ab")} > 2000000 AS before_drifted,
-                  aa.n_cells AS after_n_cells,
-                  ${skewSql("aa")} AS after_skew_micro,
-                  ${skewSql("aa")} > 2000000 AS after_drifted,
-                  nm.n_matches,
-                  nm.n_matches * 1000000 // nt.n AS recall_micro,
-                  nm.n_matches * 1000000 // nt.n >= 500000 AS within_floor
-           FROM ab CROSS JOIN aa CROSS JOIN nm CROSS JOIN nt""")
-    }).getOrElse(Map.empty)
-
-  /** q_vector_service oracle — the SERVICE lifecycle replayed from the
-    * session's cached before/after centroids (the q_ivf_rebuild replay
-    * plus the two SERVED legs): the skewed delta re-derives relationally,
-    * the drift verdicts recompute under each model, and BOTH served
-    * answer sets replay as cell-probed searches (before: cent1 over the
-    * drifted union at the before audit probe; after: cent2 over the
-    * rebuilt layout) intersected with the shared exact truth. The three
-    * fingerprint verdicts are stated as the CONTRACT (literal TRUE — the
-    * vocab-sketch bound-boolean pattern): an engine-side stamp failure
-    * flips the hash. Omitted (rows-only) when the session never ran the
-    * audit. */
-  private def vectorServiceOracle: Map[String, String] =
-    graft.streaming.VectorService.cachedServiceAudit.map { a =>
-      val (m1, m2) = (a.before, a.after)
-      def centVals(m: operators.IvfIndex.Model) =
-        m.centroids.zipWithIndex.map { case (c, i) =>
-          s"($i, ${doubleArrSql(c)})"
-        }.mkString(",\n              ")
-      val npB = operators.IvfIndex.auditNprobe(m1.nlist)
-      val npA = operators.IvfIndex.auditNprobe(m2.nlist)
-      val deltaSelects = operators.IvfIndex.RebuildDeltaOffsets.map(off =>
-          s"SELECT vec_id + $off AS vec_id, ev FROM donors")
-        .mkString("\n             UNION ALL ")
-      def skewSql(t: String) =
-        s"CAST(floor(CAST($t.mx * $t.n_cells AS DOUBLE) / CAST($t.s AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT)"
-      def argmaxCells(sc: String, cols: String) =
-        s"""SELECT $cols, cell FROM (
-            SELECT $cols, cell,
-                   row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, cell ASC) AS rn
-            FROM $sc) t WHERE rn = 1"""
-      def servedLeg(cells: String, sc: String, np: Int) =
-        s"""SELECT query_id, vec_id FROM (
-              SELECT p.query_id, a.vec_id,
-                     row_number() OVER (PARTITION BY p.query_id
-                       ORDER BY ${cosineSql("a.ev", "p.qv")} DESC, a.vec_id ASC) AS rank
-              FROM $cells a JOIN (
-                SELECT vec_id AS query_id, ev AS qv, cell FROM (
-                  SELECT vec_id, ev, cell,
-                         row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, cell ASC) AS rn
-                  FROM $sc WHERE vec_id < 5) t WHERE rn <= $np) p
-                ON a.cell = p.cell AND a.vec_id != p.query_id) t
-            WHERE rank <= 20"""
-      Map("q_vector_service" ->
-        s"""WITH cent1(cell, cv) AS (VALUES
-              ${centVals(m1)}),
-            cent2(cell, cv) AS (VALUES
-              ${centVals(m2)}),
-            e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM embeddings),
-            sc1 AS (SELECT e.vec_id, e.ev, c.cell, list_dot_product(e.ev, c.cv) AS s
-                    FROM e CROSS JOIN cent1 c),
-            cells1 AS MATERIALIZED (${argmaxCells("sc1", "vec_id, ev")}),
-            donor AS (SELECT cell FROM (
-                SELECT cell, count(*) AS c FROM cells1 GROUP BY 1) d
-              ORDER BY c DESC, cell ASC LIMIT 1),
-            donors AS (SELECT vec_id, ev FROM cells1
-                       WHERE cell = (SELECT cell FROM donor)),
-            delta AS ($deltaSelects),
-            un AS MATERIALIZED (SELECT vec_id, ev FROM e
-                 UNION ALL SELECT vec_id, ev FROM delta),
-            scb AS (SELECT u.vec_id, u.ev, c.cell, list_dot_product(u.ev, c.cv) AS s
-                    FROM un u CROSS JOIN cent1 c),
-            cellsb AS MATERIALIZED (${argmaxCells("scb", "vec_id, ev")}),
-            popb AS (SELECT cell, CAST(count(*) AS BIGINT) AS n FROM cellsb GROUP BY 1),
-            ab AS (SELECT CAST(count(*) AS BIGINT) AS n_cells, max(n) AS mx,
-                          CAST(sum(n) AS BIGINT) AS s FROM popb),
-            sca AS (SELECT u.vec_id, u.ev, c.cell, list_dot_product(u.ev, c.cv) AS s
-                    FROM un u CROSS JOIN cent2 c),
-            cellsa AS MATERIALIZED (${argmaxCells("sca", "vec_id, ev")}),
-            truth AS MATERIALIZED (SELECT query_id, vec_id FROM (
-                SELECT q.vec_id AS query_id, c.vec_id,
-                       row_number() OVER (PARTITION BY q.vec_id
-                         ORDER BY ${cosineSql("c.ev", "q.ev")} DESC, c.vec_id ASC) AS rank
-                FROM un c JOIN e q ON q.vec_id < 5 AND c.vec_id != q.vec_id) t
-              WHERE rank <= 20),
-            got_b AS (${servedLeg("cellsb", "scb", npB)}),
-            got_a AS (${servedLeg("cellsa", "sca", npA)}),
-            nmb AS (SELECT CAST(count(*) AS BIGINT) AS n_matches_before
-                    FROM got_b JOIN truth USING (query_id, vec_id)),
-            nma AS (SELECT CAST(count(*) AS BIGINT) AS n_matches_after
-                    FROM got_a JOIN truth USING (query_id, vec_id)),
-            nt AS (SELECT CAST(count(*) AS BIGINT) AS n FROM truth)
-           SELECT ab.s AS n_total,
-                  ${skewSql("ab")} AS before_skew_micro,
-                  ${skewSql("ab")} > 2000000 AS before_drifted,
-                  TRUE AS fp_before_ok,
-                  TRUE AS fp_after_ok,
-                  TRUE AS fp_changed,
-                  nmb.n_matches_before,
-                  nmb.n_matches_before * 1000000 // nt.n AS before_recall_micro,
-                  nma.n_matches_after,
-                  nma.n_matches_after * 1000000 // nt.n AS after_recall_micro,
-                  nma.n_matches_after * 1000000 // nt.n >= 500000 AS within_floor
-           FROM ab CROSS JOIN nmb CROSS JOIN nma CROSS JOIN nt""")
-    }.getOrElse(Map.empty)
-
-  /** q_service_policy oracle — both policy decisions re-derived from the
-    * cached pack centroids: assignments replay relationally (the
-    * q_vector_service delta construction, shared), the health numbers
-    * are integer-exact, and the CHOICE evaluates the SAME comparison /
-    * CASE-ladder text the engine row does
-    * ([[graft.streaming.VectorService.nlistLadderSql]] emitted
-    * verbatim). Omitted (rows-only) when the session never trained the
-    * pack model. */
-  private def servicePolicyOracle: Map[String, String] =
-    operators.IvfIndex.cachedModel.map { m =>
-      def skewSql(t: String) =
-        s"CAST(floor(CAST($t.mx * $t.n_cells AS DOUBLE) / CAST($t.s AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT)"
-      val deltaSelects = operators.IvfIndex.RebuildDeltaOffsets.map(off =>
-          s"SELECT vec_id + $off AS vec_id, ev FROM donors")
-        .mkString("\n             UNION ALL ")
-      def policySelect(t: String, name: String, targetCell: Long = 256L) = {
-        val mean = s"($t.s * 1000000) // $t.n_cells"
-        val occ = s"$mean > ${targetCell * 1000000L}"
-        s"""SELECT '$name' AS index_name, $t.n_cells, $t.s AS n_total,
-               $mean AS mean_micro,
-               ${skewSql(t)} AS skew_micro,
-               ${skewSql(t)} > 2000000 AS skew_exceeded,
-               $occ AS occupancy_exceeded,
-               (${skewSql(t)} > 2000000) OR ($occ) AS rebuild,
-               ${graft.streaming.VectorService.nlistLadderSql(s"$t.s", targetCell)} AS next_nlist
-             FROM $t"""
-      }
-      Map("q_service_policy" ->
-        s"""${cellsCteOf(m)},
-            pop1 AS (SELECT cell, CAST(count(*) AS BIGINT) AS n
-                     FROM cells GROUP BY 1),
-            s1 AS (SELECT CAST(count(*) AS BIGINT) AS n_cells, max(n) AS mx,
-                          CAST(sum(n) AS BIGINT) AS s FROM pop1),
-            donor AS (SELECT cell FROM pop1 ORDER BY n DESC, cell ASC LIMIT 1),
-            donors AS (SELECT vec_id, ev FROM cells
-                       WHERE cell = (SELECT cell FROM donor)),
-            delta AS ($deltaSelects),
-            un AS (SELECT vec_id, ev FROM e
-                   UNION ALL SELECT vec_id, ev FROM delta),
-            scd AS (SELECT u.vec_id, c.cell, list_dot_product(u.ev, c.cv) AS s
-                    FROM un u CROSS JOIN cent c),
-            cellsd AS (SELECT vec_id, cell FROM (
-              SELECT vec_id, cell,
-                     row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, cell ASC) AS rn
-              FROM scd) t WHERE rn = 1),
-            pop2 AS (SELECT cell, CAST(count(*) AS BIGINT) AS n
-                     FROM cellsd GROUP BY 1),
-            s2 AS (SELECT CAST(count(*) AS BIGINT) AS n_cells, max(n) AS mx,
-                          CAST(sum(n) AS BIGINT) AS s FROM pop2)
-           ${policySelect("s1", "pack")}
-           UNION ALL
-           ${policySelect("s2", "drifted")}
-           UNION ALL
-           ${policySelect("s1", "underladdered",
-             graft.streaming.VectorService.UnderladderedTargetCell)}""")
-    }.getOrElse(Map.empty)
-
-  /** q_hybrid_search + q_rag_e2e — model-dependent since round 15 (the
-    * semantic leg replays the pack-IVF probe); omitted (rows-only) when
-    * the session never trained the pack model OR holds several pack
-    * serving decisions (the probe's by-omission contract). */
-  private def hybridRagOracle: Map[String, String] =
-    (for (m <- operators.IvfIndex.cachedModel;
-          np <- packOracleNprobe(m)) yield {
-      Map(
-        // Hybrid retrieval: RRF fusion of the replayed BM25 ranking with
-        // the replayed INDEX-SERVED cosine top-20 (probe = vec_id 0) on
-        // integer RRF points — floor of ONE correctly-rounded division
-        // per rank, so the fused order is bit-identical cross-engine
-        "q_hybrid_search" -> hybridOracleSql(m, np),
-        // RAG capstone: the whole fused hybrid ranking embedded as a
-        // subquery, relevance = (21 − rank)·50000 linear rank decay, then
-        // the ten unrolled MMR greedy steps (λ = 0.7) over embedding
-        // cosines.
-        "q_rag_e2e" -> {
-          val (steps, unionPicks) = mmrUnrolledSql(k = 10, lambdaTenths = 7)
-          s"""WITH cand AS MATERIALIZED (
-                SELECT CAST(0 AS BIGINT) AS query_id, doc_id AS vec_id,
-                       CAST((21 - rank) * 50000 AS BIGINT) AS rel
-                FROM ( ${hybridOracleSql(m, np)} ) h),
-              e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM embeddings),
-              ce AS MATERIALIZED (SELECT cand.query_id, cand.vec_id, e.ev
-                    FROM cand JOIN e ON e.vec_id = cand.vec_id),
-              sims AS MATERIALIZED (SELECT a.query_id, a.vec_id AS c, b.vec_id AS o,
-                       CAST(floor(${cosineSql("a.ev", "b.ev")} * 1000000.0 + 0.5) AS BIGINT) AS sim
-                     FROM ce a JOIN ce b ON a.query_id = b.query_id AND a.vec_id != b.vec_id),
-              r0 AS (SELECT query_id, vec_id, rel, CAST(0 AS BIGINT) AS pen FROM cand),
-              $steps
-              SELECT vec_id AS doc_id, rel, mmr_rank FROM (
-              $unionPicks) z"""
-        })
-    }).getOrElse(Map.empty)
-
-  /** The media-IVF assignment CTE fragment (appended after
-    * [[mediaEmbCtesSql]], which supplies `emb`): centroid VALUES of the
-    * session's media model, double-cast features, scores, argmax cells. */
-  private def mediaCellsFragment(m: operators.IvfIndex.Model): String = {
-    val cent = m.centroids.zipWithIndex.map { case (c, i) =>
-      s"($i, ${doubleArrSql(c)})"
-    }.mkString(",\n              ")
-    s"""centm(cell, cv) AS (VALUES
-              $cent),
-           em AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM emb),
-           scm AS (SELECT em.vec_id, em.ev, c.cell, list_dot_product(em.ev, c.cv) AS s
-                   FROM em CROSS JOIN centm c),
-           cellsm AS (SELECT vec_id, ev, cell FROM (
-             SELECT vec_id, ev, cell,
-                    row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, cell ASC) AS rn
-             FROM scm) t WHERE rn = 1)"""
-  }
-
-  /** One full media-IVF search statement: the [[ivfSearchSql]] twin over
-    * the media feature space (stub-encoder replay + probe + rank). */
-  private def mediaIvfSearchSql(m: operators.IvfIndex.Model,
-      queryPred: String, k: Int, np: Int): String =
-    s"""WITH $mediaEmbCtesSql,
-           ${mediaCellsFragment(m)},
-           probesm AS (SELECT vec_id AS query_id, ev AS qv, cell FROM (
-             SELECT vec_id, ev, cell,
-                    row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, cell ASC) AS rn
-             FROM scm WHERE $queryPred) t
-             WHERE rn <= $np),
-           scoredm AS (
-             SELECT p.query_id, c.vec_id, ${cosineSql("c.ev", "p.qv")} AS cosine
-             FROM cellsm c JOIN probesm p
-               ON c.cell = p.cell AND c.vec_id != p.query_id)
-          SELECT query_id, vec_id, cosine, rank FROM (
-            SELECT query_id, vec_id, cosine,
-                   row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id ASC) AS rank
-            FROM scoredm) t WHERE rank <= $k"""
-
-  /** Brute-force cosine top-k over the media feature replay — the old
-    * q_media_ann statement generalized: the leg recall gate's TRUTH. */
-  private def mediaBruteSql(queryPred: String, k: Int): String =
-    s"""WITH $mediaEmbCtesSql,
-           q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-                 FROM emb WHERE $queryPred),
-           c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS cv FROM emb),
-           scored AS (
-             SELECT q.query_id, c.vec_id, ${cosineSql("c.cv", "q.qv")} AS cosine
-             FROM c JOIN q ON c.vec_id != q.query_id)
-          SELECT query_id, vec_id, cosine, rank FROM (
-            SELECT query_id, vec_id, cosine,
-                   row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id ASC) AS rank
-            FROM scored) t WHERE rank <= $k"""
-
-  /** Brute-force cosine top-k over the embeddings table (query cut by
-    * `queryPred`) emitting only the matched pair — the embedding-side
-    * truth for the leg recall gate. */
-  private def embBruteSql(queryPred: String, k: Int): String =
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM embeddings),
-           q AS (SELECT vec_id AS query_id, ev AS qv FROM e WHERE $queryPred),
-           scored AS (SELECT q.query_id, c.vec_id, ${cosineSql("c.ev", "q.qv")} AS cosine
-                      FROM e c JOIN q ON c.vec_id != q.query_id)
-          SELECT query_id, vec_id FROM (
-            SELECT query_id, vec_id,
-                   row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id ASC) AS rank
-            FROM scored) t WHERE rank <= $k"""
-
-  /** q_media_ann + q_rag_media — generated from the session's media-IVF
-    * model (index-served legs); omitted (rows-only) when absent. The
-    * feature space is still recomputed from the RAW corpus (the
-    * splitmix64 stub-encoder replay), so the engine's MOB-resolved path
-    * must reproduce it byte for byte. */
-  private def mediaIvfOracle: Map[String, String] =
-    (for (m <- cachedMediaModel; np <- mediaOracleNprobe(m)) yield {
-      Map(
-        // Media features → ANN through the media IVF index: stub-encoder
-        // replay, probe from the cached centroids, bit-exact cosine
-        // top-10 for the first 3 media ids.
-        "q_media_ann" -> mediaIvfSearchSql(m, "vec_id < 3", 10, np),
-        // Cross-modal RAG capstone: the BM25 lexical leg fused (RRF, the
-        // q_hybrid_search math) with the INDEX-SERVED media-feature leg,
-        // then the ten unrolled MMR greedy steps over media-feature
-        // cosines (λ = 0.7).
-        "q_rag_media" -> {
-          val (steps, unionPicks) = mmrUnrolledSql(k = 10, lambdaTenths = 7)
-          s"""WITH $mediaEmbCtesSql,
-              ${mediaCellsFragment(m)},
-              lex AS ($bm25OracleSql),
-              probesm AS (SELECT vec_id AS query_id, ev AS qv, cell FROM (
-                SELECT vec_id, ev, cell,
-                       row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, cell ASC) AS rn
-                FROM scm WHERE vec_id = 0) t
-                WHERE rn <= $np),
-              semscored AS (SELECT c.vec_id, ${cosineSql("c.ev", "p.qv")} AS cosine
-                            FROM cellsm c JOIN probesm p
-                              ON c.cell = p.cell AND c.vec_id != p.query_id),
-              sem AS (SELECT vec_id AS doc_id, rank FROM (
-                        SELECT vec_id,
-                               CAST(row_number() OVER (ORDER BY cosine DESC,
-                                 vec_id ASC) AS BIGINT) AS rank
-                        FROM semscored) t WHERE rank <= 20),
-              u AS (SELECT coalesce(l.doc_id, s.doc_id) AS doc_id,
-                           CAST(coalesce(l.rank, 0) AS BIGINT) AS lex_rank,
-                           CAST(coalesce(s.rank, 0) AS BIGINT) AS sem_rank
-                    FROM lex l FULL OUTER JOIN sem s ON l.doc_id = s.doc_id),
-              fz AS (SELECT doc_id,
-                           CAST(CASE WHEN lex_rank > 0
-                                  THEN floor(1000000000000.0 / (60.0 + lex_rank))
-                                  ELSE 0 END
-                              + CASE WHEN sem_rank > 0
-                                  THEN floor(1000000000000.0 / (60.0 + sem_rank))
-                                  ELSE 0 END AS BIGINT) AS rrf_score
-                     FROM u),
-              fused AS (SELECT doc_id,
-                          CAST(row_number() OVER (ORDER BY rrf_score DESC, doc_id ASC)
-                            AS BIGINT) AS rank
-                        FROM fz ORDER BY rrf_score DESC, doc_id ASC LIMIT 20),
-              cand AS MATERIALIZED (SELECT CAST(0 AS BIGINT) AS query_id,
-                       doc_id AS vec_id,
-                       CAST((21 - rank) * 50000 AS BIGINT) AS rel FROM fused),
-              e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM emb),
-              ce AS MATERIALIZED (SELECT cand.query_id, cand.vec_id, e.ev
-                    FROM cand JOIN e ON e.vec_id = cand.vec_id),
-              sims AS MATERIALIZED (SELECT a.query_id, a.vec_id AS c, b.vec_id AS o,
-                       CAST(floor(${cosineSql("a.ev", "b.ev")} * 1000000.0 + 0.5) AS BIGINT) AS sim
-                     FROM ce a JOIN ce b ON a.query_id = b.query_id AND a.vec_id != b.vec_id),
-              r0 AS (SELECT query_id, vec_id, rel, CAST(0 AS BIGINT) AS pen FROM cand),
-              $steps
-              SELECT vec_id AS doc_id, rel, mmr_rank FROM (
-              $unionPicks) z"""
-        })
-    }).getOrElse(Map.empty)
-
-  /** q_ann_leg_recall — the recall gate for the index-served capstone
-    * legs, composed from the SAME generated leg statements the per-query
-    * oracles verify, each intersected with its replayed exact truth.
-    * Needs both session models and unambiguous serving probes; omitted
-    * (rows-only) otherwise. */
-  private def legRecallOracle: Map[String, String] =
-    (for (m1 <- operators.IvfIndex.cachedModel; m2 <- cachedMediaModel;
-          npPack <- packOracleNprobe(m1);
-          npMedia <- mediaOracleNprobe(m2)) yield {
-      def row(tier: String, gotSql: String, truthSql: String) =
-        s"""SELECT '$tier' AS tier,
-              CAST((SELECT count(*)
-                    FROM (SELECT query_id, vec_id FROM ( $gotSql ) g) r
-                    JOIN (SELECT query_id, vec_id FROM ( $truthSql ) tt) t
-                      USING (query_id, vec_id)) AS BIGINT) AS n_matches,
-              CAST((SELECT count(*) FROM ( $truthSql ) t2) AS BIGINT) AS denom"""
-      val rows = Seq(
-        row("hybrid_sem", ivfSearchSql(m1, "vec_id = 0", 20, npPack),
-          embBruteSql("vec_id = 0", 20)),
-        row("media_sem", mediaIvfSearchSql(m2, "vec_id = 0", 20, npMedia),
-          mediaBruteSql("vec_id = 0", 20)),
-        row("media_ann", mediaIvfSearchSql(m2, "vec_id < 3", 10, npMedia),
-          mediaBruteSql("vec_id < 3", 10)))
-        .mkString("\n          UNION ALL\n          ")
-      Map("q_ann_leg_recall" ->
-        s"""WITH m AS (
-              $rows
-            )
-            SELECT tier, n_matches,
-                   (n_matches * 1000000) // denom AS recall_micro,
-                   (n_matches * 1000000) // denom >=
-                     CASE tier ${LegFloors.map { case (t, f) =>
-                       s"WHEN '$t' THEN $f"
-                     }.mkString(" ")} END AS within_floor
-            FROM m""")
-    }).getOrElse(Map.empty)
-
-  /** The q_ivf_probe_curve oracle body (shared with q_ivf_autotune, which
-    * wraps it in the decision cut): per ladder step, probed-candidate
-    * count and recall@20 vs the exact baseline. */
-  private def probeCurveOracleSql(m: operators.IvfIndex.Model,
-      cellsCte: String): String = {
-    // denominator = the truth set's own size (engine: truth.count() —
-    // ADVICE r17: the queries×k literal understates recall on a corpus
-    // smaller than k+1; on every fixture the two agree, and deriving it
-    // keeps the FORMULAS in lockstep, not just the fixture values)
-    val denom = "(SELECT count(*) FROM truth)"
-    val rows = operators.IvfIndex.probeLadder(m.nlist).map { np =>
-      s"""SELECT CAST($np AS BIGINT) AS nprobe,
-            (SELECT count(*) FROM cells c
-             JOIN pr p ON c.cell = p.cell AND p.rn <= $np
-                      AND c.vec_id != p.query_id) AS n_candidates,
-            (SELECT count(*) FROM (
-               SELECT query_id, vec_id FROM (
-                 SELECT p.query_id, c.vec_id,
-                        row_number() OVER (PARTITION BY p.query_id
-                          ORDER BY ${cosineSql("c.ev", "p.qv")} DESC,
-                                   c.vec_id ASC) AS rank
-                 FROM cells c JOIN pr p ON c.cell = p.cell AND p.rn <= $np
-                          AND c.vec_id != p.query_id) t WHERE rank <= 20) r
-             JOIN truth USING (query_id, vec_id)) AS n_matches"""
-    }.mkString("\n             UNION ALL\n             ")
-    s"""$cellsCte,
-       pr AS (SELECT vec_id AS query_id, ev AS qv, cell,
-                row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, cell ASC) AS rn
-              FROM sc WHERE vec_id < 5),
-       truth AS (SELECT query_id, vec_id FROM (
-         SELECT q.vec_id AS query_id, c.vec_id,
-                row_number() OVER (PARTITION BY q.vec_id
-                  ORDER BY ${cosineSql("c.ev", "q.ev")} DESC, c.vec_id ASC) AS rank
-         FROM e c JOIN e q ON q.vec_id < 5 AND c.vec_id != q.vec_id) t
-         WHERE rank <= 20),
-       curve AS (
-       $rows
-       )
-      SELECT nprobe, n_candidates, n_matches,
-             n_matches * 1000000 // $denom AS recall_micro
-      FROM curve"""
-  }
-
-  /** The 64-term sign-code sum over a DOUBLE[] column — the SQL twin of
-    * [[operators.BqIndex.codeColumn]] (same term order, see the q_ann_bq
-    * comment). */
-  private def bqCodeSql(ev: String): String =
-    (0 until 64).map { d =>
-      // DuckDB's checked shift rejects 1 << 63 (the sign bit), so the
-      // top term ships as Long.MinValue arithmetic; every other power
-      // shifts normally
-      val bit =
-        if (d == 63) "(CAST(-9223372036854775807 AS BIGINT) - 1)"
-        else s"(CAST(1 AS BIGINT) << $d)"
-      s"CASE WHEN $ev[${d + 1}] > 0 THEN $bit ELSE CAST(0 AS BIGINT) END"
-    }.mkString("(", "\n             + ", ")")
-
-  /** `CAST([...] AS DOUBLE[])` literal for a float codeword/centroid —
-    * Double.toString round-trips, so DuckDB parses the exact value. */
-  private def doubleArrSql(c: Seq[Float]): String =
-    s"CAST(${c.map(_.toDouble.toString).mkString("[", ",", "]")} AS DOUBLE[])"
-
-  /** PQ oracle building blocks, generated from the session's codebooks.
-    *
-    * Float determinism: Spark normalizes with per-element
-    * `(x/√n2).cast("float")`; the SQL twin is
-    * `CAST(CAST(x/sqrt(n2) AS FLOAT) AS DOUBLE)` — the same IEEE divide +
-    * float rounding over the same doubles. Dot products are sequential
-    * double accumulation in both engines (VectorOps.dot /
-    * `list_dot_product`), the ½|c|² constants are computed once driver-side
-    * ([[PqIndex.halfSq]]) and emitted as literals, and the ADC sum replays
-    * Spark's left fold via `list_reduce(list_prepend(0, …))` — so encode
-    * argmaxes, ADC scores, and ranks agree bit-for-bit.
-    */
-  private def pqNormSql: String =
-    """nq AS (SELECT vec_id, ev,
-          CASE WHEN list_dot_product(ev, ev) = 0 THEN ev
-               ELSE list_transform(ev, x ->
-                      CAST(CAST(x / sqrt(list_dot_product(ev, ev)) AS FLOAT) AS DOUBLE))
-          END AS nv FROM e)"""
-
-  /** `scs` (per-subspace codeword scores) + `enc` (codes) CTEs: argmin_j
-    * L2 as argmax_j (x·c_j − ½|c_j|²), ties → lowest j (`list_position`
-    * returns the FIRST max, matching nearestCode's sort tiebreak).
-    * `from` names the CTE holding the to-encode vector as `nv` — `nq`
-    * for global codes over the normalized vector, `rv` for residual
-    * codes over x̂ − c. */
-  private def pqEncSql(pq: PqIndex.Codebooks, from: String = "nq"): String = {
-    val sd = pq.subDim
-    val scoreLists = (0 until pq.m).map { s =>
-      val sl = s"list_slice(nv, ${s * sd + 1}, ${(s + 1) * sd})"
-      val entries = pq.books(s).map(c =>
-        s"list_dot_product($sl, ${doubleArrSql(c)}) - CAST(${PqIndex.halfSq(c)} AS DOUBLE)")
-        .mkString(",\n                  ")
-      s"[$entries] AS ss_$s"
-    }.mkString(",\n               ")
-    val codes = (0 until pq.m).map(s =>
-      s"CAST(list_position(ss_$s, list_max(ss_$s)) - 1 AS INTEGER)").mkString(", ")
-    s"""scs AS (SELECT vec_id,
-               $scoreLists
-             FROM $from),
-           enc AS (SELECT vec_id, [$codes] AS codes FROM scs)"""
-  }
-
-  /** The (m × k) ADC lookup table expression over a normalized vector
-    * column `nv` — entry (s, j) = query subvector s · codeword j. */
-  private def pqTablesSql(pq: PqIndex.Codebooks): String = {
-    val sd = pq.subDim
-    (0 until pq.m).map { s =>
-      val sl = s"list_slice(nv, ${s * sd + 1}, ${(s + 1) * sd})"
-      "[" + pq.books(s).map(c => s"list_dot_product($sl, ${doubleArrSql(c)})")
-        .mkString(",\n                ") + "]"
-    }.mkString("[", ",\n               ", "]")
-  }
-
-  /** The raw ADC fold: Spark's `aggregate(zip_with(codes, tables, …),
-    * 0d, +)` left fold, replayed with `list_reduce` over a 0-prepended
-    * list. Unquantized — residual scoring adds the cell term BEFORE the
-    * round. */
-  private def pqAdcFoldSql(m: Int, tables: String, codes: String): String =
-    s"""list_reduce(list_prepend(CAST(0 AS DOUBLE),
-          list_transform(range($m), s -> $tables[s+1][$codes[s+1] + 1])),
-        (a, x) -> a + x)"""
-
-  /** ADC score quantized to 9 decimals like the engine (candidate cuts
-    * rank the ROUNDED score on both sides — see [[cosineSql]]). */
-  private def pqAdcSql(m: Int, tables: String, codes: String): String =
-    s"round(${pqAdcFoldSql(m, tables, codes)}, 9)"
-
-  /** Shared ADC→rerank tail: top-`r` by ADC from `adc(query_id, vec_id,
-    * adc_score)`, exact cosine from the raw embeddings, top-`k`. */
-  private def pqRerankTailSql(r: Int, k: Int): String =
-    pqRerankTailSqlExpr(r.toString, k)
-
-  /** Tail with the pool size as a SQL expression — the bq tier derives
-    * its corpus-scaled pool from count(*) so its oracle stays literal. */
-  private def pqRerankTailSqlExpr(rSql: String, k: Int): String =
-    s"""cand AS (SELECT query_id, vec_id FROM (
-             SELECT query_id, vec_id,
-                    row_number() OVER (PARTITION BY query_id ORDER BY adc_score DESC, vec_id ASC) AS rn
-             FROM adc) t WHERE rn <= ($rSql)),
-           rr AS (SELECT cand.query_id, cand.vec_id, ${cosineSql("c.ev", "q.ev")} AS cosine
-                  FROM cand JOIN e c ON c.vec_id = cand.vec_id
-                            JOIN e q ON q.vec_id = cand.query_id)
-          SELECT query_id, vec_id, cosine, rank FROM (
-            SELECT query_id, vec_id, cosine,
-                   row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id ASC) AS rank
-            FROM rr) t WHERE rank <= $k"""
-
-  /** Flat-ADC PQ oracle (q_ann_pq): encode all vectors, ADC-score every
-    * (query, vector) pair, rerank top-50 exactly, keep top-10 — the full
-    * searchWithRerank pipeline replayed from the cached codebooks. */
-  private def pqOracle: Map[String, String] =
-    operators.PqIndex.cachedModel.map { pq =>
-      "q_ann_pq" ->
-        s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM embeddings),
-           $pqNormSql,
-           ${pqEncSql(pq)},
-           qt AS (SELECT vec_id AS query_id,
-               ${pqTablesSql(pq)} AS tables
-             FROM nq WHERE vec_id < 5),
-           adc AS (SELECT q.query_id, c.vec_id,
-               ${pqAdcSql(pq.m, "q.tables", "c.codes")} AS adc_score
-             FROM enc c JOIN qt q ON c.vec_id != q.query_id),
-           ${pqRerankTailSql(r = 50, k = 10)}"""
-    }.toMap
-
-  /** OPQ oracle (q_ann_opq): the q_ann_pq statement with the learned
-    * rotation replayed in front — rq rebinds `nv` to the rotated,
-    * float-rounded coordinates (each a `list_dot_product` against one
-    * emitted rotation-row literal, the engine's codegen'd kernel), so
-    * the unchanged encode/tables/ADC/rerank building blocks read the
-    * rotated space without modification. */
-  private def opqOracle: Map[String, String] =
-    operators.OpqIndex.cachedModel.map { m =>
-      val rotSql = m.rotation.map { rw =>
-        s"CAST(CAST(list_dot_product(nv, ${doubleArrSql(rw)}) AS FLOAT) AS DOUBLE)"
-      }.mkString("[", ",\n               ", "]")
-      "q_ann_opq" ->
-        s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM embeddings),
-           $pqNormSql,
-           rq AS (SELECT vec_id,
-               $rotSql AS nv
-             FROM nq),
-           ${pqEncSql(m.pq, from = "rq")},
-           qt AS (SELECT vec_id AS query_id,
-               ${pqTablesSql(m.pq)} AS tables
-             FROM rq WHERE vec_id < 5),
-           adc AS (SELECT q.query_id, c.vec_id,
-               ${pqAdcSql(m.pq.m, "q.tables", "c.codes")} AS adc_score
-             FROM enc c JOIN qt q ON c.vec_id != q.query_id),
-           ${pqRerankTailSql(r = 50, k = 10)}"""
-    }.toMap
-
-  /** Composed IVF×PQ oracle (q_ann_ivfpq): IVF cell assignment + top-2
-    * probe cells exactly as the q_ann_ivf oracle, then PQ encode/ADC
-    * restricted to vectors in probed cells, rerank tail as q_ann_pq. */
-  private def ivfpqOracle: Map[String, String] =
-    operators.IvfPqIndex.cachedModel.map { m =>
-      val cent = m.coarse.centroids.zipWithIndex.map { case (c, i) =>
-        s"($i, ${doubleArrSql(c)})"
-      }.mkString(",\n              ")
-      "q_ann_ivfpq" ->
-        s"""WITH cent(cell, cv) AS (VALUES
-              $cent),
-           e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM embeddings),
-           sc AS (SELECT e.vec_id, c.cell, list_dot_product(e.ev, c.cv) AS s
-                  FROM e CROSS JOIN cent c),
-           cells AS (SELECT vec_id, cell FROM (
-             SELECT vec_id, cell,
-                    row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, cell ASC) AS rn
-             FROM sc) t WHERE rn = 1),
-           probes AS (SELECT vec_id AS query_id, cell FROM (
-             SELECT vec_id, cell,
-                    row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, cell ASC) AS rn
-             FROM sc WHERE vec_id < 5) t WHERE rn <= ${operators.IvfIndex.scaledNprobe(m.coarse.nlist)}),
-           $pqNormSql,
-           ${pqEncSql(m.pq)},
-           qt AS (SELECT vec_id AS query_id,
-               ${pqTablesSql(m.pq)} AS tables
-             FROM nq WHERE vec_id < 5),
-           adc AS (SELECT p.query_id, c.vec_id,
-               ${pqAdcSql(m.pq.m, "q.tables", "c.codes")} AS adc_score
-             FROM enc c JOIN cells cl ON cl.vec_id = c.vec_id
-                        JOIN probes p ON cl.cell = p.cell AND c.vec_id != p.query_id
-                        JOIN qt q ON q.query_id = p.query_id),
-           ${pqRerankTailSql(r = 50, k = 10)}"""
-    }.toMap
-
-  /** Residual IVF×PQ oracle (q_ann_ivfpq_res): corpus cells from the raw
-    * dot argmax (the engine's `assign`), residual x̂ − c(cell) replayed as
-    * FLOAT subtraction (float ops evaluated in double then rounded to
-    * float are exact — binary64 carries 2·24+2 bits, so the double
-    * rounding is innocuous), residual codes from the residual codebooks,
-    * ADC = q̂·c + table fold (rounded to 9 AFTER the sum, like the
-    * engine), rerank tail as the global twin. */
-  private def ivfpqResidualOracle: Map[String, String] =
-    operators.IvfPqIndex.cachedResidualModel.map { m =>
-      val cent = m.coarse.centroids.zipWithIndex.map { case (c, i) =>
-        s"($i, ${doubleArrSql(c)})"
-      }.mkString(",\n              ")
-      val dim = m.pq.dim
-      "q_ann_ivfpq_res" ->
-        s"""WITH cent(cell, cv) AS (VALUES
-              $cent),
-           e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM embeddings),
-           sc AS (SELECT e.vec_id, c.cell, list_dot_product(e.ev, c.cv) AS s
-                  FROM e CROSS JOIN cent c),
-           cells AS (SELECT vec_id, cell FROM (
-             SELECT vec_id, cell,
-                    row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, cell ASC) AS rn
-             FROM sc) t WHERE rn = 1),
-           $pqNormSql,
-           rv AS (SELECT n.vec_id,
-                    list_transform(range($dim), i ->
-                      CAST(CAST(n.nv[i+1] - c.cv[i+1] AS FLOAT) AS DOUBLE)) AS nv
-                  FROM nq n JOIN cells cl ON cl.vec_id = n.vec_id
-                            JOIN cent c ON c.cell = cl.cell),
-           ${pqEncSql(m.pq, from = "rv")},
-           scq AS (SELECT n.vec_id, c.cell, list_dot_product(n.nv, c.cv) AS s
-                   FROM nq n CROSS JOIN cent c WHERE n.vec_id < 5),
-           probes AS (SELECT vec_id AS query_id, cell, s AS cell_dot FROM (
-             SELECT vec_id, cell, s,
-                    row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, cell ASC) AS rn
-             FROM scq) t WHERE rn <= ${operators.IvfIndex.scaledNprobe(m.coarse.nlist)}),
-           qt AS (SELECT vec_id AS query_id,
-               ${pqTablesSql(m.pq)} AS tables
-             FROM nq WHERE vec_id < 5),
-           adc AS (SELECT p.query_id, c.vec_id,
-               round(${pqAdcFoldSql(m.pq.m, "q.tables", "c.codes")} + p.cell_dot, 9) AS adc_score
-             FROM enc c JOIN cells cl ON cl.vec_id = c.vec_id
-                        JOIN probes p ON cl.cell = p.cell AND c.vec_id != p.query_id
-                        JOIN qt q ON q.query_id = p.query_id),
-           ${pqRerankTailSql(r = 50, k = 10)}"""
-    }.toMap
-
-  /** SQ8 oracle (q_ann_sq): per-dimension int8 quantization against the
-    * session model's scale literals, dequantize (double product rounded
-    * to float — exact replay, see the residual oracle note), asymmetric
-    * dot against the normalized query, rerank tail as the PQ twins. */
-  private def sqOracle: Map[String, String] =
-    operators.SqIndex.cachedModel.map { m =>
-      val dim = m.dim
-      val scales =
-        s"CAST(${m.scales.map(_.toString).mkString("[", ",", "]")} AS DOUBLE[])"
-      "q_ann_sq" ->
-        s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM embeddings),
-           $pqNormSql,
-           sl(s) AS (VALUES ($scales)),
-           enc AS (SELECT vec_id, list_transform(range($dim), i ->
-                     CASE WHEN s[i+1] = 0 THEN 0
-                          ELSE CAST(round(nv[i+1] / s[i+1]) AS INTEGER) END) AS codes
-                   FROM nq CROSS JOIN sl),
-           deq AS (SELECT vec_id, list_transform(range($dim), i ->
-                     CAST(CAST(CAST(codes[i+1] AS DOUBLE) * s[i+1] AS FLOAT) AS DOUBLE)) AS dv
-                   FROM enc CROSS JOIN sl),
-           adc AS (SELECT q.query_id, c.vec_id,
-                     round(list_dot_product(c.dv, q.nv), 9) AS adc_score
-                   FROM deq c JOIN (SELECT vec_id AS query_id, nv FROM nq
-                                    WHERE vec_id < 5) q
-                        ON c.vec_id != q.query_id),
-           ${pqRerankTailSql(r = 50, k = 10)}"""
-    }.toMap
-
-  /** Embedding near-dup oracle: buckets regenerated with the SAME
-    * corpus-sized plane count the query used ([[operators.Dedup
-    * .cachedAutoPlanes]] — Verify runs queries first); every
-    * bucket-colliding pair with cosine ≥ 0.1. (Bucketing is recall<1 by
-    * design; the oracle replicates the buckets, so this is exact, not a
-    * recall assumption. The fixture corpora stay under the star-routing
-    * threshold, so the all-pairs form is the whole answer.) */
-  private def embedOracle: Map[String, String] =
-    operators.Dedup.cachedAutoPlanes.toSeq.flatMap { p => Seq(
-      "q_embed_neardup" ->
-        s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM embeddings),
-           bkt AS (SELECT vec_id, ev, ${operators.Similarity.bucketSql("ev", p, 42L)} AS bucket FROM e)
-          SELECT vec_a, vec_b, cosine FROM (
-            SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-                   ${cosineSql("a.ev", "b.ev")} AS cosine
-            FROM bkt a JOIN bkt b ON a.bucket = b.bucket AND a.vec_id < b.vec_id) t
-          WHERE cosine >= 0.1""",
-      // Semantic clusters: recursive transitive closure over the same edge
-      // set, cluster id = least reachable vec id (the q_dup_clusters
-      // pattern, on embedding edges).
-      "q_embed_clusters" ->
-        s"""WITH RECURSIVE e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM embeddings),
-           bkt AS (SELECT vec_id, ev, ${operators.Similarity.bucketSql("ev", p, 42L)} AS bucket FROM e),
-           edges AS (SELECT vec_a, vec_b FROM (
-             SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-                    ${cosineSql("a.ev", "b.ev")} AS cosine
-             FROM bkt a JOIN bkt b ON a.bucket = b.bucket AND a.vec_id < b.vec_id) t
-             WHERE cosine >= 0.1),
-           sym AS (SELECT vec_a AS a, vec_b AS b FROM edges
-                   UNION SELECT vec_b, vec_a FROM edges
-                   UNION SELECT vec_a, vec_a FROM edges
-                   UNION SELECT vec_b, vec_b FROM edges),
-           reach AS (SELECT a, b FROM sym
-                     UNION SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a)
-          SELECT a AS vec_id, min(b) AS cluster_id FROM reach GROUP BY a""",
-      // SemDeDup applied: same transitive clusters; keep the max-n_chars
-      // (tie: least doc_id) representative per cluster plus every
-      // unclustered doc.
-      "q_semantic_dedup" ->
-        s"""WITH RECURSIVE e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM embeddings),
-           bkt AS (SELECT vec_id, ev, ${operators.Similarity.bucketSql("ev", p, 42L)} AS bucket FROM e),
-           edges AS (SELECT vec_a, vec_b FROM (
-             SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-                    ${cosineSql("a.ev", "b.ev")} AS cosine
-             FROM bkt a JOIN bkt b ON a.bucket = b.bucket AND a.vec_id < b.vec_id) t
-             WHERE cosine >= 0.1),
-           sym AS (SELECT vec_a AS a, vec_b AS b FROM edges
-                   UNION SELECT vec_b, vec_a FROM edges
-                   UNION SELECT vec_a, vec_a FROM edges
-                   UNION SELECT vec_b, vec_b FROM edges),
-           reach AS (SELECT a, b FROM sym
-                     UNION SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a),
-           cl AS (SELECT a AS doc_id, min(b) AS cluster_id FROM reach GROUP BY a),
-           reps AS (SELECT doc_id FROM (
-             SELECT d.doc_id, row_number() OVER (PARTITION BY cl.cluster_id
-                      ORDER BY d.n_chars DESC, d.doc_id ASC) AS rn
-             FROM cl JOIN documents d USING (doc_id)) t WHERE rn = 1)
-          SELECT d.doc_id, d.source, d.n_chars FROM documents d
-          LEFT JOIN cl USING (doc_id)
-          WHERE cl.cluster_id IS NULL OR d.doc_id IN (SELECT doc_id FROM reps)"""
-    )}.toMap
-
-  /** The q_media_decode / q_media_mob shared oracle: the stub codec
-    * replayed exactly in SQL (fnv1a64 of the payload driving the fake
-    * dimensions — floorMod on the signed hash, unsigned shifts on the
-    * HUGEINT form). One definition so the two entries cannot drift. */
-  private lazy val mediaDecodeOracleSql: String =
-    s"""WITH m AS ($mediaSql),
-           d AS (SELECT media_id, kind, n_bytes, ${signedSql("hx")} AS h, hx FROM m)
-          SELECT media_id, kind, CAST(n_bytes AS BIGINT) AS n_bytes,
-            CAST(CASE WHEN n_bytes = 0 THEN 0
-                      WHEN kind = 'image' THEN 64 + ${floorModSql("h", 1856L)}
-                      WHEN kind = 'audio' THEN 0
-                      ELSE 640 END AS INTEGER) AS width,
-            CAST(CASE WHEN n_bytes = 0 THEN 0
-                      WHEN kind = 'image' THEN 64 + ${ushiftSql("hx", 16)} % 1016
-                      WHEN kind = 'audio' THEN 0
-                      ELSE 360 END AS INTEGER) AS height,
-            CAST(CASE WHEN n_bytes = 0 THEN 0
-                      WHEN kind = 'audio' THEN ${floorModSql("h", 2L)} + 1
-                      ELSE 3 END AS INTEGER) AS channels,
-            CAST(CASE WHEN n_bytes = 0 THEN 0
-                      WHEN kind = 'image' THEN 0
-                      WHEN kind = 'audio' THEN 1000 + ${ushiftSql("hx", 8)} % 600000
-                      ELSE 1000 + ${ushiftSql("hx", 24)} % 7200000 END AS BIGINT) AS duration_ms,
-            n_bytes > 0 AS ok,
-            CASE WHEN n_bytes = 0 THEN 'IllegalArgumentException: empty payload' END AS error
-          FROM d"""
-
-  /** Plane count the single-table ANN tiers used this session —
-    * corpus-sized via [[operators.Similarity.scaledPlanes]], cached by the
-    * query run (Verify runs queries before collecting oracleSql). NO
-    * fallback: when the cache is unset (the query never ran in this JVM)
-    * the entries are OMITTED — the driver records a weaker rows-only check
-    * instead of comparing against an oracle whose plane count silently
-    * disagrees with the dumped artifact (the ivfOracle convention). */
-  /** Shared CTE prefix for every bucketed ANN oracle: corpus buckets
-    * (`bkt`) under the corpus-sized plane count, query margins (`qd`),
-    * flip selection (`fl`), and the probed (query_id, qv, bucket) fan-out
-    * (`pb`) — the exact multi-probe mechanics of
-    * [[operators.Similarity.probedQueryBuckets]]. */
-  private def probedBucketCtesSql(p: Int): String =
-    s"""e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM embeddings),
-           bkt AS (SELECT vec_id, ev, ${operators.Similarity.bucketSql("ev", p, 42L)} AS bucket FROM e),
-           qd AS (SELECT vec_id AS query_id, ev AS qv, bucket AS base,
-                         ${operators.Similarity.dotsSql("ev", p, 42L)} AS ds
-                  FROM bkt WHERE vec_id < 5),
-           fl AS (SELECT query_id, qv, base,
-                    list_transform(list_slice(list_sort(
-                      list_transform(range($p), i -> {'m': abs(ds[i+1]), 'i': i})), 1, ${operators.Similarity.scaledProbes(p) - 1}),
-                      s -> s.i) AS flips
-                  FROM qd),
-           pb AS (SELECT query_id, qv,
-                    unnest(list_prepend(base, list_transform(flips, i -> xor(base, 1 << i)))) AS bucket
-                  FROM fl)"""
-
-  private def bucketAnnOracle: Map[String, String] =
-    operators.Similarity.cachedAnnPlanes.map { p =>
-      Map(
-        // ANN LSH: identical hyperplane buckets (corpus-sized plane count
-        // from the query run — the cachedModel contract — same seed), then
-        // exact cosine top-20 within the query's bucket.
-        "q_ann_lsh" ->
-          s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM embeddings),
-               bkt AS (SELECT vec_id, ev, ${operators.Similarity.bucketSql("ev", p, 42L)} AS bucket FROM e),
-               q AS (SELECT vec_id AS query_id, ev AS qv, bucket FROM bkt WHERE vec_id < 5),
-               scored AS (
-                 SELECT q.query_id, c.vec_id, ${cosineSql("c.ev", "q.qv")} AS cosine
-                 FROM bkt c JOIN q ON c.bucket = q.bucket AND c.vec_id != q.query_id)
-              SELECT query_id, vec_id, cosine, rank FROM (
-                SELECT query_id, vec_id, cosine,
-                       row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id ASC) AS rank
-                FROM scored) t WHERE rank <= 20""",
-        // ANN multi-probe: base bucket + single-bit flips of the (probes−1)
-        // smallest |margin| planes (ties by plane index, both engines),
-        // exact cosine top-20 within the probed buckets — probe mechanics
-        // replicated in SQL over the same corpus-sized plane count.
-        "q_ann_multiprobe" ->
-          s"""WITH ${probedBucketCtesSql(p)},
-               scored AS (
-                 SELECT p.query_id, c.vec_id, ${cosineSql("c.ev", "p.qv")} AS cosine
-                 FROM bkt c JOIN pb p ON c.bucket = p.bucket AND c.vec_id != p.query_id)
-              SELECT query_id, vec_id, cosine, rank FROM (
-                SELECT query_id, vec_id, cosine,
-                       row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id ASC) AS rank
-                FROM scored) t WHERE rank <= 20""")
-    }.getOrElse(Map.empty)
-
-  /** OCCUPANCY-BOUND Matryoshka oracle: candidates from the SAME probed
-    * buckets as the multiprobe oracle (shared CTE prefix), prefix-16
-    * cosine first pass (list_slice of the same doubles — the engine
-    * slices the float array before widening, identical elements), cut at
-    * the occupancy-derived budget, full-cosine rerank. Both scores
-    * q9-rounded, both ranks (score, vec_id)-tiebroken. Present only when
-    * the query run cached the corpus-sized plane count (the
-    * bucketAnnOracle convention — no silent fallback). */
-  private def mrlAnnOracle: Map[String, String] =
-    operators.Similarity.cachedAnnPlanes.map { p =>
-      val r = operators.Similarity.bucketedRerank(
-        operators.Similarity.scaledProbes(p))
-      Map("q_ann_mrl" ->
-        s"""WITH ${probedBucketCtesSql(p)},
-             pre AS (
-               SELECT p.query_id, c.vec_id, c.ev, p.qv,
-                      ${cosineSql("list_slice(c.ev, 1, 16)", "list_slice(p.qv, 1, 16)")} AS prefix_cos
-               FROM bkt c JOIN pb p ON c.bucket = p.bucket AND c.vec_id != p.query_id),
-             cand AS (SELECT query_id, vec_id, ev, qv, prefix_cos FROM (
-               SELECT *, row_number() OVER (PARTITION BY query_id
-                           ORDER BY prefix_cos DESC, vec_id ASC) AS pr
-               FROM pre) t WHERE pr <= $r),
-             rer AS (SELECT query_id, vec_id, prefix_cos,
-                            ${cosineSql("ev", "qv")} AS cosine
-                     FROM cand)
-            SELECT query_id, vec_id, prefix_cos, cosine, rank FROM (
-              SELECT query_id, vec_id, prefix_cos, cosine,
-                     row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id ASC) AS rank
-              FROM rer) t WHERE rank <= 20""")
-    }.getOrElse(Map.empty)
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    defs.map(d => d.name -> d.build).toMap
 
   /** DuckDB equivalents for every SQL-expressible query above.
     *
@@ -2859,2288 +93,11 @@ object SparkEntry {
     * record which DuckDB build evaluated the oracles — the missing piece
     * when a float-cast rule differs between builds. Harmless if ignored:
     * the correctness loop iterates `queries`, not this map. */
-
-  def oracleSql: Map[String, String] = {
-    val base = oracleSqlBase
-    // the recall gate's oracle composes the per-tier oracle statements, so
-    // it exists exactly when every tier's (model-dependent) entry does
-    val annKeys = Seq("q_ann_topk", "q_ann_lsh", "q_ann_multiprobe",
-      "q_ann_mrl", "q_ann_pca", "q_ann_ivf", "q_ann_ivf_filtered",
-      "q_ann_filtered", "q_ann_pq", "q_ann_opq", "q_ann_bq", "q_ann_ivf_bq",
-      "q_ann_ivfpq", "q_ann_ivfpq_res", "q_ann_sq")
-    if (annKeys.forall(base.contains))
-      base + ("q_ann_recall" -> AnnRecall.recallOracleSql(base))
-    else base
-  }
-
-  /** Generated from the session's fitted PCA model (the ivfOracle
-    * contract): projections replay through `list_dot_product` over the
-    * same float-rounded component literals, the 8-term distance sums in
-    * the same left-assoc order, both scores q9-round. */
-  private def pcaAnnOracle: Map[String, String] =
-    (for (m <- operators.EmbeddingPca.cachedModel;
-          p <- operators.Similarity.cachedAnnPlanes) yield {
-      val r = operators.Similarity.bucketedRerank(
-        operators.Similarity.scaledProbes(p))
-      val comps = (0 until 8).map(c => m.components(c).map(_.toFloat).toSeq)
-      val coordList = comps.map(w =>
-        s"list_dot_product(c.ev, ${doubleArrSql(w)})").mkString(",\n                ")
-      val qcoordList = comps.map(w =>
-        s"list_dot_product(p.qv, ${doubleArrSql(w)})").mkString(",\n                ")
-      val dist = (1 to 8).map(i =>
-        s"(pc[$i] - qpc[$i]) * (pc[$i] - qpc[$i])").mkString(" + ")
-      Map("q_ann_pca" ->
-        s"""WITH ${probedBucketCtesSql(p)},
-             prj AS (SELECT p.query_id, c.vec_id, c.ev, p.qv,
-                       [$coordList] AS pc,
-                       [$qcoordList] AS qpc
-                     FROM bkt c JOIN pb p ON c.bucket = p.bucket AND c.vec_id != p.query_id),
-             pre AS (SELECT query_id, vec_id, ev, qv,
-                       round($dist, 9) AS pca_dist
-                     FROM prj),
-             cand AS (SELECT query_id, vec_id, ev, qv, pca_dist FROM (
-               SELECT *, row_number() OVER (PARTITION BY query_id
-                           ORDER BY pca_dist ASC, vec_id ASC) AS pr
-               FROM pre) t WHERE pr <= $r),
-             rer AS (SELECT query_id, vec_id, pca_dist,
-                            ${cosineSql("ev", "qv")} AS cosine
-                     FROM cand)
-            SELECT query_id, vec_id, pca_dist, cosine, rank FROM (
-              SELECT query_id, vec_id, pca_dist, cosine,
-                     row_number() OVER (PARTITION BY query_id
-                       ORDER BY cosine DESC, vec_id ASC) AS rank
-              FROM rer) t WHERE rank <= 20""")
-    }).getOrElse(Map.empty)
-
-  /** Positional (non-distinct) width-`n` gram list with the whole-doc
-    * fallback — the DuckDB twin of `Dsir.bigrams` (ngramSql minus its
-    * `list_distinct`: DSIR counts occurrences, not membership). */
-  private def posGramSql(n: Int): String =
-    s"""CASE WHEN len(regexp_split_to_array(lower(text), '\\s+')) >= $n
-            THEN list_transform(
-                   generate_series(1, len(regexp_split_to_array(lower(text), '\\s+')) - ${n - 1}),
-                   i -> array_to_string(list_slice(regexp_split_to_array(lower(text), '\\s+'), i, i + ${n - 1}), ' '))
-            ELSE [array_to_string(regexp_split_to_array(lower(text), '\\s+'), ' ')] END"""
-
-  /** Model-dependent DSIR oracle (the pcaAnnOracle contract): present
-    * only when exactly one corpus's model is cached, so the λ literals
-    * the oracle replays are the ones that produced the dumped result.
-    * The data-dependent half (bucket counts) is recomputed from scratch
-    * by the static `q_dsir_weights` oracle; this one re-scores every
-    * document with the SAME micro-integer λ the engine folded. */
-  private def dsirOracle: Map[String, String] =
-    operators.Dsir.cachedModel.map { m =>
-      val lamList = m.lambdaMicro.mkString("[", ", ", "]")
-      Map("q_dsir_select" ->
-        s"""WITH lam AS (SELECT CAST($lamList AS BIGINT[]) AS lv),
-             g AS (SELECT doc_id, source, ${posGramSql(2)} AS gs FROM documents),
-             s AS (SELECT doc_id, source,
-                     list_reduce(list_prepend(CAST(0 AS BIGINT),
-                       list_transform(gs, _dg ->
-                         lv[CAST(${md5Hash48Sql("_dg")} % ${m.nBuckets} + 1 AS INTEGER)])),
-                       (_da, _db) -> _da + _db) AS dsir_micro
-                   FROM g CROSS JOIN lam)
-            SELECT doc_id, source, dsir_micro FROM s
-            ORDER BY dsir_micro DESC, doc_id ASC LIMIT 100""")
-    }.getOrElse(Map.empty)
-
-  /** Unrolled DuckDB twin of [[operators.LinkRank.pageRank]]: the same
-    * integer-unit damped power iterations as chained CTEs. Every division
-    * is BIGINT floor division on positive operands (`//` here, `div` in
-    * the engine — identical), every aggregate is cast back to BIGINT
-    * (DuckDB SUM of integers widens to HUGEINT), so the replay is
-    * bit-exact at any iteration count. */
-  /** Shared CTE prefix: the event log collapsed to aggregated transition
-    * edges (src, dst, w) — the DuckDB twin of [[operators.LinkRank
-    * .transitions]]. */
-  private def eventEdgesSql: String =
-    s"""WITH ev AS (
-            SELECT user_id, ts, event_id,
-                   CAST(json_extract_string(props, '$$.k') AS BIGINT) AS k
-            FROM events),
-          sq AS (
-            SELECT k, lag(k) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS src
-            FROM ev),
-          e0 AS (
-            SELECT src, k AS dst, CAST(count(*) AS BIGINT) AS w
-            FROM sq WHERE src IS NOT NULL AND src <> k GROUP BY 1, 2)"""
-
-  private def linkRankOracleSql(iters: Int): String = {
-    val head = eventEdgesSql +
-      s""",
-          ow AS (SELECT src, CAST(SUM(w) AS BIGINT) AS wout FROM e0 GROUP BY 1),
-          e AS (SELECT e0.src, e0.dst, e0.w, ow.wout FROM e0 JOIN ow USING (src)),
-          nodes AS (SELECT src AS node FROM e0 UNION SELECT dst FROM e0),
-          nn AS (SELECT COUNT(*) AS n FROM nodes),
-          bb AS (SELECT CAST((15 * 1000000000000) // (100 * n) AS BIGINT) AS base,
-                        CAST(1000000000000 // n AS BIGINT) AS rk0 FROM nn),
-          r0 AS (SELECT node, bb.rk0 AS rk FROM nodes CROSS JOIN bb)"""
-    val its = (1 to iters).map { i =>
-      s""",
-          c$i AS (SELECT e.dst AS node,
-                         CAST(SUM((((r.rk * 85) // 100) * e.w) // e.wout) AS BIGINT) AS c
-                  FROM e JOIN r${i - 1} r ON r.node = e.src GROUP BY 1),
-          r$i AS (SELECT nodes.node, bb.base + COALESCE(c$i.c, 0) AS rk
-                  FROM nodes CROSS JOIN bb LEFT JOIN c$i ON c$i.node = nodes.node)"""
-    }.mkString
-    head + its + s"""
-          SELECT node AS k, CAST(rk AS BIGINT) AS rank_units FROM r$iters"""
-  }
-
-  /** Unrolled DuckDB twin of [[operators.LinkRank.labelPropagation]]:
-    * the same synchronous weighted-majority rounds with the same
-    * (weight desc, label asc) total tie order. */
-  private def labelPropOracleSql(rounds: Int): String = {
-    val head = eventEdgesSql +
-      """,
-          und AS (SELECT v, u, CAST(SUM(w) AS BIGINT) AS w FROM (
-                    SELECT src AS v, dst AS u, w FROM e0
-                    UNION ALL SELECT dst, src, w FROM e0) t GROUP BY 1, 2),
-          nodes AS (SELECT DISTINCT v AS node FROM und),
-          l0 AS (SELECT node, node AS label FROM nodes)"""
-    val its = (1 to rounds).map { i =>
-      s""",
-          s$i AS (SELECT und.v AS node, l.label, CAST(SUM(und.w) AS BIGINT) AS s
-                  FROM und JOIN l${i - 1} l ON l.node = und.u GROUP BY 1, 2),
-          l$i AS (SELECT node, label FROM (
-                    SELECT node, label,
-                           row_number() OVER (PARTITION BY node
-                             ORDER BY s DESC, label ASC) AS rn
-                    FROM s$i) t WHERE rn = 1)"""
-    }.mkString
-    head + its + s"""
-          SELECT node AS k, label AS community FROM l$rounds"""
-  }
-
-  /** Model-dependent ridge oracle (the dsirOracle contract): recompute
-    * the Gram matrix A and moment vector b from raw text, replay the
-    * engine's micro-quantized β literals, and evaluate the SAME
-    * residual/gate arithmetic — a hash match proves the distributed
-    * moment pass and the driver Cramer solve together. HUGEINT carries
-    * the A·β products (up to ~1e20, past BIGINT). */
-  private def ridgeOracle: Map[String, String] =
-    operators.RidgeDistill.cachedModel.map { m =>
-      val k = operators.RidgeDistill.K
-      val xs = Seq(
-        "CAST(1 AS BIGINT)",
-        """CAST(len(regexp_split_to_array(text, '\s+')) AS BIGINT)""",
-        "CAST(length(text) AS BIGINT)",
-        """CAST(length(regexp_replace(text, '[^.,;:!?]', '', 'g')) AS BIGINT)""",
-        """CAST(length(regexp_replace(text, '[^\p{L} ]', '', 'g')) AS BIGINT)""")
-      val y =
-        """(CAST(len(list_distinct(regexp_split_to_array(lower(text), '\s+'))) AS BIGINT)
-            * 1000000)
-           // CAST(len(regexp_split_to_array(text, '\s+')) AS BIGINT)"""
-      val feat = xs.zipWithIndex.map { case (e, i) => s"$e AS x$i" }.mkString(",\n            ")
-      val momentCells =
-        (for (i <- 0 until k; j <- i until k)
-          yield s"CAST(SUM(CAST(x$i * x$j AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS a_${i}_$j") ++
-        (0 until k).map(i => s"CAST(SUM(CAST(x$i * y AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS b_$i")
-      def aCell(i: Int, j: Int) = s"a_${math.min(i, j)}_${math.max(i, j)}"
-      def ridged(i: Int, j: Int) =
-        if (i == j) s"(CAST(${aCell(i, j)} AS HUGEINT) + ${operators.RidgeDistill.Lambda})"
-        else s"CAST(${aCell(i, j)} AS HUGEINT)"
-      val rows = (0 until k).map { i =>
-        val dot = (0 until k).map(j =>
-          s"${ridged(i, j)} * CAST(${m.betaMicro(j)} AS HUGEINT)").mkString(" + ")
-        val rowsum = (0 until k).map(j => ridged(i, j)).mkString(" + ")
-        s"""SELECT CAST($i AS BIGINT) AS i,
-                   CAST(CAST(${aCell(i, i)} AS HUGEINT) AS VARCHAR) AS a_diag,
-                   CAST(CAST(b_$i AS HUGEINT) AS VARCHAR) AS b,
-                   CAST(${m.betaMicro(i)} AS BIGINT) AS beta_micro,
-                   CAST($dot - 1000000 * CAST(b_$i AS HUGEINT) AS VARCHAR) AS resid,
-                   ($dot - 1000000 * CAST(b_$i AS HUGEINT)) <= 0
-                     AND ($dot - 1000000 * CAST(b_$i AS HUGEINT)) + ($rowsum) > 0 AS ok
-            FROM m"""
-      }.mkString("\n          UNION ALL\n          ")
-      val score = (0 until k).map(j => s"${m.betaMicro(j)} * x$j").mkString(" + ")
-      Map(
-        "q_ridge_fit" ->
-          s"""WITH f AS (SELECT
-            $feat,
-            $y AS y
-           FROM documents),
-          m AS (SELECT ${momentCells.mkString(",\n                ")} FROM f)
-          $rows""",
-        "q_ridge_score" ->
-          s"""WITH f AS (SELECT doc_id,
-            $feat
-           FROM documents)
-          SELECT doc_id, CAST($score AS BIGINT) AS score_micro FROM f
-          ORDER BY score_micro DESC, doc_id ASC LIMIT 100""")
-    }.getOrElse(Map.empty)
-
-  private def oracleSqlBase: Map[String, String] =
-    ivfOracle ++ ivfRebuildOracle ++ vectorServiceOracle ++
-      servicePolicyOracle ++
-      hybridRagOracle ++ mediaIvfOracle ++
-      legRecallOracle ++ pqOracle ++ opqOracle ++ ivfpqOracle ++
-      ivfpqResidualOracle ++
-      sqOracle ++ embedOracle ++ pcaAnnOracle ++ bucketAnnOracle ++
-      mrlAnnOracle ++ dsirOracle ++ ridgeOracle ++ Map(
-    // q_compact_policy: the fold-decision lifecycle. The construction
-    // puts each vec_id%4 group of the embeddings ids in its own batch
-    // slice, so the BEFORE slice count derives from the data
-    // (count(distinct vec_id % 4)); the AFTER state is compactConcat's
-    // postcondition (zero live batch slices). n_rows both sides is the
-    // real check: a fold that loses or doubles rows flips the hash.
-    "q_compact_policy" ->
-      """WITH n AS (SELECT CAST(count(*) AS BIGINT) AS c,
-                    CAST(count(DISTINCT vec_id % 4) AS BIGINT) AS g
-             FROM embeddings)
-         SELECT 'before' AS state, g AS n_batch_slices,
-                CAST(3 AS BIGINT) AS max_slices, g > 3 AS compact,
-                c AS n_rows
-         FROM n
-         UNION ALL
-         SELECT 'after', CAST(0 AS BIGINT), CAST(3 AS BIGINT),
-                CAST(0 AS BIGINT) > 3, c
-         FROM n""",
-    "zz_probe_duckdb_version" ->
+  def oracleSql: Map[String, String] =
+    (defs :+ castCanary).flatMap(d => d.oracle().map(d.name -> _)).toMap +
+      ("zz_probe_duckdb_version" ->
       """SELECT version() AS duckdb_version,
                 CAST(round(CAST(0.1234565 AS DOUBLE), 6) AS DECIMAL(18,6)) AS canary_r6_cast,
                 CAST(CAST(0.1234565 AS DOUBLE) AS DECIMAL(18,6)) AS canary_raw_cast,
-                round(CAST(0.1234567895 AS DOUBLE), 9) AS canary_r9""",
-    "zz_probe_cast_canary" -> {
-      val vals = CanaryDoubles.zipWithIndex.map { case (d, i) =>
-        s"($i, CAST($d AS DOUBLE))"
-      }.mkString(",\n             ")
-      s"""WITH t(case_id, x) AS (VALUES
-             $vals)
-          SELECT CAST(case_id AS BIGINT) AS case_id, x,
-                 CAST(round(x, 6) AS DECIMAL(18,6)) AS dec6,
-                 round(x, 9) AS r9
-          FROM t"""
-    },
-    "q_sql_surface" ->
-      s"""SELECT o_orderkey, ${rowKeySql("o_orderkey")} AS row_key,
-          CAST(8 AS INTEGER) AS key_len
-          FROM orders WHERE o_orderkey <= 800""",
-    "q_rep_windows" ->
-      s"""WITH ngr AS (SELECT doc_id, ${ngramSql(4)} AS gs FROM documents),
-          w AS (SELECT doc_id, unnest(gs) AS g FROM ngr),
-          grp AS (SELECT g, count(*) AS n_docs,
-                    min(doc_id) AS min_doc, max(doc_id) AS max_doc
-                  FROM w GROUP BY g)
-          SELECT n_docs, min_doc, max_doc FROM grp WHERE n_docs >= 2""",
-    // Exact substring-span removal (Lee et al. 2021 shape): 4-token
-    // windows in >= 2 distinct docs are boilerplate; covered token
-    // positions are excised everywhere and the cleaned text re-joined.
-    // String grams stand in for the engine's 64-bit window hashes.
-    "q_span_dedup" ->
-      s"""WITH tk AS (SELECT doc_id,
-                 regexp_split_to_array(text, '\\s+') AS t,
-                 regexp_split_to_array(lower(text), '\\s+') AS lt
-               FROM documents),
-          wx AS (SELECT doc_id, lt,
-                   unnest(generate_series(1, len(lt) - 3)) AS i
-                 FROM tk WHERE len(lt) >= 4),
-          wins AS (SELECT doc_id, i,
-                     array_to_string(list_slice(lt, i, i + 3), ' ') AS g
-                   FROM wx),
-          dup AS (SELECT g FROM (SELECT g, count(DISTINCT doc_id) AS nd
-                                 FROM wins GROUP BY g) WHERE nd >= 2),
-          cov AS (SELECT DISTINCT w.doc_id, w.i + off.o AS ti
-                  FROM wins w JOIN dup USING (g)
-                  CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS o) off),
-          pos AS (SELECT doc_id, t, unnest(generate_series(1, len(t))) AS p
-                  FROM tk),
-          tok AS (SELECT doc_id, p, t[p] AS tokn FROM pos),
-          kept AS (SELECT tok.doc_id, tok.p, tok.tokn
-                   FROM tok LEFT JOIN cov
-                     ON tok.doc_id = cov.doc_id AND tok.p = cov.ti
-                   WHERE cov.ti IS NULL),
-          agg AS (SELECT doc_id,
-                    string_agg(tokn, ' ' ORDER BY p) AS cleaned
-                  FROM kept GROUP BY doc_id),
-          rem AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_rem
-                  FROM cov GROUP BY doc_id)
-          SELECT tk.doc_id,
-                 CAST(len(tk.t) AS BIGINT) AS n_tokens,
-                 coalesce(rem.n_rem, 0) AS n_removed,
-                 coalesce(agg.cleaned, '') AS cleaned_text
-          FROM tk LEFT JOIN agg ON tk.doc_id = agg.doc_id
-                  LEFT JOIN rem ON tk.doc_id = rem.doc_id""",
-    // Keep-first ALL-length exact substring dedup (Lee et al. suffix
-    // semantics via k-gram anchors): windows with >= 2 OCCURRENCES
-    // (within-doc repeats count), every occurrence except the global
-    // (doc_id, pos)-first is excised. String grams stand in for the
-    // engine's 64-bit window hashes; 1-based i orders identically to the
-    // engine's 0-based pos.
-    "q_suffix_dedup" ->
-      s"""WITH tk AS (SELECT doc_id,
-                 regexp_split_to_array(text, '\\s+') AS t,
-                 regexp_split_to_array(lower(text), '\\s+') AS lt
-               FROM documents),
-          wx AS (SELECT doc_id, lt,
-                   unnest(generate_series(1, len(lt) - 3)) AS i
-                 FROM tk WHERE len(lt) >= 4),
-          wins AS (SELECT doc_id, i,
-                     array_to_string(list_slice(lt, i, i + 3), ' ') AS g
-                   FROM wx),
-          rk AS (SELECT doc_id, i,
-                   row_number() OVER (PARTITION BY g ORDER BY doc_id, i) AS rn,
-                   count(*) OVER (PARTITION BY g) AS cnt
-                 FROM wins),
-          cov AS (SELECT DISTINCT r.doc_id, r.i + off.o AS ti
-                  FROM rk r
-                  CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS o) off
-                  WHERE r.cnt >= 2 AND r.rn > 1),
-          pos AS (SELECT doc_id, t, unnest(generate_series(1, len(t))) AS p
-                  FROM tk),
-          tok AS (SELECT doc_id, p, t[p] AS tokn FROM pos),
-          kept AS (SELECT tok.doc_id, tok.p, tok.tokn
-                   FROM tok LEFT JOIN cov
-                     ON tok.doc_id = cov.doc_id AND tok.p = cov.ti
-                   WHERE cov.ti IS NULL),
-          agg AS (SELECT doc_id,
-                    string_agg(tokn, ' ' ORDER BY p) AS cleaned
-                  FROM kept GROUP BY doc_id),
-          rem AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_rem
-                  FROM cov GROUP BY doc_id)
-          SELECT tk.doc_id,
-                 CAST(len(tk.t) AS BIGINT) AS n_tokens,
-                 coalesce(rem.n_rem, 0) AS n_removed,
-                 coalesce(agg.cleaned, '') AS cleaned_text
-          FROM tk LEFT JOIN agg ON tk.doc_id = agg.doc_id
-                  LEFT JOIN rem ON tk.doc_id = rem.doc_id""",
-    // Quality-aware survivor per near-dup cluster: ground-truth >= 0.5
-    // clusters (as q_dup_clusters), singletons = own doc id, keep =
-    // argmax (quality_micro, -doc_id) within cluster.
-    "q_cluster_survivors" ->
-      s"""WITH RECURSIVE ${jaccardPairsSql("documents")},
-          edges AS (SELECT doc_a, doc_b FROM pairs
-                    WHERE uni > 0 AND CAST(inter AS DOUBLE) / uni >= 0.5),
-          sym AS (SELECT doc_a AS a, doc_b AS b FROM edges
-                  UNION SELECT doc_b, doc_a FROM edges
-                  UNION SELECT doc_a, doc_a FROM edges
-                  UNION SELECT doc_b, doc_b FROM edges),
-          reach AS (SELECT a, b FROM sym
-                    UNION SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a),
-          cl AS (SELECT a AS doc_id, min(b) AS cluster_id FROM reach GROUP BY a),
-          q AS (SELECT d.doc_id,
-                  coalesce(cl.cluster_id, d.doc_id) AS cluster_id,
-                  CAST(floor($QualitySql * 1000000.0 + 0.5) AS BIGINT) AS quality_micro
-                FROM documents d LEFT JOIN cl ON d.doc_id = cl.doc_id)
-          SELECT doc_id, cluster_id, quality_micro,
-                 (row_number() OVER (PARTITION BY cluster_id
-                    ORDER BY quality_micro DESC, doc_id ASC) = 1) AS keep
-          FROM q""",
-    // Cluster-aware leakage-safe split: the bucket hashes the near-dup
-    // cluster id (ground-truth >= 0.5 clusters, as q_dup_clusters), so
-    // near-duplicates never straddle a split boundary.
-    "q_cluster_split" ->
-      s"""WITH RECURSIVE ${jaccardPairsSql("documents")},
-          edges AS (SELECT doc_a, doc_b FROM pairs
-                    WHERE uni > 0 AND CAST(inter AS DOUBLE) / uni >= 0.5),
-          sym AS (SELECT doc_a AS a, doc_b AS b FROM edges
-                  UNION SELECT doc_b, doc_a FROM edges
-                  UNION SELECT doc_a, doc_a FROM edges
-                  UNION SELECT doc_b, doc_b FROM edges),
-          reach AS (SELECT a, b FROM sym
-                    UNION SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a),
-          cl AS (SELECT a AS doc_id, min(b) AS cluster_id FROM reach GROUP BY a),
-          wc AS (SELECT d.doc_id, coalesce(cl.cluster_id, d.doc_id) AS cluster_id
-                 FROM documents d LEFT JOIN cl ON d.doc_id = cl.doc_id),
-          h AS (SELECT doc_id, cluster_id,
-                  md5(concat(CAST(cluster_id AS VARCHAR), 'graft-split')) AS m
-                FROM wc)
-          SELECT doc_id, cluster_id,
-                 CASE WHEN ${md5BucketSql("m", 100L)} < 80 THEN 'train'
-                      WHEN ${md5BucketSql("m", 100L)} < 90 THEN 'val'
-                      ELSE 'test' END AS split
-          FROM h""",
-    // Dedup recall gate over the fixed 1500-doc md5 panel: the oracle
-    // recomputes the exact truth count; LSH attains full recall on the
-    // fixtures (the invariant the pair oracles assume), so found == truth.
-    "q_dedup_recall" -> {
-      val sampled =
-        s"""(SELECT doc_id, text FROM
-              (SELECT doc_id, text,
-                 md5(concat(CAST(doc_id AS VARCHAR), 'graft-dr')) AS _m
-               FROM documents ORDER BY _m ASC, doc_id ASC LIMIT 1500) t) sdocs"""
-      s"""WITH ${jaccardPairsSql(sampled)},
-          tr AS (SELECT CAST(count(*) AS BIGINT) AS n_truth FROM pairs
-                 WHERE uni > 0 AND CAST(inter AS DOUBLE) / uni >= 0.5)
-          SELECT n_truth, n_truth AS n_found_true,
-                 CAST(1000000 AS BIGINT) AS recall_micro,
-                 TRUE AS within_floor
-          FROM tr"""
-    },
-    // Efraimidis-Spirakis weighted sample: md5-48 uniform, nano-quantized
-    // ln(u)/w key, top-100 by (key desc, doc_id).
-    // ACCEPTED FLAKE RISK (documented, not yet observed): ln() is Spark's
-    // libm here and DuckDB's libm in this SQL — a 1-ulp divergence on a
-    // float landing within an ulp of a .5 nano boundary would flip
-    // key_nano and the differential hash. P(flip) per row ≈ 2^-52/1e-9
-    // quantum ≈ 4e-7 across the fixture; the nano quantization + doc_id
-    // tiebreak exists precisely to shrink this window. If it ever fires,
-    // the fix is an integer-arithmetic key on h48 (no libm on either side).
-    // Served by the RollupRewrite optimizer rule from the materialized
-    // (l_returnflag, l_linestatus) rollup — the oracle recomputes from
-    // the RAW lineitem rows, so the hash match proves the rewritten
-    // plan is semantically identical to the base aggregation.
-    "q_rollup_served" ->
-      """SELECT l_returnflag,
-                CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
-                CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price,
-                count(*) AS n_rows,
-                min(l_discount) AS min_disc
-         FROM lineitem GROUP BY 1""",
-    // DSIR fit, recomputed from scratch: per-bucket bigram occurrence
-    // counts target ('src0') vs raw — the data-dependent half of the
-    // importance model; counts → λ is driver arithmetic (DsirSpec).
-    "q_dsir_weights" ->
-      s"""WITH g AS (SELECT CASE WHEN source = '${operators.Dsir.TargetSource}'
-                            THEN 1 ELSE 0 END AS is_t,
-                 unnest(${posGramSql(2)}) AS _dg
-               FROM documents)
-          SELECT ${md5Hash48Sql("_dg")} % ${operators.Dsir.DefaultBuckets} AS bucket,
-                 CAST(sum(is_t) AS BIGINT) AS tgt_n,
-                 CAST(sum(1 - is_t) AS BIGINT) AS raw_n
-          FROM g GROUP BY 1""",
-    // accepted residual risk: ln() is libm on both engines; the nano
-    // quantization means only a value within ~1 ulp of a 1e-9 boundary
-    // could flip (none on the fixtures; see weightedSample's scaladoc)
-    "q_weighted_sample" ->
-      s"""WITH k AS (SELECT doc_id, source,
-                 CAST(n_chars AS BIGINT) AS weight,
-                 CAST(floor(
-                   ln((CAST(${md5Hash48Sql("concat(CAST(doc_id AS VARCHAR), 'graft-wrs')")} AS DOUBLE) + 0.5)
-                      / 281474976710656.0)
-                   / greatest(CAST(n_chars AS DOUBLE), 1.0) * 1e9 + 0.5)
-                   AS BIGINT) AS key_nano
-               FROM documents),
-          r AS (SELECT *, row_number() OVER
-                  (ORDER BY key_nano DESC, doc_id ASC) AS rn FROM k)
-          SELECT doc_id, source, weight, key_nano,
-                 CAST(rn AS BIGINT) AS sample_rank
-          FROM r WHERE rn <= 100""",
-    // Mergeable HLL vocab sketches: the oracle recomputes the exact
-    // per-source and union distinct counts and asserts every bound TRUE
-    // (sketch-twin pattern, as q_vocab_approx).
-    "q_sketch_union" ->
-      """WITH toks AS (SELECT source,
-               unnest(regexp_split_to_array(lower(text), '\s+')) AS tok
-             FROM documents)
-          SELECT source, CAST(count(DISTINCT tok) AS BIGINT) AS n_distinct,
-                 CAST(count(*) AS BIGINT) AS n_tokens, TRUE AS within_bound
-          FROM toks GROUP BY source
-          UNION ALL
-          SELECT '(all)', CAST(count(DISTINCT tok) AS BIGINT),
-                 CAST(count(*) AS BIGINT), TRUE
-          FROM toks""",
-    // Distributed BPE training: the oracle re-derives all 6 merges from
-    // scratch, stage by stage (see bpeOracleSql).
-    "q_bpe_merges" -> bpeOracleSql(6),
-    "q_bpe_encode" -> bpeEncodeOracleSql(6),
-    // Tokenizer fertility per source: the oracle re-derives training AND
-    // encoding from scratch (the staged CTEs), reconstructs each word
-    // from its symbols, and replays the integer micro-fertility.
-    "q_bpe_fertility" ->
-      s"""WITH ${bpeStagesSql(6)},
-          ws AS (SELECT array_to_string(syms, '') AS w,
-                   CAST(len(syms) AS BIGINT) AS n_syms FROM w6),
-          src AS (SELECT source, w FROM (
-                    SELECT source,
-                           unnest(regexp_split_to_array(lower(text), '\\s+')) AS w
-                    FROM documents) t WHERE w <> '')
-          SELECT source, CAST(count(*) AS BIGINT) AS n_words,
-                 CAST(sum(n_syms) AS BIGINT) AS n_bpe_tokens,
-                 (CAST(sum(n_syms) AS BIGINT) * 1000000) // CAST(count(*) AS BIGINT)
-                   AS fertility_micro
-          FROM src JOIN ws USING (w)
-          GROUP BY source""",
-    // PCA gate (bound-boolean pattern): engine asserts projected variance
-    // == eigenvalue, monotone spectrum, orthonormal components, trace
-    // preservation; oracle contributes the keys and TRUE literals.
-    "q_pca_check" ->
-      """SELECT CAST(k AS BIGINT) AS component,
-                TRUE AS var_matches_lambda, TRUE AS monotone,
-                TRUE AS orthonormal, TRUE AS trace_preserved
-          FROM generate_series(1, 8) AS t(k)""",
-    // Dataset-export audit: per-shard manifest stats recomputed (shard
-    // assignment replayed via the md5 bucket); the hash match is the
-    // engine's file-level integrity check, asserted TRUE.
-    "q_export_audit" ->
-      s"""WITH h AS (SELECT doc_id, text,
-                 md5(concat(CAST(doc_id AS VARCHAR), 'graft-shard')) AS m
-               FROM documents),
-          s AS (SELECT doc_id, text, ${md5BucketSql("m", 8L)} AS shard FROM h)
-          SELECT CAST(shard AS BIGINT) AS shard,
-                 CAST(count(*) AS BIGINT) AS n_docs,
-                 CAST(sum(len(regexp_split_to_array(text, '\\s+'))) AS BIGINT)
-                   AS n_tokens,
-                 TRUE AS manifest_ok
-          FROM s GROUP BY shard""",
-    // Incremental export: three disjoint micro-batch appends merge to the
-    // batch-oblivious truth — the oracle is the SAME full-corpus shard
-    // recompute (shard assignment is batch-independent by construction).
-    "q_export_incr" ->
-      s"""WITH h AS (SELECT doc_id, text,
-                 md5(concat(CAST(doc_id AS VARCHAR), 'graft-shard')) AS m
-               FROM documents),
-          s AS (SELECT doc_id, text, ${md5BucketSql("m", 8L)} AS shard FROM h)
-          SELECT CAST(shard AS BIGINT) AS shard,
-                 CAST(count(*) AS BIGINT) AS n_docs,
-                 CAST(sum(len(regexp_split_to_array(text, '\\s+'))) AS BIGINT)
-                   AS n_tokens,
-                 TRUE AS manifest_ok
-          FROM s GROUP BY shard""",
-    // Unicode normalization twin: DuckDB nfc_normalize + the SAME
-    // enumerated control/whitespace classes (see NormalizeImpl).
-    "q_normalize_text" -> {
-      val ctrl = """[\x00-\x08\x0E-\x1F\x7F-\x9F]"""
-      val ws = """[ \t\n\r\x0B\x0C\xA0\x{1680}\x{2000}-\x{200A}\x{2028}\x{2029}\x{202F}\x{205F}\x{3000}]+"""
-      s"""SELECT doc_id,
-            trim(regexp_replace(regexp_replace(nfc_normalize(text),
-                   '$ctrl', '', 'g'),
-                 '$ws', ' ', 'g'), ' ') AS norm_text,
-            CAST(length(trim(regexp_replace(regexp_replace(nfc_normalize(text),
-                   '$ctrl', '', 'g'),
-                 '$ws', ' ', 'g'), ' ')) AS BIGINT) AS n_chars_norm
-          FROM documents"""
-    },
-    // Snapshot drift: chi-square-style per-band divergence (no logarithm
-    // => bit-for-bit oracle-matchable micro terms).
-    "q_corpus_drift" ->
-      """WITH d AS (SELECT doc_id,
-               least(floor(CAST(n_chars AS DOUBLE) / 100), 19) AS band
-             FROM documents),
-          ca AS (SELECT band, CAST(count(*) AS BIGINT) AS n_a
-                 FROM d WHERE doc_id % 2 = 0 GROUP BY band),
-          cb AS (SELECT band, CAST(count(*) AS BIGINT) AS n_b
-                 FROM d WHERE doc_id % 2 = 1 GROUP BY band),
-          j AS (SELECT coalesce(ca.band, cb.band) AS band,
-                  coalesce(n_a, 0) AS n_a, coalesce(n_b, 0) AS n_b
-                FROM ca FULL OUTER JOIN cb ON ca.band = cb.band),
-          t AS (SELECT CAST(sum(n_a) AS DOUBLE) AS ta,
-                       CAST(sum(n_b) AS DOUBLE) AS tb FROM j)
-          SELECT CAST(band AS BIGINT) AS band, n_a, n_b,
-                 CASE WHEN n_a + n_b = 0 THEN 0
-                      ELSE CAST(floor(
-                        (CAST(n_a AS DOUBLE) / ta - CAST(n_b AS DOUBLE) / tb)
-                        * (CAST(n_a AS DOUBLE) / ta - CAST(n_b AS DOUBLE) / tb)
-                        / (CAST(n_a AS DOUBLE) / ta + CAST(n_b AS DOUBLE) / tb)
-                        * 1000000.0 + 0.5) AS BIGINT) END AS term_micro
-          FROM j, t""",
-    // Stats-based join-cardinality estimate vs the actual count — pure
-    // integer arithmetic, every column (incl. the gate) recomputed.
-    // Corpus snapshot diff: the oracle compares texts directly where the
-    // engine compares xxhash64 digests — equal up to hash collisions,
-    // the same accepted equivalence as every digest-based oracle here.
-    "q_corpus_diff" ->
-      """WITH old AS (SELECT doc_id, text, source FROM documents),
-          kept AS (SELECT doc_id,
-                     CASE WHEN doc_id % 7 = 0 THEN 'EDIT ' || text ELSE text END AS text,
-                     source
-                   FROM documents WHERE doc_id % 13 <> 0),
-          nw AS (SELECT * FROM kept
-                 UNION ALL SELECT doc_id + 10000000, text, source
-                 FROM documents WHERE doc_id % 11 = 0),
-          j AS (SELECT coalesce(n.source, o.source) AS source,
-                       CASE WHEN o.doc_id IS NULL THEN 'added'
-                            WHEN n.doc_id IS NULL THEN 'removed'
-                            WHEN o.text <> n.text THEN 'changed'
-                            ELSE 'unchanged' END AS change_class,
-                       len(regexp_split_to_array(coalesce(n.text, o.text), '\s+')) AS tokens
-                FROM old o FULL OUTER JOIN nw n ON o.doc_id = n.doc_id)
-          SELECT source, change_class, CAST(count(*) AS BIGINT) AS n_docs,
-                 CAST(sum(tokens) AS BIGINT) AS n_tokens
-          FROM j GROUP BY source, change_class""",
-    // Epoch-aware mixing schedule: integer div/% arithmetic on BIGINTs,
-    // weight derived from the source's numeric suffix on both sides.
-    "q_mix_schedule" ->
-      """WITH per AS (
-            SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-                   CAST(sum(len(regexp_split_to_array(text, '\s+'))) AS BIGINT) AS n_tokens,
-                   CAST((CAST(substr(source, 4) AS INT) % 4) + 1 AS BIGINT) AS weight
-            FROM documents GROUP BY source),
-          tot AS (SELECT CAST(sum(weight) AS BIGINT) AS wsum FROM per)
-          SELECT source, n_docs, n_tokens, weight,
-                 CAST((1000000 * weight) // wsum AS BIGINT) AS target_tokens,
-                 CAST(((1000000 * weight) // wsum) // n_tokens AS BIGINT) AS epochs_full,
-                 CAST((((1000000 * weight) // wsum) % n_tokens) * 1000000 // n_tokens AS BIGINT)
-                   AS residual_rate_micro
-          FROM per, tot""",
-    "q_join_estimate" ->
-      """WITH ls AS (SELECT CAST(count(*) AS BIGINT) AS n_left,
-                 CAST(count(DISTINCT o_custkey) AS BIGINT) AS ndv_left FROM orders),
-          rs AS (SELECT CAST(count(*) AS BIGINT) AS n_right,
-                 CAST(count(DISTINCT c_custkey) AS BIGINT) AS ndv_right FROM customer),
-          a AS (SELECT CAST(count(*) AS BIGINT) AS actual_rows
-                FROM orders JOIN customer ON o_custkey = c_custkey)
-          SELECT n_left, n_right, ndv_left, ndv_right,
-                 CAST((n_left * n_right) // greatest(ndv_left, ndv_right) AS BIGINT)
-                   AS est_rows,
-                 actual_rows,
-                 ((n_left * n_right) // greatest(ndv_left, ndv_right) <= actual_rows * 3
-                  AND (n_left * n_right) // greatest(ndv_left, ndv_right) * 3 >= actual_rows)
-                   AS within_3x
-          FROM ls, rs, a""",
-    // Subject-deletion audit: anti-join purge counts + recomputed proof
-    // that no in-scope row remains.
-    "q_purge_audit" ->
-      """WITH k AS (SELECT DISTINCT c_custkey FROM customer WHERE c_custkey % 97 = 0),
-          b AS (SELECT CAST(count(*) AS BIGINT) AS n_before FROM orders),
-          p AS (SELECT CAST(count(*) AS BIGINT) AS n_after FROM orders
-                WHERE o_custkey NOT IN (SELECT c_custkey FROM k))
-          SELECT n_before, CAST(n_before - n_after AS BIGINT) AS n_purged,
-                 n_after, TRUE AS none_left
-          FROM b, p""",
-    // ANALYZE-style column stats: exact twins recomputed, sketch bound
-    // asserted TRUE (vocab_approx pattern).
-    "q_table_stats" -> {
-      def one(c: String) =
-        s"""SELECT '$c' AS col_name, CAST(count(*) AS BIGINT) AS n_rows,
-                   CAST(count(*) - count($c) AS BIGINT) AS n_nulls,
-                   CAST(count(DISTINCT $c) AS BIGINT) AS ndv,
-                   TRUE AS ndv_within_bound,
-                   CAST(min($c) AS VARCHAR) AS min_value,
-                   CAST(max($c) AS VARCHAR) AS max_value
-            FROM orders"""
-      Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_orderdate")
-        .map(one).mkString("\nUNION ALL ")
-    },
-    // Theta-sketch cross-source vocab overlap: the oracle recomputes the
-    // exact pairwise intersection/difference/union and asserts the
-    // sketch bounds TRUE (sketch-twin pattern).
-    "q_theta_overlap" ->
-      """WITH st AS (SELECT DISTINCT source,
-               unnest(regexp_split_to_array(lower(text), '\s+')) AS tok
-             FROM documents),
-          sz AS (SELECT source, CAST(count(*) AS BIGINT) AS n
-                 FROM st GROUP BY source),
-          pr AS (SELECT a.source AS source_a, b.source AS source_b,
-                   CAST(count(*) AS BIGINT) AS n_inter
-                 FROM st a JOIN st b
-                   ON a.tok = b.tok AND a.source < b.source
-                 GROUP BY 1, 2),
-          allp AS (SELECT x.source AS source_a, y.source AS source_b,
-                     x.n AS n_a, y.n AS n_b
-                   FROM sz x JOIN sz y ON x.source < y.source)
-          SELECT allp.source_a, allp.source_b, allp.n_a, allp.n_b,
-                 coalesce(pr.n_inter, 0) AS n_inter,
-                 CAST(allp.n_a + allp.n_b - coalesce(pr.n_inter, 0) AS BIGINT)
-                   AS n_union,
-                 TRUE AS inter_within_bound, TRUE AS diff_within_bound
-          FROM allp LEFT JOIN pr
-            ON allp.source_a = pr.source_a AND allp.source_b = pr.source_b""",
-    // Per-doc novelty: fraction of the doc's distinct 4-gram windows seen
-    // in no other doc, micro-unit quantized (string grams stand in for
-    // the engine's 64-bit window hashes, as in q_rep_windows).
-    "q_novelty" ->
-      s"""WITH ngr AS (SELECT doc_id, ${ngramSql(4)} AS gs FROM documents),
-          w AS (SELECT doc_id, unnest(gs) AS g FROM ngr),
-          cnt AS (SELECT g, count(*) AS nd FROM w GROUP BY g)
-          SELECT w.doc_id, CAST(count(*) AS BIGINT) AS n_windows,
-                 CAST(sum(CASE WHEN cnt.nd = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_unique,
-                 CAST(floor((CAST(sum(CASE WHEN cnt.nd = 1 THEN 1 ELSE 0 END) AS DOUBLE)
-                             / CAST(count(*) AS DOUBLE)) * 1000000.0 + 0.5)
-                      AS BIGINT) AS novelty_micro
-          FROM w JOIN cnt USING (g) GROUP BY w.doc_id""",
-    "q_decontam" ->
-      s"""WITH ngr AS (SELECT doc_id, ${ngramSql(4)} AS gs FROM documents),
-          ev AS (SELECT DISTINCT unnest(gs) AS g FROM ngr WHERE doc_id % 5 = 3),
-          tr AS (SELECT doc_id, unnest(gs) AS g FROM ngr WHERE doc_id % 5 <> 3)
-          SELECT tr.doc_id, count(*) AS n_hits
-          FROM tr JOIN ev USING (g) GROUP BY tr.doc_id""",
-    // Token-budget selection: per source, prefix cutoff at 700 running
-    // tokens in (n_chars desc, doc_id asc) order.
-    "q_token_budget" ->
-      """WITH t AS (SELECT doc_id, source, n_chars,
-            sum(len(regexp_split_to_array(text, '\s+')))
-              OVER (PARTITION BY source ORDER BY n_chars DESC, doc_id ASC
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-          FROM documents)
-          SELECT doc_id, source, n_chars FROM t WHERE cum <= 700""",
-    // C4 line dedup: same 8-token folding, ban lines occurring > 2 times
-    // corpus-wide, reassemble in line order.
-    "q_line_dedup" ->
-      """WITH tok AS (SELECT doc_id, regexp_split_to_array(text, ' ') AS tk FROM documents),
-          lines AS (SELECT doc_id, i AS pos,
-                      array_to_string(list_slice(tk, i*8 + 1, i*8 + 8), ' ') AS line
-                    FROM tok, LATERAL unnest(generate_series(0,
-                      CAST(ceil(len(tk)/8.0) AS INT) - 1)) AS t(i)),
-          banned AS (SELECT line FROM lines GROUP BY line HAVING count(*) > 2)
-          SELECT doc_id, string_agg(line, chr(10) ORDER BY pos) AS text
-          FROM lines WHERE line NOT IN (SELECT line FROM banned)
-          GROUP BY doc_id""",
-    // Semantic decontamination: same hyperplane buckets (6 planes, seed
-    // 42) as the query; per train vector, eval neighbors with cos >= 0.1.
-    "q_sem_decontam" ->
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM embeddings),
-          bkt AS (SELECT vec_id, ev, ${operators.Similarity.bucketSql("ev", 6, 42L)} AS bucket FROM e),
-          tr AS (SELECT vec_id, ev, bucket FROM bkt WHERE vec_id % 5 <> 3),
-          evs AS (SELECT vec_id AS eval_id, ev AS eev, bucket FROM bkt WHERE vec_id % 5 = 3),
-          hits AS (SELECT tr.vec_id, ${cosineSql("tr.ev", "evs.eev")} AS cosine
-                   FROM tr JOIN evs USING (bucket))
-          SELECT vec_id, count(*) AS n_hits, max(cosine) AS max_cosine
-          FROM hits WHERE cosine >= 0.1 GROUP BY vec_id""",
-    // Corpus bigram LM: add-one-smoothed avg bigram probability per doc,
-    // counts and vocabulary recomputed identically.
-    "q_lm_score" ->
-      """WITH tok AS (SELECT doc_id, regexp_split_to_array(lower(text), '\s+') AS tk
-                      FROM documents),
-          bi AS (SELECT doc_id, tk[i] AS w1, tk[i+1] AS w2
-                 FROM tok, LATERAL unnest(generate_series(1, len(tk) - 1)) AS t(i)
-                 WHERE len(tk) >= 2),
-          bc AS (SELECT w1, w2, count(*) AS c12 FROM bi GROUP BY 1, 2),
-          uc AS (SELECT w1, count(*) AS c1 FROM bi GROUP BY 1),
-          v AS (SELECT count(DISTINCT t) AS v
-                FROM (SELECT unnest(tk) AS t FROM tok))
-          SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-                 round(avg((c12 + 1.0) / (c1 + v)), 6) AS avg_prob
-          FROM bi JOIN bc USING (w1, w2) JOIN uc USING (w1) CROSS JOIN v
-          GROUP BY doc_id""",
-    // Phrase search: matches recomputed from the RAW text (adjacent
-    // token pairs), proving the positional index layer is lossless
-    "q_phrase_search" ->
-      """WITH tk AS (SELECT doc_id, regexp_split_to_array(text, ' ') AS t
-                     FROM documents),
-          m AS (SELECT doc_id,
-                  CAST(len(list_filter(
-                    generate_series(CAST(1 AS BIGINT), CAST(len(t) AS BIGINT) - 1),
-                    i -> t[CAST(i AS INTEGER)] = 'sort'
-                         AND t[CAST(i + 1 AS INTEGER)] = 'merge')) AS BIGINT)
-                    AS n_matches
-                FROM tk WHERE len(t) >= 2)
-          SELECT doc_id, n_matches,
-                 CAST(row_number() OVER (ORDER BY n_matches DESC, doc_id ASC)
-                   AS BIGINT) AS rank
-          FROM m WHERE n_matches > 0
-          ORDER BY n_matches DESC, doc_id ASC LIMIT 20""",
-    // KWIC snippets: the phrase CTE plus a ±3-token cut around the
-    // first match, everything re-derived from the raw text
-    "q_search_snippets" ->
-      """WITH tk AS (SELECT doc_id, regexp_split_to_array(text, ' ') AS t
-                     FROM documents),
-          st AS (SELECT doc_id, t,
-                   list_filter(
-                     generate_series(CAST(1 AS BIGINT), CAST(len(t) AS BIGINT) - 1),
-                     i -> t[CAST(i AS INTEGER)] = 'sort'
-                          AND t[CAST(i + 1 AS INTEGER)] = 'merge') AS ss
-                 FROM tk WHERE len(t) >= 2),
-          f AS (SELECT doc_id, CAST(len(ss) AS BIGINT) AS n_matches,
-                  CAST(greatest(list_min(ss) - 3, 1) AS INTEGER) AS s,
-                  CAST(least(CAST(len(t) AS BIGINT), list_min(ss) + 1 + 3)
-                    AS INTEGER) AS e, t
-                FROM st WHERE len(ss) > 0),
-          r AS (SELECT doc_id, n_matches,
-                  CAST(row_number() OVER (ORDER BY n_matches DESC, doc_id ASC)
-                    AS BIGINT) AS rank,
-                  array_to_string(list_slice(t, s, e), ' ') AS snippet
-                FROM f)
-          SELECT doc_id, n_matches, rank, snippet FROM r
-          ORDER BY rank LIMIT 20""",
-    // Proximity search: anchors of the first term with the second term
-    // within the window, recomputed from raw token positions
-    "q_near_search" ->
-      """WITH tk AS (SELECT doc_id, regexp_split_to_array(text, ' ') AS t
-                     FROM documents),
-          pa AS (SELECT doc_id, i AS p FROM tk,
-                   LATERAL unnest(generate_series(CAST(1 AS BIGINT),
-                     CAST(len(t) AS BIGINT))) AS u(i)
-                 WHERE t[CAST(i AS INTEGER)] = 'merge'),
-          pb AS (SELECT doc_id, i AS p FROM tk,
-                   LATERAL unnest(generate_series(CAST(1 AS BIGINT),
-                     CAST(len(t) AS BIGINT))) AS u(i)
-                 WHERE t[CAST(i AS INTEGER)] = 'window'),
-          m AS (SELECT doc_id, CAST(count(DISTINCT p) AS BIGINT) AS n_matches
-                FROM (SELECT pa.doc_id, pa.p
-                      FROM pa JOIN pb USING (doc_id)
-                      WHERE abs(pb.p - pa.p) < 5) s
-                GROUP BY 1)
-          SELECT doc_id, n_matches,
-                 CAST(row_number() OVER (ORDER BY n_matches DESC, doc_id ASC)
-                   AS BIGINT) AS rank
-          FROM m ORDER BY n_matches DESC, doc_id ASC LIMIT 20""",
-    // q_hybrid_search / q_rag_e2e / q_rag_media / q_media_ann /
-    // q_ann_leg_recall moved to the MODEL-DEPENDENT generated maps
-    // (hybridRagOracle / mediaIvfOracle): their semantic legs are served
-    // from the session-trained IVF indexes since round 15, so their
-    // oracles replay the probe from the cached centroids.
-    // Purged-index BM25: the ranking of an index that never contained
-    // the subject (doc_id % 7 == 0) — the engine side serves it from
-    // tombstones + corrected df/meta cells without a rebuild
-    "q_index_purge" ->
-      bm25OracleSqlOver("(SELECT * FROM documents WHERE doc_id % 7 != 0)"),
-    // Same ground truth, served from the purged-then-MAJOR-COMPACTED
-    // store via the raw fast-path probe: proves the delete-fold rewrote
-    // the files to exactly what a rebuild without the subject writes
-    "q_index_compact" ->
-      bm25OracleSqlOver("(SELECT * FROM documents WHERE doc_id % 7 != 0)"),
-    // Memorization-risk scan: per-source fraction of corpus-unique
-    // positional 8-grams; a unique gram's owner is min(source) inside
-    // the per-gram aggregation (count==1 → exactly one owner)
-    "q_rare_ngrams" ->
-      s"""WITH g AS (SELECT source, unnest(${posGramSql(8)}) AS _g FROM documents),
-          h AS (SELECT source, ${md5Hash48Sql("_g")} AS h FROM g),
-          t AS (SELECT source, CAST(count(*) AS BIGINT) AS n_grams
-                FROM h GROUP BY 1),
-          u0 AS (SELECT h, count(*) AS c, min(source) AS source
-                 FROM h GROUP BY 1),
-          u AS (SELECT source, CAST(count(*) AS BIGINT) AS n_unique
-                FROM u0 WHERE c = 1 GROUP BY 1)
-          SELECT t.source, t.n_grams,
-                 CAST(coalesce(u.n_unique, 0) AS BIGINT) AS n_unique,
-                 CAST(floor(CAST(coalesce(u.n_unique, 0) AS DOUBLE)
-                   / CAST(t.n_grams AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT)
-                   AS uniq_frac_micro
-          FROM t LEFT JOIN u USING (source)""",
-    // CCNet head/middle/tail: per-language ntile(3) over the (already
-    // oracle-matched) bigram-LM fluency ranking, doc_id tiebreak
-    "q_ppl_buckets" ->
-      """WITH tok AS (SELECT doc_id, regexp_split_to_array(lower(text), '\s+') AS tk
-                      FROM documents),
-          bi AS (SELECT doc_id, tk[i] AS w1, tk[i+1] AS w2
-                 FROM tok, LATERAL unnest(generate_series(1, len(tk) - 1)) AS t(i)
-                 WHERE len(tk) >= 2),
-          bc AS (SELECT w1, w2, count(*) AS c12 FROM bi GROUP BY 1, 2),
-          uc AS (SELECT w1, count(*) AS c1 FROM bi GROUP BY 1),
-          v AS (SELECT count(DISTINCT t) AS v
-                FROM (SELECT unnest(tk) AS t FROM tok)),
-          s AS (SELECT doc_id, round(avg((c12 + 1.0) / (c1 + v)), 6) AS avg_prob
-                FROM bi JOIN bc USING (w1, w2) JOIN uc USING (w1) CROSS JOIN v
-                GROUP BY doc_id)
-          SELECT d.doc_id, d.lang,
-                 CAST(ntile(3) OVER (PARTITION BY d.lang
-                        ORDER BY s.avg_prob DESC, d.doc_id ASC) AS BIGINT)
-                   AS ppl_bucket
-          FROM documents d JOIN s ON d.doc_id = s.doc_id""",
-    "q_rep_stats" ->
-      """WITH tok AS (SELECT doc_id, regexp_split_to_array(lower(text), '\s+') AS tk
-                      FROM documents),
-          w AS (SELECT doc_id,
-                  list_transform(generate_series(1, greatest(len(tk) - 1, 1)),
-                    i -> array_to_string(list_slice(tk, i, i + 1), ' ')) AS ws
-                FROM tok)
-          SELECT doc_id,
-            CAST(len(ws) AS BIGINT) AS n_windows,
-            CAST(len(list_distinct(ws)) AS BIGINT) AS n_distinct,
-            round(1.0 - CAST(len(list_distinct(ws)) AS DOUBLE)
-                        / CAST(len(ws) AS DOUBLE), 6) AS dup_frac,
-            round(CAST(list_max(list_transform(list_distinct(ws),
-                    x -> len(list_filter(ws, y -> y = x)))) AS DOUBLE)
-                  / CAST(len(ws) AS DOUBLE), 6) AS top_frac
-          FROM w""",
-    // Heavy hitters via Misra-Gries in its exact regime (vocab ≪ capacity):
-    // the oracle recomputes the same top-10 with the same tiebreak.
-    "q_heavy_hitters" ->
-      """WITH tok AS (SELECT lang, unnest(regexp_split_to_array(lower(text), '\s+')) AS tok
-                      FROM documents),
-          cnt AS (SELECT lang, tok, count(*) AS cnt FROM tok GROUP BY lang, tok),
-          r AS (SELECT lang, tok, cnt,
-                  row_number() OVER (PARTITION BY lang ORDER BY cnt DESC, tok) AS rank
-                FROM cnt)
-          SELECT lang, rank, tok, cnt FROM r WHERE rank <= 10""",
-    "q_zorder_scan" ->
-      """SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey, l_quantity
-         FROM lineitem
-         WHERE l_partkey BETWEEN 50 AND 150 AND l_suppkey BETWEEN 2 AND 6""",
-    "q_point_lookup" ->
-      "SELECT * FROM customer WHERE c_custkey = 42",
-    "q_range_scan" ->
-      """SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice
-         FROM orders WHERE o_orderkey >= 100 AND o_orderkey < 200""",
-    "q_family_filter" ->
-      """SELECT l_returnflag, count(*) AS n_rows,
-                CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty
-         FROM lineitem WHERE l_returnflag IN ('A','R')
-         GROUP BY l_returnflag""",
-    "q_first_per_group" ->
-      """SELECT l_orderkey, l_linenumber, l_partkey, l_quantity FROM (
-           SELECT l_orderkey, l_linenumber, l_partkey, l_quantity,
-                  row_number() OVER (PARTITION BY l_orderkey
-                    ORDER BY l_linenumber, l_partkey, l_suppkey) AS rn
-           FROM lineitem) t WHERE rn = 1""",
-    "q_latest_version" ->
-      """SELECT o_custkey, o_orderkey, o_orderdate, o_totalprice FROM (
-           SELECT o_custkey, o_orderkey, o_orderdate, o_totalprice,
-                  row_number() OVER (PARTITION BY o_custkey
-                    ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn
-           FROM orders) t WHERE rn = 1""",
-    "q_probe_join" ->
-      """SELECT o_orderkey,
-                CASE WHEN c_acctbal < 0 THEN 'FAILED' ELSE 'SUCCESS' END AS status,
-                CASE WHEN c_acctbal < 0
-                     THEN 'NegativeBalanceException, message: account balance below zero'
-                END AS error
-         FROM orders LEFT JOIN customer ON o_custkey = c_custkey""",
-    "q_probe_counters" ->
-      """SELECT count(*) AS total_rows,
-                count(CASE WHEN NOT coalesce(c_acctbal < 0, FALSE) THEN 1 END) AS success_rows,
-                count(CASE WHEN coalesce(c_acctbal < 0, FALSE) THEN 1 END) AS failed_rows
-         FROM orders LEFT JOIN customer ON o_custkey = c_custkey""",
-    "q_msg_normalize" ->
-      """SELECT doc_id,
-                concat('SimulatedException', ', message: ',
-                  CASE WHEN trim(concat(source, chr(10), 'lang=', lang)) = '' THEN 'n/a'
-                       ELSE regexp_split_to_array(concat(source, chr(10), 'lang=', lang),
-                              '\r\n|\r|\n')[1]
-                  END) AS error
-         FROM documents""",
-    "q_ts_override" ->
-      """SELECT o_orderkey, TIMESTAMP '2024-06-01 00:00:00' AS o_orderdate, o_totalprice
-         FROM orders WHERE o_orderkey < 100""",
-    "q_families" ->
-      "SELECT DISTINCT l_returnflag AS family FROM lineitem",
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-                CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
-                CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_base_price,
-                CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS sum_disc_price,
-                count(*) AS count_order
-         FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-         GROUP BY l_returnflag, l_linestatus""",
-    "q_join_agg" ->
-      """SELECT n_name,
-                CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-                count(*) AS n_items
-         FROM lineitem
-         JOIN orders ON l_orderkey = o_orderkey
-         JOIN customer ON o_custkey = c_custkey
-         JOIN nation ON c_nationkey = n_nationkey
-         GROUP BY n_name""",
-    // Stats-planned join pipeline: the broadcast-vs-shuffle choice is
-    // physical only (StatsPlannerSpec asserts the plan shape); the
-    // result set is strategy-independent, so the oracle is a plain join.
-    "q_stats_join" ->
-      """SELECT n_name,
-                count(*) AS n_orders,
-                CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
-         FROM orders
-         JOIN customer ON o_custkey = c_custkey
-         JOIN nation ON c_nationkey = n_nationkey
-         GROUP BY n_name""",
-    "q_topk" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-         ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10""",
-    "q_anti_join" ->
-      """SELECT c_custkey FROM customer c
-         WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey
-                             AND o.o_orderdate >= TIMESTAMP '2001-01-01 00:00:00')""",
-    "q_semi_join" ->
-      """SELECT p_brand, count(*) AS n_parts FROM part p
-         WHERE EXISTS (SELECT 1 FROM lineitem l WHERE l.l_partkey = p.p_partkey)
-         GROUP BY p_brand""",
-    "q_json_extract" ->
-      """SELECT event_id, CAST(json_extract_string(props, '$.k') AS INTEGER) AS k
-         FROM events WHERE event_id < 1000""",
-    // Epoch reshuffle: the same seeded affine-permutation keys — the
-    // (a_e, b_e) literals come from the identical Lehmer iteration; the
-    // affine product exceeds 64 bits, so the engine computes it in exact
-    // DECIMAL(38,0) and the oracle in HUGEINT — identical values.
-    "q_epoch_shuffle" -> (0 until 3).map { e =>
-      val (a, b) = EpochShuffle.epochParams(20260815L, e)
-      s"""SELECT CAST($e AS BIGINT) AS epoch, doc_id,
-               CAST((CAST(doc_id AS HUGEINT) * $a + $b) % ${EpochShuffle.P} AS BIGINT)
-                 AS shuffle_key
-          FROM documents"""
-    }.mkString("\n          UNION ALL\n          "),
-    // Funnel: the same cumulative-window reachability DP — latest step-k
-    // completion time carried forward per user, integer-microsecond
-    // windows, per-user depth then domain-sized counts.
-    "q_funnel" ->
-      """WITH ev AS (SELECT user_id, event_id, epoch_us(ts) AS tus, event_type
-                     FROM events),
-          a AS (SELECT *, max(CASE WHEN event_type = 'view' THEN tus END)
-                            OVER w AS r1
-                FROM ev WINDOW w AS (PARTITION BY user_id
-                  ORDER BY tus, event_id
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)),
-          b AS (SELECT *, CASE WHEN event_type = 'click' AND r1 IS NOT NULL
-                                    AND tus - r1 <= 3600000000 THEN tus END AS hit2
-                FROM a),
-          c AS (SELECT *, max(hit2) OVER w AS r2
-                FROM b WINDOW w AS (PARTITION BY user_id
-                  ORDER BY tus, event_id
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)),
-          d AS (SELECT user_id,
-                  MAX(CASE WHEN event_type = 'purchase' AND r2 IS NOT NULL
-                                AND tus - r2 <= 3600000000 THEN 3
-                           WHEN hit2 IS NOT NULL THEN 2
-                           WHEN event_type = 'view' THEN 1 ELSE 0 END) AS depth
-                FROM c GROUP BY 1)
-          SELECT CAST(1 AS BIGINT) AS step, 'view' AS event_type,
-                 CAST(count(CASE WHEN depth >= 1 THEN 1 END) AS BIGINT) AS n_users FROM d
-          UNION ALL
-          SELECT CAST(2 AS BIGINT), 'click',
-                 CAST(count(CASE WHEN depth >= 2 THEN 1 END) AS BIGINT) FROM d
-          UNION ALL
-          SELECT CAST(3 AS BIGINT), 'purchase',
-                 CAST(count(CASE WHEN depth >= 3 THEN 1 END) AS BIGINT) FROM d""",
-    // Retention triangle: ISO-week cohorts, (user, week) already
-    // distinct so the cell count is a plain count.
-    "q_retention" ->
-      """WITH ev AS (SELECT user_id, CAST(date_trunc('week', ts) AS DATE) AS week
-                     FROM events),
-          c AS (SELECT user_id, MIN(week) AS cohort_week FROM ev GROUP BY 1),
-          a AS (SELECT DISTINCT user_id, week FROM ev)
-          SELECT cohort_week,
-                 CAST(date_diff('day', cohort_week, week) // 7 AS BIGINT) AS week_offset,
-                 CAST(count(*) AS BIGINT) AS n_users
-          FROM a JOIN c USING (user_id)
-          GROUP BY 1, 2""",
-    // Link-rank: the same five integer-unit power iterations as LinkRank,
-    // unrolled as chained CTEs (recursive CTEs disallow aggregation in
-    // the recursive term) — floor division everywhere, so the hash match
-    // is bit-exact.
-    "q_link_rank" -> linkRankOracleSql(5),
-    "q_label_prop" -> labelPropOracleSql(3),
-    // Next-item serving table: top-3 successors per item, exact
-    // micro-unit probabilities, full (weight desc, dst asc) tie order.
-    "q_next_item" -> (eventEdgesSql +
-      """,
-          ow AS (SELECT src, CAST(SUM(w) AS BIGINT) AS wout FROM e0 GROUP BY 1),
-          r AS (SELECT e0.src, e0.dst, e0.w, ow.wout,
-                       row_number() OVER (PARTITION BY e0.src
-                         ORDER BY e0.w DESC, e0.dst ASC) AS rn
-                FROM e0 JOIN ow USING (src))
-          SELECT src AS k, dst AS next_k, w,
-                 CAST((w * 1000000) // wout AS BIGINT) AS p_micro,
-                 CAST(rn AS BIGINT) AS rank
-          FROM r WHERE rn <= 3"""),
-    "q_event_windows" ->
-      """SELECT date_trunc('hour', ts) AS hour, event_type,
-                count(*) AS n_events,
-                CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-         FROM events GROUP BY 1, 2""",
-    // Built-in session windows: merge under a STRICT 30-min gap (Spark's
-    // session_window rule — the custom q_sessionize merges at ≤ gap),
-    // window end = last event + gap; µs-exact gap comparisons, ms floors
-    // only on the emitted bounds.
-    "q_session_window" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) AS tus, event_type FROM events),
-         marked AS (
-           SELECT user_id, tus, event_type,
-                  CASE WHEN lag(tus) OVER w IS NULL
-                         OR tus - lag(tus) OVER w >= 1800000000 THEN 1 ELSE 0 END AS brk
-           FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tus)),
-         sess AS (
-           SELECT user_id, tus, event_type,
-                  sum(brk) OVER (PARTITION BY user_id ORDER BY tus
-                                 ROWS UNBOUNDED PRECEDING) AS sid
-           FROM marked)
-         SELECT user_id,
-                CAST(min(tus) // 1000 AS BIGINT) AS session_start_ms,
-                CAST((max(tus) + 1800000000) // 1000 AS BIGINT) AS session_end_ms,
-                count(*) AS n_events,
-                count(CASE WHEN event_type = 'error' THEN 1 END) AS n_errors
-         FROM sess GROUP BY user_id, sid""",
-    // Sliding windows: width 1 h, slide 15 min, epoch-aligned — each event
-    // belongs to exactly 4 windows with starts floor(t/900s)·900s − k·900s,
-    // k ∈ [0, 4); the CROSS JOIN range(4) replays Spark's window expansion.
-    "q_sliding_windows" ->
-      """WITH x AS (
-           SELECT event_type, value,
-                  (epoch_us(ts) // 900000000) * 900000 AS base_ms
-           FROM events),
-         w AS (SELECT event_type, value,
-                      CAST(base_ms - CAST(t.k AS BIGINT) * 900000 AS BIGINT)
-                        AS window_start_ms
-               FROM x CROSS JOIN range(4) t(k))
-         SELECT window_start_ms, event_type, count(*) AS n_events,
-                CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-         FROM w GROUP BY 1, 2""",
-    "q_dedup_exact" ->
-      """SELECT md5(text) AS text_hash, count(*) AS n_docs,
-                CAST(min(doc_id) AS BIGINT) AS keep_id
-         FROM documents GROUP BY md5(text)""",
-    "q_text_stats" ->
-      """SELECT doc_id,
-                CAST(length(text) AS BIGINT) AS n_chars,
-                CAST(len(string_split(text, ' ')) AS BIGINT) AS n_ws_tokens,
-                CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS BIGINT) AS n_digits,
-                CAST(length(regexp_replace(text, '[^.,;:!?]', '', 'g')) AS BIGINT) AS n_punct,
-                CAST(length(regexp_replace(text, '\s', '', 'g')) AS BIGINT) AS n_nonspace_chars
-         FROM documents""",
-    // RAG chunking: identical window/stride arithmetic over the same
-    // whitespace token array; DuckDB list slicing clamps at the array end
-    // exactly like Spark's `slice`, so short tail chunks agree.
-    "q_chunk_docs" ->
-      s"""WITH t AS (SELECT doc_id, regexp_split_to_array(text, '\\s+') AS tk FROM documents),
-           n AS (SELECT doc_id, tk,
-                   CASE WHEN len(tk) <= 64 THEN 1
-                        ELSE CAST(ceil((len(tk) - 64) / 48.0) AS BIGINT) + 1 END AS nc FROM t)
-          SELECT doc_id, CAST(i AS BIGINT) AS chunk_idx,
-                 CAST(len(tk[CAST(i*48+1 AS INTEGER):CAST(i*48+64 AS INTEGER)]) AS BIGINT) AS n_tokens,
-                 array_to_string(tk[CAST(i*48+1 AS INTEGER):CAST(i*48+64 AS INTEGER)], ' ') AS chunk_text
-          FROM n, unnest(range(nc)) AS u(i)""",
-    // Winnowing fingerprints (SIGMOD'03): same positional 3-gram md5-48
-    // hashes, same window-4 minima, distinct per doc. Short docs follow the
-    // same whole-doc-gram / single-window fallbacks as the Spark plan.
-    "q_winnow" ->
-      s"""WITH t AS (SELECT doc_id, regexp_split_to_array(lower(text), '\\s+') AS tk FROM documents),
-           g AS (SELECT doc_id, tk,
-                   CASE WHEN len(tk) >= 3 THEN len(tk) - 2 ELSE 1 END AS ng FROM t),
-           h AS (SELECT doc_id, ng, list_transform(range(ng), i ->
-                   ${md5Hash48Sql("array_to_string(tk[CAST(i+1 AS INTEGER):CAST(i+3 AS INTEGER)], ' ')")}) AS hs FROM g),
-           w AS (SELECT doc_id, list_distinct(list_transform(
-                   range(CASE WHEN ng >= 4 THEN ng - 3 ELSE 1 END),
-                   j -> list_min(hs[CAST(j+1 AS INTEGER):CAST(j+4 AS INTEGER)]))) AS fps FROM h)
-          SELECT doc_id, CAST(unnest(fps) AS BIGINT) AS fp FROM w""",
-    // Data card: bucket floor/least arithmetic over the stored n_chars
-    // column; token totals from the same \s+ split.
-    "q_corpus_stats" ->
-      s"""SELECT source,
-                 CAST(least(floor(n_chars / 200.0), 9) AS BIGINT) AS len_bucket,
-                 count(*) AS n_docs,
-                 round(avg(n_chars), 6) AS avg_chars,
-                 CAST(sum(len(regexp_split_to_array(text, '\\s+'))) AS BIGINT) AS total_ws_tokens
-          FROM documents GROUP BY source, len_bucket""",
-    "q_quality" ->
-      """SELECT doc_id,
-                round(
-                  CASE WHEN length(text) BETWEEN 100 AND 2000 THEN 1.0
-                       WHEN length(text) BETWEEN 20 AND 5000 THEN 0.5
-                       ELSE 0.0 END * 0.35
-                  + least(length(regexp_replace(text, '[^\p{L} ]', '', 'g'))
-                          / greatest(CAST(length(text) AS DOUBLE), 1.0) * 1.2, 1.0) * 0.35
-                  + CASE WHEN CAST(length(text) AS DOUBLE)
-                              / greatest(CAST(len(regexp_split_to_array(text, '\s+')) AS DOUBLE), 1.0)
-                              BETWEEN 3.0 AND 12.0 THEN 1.0 ELSE 0.3 END * 0.2
-                  + least(length(regexp_replace(text, '[^.,;:!?]', '', 'g'))
-                          / greatest(CAST(len(regexp_split_to_array(text, '\s+')) AS DOUBLE), 1.0) * 4, 1.0) * 0.1,
-                  6) AS quality
-         FROM documents""",
-    "q_sessionize" ->
-      """WITH e AS (
-           SELECT user_id, CAST(epoch_us(ts) // 1000 AS BIGINT) AS ts_ms, event_type
-           FROM events),
-         marked AS (
-           SELECT user_id, ts_ms, event_type,
-                  CASE WHEN lag(ts_ms) OVER w IS NULL
-                         OR ts_ms - lag(ts_ms) OVER w > 1800000 THEN 1 ELSE 0 END AS brk
-           FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_ms)),
-         sess AS (
-           SELECT user_id, ts_ms, event_type,
-                  sum(brk) OVER (PARTITION BY user_id ORDER BY ts_ms
-                                 ROWS UNBOUNDED PRECEDING) AS sid
-           FROM marked)
-         SELECT user_id,
-                min(ts_ms) AS session_start_ms,
-                max(ts_ms) AS session_end_ms,
-                count(*) AS n_events,
-                count(CASE WHEN event_type = 'error' THEN 1 END) AS n_errors
-         FROM sess GROUP BY user_id, sid""",
-    "q_vocab" ->
-      """SELECT lang,
-                CAST(count(DISTINCT tok) AS BIGINT) AS n_distinct_tokens,
-                count(tok) AS n_tokens
-         FROM (SELECT lang, unnest(regexp_split_to_array(lower(text), '\s+')) AS tok
-               FROM documents) t
-         GROUP BY lang""",
-    "q_token_counts" ->
-      """SELECT lang, count(*) AS n_docs,
-                CAST(sum(len(regexp_split_to_array(text, '\s+'))) AS BIGINT) AS total_ws_tokens,
-                CAST(sum(len(regexp_extract_all(lower(text),
-                  '[\p{L}]+|[0-9]+|[^\s\p{L}0-9]'))) AS BIGINT) AS total_bpe_tokens
-         FROM documents GROUP BY lang""",
-    // As-of join vs DuckDB's native ASOF LEFT JOIN. Right side is reduced
-    // to one version per (customer, date) first so the pick is unique.
-    "q_asof_join" ->
-      """WITH o AS (
-           SELECT o_custkey, o_orderdate,
-                  max(o_orderkey) AS o_orderkey,
-                  arg_max(o_totalprice, o_orderkey) AS o_totalprice
-           FROM orders GROUP BY o_custkey, o_orderdate),
-         e AS (SELECT event_id, user_id, ts FROM events WHERE event_id < 2000)
-         SELECT e.event_id, e.user_id,
-                CAST(epoch_us(e.ts) // 1000 AS BIGINT) AS ts_ms,
-                o.o_orderkey, o.o_totalprice
-         FROM e ASOF LEFT JOIN o
-           ON e.user_id = o.o_custkey AND e.ts >= o.o_orderdate""",
-    // Interval join: events inside the 30-minute half-open window after an
-    // error event of the same user, vs DuckDB's plain inequality join.
-    // Comparisons go through epoch_us on BOTH sides: the fixture's physical
-    // ts encoding has varied across generations (ns, then µs — see
-    // Tables.normalizeEventTs), the engine always works at Spark's
-    // microsecond precision, and epoch_us is type-generic in DuckDB — the
-    // explicit µs floor keeps the two engines' boundary decisions identical
-    // whichever encoding the fixture carries.
-    "q_interval_join" ->
-      """SELECT e.event_id, e.user_id,
-                CAST(epoch_us(e.ts) // 1000 AS BIGINT) AS ts_ms,
-                r.event_id AS error_id
-         FROM events e
-         JOIN (SELECT event_id, user_id, ts FROM events WHERE event_type = 'error') r
-           ON e.user_id = r.user_id
-          AND epoch_us(e.ts) >= epoch_us(r.ts)
-          AND epoch_us(e.ts) < epoch_us(r.ts) + 1800000000""",
-    // Left-outer interval join: unmatched events carry a null error_id.
-    "q_interval_left" ->
-      """SELECT e.event_id, e.user_id,
-                CAST(epoch_us(e.ts) // 1000 AS BIGINT) AS ts_ms,
-                r.event_id AS error_id
-         FROM events e
-         LEFT JOIN (SELECT event_id, user_id, ts FROM events
-                    WHERE event_type = 'error') r
-           ON e.user_id = r.user_id
-          AND epoch_us(e.ts) >= epoch_us(r.ts)
-          AND epoch_us(e.ts) < epoch_us(r.ts) + 1800000000""",
-    // Rollup: subtotals + grand total; NULL group markers match 1:1.
-    "q_rollup" ->
-      """SELECT l_returnflag, l_linestatus, count(*) AS n_rows,
-                CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty
-         FROM lineitem
-         GROUP BY ROLLUP (l_returnflag, l_linestatus)""",
-    // Set operations over key sets with a segment label.
-    "q_set_ops" ->
-      """WITH recent AS (
-           SELECT DISTINCT o_custkey AS custkey FROM orders
-           WHERE o_orderdate >= TIMESTAMP '2000-01-01 00:00:00'),
-         negative AS (
-           SELECT c_custkey AS custkey FROM customer WHERE c_acctbal < 0)
-         SELECT custkey, 'both' AS segment FROM (SELECT custkey FROM recent INTERSECT SELECT custkey FROM negative) t
-         UNION ALL
-         SELECT custkey, 'recent_only' FROM (SELECT custkey FROM recent EXCEPT SELECT custkey FROM negative) t
-         UNION ALL
-         SELECT custkey, 'negative_only' FROM (SELECT custkey FROM negative EXCEPT SELECT custkey FROM recent) t""",
-    // Window-function pack: rank, running decimal sum, lag-based day gaps.
-    "q_window" ->
-      """SELECT o_custkey, o_orderkey,
-                row_number() OVER w AS order_rank,
-                CAST(sum(CAST(o_totalprice AS DECIMAL(18,4)))
-                     OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-                           ROWS UNBOUNDED PRECEDING) AS DOUBLE) AS running_spend,
-                date_diff('day', CAST(lag(o_orderdate) OVER w AS DATE),
-                          CAST(o_orderdate AS DATE)) AS days_since_prev
-         FROM orders
-         WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)""",
-    // Pivot: daily counts per event type, absent combinations as 0.
-    "q_pivot" ->
-      """SELECT date_trunc('day', ts) AS day,
-                count(CASE WHEN event_type = 'click' THEN 1 END) AS click,
-                count(CASE WHEN event_type = 'error' THEN 1 END) AS error,
-                count(CASE WHEN event_type = 'purchase' THEN 1 END) AS purchase,
-                count(CASE WHEN event_type = 'signup' THEN 1 END) AS signup,
-                count(CASE WHEN event_type = 'view' THEN 1 END) AS view
-         FROM events GROUP BY 1""",
-    // Exact interpolated percentiles (the sort-based form).
-    "q_percentiles" ->
-      """SELECT event_type,
-                quantile_cont(value, 0.5) AS p50,
-                quantile_cont(value, 0.95) AS p95,
-                quantile_cont(value, 0.99) AS p99
-         FROM events GROUP BY event_type""",
-    // Sketch twins: the sketch OUTPUTS are engine-specific (HLL++/KLL
-    // registers have no SQL replay), so the driver-checked contract is
-    // the error BOUND — Spark emits exact stats + a within-bound boolean
-    // (see Sketches.*CheckQuery), the oracle recomputes the exact side
-    // and asserts TRUE. A sketch drifting out of bound = hash mismatch.
-    "q_percentiles_approx" ->
-      """SELECT event_type,
-                TRUE AS p50_ok, TRUE AS p95_ok, TRUE AS p99_ok
-         FROM events GROUP BY event_type""",
-    "q_vocab_approx" ->
-      """SELECT lang,
-                CAST(count(DISTINCT tok) AS BIGINT) AS n_distinct_tokens,
-                count(tok) AS n_tokens,
-                TRUE AS within_bound
-         FROM (SELECT lang, unnest(regexp_split_to_array(lower(text), '\s+')) AS tok
-               FROM documents) t
-         GROUP BY lang""",
-    // Language ID: same stopword voting + CJK count, argmax with the same
-    // lexicographic tiebreak (first lang that is >= all later ones).
-    "q_lang_id" ->
-      s"""WITH t AS (
-            SELECT doc_id, lang, text,
-                   list_distinct(regexp_split_to_array(lower(text), '\\s+')) AS toks
-            FROM documents),
-          s AS (SELECT doc_id, lang,
-                $langScoresSql
-                FROM t)
-          SELECT doc_id, lang AS labeled_lang,
-                 CASE WHEN s_de >= s_en AND s_de >= s_es AND s_de >= s_fr AND s_de >= s_zh THEN 'de'
-                      WHEN s_en >= s_es AND s_en >= s_fr AND s_en >= s_zh THEN 'en'
-                      WHEN s_es >= s_fr AND s_es >= s_zh THEN 'es'
-                      WHEN s_fr >= s_zh THEN 'fr'
-                      ELSE 'zh' END AS predicted_lang
-          FROM s""",
-    // CorruptScan over the derived customer cell table: a negative account
-    // balance poisons the row; the TSV record is (rendered key, normalized
-    // first-line message).
-    "q_corrupt_scan" ->
-      s"""SELECT ${rowKeySql("c_custkey")} AS row_key,
-                 'CorruptCellException, message: poisoned cell value' AS error
-          FROM customer WHERE c_acctbal < 0""",
-    // CopyRow of customer 42 with ts override: one cell per non-key column,
-    // values rendered exactly as Spark's CAST(x AS STRING).
-    "q_copy_row" ->
-      """WITH c AS (SELECT * FROM customer WHERE c_custkey = 42)
-         SELECT '\x00\x00\x00\x00\x00\x00\x00*' AS row_key, 'customer' AS family,
-                'c_name' AS qualifier, CAST(1717200000000 AS BIGINT) AS ts,
-                'Put' AS cellType, c_name AS value FROM c
-         UNION ALL SELECT '\x00\x00\x00\x00\x00\x00\x00*', 'customer', 'c_nationkey',
-                1717200000000, 'Put', CAST(c_nationkey AS VARCHAR) FROM c
-         UNION ALL SELECT '\x00\x00\x00\x00\x00\x00\x00*', 'customer', 'c_acctbal',
-                1717200000000, 'Put', CAST(c_acctbal AS VARCHAR) FROM c
-         UNION ALL SELECT '\x00\x00\x00\x00\x00\x00\x00*', 'customer', 'c_mktsegment',
-                1717200000000, 'Put', c_mktsegment FROM c""",
-    // Multi-version cell read: keys ≡ 0 (mod 10) carry two extra versions;
-    // latest-version-wins ⇒ ts+2000 and the "#v2" value suffix for those.
-    "q_cell_latest" ->
-      s"""WITH c AS (
-            SELECT *, ${rowKeySql("c_custkey")} AS rk,
-                   CASE WHEN c_custkey % 10 = 0 THEN 1700000002000 ELSE 1700000000000 END AS vts,
-                   CASE WHEN c_custkey % 10 = 0 THEN '#v2' ELSE '' END AS sfx
-            FROM customer)
-          SELECT rk AS row_key, 'c_name' AS qualifier, CAST(vts AS BIGINT) AS ts,
-                 c_name || sfx AS value FROM c
-          UNION ALL SELECT rk, 'c_nationkey', vts, CAST(c_nationkey AS VARCHAR) || sfx FROM c
-          UNION ALL SELECT rk, 'c_acctbal', vts, CAST(c_acctbal AS VARCHAR) || sfx FROM c
-          UNION ALL SELECT rk, 'c_mktsegment', vts, c_mktsegment || sfx FROM c""",
-    // TimeRange read as of BaseTs+1200: v2 (+2000) not yet written, the
-    // %7 markers (+1500) not yet masking -> %10 keys read v1, the rest
-    // their base version. Markers never appear in the oracle because the
-    // as-of filter excludes them by construction.
-    // TTL read at now=base+2500, ttl=2000: base-ts cells expired
-    // everywhere; %10 keys keep v2 (base+2000) unless a %7 marker at
-    // base+2200 masks it — so survivors are %10 minus %70 keys, at v2
-    "q_cell_ttl" ->
-      s"""WITH c AS (
-            SELECT *, ${rowKeySql("c_custkey")} AS rk
-            FROM customer WHERE c_custkey % 10 = 0 AND c_custkey % 7 <> 0)
-          SELECT rk AS row_key, 'c_name' AS qualifier,
-                 CAST(1700000002000 AS BIGINT) AS ts,
-                 c_name || '#v2' AS value FROM c
-          UNION ALL SELECT rk, 'c_nationkey', 1700000002000,
-                 CAST(c_nationkey AS VARCHAR) || '#v2' FROM c
-          UNION ALL SELECT rk, 'c_acctbal', 1700000002000,
-                 CAST(c_acctbal AS VARCHAR) || '#v2' FROM c
-          UNION ALL SELECT rk, 'c_mktsegment', 1700000002000,
-                 c_mktsegment || '#v2' FROM c""",
-    "q_cell_asof" ->
-      s"""WITH c AS (
-            SELECT *, ${rowKeySql("c_custkey")} AS rk,
-                   CASE WHEN c_custkey % 10 = 0 THEN 1700000001000 ELSE 1700000000000 END AS vts,
-                   CASE WHEN c_custkey % 10 = 0 THEN '#v1' ELSE '' END AS sfx
-            FROM customer)
-          SELECT rk AS row_key, 'c_name' AS qualifier, CAST(vts AS BIGINT) AS ts,
-                 c_name || sfx AS value FROM c
-          UNION ALL SELECT rk, 'c_nationkey', vts, CAST(c_nationkey AS VARCHAR) || sfx FROM c
-          UNION ALL SELECT rk, 'c_acctbal', vts, CAST(c_acctbal AS VARCHAR) || sfx FROM c
-          UNION ALL SELECT rk, 'c_mktsegment', vts, c_mktsegment || sfx FROM c""",
-    // VERSIONS=2 read: every version enumerated, newest-first rank per
-    // (key, qualifier), kept while rank <= 2.
-    "q_cell_versions" ->
-      s"""WITH c AS (
-            SELECT *, ${rowKeySql("c_custkey")} AS rk, c_custkey AS ck FROM customer),
-          q AS (
-            SELECT rk, ck, 'c_name' AS q, c_name AS bv FROM c
-            UNION ALL SELECT rk, ck, 'c_nationkey', CAST(c_nationkey AS VARCHAR) FROM c
-            UNION ALL SELECT rk, ck, 'c_acctbal', CAST(c_acctbal AS VARCHAR) FROM c
-            UNION ALL SELECT rk, ck, 'c_mktsegment', c_mktsegment FROM c),
-          cells AS (
-            SELECT rk, q, CAST(1700000000000 AS BIGINT) AS ts, bv AS v FROM q
-            UNION ALL SELECT rk, q, 1700000001000, bv || '#v1' FROM q WHERE ck % 10 = 0
-            UNION ALL SELECT rk, q, 1700000002000, bv || '#v2' FROM q WHERE ck % 10 = 0),
-          r AS (SELECT *, row_number() OVER
-                  (PARTITION BY rk, q ORDER BY ts DESC) AS rn FROM cells)
-          SELECT rk AS row_key, q AS qualifier, ts, v AS value,
-                 CAST(rn AS BIGINT) AS version_rank
-          FROM r WHERE rn <= 2""",
-    // Wide-row view, scalar-rendered: entries sorted by (qualifier, value)
-    // struct order on BOTH sides (Spark array_sort of struct ≡ DuckDB
-    // list_sort of struct_pack), then joined `q=v` with the 0x1f unit
-    // separator — the same derivation the engine applies to the MapType
-    // view, but atomic-typed so the driver's pandas canonicalizer can
-    // sort it (a raw MAP column was round 9's one red row).
-    "q_wide_row" ->
-      s"""WITH c AS (
-            SELECT *, ${rowKeySql("c_custkey")} AS rk,
-                   CASE WHEN c_custkey % 10 = 0 THEN 1700000002000 ELSE 1700000000000 END AS vts,
-                   CASE WHEN c_custkey % 10 = 0 THEN '#v2' ELSE '' END AS sfx
-            FROM customer),
-          cells AS (
-            SELECT rk, 'c_name' AS q, vts AS ts, c_name || sfx AS v FROM c
-            UNION ALL SELECT rk, 'c_nationkey', vts, CAST(c_nationkey AS VARCHAR) || sfx FROM c
-            UNION ALL SELECT rk, 'c_acctbal', vts, CAST(c_acctbal AS VARCHAR) || sfx FROM c
-            UNION ALL SELECT rk, 'c_mktsegment', vts, c_mktsegment || sfx FROM c)
-          SELECT rk AS row_key, 'customer' AS family,
-                 array_to_string(
-                   list_transform(
-                     list_sort(list(struct_pack(key := q, value := v))),
-                     e -> e.key || '=' || e.value),
-                   chr(31)) AS columns,
-                 CAST(count(*) AS BIGINT) AS n_cols,
-                 CAST(max(ts) AS BIGINT) AS ts
-          FROM cells GROUP BY rk""",
-    // Wide-row consumer: predicates and projections THROUGH the map view,
-    // on the rendered value strings so both engines share the derivation.
-    "q_wide_filter" ->
-      s"""WITH c AS (
-            SELECT *, ${rowKeySql("c_custkey")} AS rk,
-                   CASE WHEN c_custkey % 10 = 0 THEN 1700000002000 ELSE 1700000000000 END AS vts,
-                   CASE WHEN c_custkey % 10 = 0 THEN '#v2' ELSE '' END AS sfx
-            FROM customer)
-          SELECT rk AS row_key,
-                 c_name || sfx AS name,
-                 CAST(c_acctbal AS VARCHAR) || sfx AS acctbal,
-                 CAST(4 AS BIGINT) AS n_cols,
-                 CAST(vts AS BIGINT) AS ts
-          FROM c
-          WHERE starts_with(c_mktsegment, 'MACHINERY')
-            AND starts_with(CAST(c_acctbal AS VARCHAR), '-')""",
-    // Per-family compaction: txt keeps newest of all ages, num's TTL
-    // (BaseTs+1500) kills base cells and v1 so only %5 keys' v2 survive.
-    "q_family_compact" ->
-      s"""WITH c AS (SELECT *, ${rowKeySql("c_custkey")} AS rk,
-                   CASE WHEN c_custkey % 5 = 0 THEN 1700000002000 ELSE 1700000000000 END AS vts,
-                   CASE WHEN c_custkey % 5 = 0 THEN '#v2' ELSE '' END AS sfx
-            FROM customer)
-          SELECT rk AS row_key, 'txt' AS family, 'c_name' AS qualifier,
-                 CAST(vts AS BIGINT) AS ts, c_name || sfx AS value FROM c
-          UNION ALL SELECT rk, 'txt', 'c_mktsegment', vts, c_mktsegment || sfx FROM c
-          UNION ALL SELECT rk, 'num', 'c_acctbal', 1700000002000,
-                 CAST(c_acctbal AS VARCHAR) || '#v2' FROM c WHERE c_custkey % 5 = 0
-          UNION ALL SELECT rk, 'num', 'c_nationkey', 1700000002000,
-                 CAST(c_nationkey AS VARCHAR) || '#v2' FROM c WHERE c_custkey % 5 = 0""",
-    // Exact split points: key k owns split i iff rank ⌈i·R/8⌉ lands in
-    // (cum−nc, cum] — replicated with the same integer arithmetic.
-    "q_region_splits" ->
-      s"""WITH kc AS (SELECT o_custkey AS k, count(*) AS nc FROM orders GROUP BY 1),
-          c AS (SELECT k, nc, sum(nc) OVER (ORDER BY k) AS cum FROM kc),
-          g AS (SELECT sum(nc) AS r FROM kc),
-          b AS (SELECT k, nc, cum, cum - nc AS prev, r FROM c CROSS JOIN g),
-          s AS (SELECT k, unnest(generate_series(
-                  CAST((prev*8)//r + 1 AS BIGINT),
-                  CAST(least((cum*8)//r, 7) AS BIGINT))) AS split_idx
-                FROM b WHERE (prev*8)//r + 1 <= least((cum*8)//r, 7))
-          SELECT split_idx, ${rowKeySql("k")} AS split_key FROM s""",
-    // Increment semantics: per customer with orders, order_count = seed +
-    // n_orders (seed custkey%100), spend_floor created from 0.
-    "q_counter_incr" ->
-      s"""WITH d AS (
-            SELECT o_custkey AS k, 'order_count' AS qualifier,
-                   CAST(count(*) AS BIGINT) AS delta
-            FROM orders GROUP BY 1
-            UNION ALL
-            SELECT o_custkey, 'spend_floor',
-                   CAST(sum(CAST(floor(o_totalprice) AS BIGINT)) AS BIGINT)
-            FROM orders GROUP BY 1)
-          SELECT ${rowKeySql("k")} AS row_key, qualifier,
-                 -- %9 customers' order_count seed is delete-masked: those
-                 -- counters resume from 0, exactly like a missing cell
-                 CASE WHEN qualifier = 'order_count' AND k % 9 <> 0
-                      THEN k % 100 ELSE 0 END
-                   + delta AS value_long
-          FROM d""",
-    // checkAndPut: decision per mutation — segment promotion passes only
-    // on BUILDING and NOT on the delete-masked %5 rows (deleted = absent),
-    // absent-gated c_flag always passes, wrong-expected c_name write
-    // always rejects, absent-gated c_seg2 passes exactly on the deleted
-    // %5 rows.
-    "q_check_and_put" ->
-      s"""WITH c AS (SELECT *, ${rowKeySql("c_custkey")} AS rk FROM customer)
-          SELECT rk AS row_key, 'c_mktsegment' AS qualifier,
-                 'PROMOTED' AS value,
-                 c_mktsegment = 'BUILDING' AND c_custkey % 5 <> 0 AS applied FROM c
-          UNION ALL SELECT rk, 'c_flag', 'NEW', TRUE FROM c
-          UNION ALL SELECT rk, 'c_name', 'X', FALSE FROM c WHERE c_custkey % 2 = 0
-          UNION ALL SELECT rk, 'c_seg2', 'RESET', c_custkey % 5 = 0 FROM c""",
-    // Append: %4 customers read name#a, the %8 subset name#a#b (suffixes
-    // concatenate in byte order); the delete-masked %10 rows append onto
-    // EMPTY (deleted = absent).
-    "q_cell_append" ->
-      s"""SELECT ${rowKeySql("c_custkey")} AS row_key, 'c_name' AS qualifier,
-                 CASE WHEN c_custkey % 10 = 0 THEN '' ELSE c_name END
-                   || CASE WHEN c_custkey % 8 = 0 THEN '#a#b' ELSE '#a' END AS value
-          FROM customer WHERE c_custkey % 4 = 0""",
-    // Copy-verification diff: dropped rows surface one ONLY_SOURCE cell
-    // per qualifier, corrupted rows one VALUE_MISMATCH on c_acctbal.
-    "q_store_diff" ->
-      s"""WITH c AS (SELECT *, ${rowKeySql("c_custkey")} AS rk FROM customer)
-          SELECT rk AS row_key, q.q AS qualifier, 'ONLY_SOURCE' AS status
-          FROM c CROSS JOIN (VALUES ('c_name'), ('c_nationkey'),
-            ('c_acctbal'), ('c_mktsegment')) q(q)
-          WHERE c_custkey % 17 = 0
-          UNION ALL
-          SELECT rk, 'c_acctbal', 'VALUE_MISMATCH' FROM c
-          WHERE c_custkey % 13 = 0 AND c_custkey % 17 <> 0""",
-    // Hashed-linear quality classifier: per token fnv1a64 → bucket
-    // (4096 divides 2^64, so unsigned-mod ≡ Java floorMod of the signed
-    // hash) → splitmix64 weight in (-1,1); margin = left fold in doc
-    // order (exact double replay), keep = margin > 0.
-    "q_quality_classifier" ->
-      s"""WITH toks AS (SELECT doc_id, regexp_split_to_array(text, ' ') AS tk
-                        FROM documents),
-          hs AS (SELECT doc_id, list_transform(tk, t -> ${fnvUSql("t")}) AS hl
-                 FROM toks),
-          bs AS (SELECT doc_id, list_transform(hl, h -> h % 4096::HUGEINT) AS bl
-                 FROM hs),
-          ws AS (SELECT doc_id,
-                        list_transform(bl, b ->
-                          CAST(${signedSql(s"(${mix64Sql("b")})")} AS DOUBLE)
-                            / CAST(9223372036854775808.0 AS DOUBLE)) AS wl
-                 FROM bs),
-          m AS (SELECT doc_id,
-                       list_reduce(list_prepend(CAST(0.0 AS DOUBLE), wl),
-                                   (a, b) -> a + b) AS margin
-                FROM ws)
-          SELECT doc_id, margin, margin > 0.0 AS keep FROM m""",
-    // Stratified exact sampling: 7 docs per source in md5(doc_id‖salt)
-    // order — membership is a pure function of the ids.
-    "q_strat_sample" ->
-      """WITH t AS (SELECT doc_id, source,
-            CAST(row_number() OVER (PARTITION BY source
-                   ORDER BY md5(concat(CAST(doc_id AS VARCHAR), 'graft-strat')),
-                            doc_id) AS BIGINT) AS sample_rank
-          FROM documents)
-          SELECT doc_id, source, sample_rank FROM t WHERE sample_rank <= 7""",
-    // tf-idf keywords: rational idf — score is exactly tf * ((N+1)/(df+1)),
-    // two IEEE ops, replayed verbatim; per-doc rank (score desc, term asc).
-    "q_tfidf" ->
-      """WITH p AS (SELECT doc_id, w AS term, CAST(count(*) AS BIGINT) AS tf
-                    FROM (SELECT doc_id, unnest(regexp_split_to_array(text, ' ')) AS w
-                          FROM documents)
-                    GROUP BY 1, 2),
-          d AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM p GROUP BY 1),
-          n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
-          s AS (SELECT p.doc_id, p.term,
-                       CAST(p.tf AS DOUBLE) * ((n.n + 1.0) / (d.df + 1)) AS score
-                FROM p JOIN d USING (term) CROSS JOIN n),
-          r AS (SELECT doc_id, term, score,
-                       CAST(row_number() OVER (PARTITION BY doc_id
-                              ORDER BY score DESC, term ASC) AS BIGINT) AS rank
-                FROM s)
-          SELECT doc_id, term, score, rank FROM r WHERE rank <= 3""",
-    // Keyword search: same postings/idf arithmetic, contributions
-    // quantized to micro-units — CAST(floor(x·1e6 + 0.5) AS BIGINT),
-    // scaled-integer half-up — and summed as BIGINT (exact, order-free),
-    // top 20 by (score, doc_id). round()/DECIMAL is deliberately absent:
-    // tf·idf contributions are rationals sitting on exact 7-digit `…5`
-    // ties whenever df+1 is a power of two, exactly where round()'s
-    // half-up-vs-half-even rule differs between engine builds (the r7
-    // driver-only hash-FAIL); floor is exact IEEE in both.
-    "q_keyword_search" ->
-      """WITH p AS (SELECT doc_id, w AS term, CAST(count(*) AS BIGINT) AS tf
-                    FROM (SELECT doc_id, unnest(regexp_split_to_array(text, ' ')) AS w
-                          FROM documents)
-                    GROUP BY 1, 2),
-          d AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM p GROUP BY 1),
-          n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
-          s AS (SELECT p.doc_id,
-                       CAST(sum(CAST(floor((CAST(p.tf AS DOUBLE) * ((n.n + 1.0) / (d.df + 1)))
-                                           * 1000000.0 + 0.5)
-                                     AS BIGINT)) AS BIGINT) AS score
-                FROM p JOIN d USING (term) CROSS JOIN n
-                WHERE p.term IN ('merge', 'sort', 'window')
-                GROUP BY 1),
-          r AS (SELECT doc_id, score,
-                       CAST(row_number() OVER (ORDER BY score DESC, doc_id ASC)
-                            AS BIGINT) AS rank
-                FROM s)
-          SELECT doc_id, score, rank FROM r WHERE rank <= 20""",
-    // Prefix search: the q_keyword_search arithmetic with the term set
-    // resolved by prefix (LIKE 's%' ≙ the engine's lexicon range scan).
-    "q_prefix_search" ->
-      """WITH p AS (SELECT doc_id, w AS term, CAST(count(*) AS BIGINT) AS tf
-                    FROM (SELECT doc_id, unnest(regexp_split_to_array(text, ' ')) AS w
-                          FROM documents)
-                    GROUP BY 1, 2),
-          d AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM p GROUP BY 1),
-          n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
-          s AS (SELECT p.doc_id,
-                       CAST(sum(CAST(floor((CAST(p.tf AS DOUBLE) * ((n.n + 1.0) / (d.df + 1)))
-                                           * 1000000.0 + 0.5)
-                                     AS BIGINT)) AS BIGINT) AS score
-                FROM p JOIN d USING (term) CROSS JOIN n
-                WHERE p.term LIKE 's%'
-                GROUP BY 1),
-          r AS (SELECT doc_id, score,
-                       CAST(row_number() OVER (ORDER BY score DESC, doc_id ASC)
-                            AS BIGINT) AS rank
-                FROM s)
-          SELECT doc_id, score, rank FROM r WHERE rank <= 20""",
-    // BM25: Okapi weighting with the rational idf; the k1/b-derived
-    // constants are INTERPOLATED from the same Scala doubles the engine
-    // plan uses (a hand-written "2.2" could sit 1 ulp from the computed
-    // k1+1), and avgdl = Σdl/N divides the same integers on both sides.
-    // Micro-unit quantization as in q_keyword_search (tie-rule-free).
-    "q_bm25_search" -> bm25OracleSql,
-    "q_prf_search" -> prfOracleSql,
-    "q_search_ndcg" -> searchNdcgOracleSql,
-    // ColumnPaginationFilter: the page [1, 3) of the byte-ordered
-    // qualifiers is (c_mktsegment, c_name) for every customer row.
-    "q_col_paginate" ->
-      s"""WITH c AS (SELECT *, ${rowKeySql("c_custkey")} AS rk FROM customer)
-          SELECT rk AS row_key, 'c_mktsegment' AS qualifier,
-                 CAST(1700000000000 AS BIGINT) AS ts, c_mktsegment AS value FROM c
-          UNION ALL
-          SELECT rk, 'c_name', CAST(1700000000000 AS BIGINT), c_name FROM c""",
-    // CellCounter: per-qualifier cell totals over the %10 three-version
-    // injection — 4 qualifiers, uniform counts, version depth 3.
-    "q_cell_counts" ->
-      """WITH q AS (SELECT unnest(['c_name','c_nationkey','c_acctbal','c_mktsegment']) AS qualifier),
-          c AS (SELECT c_custkey, CASE WHEN c_custkey % 10 = 0 THEN 3 ELSE 1 END AS v FROM customer)
-          SELECT 'customer' AS family, q.qualifier,
-                 CAST(sum(v) AS BIGINT) AS n_cells,
-                 CAST(count(*) AS BIGINT) AS n_rows,
-                 CAST(max(v) AS BIGINT) AS max_versions
-          FROM c CROSS JOIN q GROUP BY 1, 2""",
-    // SyncTable repair: after the repair batch, the destination's visible
-    // view is exactly the source's cells; coordinates the copy dropped
-    // (%17 rows) or corrupted (%13 acctbals) read at the sync timestamp,
-    // everything else at the original; the spurious qualifier is gone.
-    "q_sync_table" ->
-      s"""WITH c AS (SELECT *, ${rowKeySql("c_custkey")} AS rk FROM customer),
-          cells AS (
-            SELECT c_custkey AS k, rk, 'c_name' AS qualifier, c_name AS value FROM c
-            UNION ALL SELECT c_custkey, rk, 'c_nationkey', CAST(c_nationkey AS VARCHAR) FROM c
-            UNION ALL SELECT c_custkey, rk, 'c_acctbal', CAST(c_acctbal AS VARCHAR) FROM c
-            UNION ALL SELECT c_custkey, rk, 'c_mktsegment', c_mktsegment FROM c)
-          SELECT rk AS row_key, qualifier,
-                 CAST(CASE WHEN k % 17 = 0
-                             OR (k % 13 = 0 AND qualifier = 'c_acctbal')
-                      THEN 1800000000000 ELSE 1700000000000 END AS BIGINT) AS ts,
-                 value
-          FROM cells""",
-    // Secondary value index: the lookup returns exactly the base cells
-    // holding the value — for 'BUILDING' that is each matching customer's
-    // c_mktsegment cell at the base timestamp.
-    "q_value_lookup" ->
-      s"""SELECT ${rowKeySql("c_custkey")} AS row_key,
-               'c_mktsegment' AS qualifier,
-               CAST(1700000000000 AS BIGINT) AS ts,
-               c_mktsegment AS value
-          FROM customer WHERE c_mktsegment = 'BUILDING'""",
-    // Index-served rewrite: the engine runs a PLAIN value-equality filter
-    // and the ValueIndexRewrite rule swaps in the index probe — the hash
-    // match against the same SQL proves the rewritten plan is equivalent.
-    "q_index_served" ->
-      s"""SELECT ${rowKeySql("c_custkey")} AS row_key,
-               'c_mktsegment' AS qualifier,
-               CAST(1700000000000 AS BIGINT) AS ts,
-               c_mktsegment AS value
-          FROM customer WHERE c_mktsegment = 'BUILDING'""",
-    // Delete-marker visibility: same versions, a marker at BaseTs+1500 on
-    // custkey%7==0 — masks the base Put (and v1) but not v2, so %7-only
-    // rows vanish and %7∧%10 rows still answer with their v2 cell.
-    "q_cell_visible" ->
-      s"""WITH c AS (
-            SELECT *, ${rowKeySql("c_custkey")} AS rk,
-                   CASE WHEN c_custkey % 10 = 0 THEN 1700000002000 ELSE 1700000000000 END AS vts,
-                   CASE WHEN c_custkey % 10 = 0 THEN '#v2' ELSE '' END AS sfx
-            FROM customer
-            WHERE NOT (c_custkey % 7 = 0 AND c_custkey % 10 <> 0))
-          SELECT rk AS row_key, 'c_name' AS qualifier, CAST(vts AS BIGINT) AS ts,
-                 c_name || sfx AS value FROM c
-          UNION ALL SELECT rk, 'c_nationkey', vts, CAST(c_nationkey AS VARCHAR) || sfx FROM c
-          UNION ALL SELECT rk, 'c_acctbal', vts, CAST(c_acctbal AS VARCHAR) || sfx FROM c
-          UNION ALL SELECT rk, 'c_mktsegment', vts, c_mktsegment || sfx FROM c""",
-    // Visibility labels: same per-qualifier label expressions, evaluated
-    // independently with DuckDB list functions (DNF: any '|' term whose
-    // '&' atoms all hold; '!' negates; '' is public) under auths
-    // {internal, marketing}.
-    "q_cell_acl" ->
-      s"""WITH c AS (SELECT *, ${rowKeySql("c_custkey")} AS rk FROM customer),
-          cells AS (
-            SELECT rk, 'c_name' AS qualifier, c_name AS value,
-                   CASE WHEN c_custkey % 3 = 0 THEN 'pii'
-                        WHEN c_custkey % 3 = 1 THEN '!restricted&internal'
-                        ELSE '' END AS vis FROM c
-            UNION ALL SELECT rk, 'c_nationkey', CAST(c_nationkey AS VARCHAR), '!partner' FROM c
-            UNION ALL SELECT rk, 'c_acctbal', CAST(c_acctbal AS VARCHAR), 'finance&internal' FROM c
-            UNION ALL SELECT rk, 'c_mktsegment', c_mktsegment, 'marketing|finance' FROM c)
-          SELECT rk AS row_key, qualifier, value FROM cells
-          WHERE vis = '' OR len(list_filter(str_split(vis, '|'), t ->
-            len(list_filter(str_split(t, '&'), x ->
-              NOT (CASE WHEN x[1] = '!'
-                        THEN NOT list_contains(['internal','marketing'], x[2:])
-                        ELSE list_contains(['internal','marketing'], x) END))) = 0)) > 0""",
-    // ANN brute force: exact cosine top-20 per query vector.
-    "q_ann_topk" ->
-      s"""WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-                     FROM embeddings WHERE vec_id < 5),
-           c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
-           scored AS (
-             SELECT q.query_id, c.vec_id, ${cosineSql("c.cv", "q.qv")} AS cosine
-             FROM c JOIN q ON c.vec_id != q.query_id)
-          SELECT query_id, vec_id, cosine, rank FROM (
-            SELECT query_id, vec_id, cosine,
-                   row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id ASC) AS rank
-            FROM scored) t WHERE rank <= 20""",
-    // Binary-quantization tier: the sign code is 64 static CASE terms
-    // summed left-associative ascending (partial sums stay non-negative
-    // until the final 1<<63 term, so DuckDB's checked BIGINT addition
-    // replays the engine's exact order without an overflow trip); the
-    // Hamming first pass reuses the ADC rerank tail (integer hamming vs
-    // the engine's BIGINT orders identically). Zero model state — the
-    // one ANN tier whose oracle is fully literal.
-    "q_ann_bq" ->
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM embeddings),
-           c AS (SELECT vec_id, ${bqCodeSql("ev")} AS code FROM e),
-           q AS (SELECT vec_id AS query_id, code AS qcode FROM c WHERE vec_id < 5),
-           adc AS (SELECT q.query_id, c.vec_id,
-               CAST(64 - bit_count(xor(c.code, q.qcode)) AS DOUBLE) AS adc_score
-             FROM c JOIN q ON c.vec_id != q.query_id),
-           ${pqRerankTailSqlExpr(
-             "greatest(CAST(100 AS BIGINT), (SELECT count(*) FROM e) // 20)",
-             k = 10)}""",
-    // Per-dimension embedding stats: elements quantized to micro-units
-    // BEFORE aggregation (exact integer min/max/sum — order- and
-    // tie-rule-free); the lateral range() replays posexplode's 0-based
-    // dimension index.
-    "q_embed_stats" ->
-      """WITH e AS (SELECT CAST(embedding AS DOUBLE[]) AS ev FROM embeddings),
-          d AS (SELECT CAST(t.i AS BIGINT) AS dim,
-                       list_extract(ev, CAST(t.i + 1 AS INTEGER)) AS x
-                FROM e CROSS JOIN range(64) t(i))
-          SELECT dim, CAST(count(*) AS BIGINT) AS n,
-                 CAST(min(floor(x * 1000000.0 + 0.5)) AS BIGINT) AS min_micro,
-                 CAST(max(floor(x * 1000000.0 + 0.5)) AS BIGINT) AS max_micro,
-                 CAST(sum(floor(x * 1000000.0 + 0.5)) AS BIGINT) AS sum_micro
-          FROM d GROUP BY dim""",
-    // Filtered ANN: exact top-10 among same-label corpus vectors only
-    // (pre-filtering — the predicate applies before scoring).
-    "q_ann_filtered" ->
-      s"""WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv, label
-                     FROM embeddings WHERE vec_id < 5),
-           c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS cv, label FROM embeddings),
-           scored AS (
-             SELECT q.query_id, c.vec_id, ${cosineSql("c.cv", "q.qv")} AS cosine
-             FROM c JOIN q ON c.label = q.label AND c.vec_id != q.query_id)
-          SELECT query_id, vec_id, cosine, rank FROM (
-            SELECT query_id, vec_id, cosine,
-                   row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id ASC) AS rank
-            FROM scored) t WHERE rank <= 10""",
-    // Hard negatives: the filtered-ANN oracle with the label equality
-    // negated — true top-10 among different-label vectors.
-    "q_hard_negatives" ->
-      s"""WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv, label
-                     FROM embeddings WHERE vec_id < 5),
-           c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS cv, label FROM embeddings),
-           scored AS (
-             SELECT q.query_id, c.vec_id, ${cosineSql("c.cv", "q.qv")} AS cosine
-             FROM c JOIN q ON c.label != q.label AND c.vec_id != q.query_id)
-          SELECT query_id, vec_id, cosine, rank FROM (
-            SELECT query_id, vec_id, cosine,
-                   row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id ASC) AS rank
-            FROM scored) t WHERE rank <= 10""",
-    // MMR diversity rerank: the exact-top-50 relevance pass, then ten
-    // unrolled greedy steps (the PageRank-oracle convention) — each step a
-    // row_number argmax over `7·rel − 3·pen` (λ = 0.7 in tenths, micro-unit
-    // BIGINTs: exact integer arithmetic, vec_id tiebreak) followed by the
-    // incremental penalty fold greatest(pen, sim(c, pick)). cand/ce/sims
-    // MATERIALIZED: each is re-read by every unrolled step.
-    "q_mmr_rerank" -> {
-      val (steps, unionPicks) = mmrUnrolledSql(k = 10, lambdaTenths = 7)
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM embeddings),
-           q AS (SELECT vec_id AS query_id, ev AS qv FROM e WHERE vec_id < 5),
-           scored AS (SELECT q.query_id, c.vec_id, ${cosineSql("c.ev", "q.qv")} AS cosine
-                      FROM e c JOIN q ON c.vec_id != q.query_id),
-           cand AS MATERIALIZED (SELECT query_id, vec_id,
-                    CAST(floor(cosine * 1000000.0 + 0.5) AS BIGINT) AS rel
-                  FROM (SELECT query_id, vec_id, cosine,
-                          row_number() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, vec_id ASC) AS rank
-                        FROM scored) t WHERE rank <= 50),
-           ce AS MATERIALIZED (SELECT cand.query_id, cand.vec_id, e.ev
-                 FROM cand JOIN e ON e.vec_id = cand.vec_id),
-           sims AS MATERIALIZED (SELECT a.query_id, a.vec_id AS c, b.vec_id AS o,
-                    CAST(floor(${cosineSql("a.ev", "b.ev")} * 1000000.0 + 0.5) AS BIGINT) AS sim
-                  FROM ce a JOIN ce b ON a.query_id = b.query_id AND a.vec_id != b.vec_id),
-           r0 AS (SELECT query_id, vec_id, rel, CAST(0 AS BIGINT) AS pen FROM cand),
-           $steps
-          $unionPicks"""
-    },
-    // DSv2 cellstore range scan: keys [100, 200), one cell per non-key
-    // customer column, base timestamps (no version injection here).
-    "q_store_scan" ->
-      s"""WITH c AS (
-            SELECT *, ${rowKeySql("c_custkey")} AS rk
-            FROM customer WHERE c_custkey >= 100 AND c_custkey < 200)
-          SELECT rk AS row_key, 'c_name' AS qualifier,
-                 CAST(1700000000000 AS BIGINT) AS ts, c_name AS value FROM c
-          UNION ALL SELECT rk, 'c_nationkey', 1700000000000, CAST(c_nationkey AS VARCHAR) FROM c
-          UNION ALL SELECT rk, 'c_acctbal', 1700000000000, CAST(c_acctbal AS VARCHAR) FROM c
-          UNION ALL SELECT rk, 'c_mktsegment', 1700000000000, c_mktsegment FROM c""",
-    // MultiRowRangeFilter: union of the two disjoint ranges
-    "q_multi_range" ->
-      s"""WITH c AS (
-            SELECT *, ${rowKeySql("c_custkey")} AS rk
-            FROM customer
-            WHERE (c_custkey >= 20 AND c_custkey < 60)
-               OR (c_custkey >= 100 AND c_custkey < 140))
-          SELECT rk AS row_key, 'c_name' AS qualifier,
-                 CAST(1700000000000 AS BIGINT) AS ts, c_name AS value FROM c
-          UNION ALL SELECT rk, 'c_nationkey', 1700000000000, CAST(c_nationkey AS VARCHAR) FROM c
-          UNION ALL SELECT rk, 'c_acctbal', 1700000000000, CAST(c_acctbal AS VARCHAR) FROM c
-          UNION ALL SELECT rk, 'c_mktsegment', 1700000000000, c_mktsegment FROM c""",
-    // FuzzyRowFilter: pair A = low byte 0x2A with bytes 0-3 fixed zero
-    // (custkey % 256 = 42; custkey < 2^32 holds at every SF), pair B =
-    // full 7-byte prefix with byte 6 = 0x03 (custkey in [768, 1024))
-    "q_fuzzy_scan" ->
-      s"""WITH c AS (
-            SELECT *, ${rowKeySql("c_custkey")} AS rk
-            FROM customer
-            WHERE (c_custkey % 256 = 42)
-               OR (c_custkey >= 768 AND c_custkey < 1024))
-          SELECT rk AS row_key, 'c_name' AS qualifier,
-                 CAST(1700000000000 AS BIGINT) AS ts, c_name AS value FROM c
-          UNION ALL SELECT rk, 'c_nationkey', 1700000000000, CAST(c_nationkey AS VARCHAR) FROM c
-          UNION ALL SELECT rk, 'c_acctbal', 1700000000000, CAST(c_acctbal AS VARCHAR) FROM c
-          UNION ALL SELECT rk, 'c_mktsegment', 1700000000000, c_mktsegment FROM c""",
-    // MOB round trip: digests recomputed from the raw corpus — resolution
-    // must reproduce the exact original bytes for every document
-    "q_mob_roundtrip" ->
-      s"""SELECT ${rowKeySql("doc_id")} AS row_key,
-                 octet_length(encode(text)) AS n_bytes,
-                 md5(text) AS value_md5,
-                 octet_length(encode(text)) >= 300 AS is_mob
-          FROM documents""",
-    // MOB purge lifecycle: the oracle recomputes the surviving-store
-    // accounting from the raw corpus minus the purged subject class
-    "q_mob_reclaim" ->
-      s"""WITH kept AS (
-            SELECT * FROM documents WHERE doc_id % 10 != 3),
-          big AS (
-            SELECT DISTINCT md5(text) AS h,
-                   octet_length(encode(text)) AS len
-            FROM kept WHERE octet_length(encode(text)) >= 300)
-          SELECT (SELECT count(*) FROM kept) AS n_docs,
-                 (SELECT count(*) FROM kept
-                   WHERE octet_length(encode(text)) >= 300) AS n_big,
-                 (SELECT count(*) FROM big) AS n_blobs,
-                 (SELECT CAST(sum(len) AS BIGINT) FROM big) AS blob_bytes""",
-    // ColumnRangeFilter over the wide-row events store: qualifier is the
-    // big-endian event_id, so the byte range is the id range
-    "q_qual_range" ->
-      s"""SELECT ${rowKeySql("user_id")} AS row_key,
-                 ${rowKeySql("event_id")} AS qualifier,
-                 CAST(1700000000000 AS BIGINT) AS ts,
-                 event_type AS value
-          FROM events WHERE event_id >= 100 AND event_id < 700""",
-    // composite rowKey rendered as the two concatenated big-endian halves
-    "q_cell_composite" ->
-      s"""WITH l AS (
-            SELECT *, ${rowKeySql("l_orderkey")} || ${rowKeySql("CAST(l_linenumber AS BIGINT)")} AS rk
-            FROM lineitem WHERE l_orderkey >= 100 AND l_orderkey < 200)
-          SELECT rk AS row_key, 'l_returnflag' AS qualifier,
-                 CAST(1700000000000 AS BIGINT) AS ts, l_returnflag AS value FROM l
-          UNION ALL SELECT rk, 'l_suppkey', 1700000000000, CAST(l_suppkey AS VARCHAR) FROM l""",
-    // per-key cell count and ts bounds: 4 cells per customer, ×3 versions
-    // (ts +1000, +2000) for keys ≡ 0 (mod 10) via withExtraVersions(n=2)
-    "q_store_groupby" ->
-      s"""SELECT ${rowKeySql("c_custkey")} AS row_key,
-                 CAST(CASE WHEN c_custkey % 10 = 0 THEN 12 ELSE 4 END AS BIGINT) AS n_cells,
-                 CAST(1700000000000 AS BIGINT) AS min_ts,
-                 CAST(CASE WHEN c_custkey % 10 = 0 THEN 1700000002000
-                      ELSE 1700000000000 END AS BIGINT) AS max_ts
-          FROM customer""",
-    // both stores derive from customer, so the SPJ result is just customer
-    "q_store_join" ->
-      s"""SELECT ${rowKeySql("c_custkey")} AS row_key,
-                 c_name AS name, c_mktsegment AS segment
-          FROM customer""",
-    // MinHash/LSH near-dup pairs vs GROUND TRUTH all-pairs exact Jaccard:
-    // on the fixtures every qualifying pair collides in ≥1 LSH band
-    // (J ≥ 0.5 ⇒ band-collision ~64%+ per band set; the corpus' planted
-    // dups sit far above threshold), so the approximate pipeline attains
-    // full recall and matches the exact answer. Verified at sf0.01/sf0.001.
-    "q_minhash_pairs" ->
-      s"""WITH ${jaccardPairsSql("documents")}
-          SELECT doc_a, doc_b, CAST(inter AS DOUBLE) / uni AS jaccard
-          FROM pairs WHERE uni > 0 AND CAST(inter AS DOUBLE) / uni >= 0.5""",
-    // Incremental near-dup: two-batch replay covers the full corpus with
-    // the same banding + hashed-shingle verify as q_minhash_pairs, so the
-    // same ground-truth jaccard SQL is the oracle.
-    "q_incr_neardup" ->
-      s"""WITH ${jaccardPairsSql("documents")}
-          SELECT doc_a, doc_b, CAST(inter AS DOUBLE) / uni AS jaccard
-          FROM pairs WHERE uni > 0 AND CAST(inter AS DOUBLE) / uni >= 0.5""",
-    "q_ngram_jaccard" ->
-      s"""WITH ${jaccardPairsSql("documents")}
-          SELECT doc_a, doc_b, CAST(inter AS DOUBLE) / uni AS jaccard
-          FROM pairs WHERE uni > 0 AND CAST(inter AS DOUBLE) / uni >= 0.3""",
-    // Cross-source overlap: exact Jaccard over each source's distinct
-    // shingle set (string grams here, 64-bit gram hashes engine-side —
-    // counts agree absent collisions, the same contract q_minhash_pairs
-    // relies on), micro-unit quantized; the MinHash-signature estimate is
-    // Spark-verified against the exact value, surfaced as a boolean.
-    "q_source_overlap" ->
-      s"""WITH sh AS (SELECT source, $ShingleSql AS shs FROM documents),
-          sg AS (SELECT DISTINCT source, unnest(shs) AS g FROM sh),
-          sz AS (SELECT source, CAST(count(*) AS BIGINT) AS n FROM sg GROUP BY 1),
-          pr AS (SELECT a.source AS source_a, b.source AS source_b,
-                        CAST(count(*) AS BIGINT) AS n_inter
-                 FROM sg a JOIN sg b USING (g)
-                 WHERE a.source < b.source GROUP BY 1, 2)
-          SELECT pr.source_a, pr.source_b, pr.n_inter,
-                 CAST(za.n + zb.n - pr.n_inter AS BIGINT) AS n_union,
-                 CAST(floor((CAST(pr.n_inter AS DOUBLE)
-                             / CAST(za.n + zb.n - pr.n_inter AS DOUBLE))
-                            * 1000000.0 + 0.5) AS BIGINT) AS jaccard_micro,
-                 TRUE AS mh_within_bound
-          FROM pr JOIN sz za ON pr.source_a = za.source
-                  JOIN sz zb ON pr.source_b = zb.source""",
-    // connected components over the ground-truth >=0.5 edge set via a
-    // recursive transitive closure; cluster id = least reachable doc id
-    // (LSH attains full recall on the fixtures, so edge sets agree)
-    "q_dup_clusters" ->
-      s"""WITH RECURSIVE ${jaccardPairsSql("documents")},
-          edges AS (SELECT doc_a, doc_b FROM pairs
-                    WHERE uni > 0 AND CAST(inter AS DOUBLE) / uni >= 0.5),
-          sym AS (SELECT doc_a AS a, doc_b AS b FROM edges
-                  UNION SELECT doc_b, doc_a FROM edges
-                  UNION SELECT doc_a, doc_a FROM edges
-                  UNION SELECT doc_b, doc_b FROM edges),
-          reach AS (SELECT a, b FROM sym
-                    UNION SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a)
-          SELECT a AS doc_id, min(b) AS cluster_id FROM reach GROUP BY a""",
-    // Per-source near-dup attribution: the q_dup_clusters transitive
-    // closure joined back to sources under the keep-min-id survivor rule.
-    "q_dedup_by_source" ->
-      s"""WITH RECURSIVE ${jaccardPairsSql("documents")},
-          edges AS (SELECT doc_a, doc_b FROM pairs
-                    WHERE uni > 0 AND CAST(inter AS DOUBLE) / uni >= 0.5),
-          sym AS (SELECT doc_a AS a, doc_b AS b FROM edges
-                  UNION SELECT doc_b, doc_a FROM edges
-                  UNION SELECT doc_a, doc_a FROM edges
-                  UNION SELECT doc_b, doc_b FROM edges),
-          reach AS (SELECT a, b FROM sym
-                    UNION SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a),
-          cl AS (SELECT a AS doc_id, min(b) AS cluster_id FROM reach GROUP BY a)
-          SELECT d.source, CAST(count(*) AS BIGINT) AS n_docs,
-                 CAST(count(cl.cluster_id) AS BIGINT) AS n_dup_members,
-                 CAST(count(CASE WHEN cl.cluster_id IS NOT NULL
-                                      AND cl.cluster_id != d.doc_id THEN 1 END) AS BIGINT)
-                   AS n_dropped,
-                 (CAST(count(CASE WHEN cl.cluster_id IS NOT NULL
-                                       AND cl.cluster_id != d.doc_id THEN 1 END) AS BIGINT)
-                  * 1000000) // CAST(count(*) AS BIGINT) AS drop_rate_micro
-          FROM documents d LEFT JOIN cl USING (doc_id)
-          GROUP BY d.source""",
-    // Power-of-two length buckets via integer bit length — length(bin(n))
-    // is exact in both engines, no libm log2 — with the pad-to-bucket-max
-    // waste fraction in micro-units (positive integer division).
-    "q_length_buckets" ->
-      s"""WITH t AS (SELECT
-                 CAST(length(bin(CAST(len(regexp_split_to_array(text, '\\s+')) AS BIGINT))) AS BIGINT) AS bucket,
-                 CAST(len(regexp_split_to_array(text, '\\s+')) AS BIGINT) AS n_tokens
-               FROM documents)
-          SELECT bucket, CAST(count(*) AS BIGINT) AS n_docs,
-                 CAST(max(n_tokens) AS BIGINT) AS max_tokens,
-                 CAST(sum(n_tokens) AS BIGINT) AS sum_tokens,
-                 ((CAST(count(*) AS BIGINT) * max(n_tokens)
-                   - CAST(sum(n_tokens) AS BIGINT)) * 1000000)
-                  // (CAST(count(*) AS BIGINT) * max(n_tokens)) AS pad_frac_micro
-          FROM t GROUP BY bucket""",
-    // temperature-flattened mixture: rates n^(alpha-1)/max, rounded half-up
-    // to 6 decimals on BOTH sides, then the shared md5 threshold
-    "q_temp_sample" ->
-      s"""WITH d AS (SELECT doc_id,
-                  CASE WHEN doc_id < 350 THEN 'big' ELSE source END AS source
-                FROM documents),
-          cnt AS (SELECT source, count(*) AS n FROM d GROUP BY source),
-          mx AS (SELECT max(pow(n, -0.5)) AS mv FROM cnt),
-          rt AS (SELECT source, floor(pow(n, -0.5) / mv * 1000000 + 0.5) / 1000000.0 AS rate
-                 FROM cnt, mx),
-          h AS (SELECT doc_id, source,
-                  md5(concat(CAST(doc_id AS VARCHAR), 'graft-temp')) AS m
-                FROM d),
-          b AS (SELECT doc_id, source, ${md5BucketSql("m", 1000000L)} AS bucket FROM h)
-          SELECT doc_id, b.source FROM b JOIN rt USING (source)
-          WHERE CAST(bucket AS DOUBLE) < rate * 1000000""",
-    // deterministic shards: md5 bucket mod 8, in-shard order by a second md5
-    "q_shard_assign" ->
-      s"""WITH h AS (SELECT doc_id,
-                  md5(concat(CAST(doc_id AS VARCHAR), 'graft-shard')) AS m,
-                  md5(concat(CAST(doc_id AS VARCHAR), 'graft-shard', '#pos')) AS ok
-                FROM documents),
-          s AS (SELECT doc_id, ${md5BucketSql("m", 8L)} AS shard, ok FROM h)
-          SELECT doc_id, shard,
-                 CAST(row_number() OVER (PARTITION BY shard ORDER BY ok, doc_id) AS BIGINT) AS pos
-          FROM s""",
-    // weighted mixture sampling: same md5 fixed-point threshold per source
-    "q_mix_sample" ->
-      s"""WITH h AS (
-            SELECT doc_id, source,
-                   md5(concat(CAST(doc_id AS VARCHAR), 'graft-mix')) AS m
-            FROM documents),
-          b AS (
-            SELECT doc_id, source,
-                   list_reduce(
-                     list_prepend(CAST(0 AS BIGINT),
-                       list_transform(range(6), i ->
-                         CAST(strpos('0123456789abcdef', substr(m, CAST(i + 1 AS INTEGER), 1)) - 1 AS BIGINT))),
-                     (acc, d) -> acc * 16 + d) % 1000000 AS bucket
-            FROM h)
-          SELECT doc_id, source FROM b
-          WHERE CAST(bucket AS DOUBLE) <
-                (CASE WHEN source = 'src0' THEN 0.25
-                      WHEN source = 'src1' THEN 0.5
-                      ELSE 1.0 END) * 1000000.0""",
-    // the salted shards partition the value space, so the merged counts
-    // equal a plain count(DISTINCT) exactly
-    "q_salted_distinct" ->
-      s"""SELECT user_id, count(DISTINCT event_type) AS n_distinct
-          FROM events GROUP BY user_id""",
-    // greedy next-fit packing replayed row-by-row as a recursive walk per
-    // fixed id-range group (same order, same budget arithmetic)
-    "q_pack_sequences" ->
-      s"""WITH RECURSIVE d AS (
-            SELECT doc_id,
-                   CAST(doc_id // 100 AS BIGINT) AS grp,
-                   CAST(len(regexp_split_to_array(text, '\\s+')) AS BIGINT) AS n_tokens,
-                   row_number() OVER (PARTITION BY (doc_id // 100) ORDER BY doc_id) AS rn
-            FROM documents),
-          walk AS (
-            SELECT grp, rn, doc_id, n_tokens,
-                   CAST(0 AS BIGINT) AS bin, n_tokens AS used
-            FROM d WHERE rn = 1
-            UNION ALL
-            SELECT d.grp, d.rn, d.doc_id, d.n_tokens,
-                   CASE WHEN w.used + d.n_tokens <= 256 THEN w.bin ELSE w.bin + 1 END,
-                   CASE WHEN w.used + d.n_tokens <= 256 THEN w.used + d.n_tokens ELSE d.n_tokens END
-            FROM walk w JOIN d ON d.grp = w.grp AND d.rn = w.rn + 1)
-          SELECT doc_id, grp, bin, n_tokens FROM walk""",
-    // First-fit-decreasing packing: the same per-group recursive walk,
-    // largest-first order, each item into the FIRST open bin that fits —
-    // the open-bin load vector rides the recursion as a LIST. DuckDB's
-    // list_position returns 0 (not NULL) on a miss; nullif(…, 0) is the
-    // not-found guard (a bare IS NULL check re-slices at position 0 and
-    // the loads list doubles every miss — measured exponential blowup).
-    // MATERIALIZED d: the walk joins it once per step.
-    "q_pack_ffd" -> {
-      val pos = "nullif(list_position(list_transform(w.loads, x -> x + d.n_tokens <= 256), true), 0)"
-      s"""WITH RECURSIVE d AS MATERIALIZED (
-            SELECT doc_id,
-                   CAST(doc_id // 100 AS BIGINT) AS grp,
-                   CAST(len(regexp_split_to_array(text, '\\s+')) AS BIGINT) AS n_tokens,
-                   row_number() OVER (PARTITION BY (doc_id // 100)
-                     ORDER BY len(regexp_split_to_array(text, '\\s+')) DESC, doc_id ASC) AS rn
-            FROM documents),
-          walk AS (
-            SELECT grp, rn, doc_id, n_tokens,
-                   CAST(1 AS BIGINT) AS bin, [n_tokens] AS loads
-            FROM d WHERE rn = 1
-            UNION ALL
-            SELECT d.grp, d.rn, d.doc_id, d.n_tokens,
-                   coalesce(CAST($pos AS BIGINT), len(w.loads) + 1),
-                   CASE WHEN $pos IS NULL THEN list_append(w.loads, d.n_tokens)
-                        ELSE list_concat(list_concat(
-                               w.loads[1:$pos-1], [w.loads[$pos] + d.n_tokens]),
-                               w.loads[$pos+1:]) END
-            FROM walk w JOIN d ON d.grp = w.grp AND d.rn = w.rn + 1)
-          SELECT doc_id, grp, bin, n_tokens FROM walk"""
-    },
-    // PII scrub over planted addresses (same regex dialect both engines)
-    "q_redact" ->
-      s"""WITH planted AS (
-            SELECT doc_id,
-                   concat(text, ' contact user', CAST(doc_id AS VARCHAR),
-                          '@example.com from 10.0.',
-                          CAST(doc_id % 256 AS VARCHAR), '.7 today') AS text
-            FROM documents)
-          SELECT doc_id,
-                 regexp_replace(
-                   regexp_replace(text, '${TextAnalysis.EmailPattern}', '<EMAIL>', 'g'),
-                   '${TextAnalysis.Ipv4Pattern}', '<IP>', 'g') AS text,
-                 CAST(len(regexp_extract_all(text, '${TextAnalysis.EmailPattern}'))
-                    + len(regexp_extract_all(text, '${TextAnalysis.Ipv4Pattern}')) AS BIGINT)
-                   AS n_redactions
-          FROM planted""",
-    // split = f(md5(doc_id || salt)): first 24 bits mod 100 against the
-    // 80/10/10 thresholds — same md5, same hex, same arithmetic as Spark
-    "q_split_assign" ->
-      s"""WITH h AS (
-            SELECT doc_id,
-                   md5(concat(CAST(doc_id AS VARCHAR), 'graft-split')) AS m
-            FROM documents),
-          b AS (
-            SELECT doc_id,
-                   list_reduce(
-                     list_prepend(CAST(0 AS BIGINT),
-                       list_transform(range(6), i ->
-                         CAST(strpos('0123456789abcdef', substr(m, CAST(i + 1 AS INTEGER), 1)) - 1 AS BIGINT))),
-                     (acc, d) -> acc * 16 + d) % 100 AS bucket
-            FROM h)
-          SELECT doc_id,
-                 CASE WHEN bucket < 80 THEN 'train'
-                      WHEN bucket < 90 THEN 'val'
-                      ELSE 'test' END AS split
-          FROM b""",
-    // Multimodal decode: the deterministic stub codec (fnv1a64 of the
-    // payload driving the fake dimensions) reproduced exactly in SQL —
-    // floorMod on the signed hash, unsigned shifts on the HUGEINT form.
-    "q_media_decode" -> mediaDecodeOracleSql,
-    // MOB-backed decode: the same ground truth — a byte lost anywhere in
-    // the MOB split/resolve path flips a stub dimension or digest
-    "q_media_mob" -> mediaDecodeOracleSql,
-    // Frame sampling: ok videos exploded to 60s-spaced frame descriptors
-    // with the sha256 digest both engines compute identically.
-    "q_frame_sample" ->
-      s"""WITH m AS ($mediaSql),
-           v AS (SELECT media_id, 1000 + ${ushiftSql("hx", 24)} % 7200000 AS duration_ms
-                 FROM m WHERE kind = 'video' AND n_bytes > 0),
-           f AS (SELECT media_id, unnest(generate_series(0, duration_ms, 60000)) AS frame_ts_ms FROM v)
-          SELECT media_id, frame_ts_ms,
-                 sha256(concat(CAST(media_id AS VARCHAR), ':', CAST(frame_ts_ms AS VARCHAR))) AS frame_digest
-          FROM f""",
-    // SimHash near-dup pairs: per-token fnv1a64, 64-lane majority vote
-    // (bit b set iff 2·|set| > n), 16-bit banding, Hamming ≤ 3 — the whole
-    // fingerprint recomputed from first principles in SQL. All-pairs form:
-    // the fixture corpora stay far under simhashPairs' star-routing
-    // threshold (maxBucket=1024 per (band,key) bucket — the q_minhash_pairs
-    // / q_embed_neardup convention), so the unguarded join IS the whole
-    // answer here; the guard's behavior is spec-pinned in DedupSpec.
-    "q_simhash_pairs" ->
-      s"""WITH toks AS (
-            SELECT doc_id, regexp_split_to_array(lower(text), '\\s+') AS tk FROM documents),
-           hs AS (SELECT doc_id, list_transform(tk, t -> ${fnvUSql("t")}) AS hs, len(tk) AS n FROM toks),
-           sh AS (SELECT doc_id,
-             list_reduce(list_prepend(0::HUGEINT,
-               list_transform(range(64), b ->
-                 CASE WHEN 2 * len(list_filter(hs, h -> (h // power(2::HUGEINT, b)::HUGEINT) % 2 = 1)) > n
-                      THEN power(2::HUGEINT, b)::HUGEINT ELSE 0::HUGEINT END)),
-               (a, x) -> a + x) AS ux
-             FROM hs),
-           fp AS (SELECT doc_id, ux, ${signedSql("ux")} AS simhash FROM sh),
-           banded AS (SELECT doc_id, ux, simhash, unnest(range(4)) AS band FROM fp),
-           keyed AS (SELECT doc_id, simhash, band,
-                     CAST((ux // power(2::HUGEINT, band * 16)::HUGEINT) % 65536 AS BIGINT) AS key
-                     FROM banded)
-          SELECT doc_a, doc_b, CAST(min(hamming) AS INTEGER) AS hamming FROM (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                   bit_count(xor(a.simhash, b.simhash)) AS hamming
-            FROM keyed a JOIN keyed b
-              ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id) t
-          WHERE hamming <= 3
-          GROUP BY doc_a, doc_b""",
-    // q_media_ann moved to the model-dependent mediaIvfOracle (index-
-    // served since round 15); its old brute-force statement survives as
-    // mediaBruteSql — the leg recall gate's truth.
-    // Source balancing: ≤40 docs per source, lowest ids win; reported as
-    // per-source counts with id bounds.
-    "q_source_cap" ->
-      """SELECT source, count(*) AS n_docs, min(doc_id) AS min_id, max(doc_id) AS max_id
-         FROM (SELECT source, doc_id,
-                      row_number() OVER (PARTITION BY source ORDER BY doc_id) AS r
-               FROM documents) t
-         WHERE r <= 40 GROUP BY source""",
-    // Fingerprint: md5 digest + min-k sketch of the window hashes —
-    // MinHashImpl.shingleHashes (per-token fnv1a64, per-window mix64*31+j
-    // chain, final mix64, signed sort, 8-prefix) recomputed in SQL.
-    "q_fingerprint" -> {
-      val step = s"(((${mix64Sql("xor(acc, th[CAST(w AS INTEGER) + CAST(j AS INTEGER) + 1])")}) * 31::HUGEINT)" +
-        s" % 18446744073709551616::HUGEINT + j) % 18446744073709551616::HUGEINT"
-      s"""WITH toks AS (SELECT doc_id, text, regexp_split_to_array(lower(text), '\\s+') AS tk FROM documents),
-           th AS (SELECT doc_id, text, list_transform(tk, t -> ${fnvUSql("t")}) AS th,
-                  CASE WHEN len(tk) >= 3 THEN len(tk) - 2 ELSE 1 END AS n_windows,
-                  least(3, len(tk)) AS width FROM toks),
-           w0 AS (SELECT doc_id, text, list_transform(range(n_windows), w ->
-                    list_reduce(list_prepend(2611923443488327891::HUGEINT,
-                        list_transform(range(width), x -> CAST(x AS HUGEINT))),
-                      (acc, j) -> $step)) AS zs FROM th),
-           w4 AS (SELECT doc_id, text, list_transform(zs, z -> ${mix64Sql("z")}) AS zs FROM w0),
-           wins AS (SELECT doc_id, text, list_transform(zs, z -> ${signedSql("z")}) AS whs FROM w4)
-          SELECT doc_id, md5(text) AS content_hash,
-                 array_to_string(list_transform(list_slice(list_sort(list_distinct(whs)), 1, 8),
-                   x -> CAST(x AS VARCHAR)), ',') AS mink_sketch
-          FROM wins"""
-    },
-    // The composed cleaning pipeline vs ground truth: quality gate, lang
-    // allowlist, exact dedup (min id per digest), near-dup drop of the
-    // higher id of every pair with exact Jaccard ≥ 0.8.
-    "q_clean_corpus" ->
-      s"""WITH ql AS (SELECT doc_id, $QualitySql AS quality FROM documents),
-           f AS (SELECT d.doc_id, d.text, d.lang, d.source, ql.quality
-                 FROM documents d JOIN ql USING (doc_id)
-                 WHERE ql.quality >= 0.5 AND d.lang IN ('en','es','de','fr','zh')),
-           keep AS (SELECT min(doc_id) AS doc_id FROM f GROUP BY md5(text)),
-           fd AS (SELECT f.* FROM f JOIN keep USING (doc_id)),
-           sh AS (SELECT doc_id, $ShingleSql AS shs FROM fd),
-           pairs AS (SELECT a.doc_id AS da, b.doc_id AS db,
-                       len(list_intersect(a.shs, b.shs)) AS inter,
-                       len(a.shs) + len(b.shs) - len(list_intersect(a.shs, b.shs)) AS uni
-                     FROM sh a JOIN sh b ON a.doc_id < b.doc_id),
-           dropped AS (SELECT DISTINCT db AS doc_id FROM pairs
-                       WHERE uni > 0 AND CAST(inter AS DOUBLE) / uni >= 0.8)
-          SELECT fd.doc_id, fd.lang, fd.source, fd.quality
-          FROM fd ANTI JOIN dropped USING (doc_id)""",
-    // Training-data export capstone: the q_clean_corpus chain, then the
-    // q_epoch_shuffle affine key (epoch 0, HUGEINT-exact), the
-    // q_export_audit md5 shard bucket, and the q_pack_sequences next-fit
-    // walk re-ordered by (shuffle_key, doc_id) within each shard — every
-    // stage the already-verified oracle piece; manifest_ok is the engine's
-    // file-level digest audit, asserted TRUE (the bound-boolean pattern).
-    "q_corpus_export_e2e" -> {
-      val (a, b) = EpochShuffle.epochParams(20260815L, 0)
-      s"""WITH RECURSIVE ql AS (SELECT doc_id, $QualitySql AS quality FROM documents),
-           f AS (SELECT d.doc_id, d.text, d.lang, d.source, ql.quality
-                 FROM documents d JOIN ql USING (doc_id)
-                 WHERE ql.quality >= 0.5 AND d.lang IN ('en','es','de','fr','zh')),
-           keep AS (SELECT min(doc_id) AS doc_id FROM f GROUP BY md5(text)),
-           fd AS (SELECT f.* FROM f JOIN keep USING (doc_id)),
-           shg AS (SELECT doc_id, $ShingleSql AS shs FROM fd),
-           pairs AS (SELECT a.doc_id AS da, b.doc_id AS db,
-                       len(list_intersect(a.shs, b.shs)) AS inter,
-                       len(a.shs) + len(b.shs) - len(list_intersect(a.shs, b.shs)) AS uni
-                     FROM shg a JOIN shg b ON a.doc_id < b.doc_id),
-           dropped AS (SELECT DISTINCT db AS doc_id FROM pairs
-                       WHERE uni > 0 AND CAST(inter AS DOUBLE) / uni >= 0.8),
-           cl AS (SELECT fd.* FROM fd ANTI JOIN dropped USING (doc_id)),
-           keyed AS (SELECT doc_id, text,
-                       CAST((CAST(doc_id AS HUGEINT) * $a + $b) % ${EpochShuffle.P} AS BIGINT) AS skey,
-                       md5(concat(CAST(doc_id AS VARCHAR), 'graft-shard')) AS m
-                     FROM cl),
-           sharded AS (SELECT doc_id, text, skey, ${md5BucketSql("m", 8L)} AS shard FROM keyed),
-           -- MATERIALIZED: the recursive walk joins d once per step; inlined,
-           -- DuckDB would re-run the quadratic clean chain every iteration
-           d AS MATERIALIZED (SELECT shard, doc_id,
-                   CAST(len(regexp_split_to_array(text, '\\s+')) AS BIGINT) AS n_tokens,
-                   row_number() OVER (PARTITION BY shard ORDER BY skey, doc_id) AS rn
-                 FROM sharded),
-           walk AS (
-             SELECT shard, rn, doc_id, n_tokens, CAST(0 AS BIGINT) AS bin, n_tokens AS used
-             FROM d WHERE rn = 1
-             UNION ALL
-             SELECT d.shard, d.rn, d.doc_id, d.n_tokens,
-                    CASE WHEN w.used + d.n_tokens <= 256 THEN w.bin ELSE w.bin + 1 END,
-                    CASE WHEN w.used + d.n_tokens <= 256 THEN w.used + d.n_tokens ELSE d.n_tokens END
-             FROM walk w JOIN d ON d.shard = w.shard AND d.rn = w.rn + 1)
-          SELECT CAST(shard AS BIGINT) AS shard,
-                 CAST(count(*) AS BIGINT) AS n_docs,
-                 CAST(max(bin) + 1 AS BIGINT) AS n_seqs,
-                 CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
-                 TRUE AS manifest_ok
-          FROM walk GROUP BY shard"""
-    },
-    // End-to-end pipeline: the q_clean_corpus chain over the train slice,
-    // then the q_decontam gram gate as an anti-join, then the
-    // q_split_assign bucket — each stage the already-verified oracle piece.
-    "q_pipeline_e2e" ->
-      s"""WITH base AS (SELECT * FROM documents WHERE doc_id % 5 <> 3),
-           ql AS (SELECT doc_id, $QualitySql AS quality FROM base),
-           f AS (SELECT d.doc_id, d.text, d.lang, d.source, ql.quality
-                 FROM base d JOIN ql USING (doc_id)
-                 WHERE ql.quality >= 0.5 AND d.lang IN ('en','es','de','fr','zh')),
-           keep AS (SELECT min(doc_id) AS doc_id FROM f GROUP BY md5(text)),
-           fd AS (SELECT f.* FROM f JOIN keep USING (doc_id)),
-           sh AS (SELECT doc_id, $ShingleSql AS shs FROM fd),
-           pairs AS (SELECT a.doc_id AS da, b.doc_id AS db,
-                       len(list_intersect(a.shs, b.shs)) AS inter,
-                       len(a.shs) + len(b.shs) - len(list_intersect(a.shs, b.shs)) AS uni
-                     FROM sh a JOIN sh b ON a.doc_id < b.doc_id),
-           dropped AS (SELECT DISTINCT db AS doc_id FROM pairs
-                       WHERE uni > 0 AND CAST(inter AS DOUBLE) / uni >= 0.8),
-           cl AS (SELECT fd.* FROM fd ANTI JOIN dropped USING (doc_id)),
-           ngr AS (SELECT doc_id, ${ngramSql(4)} AS gs FROM documents),
-           ev AS (SELECT DISTINCT unnest(gs) AS g FROM ngr WHERE doc_id % 5 = 3),
-           contaminated AS (SELECT DISTINCT tr.doc_id
-                            FROM (SELECT doc_id, unnest(gs) AS g FROM ngr
-                                  WHERE doc_id % 5 <> 3) tr
-                            JOIN ev USING (g)),
-           dc AS (SELECT cl.* FROM cl ANTI JOIN contaminated USING (doc_id)),
-           spl AS (SELECT doc_id,
-                     md5(concat(CAST(doc_id AS VARCHAR), 'graft-split')) AS m
-                   FROM dc),
-           spb AS (SELECT doc_id, ${md5BucketSql("m", 100L)} AS b FROM spl)
-          SELECT dc.doc_id, dc.source, dc.quality,
-                 CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val'
-                      ELSE 'test' END AS split
-          FROM dc JOIN spb USING (doc_id)""")
+                round(CAST(0.1234567895 AS DOUBLE), 9) AS canary_r9""")
 }

@@ -31,74 +31,11 @@ import org.apache.spark.sql.functions._
  */
 object AnnRecall {
 
-  /** (tier, k, floor in micro-units). Floors are the tier's documented
-    * quality contract on the synthetic fixtures: comfortably below every
-    * measured value but high enough that a broken tier — empty probes,
-    * garbage codebooks, wrong rerank — lands far under.
-    *
-    * mrl and pca are OCCUPANCY-BOUND since round 14
-    * ([[Similarity.mrlBucketedTopK]] / [[EmbeddingPca.pcaBucketedTopK]]:
-    * candidates from the multi-probe buckets, prefix cut at the
-    * occupancy-derived [[Similarity.bucketedRerank]] budget): measured
-    * 0.59 / 0.57 at sf0.1 and 0.38 / 0.32 at sf1 — per-query cost now
-    * DECADE-FLAT (the round-13 scaledCandidates budget was decade-stable
-    * in recall but linear in per-query cost), recall ceilinged by the
-    * multiprobe tier whose buckets supply the candidates.
-    *
-    * The IVF family sizes nlist to the corpus since round 14
-    * ([[IvfIndex.scaledNlist]] — constant ~256-vector cell occupancy —
-    * with ⌊√nlist⌋ probes): ivf measures 0.94 at BOTH sf0.1 (nlist=8,
-    * identical to the fixed-parameter era) and sf1 (nlist=128, nprobe=11
-    * — candidates ~11·156 ≈ 3% of the corpus vs the fixed model's 25%),
-    * ivfpq 0.66/0.60, ivfpq_res 0.40/0.54 — per-probe cost grows ~√decade
-    * while recall holds far above the floors.
-    *
-    * The two single-table bucketing tiers size their hyperplane count to
-    * the corpus since round 13 ([[Similarity.scaledPlanes]] — constant
-    * expected occupancy instead of the fixed 8 planes whose recall decayed
-    * to 0–6% by sf0.1): measured recall is now ~flat across THREE decades —
-    * lsh 0.31/0.33/0.35 at sf0.001/0.01/0.1 (0.14 at sf1), multiprobe
-    * 0.57/0.64/0.63 (0.40 at sf1) — so their floors are real quality
-    * contracts (multiprobe's 25× the round-12 floor), not presence checks.
-    * Cross-tier ordering (multiprobe ≥ lsh, sq8 atop the quantizer tiers)
-    * is spec-asserted in AnnRecallSpec rather than floor-encoded. */
-  val Tiers: Seq[(String, Int, Long)] = Seq(
-    ("lsh", 20, 100000L),
-    ("multiprobe", 20, 250000L),
-    ("mrl", 20, 250000L),
-    // pca (occupancy-bound since r14) measures 0.57 at sf0.1 / 0.32 at
-    // sf1 / 0.24 at sf3 — an 8-of-64-dim learned subspace over
-    // near-isotropic synthetic vectors; the floor documents "far above
-    // random pruning", not production-embedding quality
-    ("pca", 20, 100000L),
-    ("ivf", 20, 500000L),
-    // the pre-filtered tier's truth is the exact SAME-LABEL top-10
-    // (q_ann_filtered), not the unfiltered baseline — recall measures how
-    // much of the eligible subset's true top-k survives the cell probe;
-    // measured 0.62 / 0.80 / 0.94 at sf0.01 / sf0.1 / sf1
-    ("ivf_filtered", 10, 500000L),
-    ("pq", 10, 400000L),
-    // opq = pq with the eigenvalue-allocated PCA rotation in front (same
-    // m/k/r budget). On the near-isotropic fixtures the rotation is
-    // neutral — opq tracks pq plus seed/tie noise in EITHER direction
-    // (measured opq vs pq: 0.68/0.74 sf0.01, 0.54/0.68 sf0.1, 0.42/0.52
-    // sf1, 0.68/0.54 sf3) — so its floor is pq's contract minus that
-    // noise band, not pq's floor verbatim (0.42 over 0.40 at sf1 was one
-    // reroll from a spurious trip); the rotation's provable win lives in
-    // OpqIndexSpec's rank-8 distortion test
-    ("opq", 10, 300000L),
-    // bq = 1-bit sign codes + Hamming first pass + exact rerank (zero
-    // model state, 32× lighter than the floats); floor set after
-    // measuring across all four scales — see the Tiers note below
-    ("bq", 10, 300000L),
-    // ivf_bq = the bq first pass restricted to the probed cells (its
-    // rescore pool tracks the probed mass) — recall is bounded above by
-    // what the probe retains, so the floor is bq's band shaved by the
-    // probe loss, the same reasoning as ivfpq vs pq
-    ("ivf_bq", 10, 250000L),
-    ("ivfpq", 10, 400000L),
-    ("ivfpq_res", 10, 250000L),
-    ("sq8", 10, 900000L))
+  /** One approximate tier the gate scores: its name, recall@`k`, the floor
+    * in micro-units, and the declared query whose builder and oracle the
+    * gate composes. */
+  final case class Tier(name: String, k: Int, floorMicro: Long,
+      query: graft.queries.QueryDef)
 
   private val NQueries = 5
 
@@ -129,14 +66,14 @@ object AnnRecall {
     * the unfiltered tiers the two definitions coincide (corpus ≫ k), so
     * this is a no-op there. The oracle derives the identical denominator
     * from the identical truth subquery. */
-  def recallQuery(spark: SparkSession, sfDir: String): DataFrame = {
+  def recallQuery(spark: SparkSession, sfDir: String, tiers: Seq[Tier]): DataFrame = {
     import spark.implicits._
     val emb = Tables.load(spark, sfDir, "embeddings")
     val queries = emb.filter(col("vec_id") < NQueries)
     def truthAt(k: Int): Seq[(Long, Long)] = cachedTruth(spark, s"$sfDir#k=$k",
       Similarity.bruteForceTopK(emb, queries, k))
     val truth: Map[Int, Seq[(Long, Long)]] =
-      Tiers.map(_._2).distinct.map(k => k -> truthAt(k)).toMap
+      tiers.map(_.k).distinct.map(k => k -> truthAt(k)).toMap
     // the filtered tier's own truth: the exact same-label top-10 — the
     // already-verified q_ann_filtered result
     val filteredTruth = cachedTruth(spark, s"$sfDir#filtered",
@@ -150,25 +87,9 @@ object AnnRecall {
     // at sf0.1). Model/index memos are keyed per corpus and build once
     // under concurrent callers ([[graft.Memo]]); the assembled plan (and
     // therefore the result) is identical to the sequential build's.
-    val tierBuilders: Seq[(String, () => DataFrame)] = Seq(
-      "lsh"        -> (() => Similarity.lshQuery(spark, sfDir)),
-      "multiprobe" -> (() => Similarity.multiProbeQuery(spark, sfDir)),
-      "mrl"        -> (() => Similarity.mrlQuery(spark, sfDir)),
-      "pca"        -> (() => EmbeddingPca.annPcaQuery(spark, sfDir)),
-      "ivf"        -> (() => IvfIndex.ivfQuery(spark, sfDir)),
-      "ivf_filtered" -> (() => IvfIndex.ivfFilteredQuery(spark, sfDir)),
-      "pq"         -> (() => PqIndex.pqQuery(spark, sfDir)),
-      "opq"        -> (() => OpqIndex.opqQuery(spark, sfDir)),
-      "bq"         -> (() => BqIndex.bqQuery(spark, sfDir)),
-      "ivf_bq"     -> (() => IvfBqIndex.ivfbqQuery(spark, sfDir)),
-      "ivfpq"      -> (() => IvfPqIndex.ivfpqQuery(spark, sfDir)),
-      "ivfpq_res"  -> (() => IvfPqIndex.ivfpqResidualQuery(spark, sfDir)),
-      "sq8"        -> (() => SqIndex.sqQuery(spark, sfDir)))
-    val tierDf: Map[String, DataFrame] = graft.DriverPool.buildAll(
-      "q_ann_recall", tierBuilders.map { case (name, build) =>
-        () => (name, build())
-      }).toMap
-    Tiers.map { case (tier, k, floorMicro) =>
+    val tierDfs = graft.DriverPool.buildAll("ann_recall",
+      tiers.map(t => () => t.query.build(spark, sfDir)))
+    tiers.zip(tierDfs).map { case (Tier(tier, k, floorMicro, _), tierDf) =>
       val rows = if (tier == "ivf_filtered") filteredTruth else truth(k)
       // the denominator is the truth set's OWN size — and the truth set
       // is ALREADY driver rows (cachedTruth), so it rides as a literal
@@ -176,7 +97,7 @@ object AnnRecall {
       // spent 13 extra aggregate+join subtrees re-counting driver-local
       // sequences inside the plan
       val denom = rows.size.toLong
-      tierDf(tier).select("query_id", "vec_id")
+      tierDf.select("query_id", "vec_id")
         .join(rows.toDF("query_id", "vec_id"), Seq("query_id", "vec_id"))
         .agg(count(lit(1)).as("n_matches"))
         .select(
@@ -191,49 +112,46 @@ object AnnRecall {
 
   /** DuckDB twin, composed from the SAME generated per-tier oracle SQL the
     * driver already verifies row-for-row: each tier's full statement is
-    * embedded as a subquery, intersected with the brute-force truth (the
-    * `q_ann_topk` oracle, rank-cut to the tier's k), and reduced with the
-    * identical integer recall. `tierSql` keys are the oracleSql map's. */
-  def recallOracleSql(tierSql: Map[String, String]): String = {
-    val truthSql = tierSql("q_ann_topk")
-    val tierKeys = Map(
-      "lsh" -> "q_ann_lsh", "multiprobe" -> "q_ann_multiprobe",
-      "mrl" -> "q_ann_mrl", "pca" -> "q_ann_pca",
-      "ivf" -> "q_ann_ivf", "ivf_filtered" -> "q_ann_ivf_filtered",
-      "pq" -> "q_ann_pq", "opq" -> "q_ann_opq", "bq" -> "q_ann_bq",
-      "ivf_bq" -> "q_ann_ivf_bq",
-      "ivfpq" -> "q_ann_ivfpq", "ivfpq_res" -> "q_ann_ivfpq_res",
-      "sq8" -> "q_ann_sq")
-    val rows = Tiers.map { case (tier, k, _) =>
-      // the filtered tier intersects its OWN truth — the exact same-label
-      // top-10 the q_ann_filtered oracle already states (rank ≤ 10 built
-      // in); every other tier cuts the unfiltered exact baseline to k
-      val truthSub =
-        if (tier == "ivf_filtered")
-          s"(SELECT query_id, vec_id FROM (${tierSql("q_ann_filtered")}) ft)"
-        else
-          s"(SELECT query_id, vec_id FROM ($truthSql) tt WHERE tt.rank <= $k)"
-      s"""SELECT '$tier' AS tier, CAST($k AS INTEGER) AS k,
+    * embedded as a subquery, intersected with the brute-force truth
+    * (`truth`'s oracle, rank-cut to the tier's k), and reduced with the
+    * identical integer recall. `None` when any of those oracles is absent
+    * (a model-dependent oracle whose model this session never built). */
+  def recallOracleSql(tiers: Seq[Tier], truth: graft.queries.QueryDef,
+      filteredTruth: graft.queries.QueryDef): Option[String] = {
+    val tierSql = tiers.map(_.query.oracle())
+    for (truthSql <- truth.oracle(); filteredSql <- filteredTruth.oracle()
+         if tierSql.forall(_.isDefined)) yield {
+      val rows = tiers.zip(tierSql.flatten).map { case (Tier(tier, k, _, _), sql) =>
+        // the filtered tier intersects its OWN truth — the exact same-label
+        // top-10 the q_ann_filtered oracle already states (rank ≤ 10 built
+        // in); every other tier cuts the unfiltered exact baseline to k
+        val truthSub =
+          if (tier == "ivf_filtered")
+            s"(SELECT query_id, vec_id FROM ($filteredSql) ft)"
+          else
+            s"(SELECT query_id, vec_id FROM ($truthSql) tt WHERE tt.rank <= $k)"
+        s"""SELECT '$tier' AS tier, CAST($k AS INTEGER) AS k,
             CAST((SELECT count(*)
-                  FROM (SELECT query_id, vec_id FROM (${tierSql(tierKeys(tier))}) x) r
+                  FROM (SELECT query_id, vec_id FROM ($sql) x) r
                   JOIN $truthSub t
                     USING (query_id, vec_id)) AS BIGINT) AS n_matches,
             CAST((SELECT count(*) FROM $truthSub t2) AS BIGINT) AS denom"""
-    }
-    // recall/floor derived from n_matches in an outer pass so the integer
-    // arithmetic appears exactly once per column; the denominator is the
-    // truth's OWN row count (see recallQuery — matters for the filtered
-    // tier, whose truth can be under k rows per query)
-    val union = rows.mkString("\n          UNION ALL\n          ")
-    s"""WITH m AS (
+      }
+      // recall/floor derived from n_matches in an outer pass so the integer
+      // arithmetic appears exactly once per column; the denominator is the
+      // truth's OWN row count (see recallQuery — matters for the filtered
+      // tier, whose truth can be under k rows per query)
+      val union = rows.mkString("\n          UNION ALL\n          ")
+      s"""WITH m AS (
           $union
         )
         SELECT tier, k, n_matches,
                (n_matches * 1000000) // denom AS recall_micro,
                (n_matches * 1000000) // denom >=
-                 CASE tier ${Tiers.map { case (t, _, f) =>
-                   s"WHEN '$t' THEN $f"
+                 CASE tier ${tiers.map { t =>
+                   s"WHEN '${t.name}' THEN ${t.floorMicro}"
                  }.mkString(" ")} END AS within_floor
         FROM m"""
+    }
   }
 }

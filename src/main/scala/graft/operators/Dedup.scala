@@ -355,22 +355,11 @@ object Dedup {
     // codegen'd kernel since round 19 (graft.functions.WindowHashes): the
     // per-token transform + per-window n-way xxhash64 fold ran as
     // interpreted HOF lambdas; the kernel emits BIT-IDENTICAL hashes
-    // (DedupSpec pins equality against windowOccurrencesReference)
+    // (AnnKernelsSpec pins equality against the test-scope
+    // ReferenceForms.windowOccurrencesReference)
     base.select(col("doc_id"),
       posexplode(graft.functions.MinHashFunctions.window_hashes(col("lt"), n))
         .as(Seq("pos", "w")))
-
-  /** Pre-round-19 HOF form — the kernel's equivalence REFERENCE only. */
-  private[graft] def windowOccurrencesReference(base: DataFrame, n: Int): DataFrame =
-    base.select(col("doc_id"),
-        transform(col("lt"), t => xxhash64(t)).as("_th"))
-      .select(col("doc_id"),
-        posexplode(
-          when(size(col("_th")) >= n,
-            transform(sequence(lit(0), size(col("_th")) - n),
-              i => xxhash64((0 until n).map(j =>
-                element_at(col("_th"), i + j + 1)): _*)))
-          .otherwise(array().cast("array<bigint>"))).as(Seq("pos", "w")))
 
   /** Spec seam: the tokenized view the window forms share. */
   private[graft] def tokenizedDocsForTest(docs: DataFrame): DataFrame =
@@ -718,7 +707,7 @@ object Dedup {
 
   private val lastAutoPlanes = new java.util.concurrent.atomic.AtomicInteger(-1)
 
-  /** Planes chosen by the last auto-sized run — lets SparkEntry emit the
+  /** Planes chosen by the last auto-sized run — lets graft.queries emit the
     * bucket oracle with the SAME hyperplanes (Verify runs queries first,
     * then collects oracleSql — the cachedModel contract). */
   def cachedAutoPlanes: Option[Int] = {

@@ -155,7 +155,7 @@ object EmbeddingPca {
     corpus.select(col("vec_id"), coords.as("coords"))
   }
 
-  private val NComponents = 8
+  private[graft] val NComponents = 8
 
   /** One fitted model per (JVM, corpus dir) — fit once, consume from the
     * check query, the ANN tier, and the generated oracle SQL. */
@@ -182,59 +182,13 @@ object EmbeddingPca {
       lit(0.0), (acc, p) => acc + p)
 
   /**
-   * PCA-compressed two-stage ANN (the learned-subspace sibling of the
-   * Matryoshka tier): first pass ranks on squared L2 distance between
-   * 8-d PCA projections — for unit-norm embeddings, full-space L2 (hence
-   * cosine) is approximated by its projection onto the top-variance
-   * subspace — keeping `r` candidates; the rerank scores those with the
-   * exact full-dimension cosine. First pass touches 8 doubles per
-   * vector (precomputable as a stored column at ingest); the rerank
-   * touches r full vectors per query. Same broadcast-queries,
-   * no-corpus-shuffle shape as `Similarity.bruteForceTopK`; both scores
-   * are q9-quantized with (score, vec_id) tiebreaks, so the output is
-   * oracle-replayable from the emitted model literals.
-   */
-  @deprecated("the projection first pass is a FULL-CORPUS scan per query " +
-    "batch — at index scale use pcaBucketedTopK (occupancy-bound " +
-    "candidates, decade-flat per-query cost) or an IvfIndex layout; " +
-    "this form survives as the spec equivalence reference", "round 16")
-  def pcaTopK(corpus: DataFrame, queries: DataFrame, model: Model,
-      nComp: Int = NComponents, r: Int = 100, k: Int = 20): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val comps = (0 until nComp).map(c => model.components(c).map(_.toFloat))
-    def coords(e: Column): Column =
-      array(comps.map(w => rawCoord(e, w)): _*)
-    val cor = corpus.select(col("vec_id"), col("embedding"),
-      coords(col("embedding")).as("pc"))
-    val q = queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("query_vec"), coords(col("embedding")).as("qpc"))
-    val dist = (0 until nComp).map { c =>
-      val d = element_at(col("pc"), c + 1) - element_at(col("qpc"), c + 1)
-      d * d
-    }.reduce(_ + _) // left-assoc — the oracle sums in the same order
-    val scored = cor.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), col("embedding"),
-        col("query_vec"), Similarity.q9(dist).as("pca_dist"))
-    val wPre = Window.partitionBy("query_id")
-      .orderBy(col("pca_dist").asc, col("vec_id").asc)
-    val wFull = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    scored.withColumn("_pr", row_number().over(wPre))
-      .filter(col("_pr") <= r)
-      .select(col("query_id"), col("vec_id"), col("pca_dist"),
-        Similarity.q9(graft.functions.VectorFunctions.cosine_sim(
-          col("embedding"), col("query_vec"))).as("cosine"))
-      .withColumn("rank", row_number().over(wFull).cast("bigint"))
-      .filter(col("rank") <= k)
-  }
-
-  /**
    * OCCUPANCY-BOUND PCA two-stage ANN (the [[Similarity.mrlBucketedTopK]]
    * discipline with a learned first-pass subspace): candidates come from
    * the query's multi-probe LSH buckets, the 8-d PCA distance ranks only
    * those, the top `rPrefix` rerank at full dimension. Per-query cost
    * tracks bucket occupancy — decade-flat by [[Similarity.scaledPlanes]]'
-   * construction — instead of the corpus fraction [[pcaTopK]] pays.
+   * construction — instead of the corpus fraction a full-corpus
+   * projection pass pays.
    */
   def pcaBucketedTopK(corpus: DataFrame, queries: DataFrame, model: Model,
       planes: Int, probes: Int, rPrefix: Int,
@@ -277,8 +231,7 @@ object EmbeddingPca {
   /** Query-pack adapter: OCCUPANCY-BOUND 8-of-64-dim PCA first pass over
     * the query's multi-probe buckets (corpus-sized plane count shared
     * with the other bucketed tiers), [[Similarity.bucketedRerank]]
-    * candidates, top-20. [[pcaTopK]] (corpus-fraction budget) remains the
-    * no-index path. */
+    * candidates, top-20. */
   def annPcaQuery(spark: SparkSession, sfDir: String): DataFrame = {
     val emb = Tables.load(spark, sfDir, "embeddings")
     // via annPlanes (not scaledPlanes directly) so the plane count lands

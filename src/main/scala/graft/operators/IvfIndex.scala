@@ -61,18 +61,8 @@ object IvfIndex {
     // the former aggregate fold carried nlist typedlit centroid arrays and
     // evaluated interpreted per corpus row; same strictly-greater /
     // first-wins tie order, AnnKernelsSpec pins bit-equality against
-    // nearestCellReference
+    // ReferenceForms.nearestCellReference (test scope)
     graft.functions.AnnKernelFunctions.nearest_centroid(vec, model.centroids)
-
-  /** Pre-round-19 fold form — the kernel's equivalence REFERENCE only. */
-  private[graft] def nearestCellReference(model: Model, vec: org.apache.spark.sql.Column) = {
-    val scored = model.centroids.zipWithIndex.map { case (c, i) =>
-      struct(VectorFunctions.dot_product(vec, typedlit(c)).as("score"),
-        lit(i).as("cell"))
-    }
-    aggregate(array(scored.tail: _*), scored.head,
-      (best, x) => when(x("score") > best("score"), x).otherwise(best))("cell")
-  }
 
   private def normalize(v: Seq[Float]): Seq[Float] = {
     val n = math.sqrt(v.map(x => x.toDouble * x).sum)
@@ -197,22 +187,9 @@ object IvfIndex {
     // codegen'd kernel since round 19 (graft.functions.ProbeCells): the
     // former array_sort carried nlist typedlit centroid arrays and an
     // interpreted comparator; same stable (score desc, cell asc) order,
-    // AnnKernelsSpec pins bit-equality against probeCellsColumnReference
+    // AnnKernelsSpec pins bit-equality against
+    // ReferenceForms.probeCellsColumnReference (test scope)
     graft.functions.AnnKernelFunctions.probe_cells(vec, model.centroids, nprobe)
-
-  /** Pre-round-19 sort form — the kernel's equivalence REFERENCE only. */
-  private[graft] def probeCellsColumnReference(
-      model: Model, vec: org.apache.spark.sql.Column, nprobe: Int) = {
-    val scoredCells = model.centroids.zipWithIndex.map { case (c, i) =>
-      struct(VectorFunctions.dot_product(vec, typedlit(c)).as("score"),
-        lit(i).as("cell"))
-    }
-    slice(
-      array_sort(array(scoredCells: _*),
-        (a, b) => when(a("score") > b("score"), -1)
-          .when(a("score") < b("score"), 1).otherwise(0)),
-      1, nprobe)
-  }
 
   /**
    * Search: score queries only against corpus vectors in each query's
@@ -655,7 +632,7 @@ object IvfIndex {
     * next to the cell-partitioned corpus, like any index artifact). */
   private val models = new graft.Memo[String, Model]
 
-  /** The one model of this session, if any — lets SparkEntry generate the
+  /** The one model of this session, if any — lets graft.queries generate the
     * IVF oracle SQL from the exact centroids the query used. */
   def cachedModel: Option[Model] = models.only
 

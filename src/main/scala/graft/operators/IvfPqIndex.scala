@@ -252,7 +252,7 @@ object IvfPqIndex {
     * shape). */
   private val models = new graft.Memo[String, Model]
 
-  /** The one model of this session, if any — lets SparkEntry emit the
+  /** The one model of this session, if any — lets graft.queries emit the
     * composed oracle SQL from the exact centroids + codebooks the query
     * used. */
   def cachedModel: Option[Model] = models.only

@@ -41,20 +41,12 @@ object PqIndex {
     * Codegen'd kernel since round 19 ([[graft.functions.L2Normalize]]) —
     * the interpreted `transform` form re-evaluated the inlined Σx² dot
     * per element reference; AnnKernelsSpec pins bit-equality against
-    * [[normedReference]]. */
+    * `ReferenceForms.normedReference` (test scope). */
   private[graft] def normed(vec: Column): Column =
     graft.functions.AnnKernelFunctions.l2_normalize(vec)
 
-  /** The pre-round-19 HOF form — the kernel's equivalence REFERENCE
-    * (AnnKernelsSpec); not on any query path. */
-  private[graft] def normedReference(vec: Column): Column = {
-    val n2 = VectorFunctions.dot_product(vec, vec)
-    transform(vec, x =>
-      when(n2 === 0d, x).otherwise((x / sqrt(n2)).cast("float")))
-  }
-
   /** 1-based slice of subspace `s`. */
-  private[operators] def subCol(vec: Column, s: Int, subDim: Int): Column =
+  private[graft] def subCol(vec: Column, s: Int, subDim: Int): Column =
     slice(vec, s * subDim + 1, subDim)
 
   /** ½|c|² with the driver-side fold order fixed, so the SQL oracle can
@@ -63,7 +55,7 @@ object PqIndex {
     c.map(x => x.toDouble * x).sum / 2.0
 
   /** argmin_j L2(x, c_j) as argmax_j (x·c_j − ½|c_j|²); ties → lowest j. */
-  private[operators] def nearestCode(books: Seq[Seq[Float]], sub: Column): Column = {
+  private[graft] def nearestCode(books: Seq[Seq[Float]], sub: Column): Column = {
     val scored = books.zipWithIndex.map { case (c, j) =>
       val half = halfSq(c)
       struct(
@@ -153,14 +145,10 @@ object PqIndex {
     * former form carried m×k `typedlit` codeword arrays plus an
     * interpreted `array_sort` comparator per subspace — both the per-row
     * exec cost AND the per-invocation analysis cost of the literal tree.
-    * AnnKernelsSpec pins bit-equality against [[codesColumnReference]]. */
+    * AnnKernelsSpec pins bit-equality against
+    * `ReferenceForms.codesColumnReference` (test scope). */
   private[graft] def codesColumn(model: Codebooks, e: Column): Column =
     graft.functions.AnnKernelFunctions.pq_encode(e, model.books)
-
-  /** Pre-round-19 expression form — equivalence REFERENCE only. */
-  private[graft] def codesColumnReference(model: Codebooks, e: Column): Column =
-    array((0 until model.m).map(s =>
-      nearestCode(model.books(s), subCol(e, s, model.subDim))): _*)
 
   /** (m × k) ADC lookup table for a NORMALIZED query column: entry (s, j)
     * is the query's subvector-s dot codeword j. Codegen'd kernel since
@@ -169,27 +157,15 @@ object PqIndex {
   private[graft] def adcTablesColumn(model: Codebooks, e: Column): Column =
     graft.functions.AnnKernelFunctions.adc_tables(e, model.books)
 
-  /** Pre-round-19 expression form — equivalence REFERENCE only. */
-  private[graft] def adcTablesColumnReference(model: Codebooks, e: Column): Column =
-    array((0 until model.m).map(s =>
-      array(model.books(s).map(c =>
-        VectorFunctions.dot_product(subCol(e, s, model.subDim), typedlit(c))): _*)): _*)
-
   /** ADC score of a codes array against a query's lookup tables — a left
     * fold so the add order is pinned (the SQL oracle replays it with
     * `list_reduce`). Codegen'd kernel since round 19
     * ([[graft.functions.AdcScore]] — the former `aggregate(zip_with(…))`
     * evaluated interpreted per (candidate × query) pair, the hottest
     * expression of the PQ/OPQ tiers); AnnKernelsSpec pins bit-equality
-    * against [[adcScoreReference]]. */
+    * against `ReferenceForms.adcScoreReference` (test scope). */
   private[graft] def adcScore(codes: Column, tables: Column): Column =
     graft.functions.AnnKernelFunctions.adc_score(codes, tables)
-
-  /** Pre-round-19 HOF form — equivalence REFERENCE only. */
-  private[graft] def adcScoreReference(codes: Column, tables: Column): Column =
-    aggregate(zip_with(codes, tables,
-        (cd, tb) => element_at(tb, cd + lit(1))),
-      lit(0d), (a, x) => a + x)
 
   /**
    * ADC search over an encoded corpus: per query one (m × k) dot-product
@@ -252,13 +228,13 @@ object PqIndex {
   /** Models memoized per corpus, like IVF: train once, search many. */
   private val models = new graft.Memo[String, Codebooks]
 
-  /** The one model of this session, if any — lets SparkEntry emit the PQ
+  /** The one model of this session, if any — lets graft.queries emit the PQ
     * oracle SQL from the exact codebooks the query used. */
   def cachedModel: Option[Codebooks] = models.only
 
   /** Query-pack adapter: PQ-compress the corpus, ADC-search the first 5
     * vectors with exact rerank. Training is deterministic given the seed
-    * rows, so SparkEntry replays encode + ADC tables in generated SQL from
+    * rows, so graft.queries replays encode + ADC tables in generated SQL from
     * [[cachedModel]] — a full hash oracle, not rows-only. */
   def pqQuery(spark: SparkSession, sfDir: String): DataFrame = {
     val emb = Tables.load(spark, sfDir, "embeddings")

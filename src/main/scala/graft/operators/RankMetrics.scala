@@ -71,16 +71,10 @@ object RankMetrics {
       .filter(col("w").isin(terms: _*))
       .groupBy("doc_id")
       .agg(countDistinct(col("w")).as("gain"))
-    // reuse the registered BM25 ranking (rational-idf, driver-compared)
-    val ranked = SparkEntryBridge.bm25Ranking(spark, sfDir)
+    // reuse the declared BM25 ranking (rational-idf, driver-compared)
+    val ranked = graft.queries.SearchQueries.bm25SearchQuery(spark, sfDir)
       .select(col("doc_id"), col("rank"))
     metricsAt(ranked, gains, k = 10)
   }
 }
 
-/** Narrow bridge so RankMetrics can reuse SparkEntry's private BM25
-  * adapter without widening its visibility. */
-private[operators] object SparkEntryBridge {
-  def bm25Ranking(spark: SparkSession, sfDir: String): DataFrame =
-    graft.SparkEntry.queries("q_bm25_search")(spark, sfDir)
-}

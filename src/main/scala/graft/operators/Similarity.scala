@@ -29,7 +29,7 @@ object Similarity {
     * BOTH sides — 7 orders of magnitude above ulp noise, far below any
     * semantic tolerance. Ranks order by the ROUNDED value (ties fall to
     * the deterministic id tiebreak), so rank columns are ulp-robust too. */
-  private[operators] def q9(c: Column): Column = round(c, 9)
+  private[graft] def q9(c: Column): Column = round(c, 9)
 
   /** Brute-force exact top-k neighbors for each query vector. */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
@@ -48,7 +48,7 @@ object Similarity {
 
   /** Deterministic pseudo-random hyperplanes (shared with query side, with
     * [[graft.operators.Dedup.embeddingNearDup]], and with the generated
-    * oracle SQL in SparkEntry — one definition so they can never drift). */
+    * oracle SQL in graft.queries — one definition so they can never drift). */
   private[operators] def hyperplanes(planes: Int, dim: Int, seed: Long): Seq[Seq[Float]] = {
     val rnd = new scala.util.Random(seed)
     Seq.fill(planes)(Seq.fill(dim)((rnd.nextDouble() * 2 - 1).toFloat))
@@ -216,57 +216,16 @@ object Similarity {
   }
 
   /**
-   * Matryoshka-style two-stage retrieval: first pass ranks on the cosine
-   * of the first `dPrefix` dimensions only (MRL-trained embeddings
-   * front-load information, so a prefix is itself a usable embedding —
-   * Kusupati et al., NeurIPS'22), keeping `r` candidates per query; the
-   * rerank scores those with the full-dimension cosine. The first pass
-   * reads `dPrefix/dim` of the vector bytes — with a column layout that
-   * stores the prefix separately this is a proportional scan-cost cut on
-   * the expensive pass, and the rerank touches only `r` full vectors per
-   * query. Same broadcast-queries / no-corpus-shuffle shape as
-   * [[bruteForceTopK]]; both scores are q9-quantized and both ranks carry
-   * the (score desc, vec_id asc) tiebreak, so the output is
-   * oracle-replayable.
-   */
-  @deprecated("the prefix first pass is a FULL-CORPUS scan per query " +
-    "batch — at index scale use mrlBucketedTopK (occupancy-bound " +
-    "candidates, decade-flat per-query cost) or an IvfIndex layout; " +
-    "this form survives as the spec equivalence reference", "round 16")
-  def mrlTopK(corpus: DataFrame, queries: DataFrame, dPrefix: Int,
-      r: Int, k: Int): DataFrame = {
-    val q = queries.select(
-      col("vec_id").as("query_id"), col("embedding").as("query_vec"))
-    val scored = corpus.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .select(
-        col("query_id"), col("vec_id"), col("embedding"), col("query_vec"),
-        q9(VectorFunctions.cosine_sim(
-          slice(col("embedding"), 1, dPrefix),
-          slice(col("query_vec"), 1, dPrefix))).as("prefix_cos"))
-    val wPre = Window.partitionBy("query_id")
-      .orderBy(col("prefix_cos").desc, col("vec_id").asc)
-    val wFull = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    scored.withColumn("_pr", row_number().over(wPre))
-      .filter(col("_pr") <= r)
-      .select(col("query_id"), col("vec_id"), col("prefix_cos"),
-        q9(VectorFunctions.cosine_sim(col("embedding"), col("query_vec")))
-          .as("cosine"))
-      .withColumn("rank", row_number().over(wFull).cast("bigint"))
-      .filter(col("rank") <= k)
-  }
-
-  /**
    * OCCUPANCY-BOUND Matryoshka two-stage retrieval: candidate generation
    * goes through the multi-probe LSH buckets ([[probedQueryBuckets]] over
    * [[scaledPlanes]]-sized hyperplanes) instead of a full-corpus prefix
    * pass — the prefix score ranks only vectors in the query's probed
    * buckets, the top `rPrefix` of those rerank at full dimension. Per-query
    * cost therefore tracks BUCKET OCCUPANCY (probes × targetBucket — a
-   * corpus-decade constant by scaledPlanes' construction), where the plain
-   * [[mrlTopK]] with a [[scaledCandidates]] budget stays a fixed FRACTION
-   * of a corpus pass (decade-stable recall, but per-query cost linear in
-   * n). The recall ceiling is the multi-probe tier's (candidates outside
+   * corpus-decade constant by scaledPlanes' construction), where a plain
+   * full-corpus prefix pass with a [[scaledCandidates]] budget stays a
+   * fixed FRACTION of a corpus pass (decade-stable recall, but per-query
+   * cost linear in n). The recall ceiling is the multi-probe tier's (candidates outside
    * probed buckets are unreachable); the prefix cut inside the buckets
    * costs little below that ceiling because `rPrefix` is sized at a
    * quarter of expected occupancy. Scores q9-quantized, ranks (score,
@@ -317,7 +276,7 @@ object Similarity {
    * floors at zero, the measured r12 defect: 8 planes ⇒ ~N/256 occupancy ⇒
    * 0–6% recall), too few for a large one re-creates the full scan.
    * Integer comparison ladder — no float log2 edge cases, bit-identical to
-   * the SQL replica in SparkEntry.
+   * the SQL replica in graft.queries.
    */
   def scaledPlanes(n: Long, targetBucket: Long = 1024L,
       minPlanes: Int = 2, maxPlanes: Int = 16): Int =
@@ -326,7 +285,7 @@ object Similarity {
   private val lastAnnPlanes = new java.util.concurrent.atomic.AtomicInteger(-1)
 
   /** Planes chosen by the last corpus-sized lsh/multiprobe query — lets
-    * SparkEntry emit the bucket oracle with the SAME hyperplanes (Verify
+    * graft.queries emit the bucket oracle with the SAME hyperplanes (Verify
     * runs queries before collecting oracleSql — the cachedModel contract). */
   def cachedAnnPlanes: Option[Int] = {
     val v = lastAnnPlanes.get()
@@ -580,8 +539,7 @@ object Similarity {
     * query's multi-probe buckets (corpus-sized plane count, shared with
     * the lsh/multiprobe tiers and cached for the oracle), prefix cut at
     * [[bucketedRerank]] candidates, full-dim rerank, top-20. Per-query
-    * cost is decade-flat; the plain [[mrlTopK]] (corpus-fraction budget
-    * via [[scaledCandidates]]) remains the no-index path. */
+    * cost is decade-flat. */
   def mrlQuery(spark: SparkSession, sfDir: String): DataFrame = {
     val emb = Tables.load(spark, sfDir, "embeddings")
     val p = annPlanes(spark, sfDir)

@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** Diagnostic: print the [[graft.operators.AnnRecall]] gate rows for a
+/** Diagnostic: print the [[graft.queries.AnnQueries.recall]] gate rows for a
   * fixture directory — the measurement loop behind every scaled-parameter
   * decision (plane counts, IVF nlist/nprobe, rerank budgets). Not part of
   * the driver contract; run ad hoc with the spark jars plus
@@ -19,7 +19,7 @@ object AnnRecallMain {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val t0 = System.nanoTime()
-    graft.operators.AnnRecall.recallQuery(spark, args(0)).show(50, false)
+    graft.queries.AnnQueries.recall.build(spark, args(0)).show(50, false)
     println(f"[ann-recall] total ${(System.nanoTime() - t0) / 1e9}%.1f s")
     spark.stop()
   }

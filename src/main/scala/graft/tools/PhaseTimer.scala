@@ -29,12 +29,8 @@ object PhaseTimer {
         val t1 = System.nanoTime()
         df.write.format("noop").mode("overwrite").save()
         val t2 = System.nanoTime()
-        val line =
-          f"$name pass $p: fn=${(t1 - t0) / 1e9}%.3f s exec=${(t2 - t1) / 1e9}%.3f s"
-        println(line)
-        // tee to a file so measurement harnesses need not scrape the console
-        val fw = new java.io.FileWriter("/tmp/phasetimer.log", true)
-        try fw.write(line + "\n") finally fw.close()
+        println(
+          f"$name pass $p: fn=${(t1 - t0) / 1e9}%.3f s exec=${(t2 - t1) / 1e9}%.3f s")
       }
     }
     spark.stop()

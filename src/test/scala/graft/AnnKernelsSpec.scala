@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Round-19 codegen kernels (graft.functions.AnnKernels) vs the
   * interpreted expression forms they replaced: BIT-equality over the
   * fixture corpus plus the synthetic edges (zero vector, exact score
-  * ties). The reference forms are retained in PqIndex / IvfIndex for
+  * ties). The reference forms live in the test-scope [[ReferenceForms]] for
   * exactly this pinning — the mmrSelectIterative discipline. */
 class AnnKernelsSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
@@ -35,21 +35,21 @@ class AnnKernelsSpec extends AnyFunSuite with SparkTestBase {
       .unionByName(Seq(Tuple1(Array.fill(64)(0f))).toDF("embedding"))
     assertSame(withZero.select(
       (PqIndex.normed(col("embedding")) =!=
-        PqIndex.normedReference(col("embedding"))).as("diff")))
+        ReferenceForms.normedReference(col("embedding"))).as("diff")))
   }
 
   test("pq_encode == nearestCode/array_sort reference, bit-exact") {
     val n = embWithShort.select(PqIndex.normed(col("embedding")).as("_e"))
     assertSame(n.select(
       (PqIndex.codesColumn(pqModel, col("_e")) =!=
-        PqIndex.codesColumnReference(pqModel, col("_e"))).as("diff")))
+        ReferenceForms.codesColumnReference(pqModel, col("_e"))).as("diff")))
   }
 
   test("adc_tables == dot-literal reference, bit-exact") {
     val n = embWithShort.select(PqIndex.normed(col("embedding")).as("_e"))
     assertSame(n.select(
       (PqIndex.adcTablesColumn(pqModel, col("_e")) =!=
-        PqIndex.adcTablesColumnReference(pqModel, col("_e"))).as("diff")))
+        ReferenceForms.adcTablesColumnReference(pqModel, col("_e"))).as("diff")))
   }
 
   test("adc_score == aggregate/zip_with reference, bit-exact") {
@@ -59,19 +59,19 @@ class AnnKernelsSpec extends AnyFunSuite with SparkTestBase {
       PqIndex.adcTablesColumn(pqModel, col("_e")).as("tables"))
     assertSame(coded.select(
       (PqIndex.adcScore(col("codes"), col("tables")) =!=
-        PqIndex.adcScoreReference(col("codes"), col("tables"))).as("diff")))
+        ReferenceForms.adcScoreReference(col("codes"), col("tables"))).as("diff")))
   }
 
   test("nearest_centroid == aggregate-fold reference, bit-exact (incl. ties)") {
     assertSame(emb.select(
       (IvfIndex.nearestCell(ivfModel, col("embedding")) =!=
-        IvfIndex.nearestCellReference(ivfModel, col("embedding"))).as("diff")))
+        ReferenceForms.nearestCellReference(ivfModel, col("embedding"))).as("diff")))
     // exact tie: duplicated centroid — both forms must keep the LOWEST cell
     val tied = IvfIndex.Model(Seq(ivfModel.centroids.head, ivfModel.centroids.head)
       ++ ivfModel.centroids.tail)
     assertSame(emb.select(
       (IvfIndex.nearestCell(tied, col("embedding")) =!=
-        IvfIndex.nearestCellReference(tied, col("embedding"))).as("diff")))
+        ReferenceForms.nearestCellReference(tied, col("embedding"))).as("diff")))
   }
 
   test("window_hashes == xxhash64-HOF reference, bit-exact (incl. short docs)") {
@@ -81,7 +81,7 @@ class AnnKernelsSpec extends AnyFunSuite with SparkTestBase {
     val base = graft.operators.Dedup.tokenizedDocsForTest(docs)
     for (n <- Seq(1, 4, 8)) {
       val kern = graft.operators.Dedup.windowOccurrencesForTest(base, n)
-      val ref = graft.operators.Dedup.windowOccurrencesReference(base, n)
+      val ref = ReferenceForms.windowOccurrencesReference(base, n)
       val k = kern.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted
       val f = ref.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted
       assert(k.length == f.length && k.sameElements(f), s"n=$n mismatch")
@@ -109,12 +109,12 @@ class AnnKernelsSpec extends AnyFunSuite with SparkTestBase {
     for (np <- Seq(1, 3, 8)) {
       assertSame(emb.select(
         (IvfIndex.probeCellsColumn(ivfModel, col("embedding"), np) =!=
-          IvfIndex.probeCellsColumnReference(ivfModel, col("embedding"), np)).as("diff")))
+          ReferenceForms.probeCellsColumnReference(ivfModel, col("embedding"), np)).as("diff")))
     }
     val tied = IvfIndex.Model(Seq(ivfModel.centroids.head, ivfModel.centroids.head)
       ++ ivfModel.centroids.tail)
     assertSame(emb.select(
       (IvfIndex.probeCellsColumn(tied, col("embedding"), 4) =!=
-        IvfIndex.probeCellsColumnReference(tied, col("embedding"), 4)).as("diff")))
+        ReferenceForms.probeCellsColumnReference(tied, col("embedding"), 4)).as("diff")))
   }
 }

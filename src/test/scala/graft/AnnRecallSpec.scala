@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.AnnRecall
+import graft.queries.AnnQueries
 
 /** The ANN quality gate: every tier's recall@k floor holds at both spec
   * scale factors, and the structural ordering between tiers — multi-probe
@@ -11,14 +11,14 @@ import graft.operators.AnnRecall
 class AnnRecallSpec extends AnyFunSuite with SparkTestBase {
 
   private def recalls(sfDir: String): Map[String, (Long, Boolean)] =
-    AnnRecall.recallQuery(spark, sfDir).collect().map { r =>
+    AnnQueries.recall.build(spark, sfDir).collect().map { r =>
       r.getString(0) -> (r.getLong(3), r.getBoolean(4))
     }.toMap
 
   for (sf <- Seq(sf001, sf01)) {
     test(s"every tier is within its floor at $sf") {
       val r = recalls(sf)
-      assert(r.keySet === AnnRecall.Tiers.map(_._1).toSet)
+      assert(r.keySet === AnnQueries.Tiers.map(_.name).toSet)
       val out = r.collect { case (t, (_, ok)) if !ok => t }
       assert(out.isEmpty, s"tiers under floor: $out ($r)")
     }

@@ -58,11 +58,11 @@ class EmbeddingPcaSpec extends AnyFunSuite with SparkTestBase {
     val brute = keySet(graft.operators.Similarity.bruteForceTopK(emb, q, k = 20))
     // r >= corpus size: the first pass prunes nothing, so the rerank IS
     // brute force (same q9 cosine, same tiebreak)
-    val full = keySet(EmbeddingPca.pcaTopK(emb, q, m, r = 1000000, k = 20))
+    val full = keySet(ReferenceForms.pcaTopK(emb, q, m, r = 1000000, k = 20))
     assert(full == brute)
     // r = 100 of 5000: an 8-of-64-dim subspace must beat random pruning
     // (random 100-candidate recall ~= 2%)
-    val pruned = keySet(EmbeddingPca.pcaTopK(emb, q, m, r = 100, k = 20))
+    val pruned = keySet(ReferenceForms.pcaTopK(emb, q, m, r = 100, k = 20))
       .map(t => (t._1, t._2))
     val hits = pruned.intersect(brute.map(t => (t._1, t._2))).size
     assert(hits >= 0.10 * brute.size,

@@ -79,14 +79,22 @@ class OperatorSpec extends AnyFunSuite with SparkTestBase {
       "MMR pick 1 must carry the maximal fused relevance")
   }
 
-  test("every oracleSql key has a matching query") {
-    // zz_probe_* entries are deliberate oracle-side diagnostics (e.g. the
-    // DuckDB version/cast-rule probe): SQL the driver MAY run, with no
-    // Spark twin to compare against. The correctness loop iterates the
-    // per-query parquet dirs, so unmatched oracle keys are ignored there.
-    val unknown = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(unknown.forall(_.startsWith("zz_probe_")),
-      s"oracleSql without query: ${unknown.filterNot(_.startsWith("zz_probe_"))}")
+  test("query registry: 188 unique names across the families, 13 registered ANN tiers") {
+    // the family modules' concatenation is the only declaration of a
+    // query; a Map built from it would silently keep the last of two
+    // same-named defs, so the count and uniqueness are checked on the Seq
+    val names = SparkEntry.defs.map(_.name)
+    val declared = names.size
+    assert(declared == 188, s"expected 188 declared queries, found $declared")
+    val dups = names.diff(names.distinct).distinct
+    assert(dups.isEmpty, s"query names declared more than once: $dups")
+    assert(SparkEntry.queries.keySet == names.toSet)
+    // the recall gate scores exactly the tier table's rows: 13 distinct
+    // tiers, each a registered query
+    val tiers = graft.queries.AnnQueries.Tiers
+    assert(tiers.map(_.name).distinct.size == 13, tiers.map(_.name))
+    val unregistered = tiers.filterNot(t => SparkEntry.defs.contains(t.query)).map(_.name)
+    assert(unregistered.isEmpty, s"tier queries outside the registry: $unregistered")
   }
 
   test("point lookup returns exactly the requested key") {

@@ -127,7 +127,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     val emb = graft.sources.Tables.load(spark, sf001, "embeddings")
     val queries = emb.filter(col("vec_id") < 5)
     // r = corpus size → the rerank sees every candidate → exact top-k
-    val full = Similarity.mrlTopK(emb, queries, dPrefix = 16, r = 1000, k = 20)
+    val full = ReferenceForms.mrlTopK(emb, queries, dPrefix = 16, r = 1000, k = 20)
       .select("query_id", "vec_id", "cosine", "rank").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
     val bf = Similarity.bruteForceTopK(emb, queries, k = 20)

@@ -42,3 +42,10 @@ class WorkDirsSpec extends AnyFunSuite {
     assert(paths.size == 1, s"per-JVM dir must be deterministic: $paths")
   }
 }
+
+/** Prints this JVM's [[WorkDirs]] root — the cross-process half of
+  * WorkDirsSpec's uniqueness assertion (a second JVM runs this main and
+  * the spec compares roots). */
+object WorkDirsProbe {
+  def main(args: Array[String]): Unit = println(WorkDirs.root.toString)
+}
