@@ -93,8 +93,7 @@ object Compaction {
       maxVersions: Int = 1,
       ttlWatermark: Long = Long.MinValue,
       numRegions: Int = 8): Unit = {
-    val buckets = graft.sources.CellStoreSource.readBuckets(
-      new org.apache.hadoop.fs.Path(path), new org.apache.hadoop.conf.Configuration())
+    val buckets = graft.sources.CellStoreSource.readBuckets(new org.apache.hadoop.fs.Path(path))
     val out = survivors(spark.read.format("cellstore").load(path), maxVersions, ttlWatermark)
       .write.format("cellstore").mode("overwrite")
     buckets match {
@@ -122,15 +121,14 @@ object Compaction {
       maxVersions: Int = 1,
       ttlWatermark: Long = Long.MinValue,
       numRegions: Int = 8): Seq[String] = {
-    val conf = new org.apache.hadoop.conf.Configuration()
     val dir = new org.apache.hadoop.fs.Path(path)
-    val fs = dir.getFileSystem(conf)
+    val fs = graft.sources.HadoopConf.fs(dir)
     if (!fs.exists(dir)) return Nil
     val inputs = fs.listStatus(dir)
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet") && s.getLen > 0)
       .map(_.getPath.getName).sorted.toSeq
     if (inputs.isEmpty) return Nil
-    val buckets = graft.sources.CellStoreSource.readBuckets(dir, conf)
+    val buckets = graft.sources.CellStoreSource.readBuckets(dir)
     val snapshot = spark.read.format("cellstore")
       .option("files", inputs.mkString(",")).load(path)
     val out = survivors(snapshot, maxVersions, ttlWatermark)

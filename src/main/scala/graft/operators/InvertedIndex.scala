@@ -301,8 +301,7 @@ object InvertedIndex {
    */
   def compactIndex(spark: SparkSession, dir: String): Unit = {
     val buckets = graft.sources.CellStoreSource.readBuckets(
-      new org.apache.hadoop.fs.Path(dir),
-      new org.apache.hadoop.conf.Configuration()).getOrElse(8)
+      new org.apache.hadoop.fs.Path(dir)).getOrElse(8)
     Compaction.survivors(spark.read.format("cellstore").load(dir),
         maxVersions = 1, ttlWatermark = Long.MinValue)
       .filter(!(col("family") === "meta" &&

@@ -510,6 +510,7 @@ object IvfIndex {
     * file — nlist directories with compaction-bounded file counts, the
     * same order as planning a scan of the index. */
   def cellStats(spark: SparkSession, path: String): DataFrame = {
+    import org.apache.parquet.HadoopReadOptions
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import scala.jdk.CollectionConverters._
@@ -526,7 +527,8 @@ object IvfIndex {
             .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet") &&
               f.getLen > 0)
             .map { f =>
-              val r = ParquetFileReader.open(HadoopInputFile.fromPath(f.getPath, conf))
+              val r = ParquetFileReader.open(HadoopInputFile.fromPath(f.getPath, conf),
+                HadoopReadOptions.builder(conf).build())
               try r.getRowGroups.asScala.map(_.getRowCount).sum
               finally r.close()
             }.sum

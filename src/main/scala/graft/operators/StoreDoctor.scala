@@ -1,11 +1,10 @@
 package graft.operators
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.{CellBloom, CellStoreSource}
+import graft.sources.{CellBloom, CellStoreSource, HadoopConf}
 
 /**
  * `hbase hbck` for the cell store: consistency VERDICTS on top of the
@@ -33,13 +32,12 @@ object StoreDoctor {
 
   /** Consistency checks for one cell-store directory (range or salted). */
   def diagnose(spark: SparkSession, path: String): DataFrame = {
-    val conf = new Configuration()
     val dir = new Path(path)
-    val fs = dir.getFileSystem(conf)
+    val fs = HadoopConf.fs(dir)
     val files = fs.listStatus(dir)
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet") && s.getLen > 0)
       .sortBy(_.getPath.getName)
-    val buckets = CellStoreSource.readBuckets(dir, conf)
+    val buckets = CellStoreSource.readBuckets(dir)
     val rows = scala.collection.mutable.ArrayBuffer.empty[CheckRow]
 
     // ONE footer parse per file, shared by every check below; a file
@@ -47,7 +45,7 @@ object StoreDoctor {
     // from the structural checks (its state is unknowable)
     val footers = files.map { st =>
       st.getPath.getName ->
-        (try Right(CellStoreSource.footerBlocks(st.getPath, conf))
+        (try Right(CellStoreSource.footerBlocks(st.getPath))
          catch { case e: Exception => Left(e) })
     }
     val corrupt = footers.collect { case (f, Left(e)) => (f, e) }

@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileUtil, Path}
 
-import graft.sources.CellStoreSource
+import graft.sources.{CellStoreSource, HadoopConf}
 
 /**
  * Point-in-time snapshot/export of a cell store — the HBase
@@ -35,13 +34,10 @@ object StoreSnapshot {
     * logical file (data, bloom sidecars, salt manifest). */
   val ManifestFile = "SNAPSHOT_MANIFEST"
 
-  private def fs(p: Path, conf: Configuration) = p.getFileSystem(conf)
-
   /** The snapshot's logical file list as (name, length, holder dir). */
   def manifest(snapshotDir: String): Seq[(String, Long, String)] = {
-    val conf = new Configuration()
     val mp = new Path(snapshotDir, ManifestFile)
-    val in = fs(mp, conf).open(mp)
+    val in = HadoopConf.fs(mp).open(mp)
     val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
       finally in.close()
     text.split("\n").filter(_.nonEmpty).toSeq.map { line =>
@@ -64,11 +60,10 @@ object StoreSnapshot {
    */
   def exportIncremental(path: String, dest: String,
       prior: Seq[String]): Seq[String] = {
-    val conf = new Configuration()
     val src = new Path(path)
     val dst = new Path(dest)
-    val sfs = fs(src, conf)
-    val dfs = fs(dst, conf)
+    val sfs = HadoopConf.fs(src)
+    val dfs = HadoopConf.fs(dst)
     require(sfs.exists(src), s"no store at $path")
     require(!dfs.exists(dst) || dfs.listStatus(dst).isEmpty,
       s"snapshot destination $dest is not empty")
@@ -84,7 +79,7 @@ object StoreSnapshot {
     // a store without a salt manifest is a range store, one without bloom
     // sidecars just loses point-GET file elision). The salt manifest and
     // sidecars are snapshot-specific state, never inherited.
-    val meta = graft.sources.CellBloom.sidecarsOf(src, conf, pinned) ++
+    val meta = graft.sources.CellBloom.sidecarsOf(src, pinned) ++
       Seq(CellStoreSource.MetaFile).filter(n => sfs.exists(new Path(src, n)))
     val entries = (pinned ++ meta).map { name =>
       val len = sfs.getFileStatus(new Path(src, name)).getLen
@@ -93,7 +88,7 @@ object StoreSnapshot {
     }
     val copied = entries.collect { case (name, _, None) =>
       if (!FileUtil.copy(sfs, new Path(src, name), dfs, new Path(dst, name),
-          false, false, conf))
+          false, false, HadoopConf.shared))
         throw new java.io.IOException(
           s"snapshot export: copy of $name from $path to $dest failed")
       name
@@ -112,21 +107,20 @@ object StoreSnapshot {
     * recorded length re-checked so a tampered or garbage-collected
     * holder fails the restore instead of silently restoring a hole. */
   def restore(snapshotDir: String, dest: String): Seq[String] = {
-    val conf = new Configuration()
     val dst = new Path(dest)
-    val dfs = fs(dst, conf)
+    val dfs = HadoopConf.fs(dst)
     require(!dfs.exists(dst) || dfs.listStatus(dst).isEmpty,
       s"restore destination $dest is not empty")
     dfs.mkdirs(dst)
     manifest(snapshotDir).map { case (name, len, holder) =>
       val srcFile = new Path(holder, name)
-      val hfs = fs(srcFile, conf)
+      val hfs = HadoopConf.fs(srcFile)
       require(hfs.exists(srcFile),
         s"restore: $name missing from holder $holder")
       val actual = hfs.getFileStatus(srcFile).getLen
       require(actual == len,
         s"restore: $name in $holder has length $actual, manifest says $len")
-      if (!FileUtil.copy(hfs, srcFile, dfs, new Path(dst, name), false, false, conf))
+      if (!FileUtil.copy(hfs, srcFile, dfs, new Path(dst, name), false, false, HadoopConf.shared))
         throw new java.io.IOException(s"restore: copy of $name failed")
       name
     }

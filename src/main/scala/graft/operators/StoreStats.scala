@@ -1,11 +1,10 @@
 package graft.operators
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.functions.BytesBinaryCodec
-import graft.sources.CellStoreSource
+import graft.sources.{CellStoreSource, HadoopConf}
 
 /**
  * Store inspection — the `hbase hbck` / region-status analogue for the
@@ -29,14 +28,13 @@ object StoreStats {
 
   /** One row per store file, footer metadata only. */
   def describe(spark: SparkSession, path: String): DataFrame = {
-    val conf = new Configuration()
     val dir = new Path(path)
-    val fs = dir.getFileSystem(conf)
+    val fs = HadoopConf.fs(dir)
     val stats = fs.listStatus(dir)
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet") && s.getLen > 0)
       .sortBy(_.getPath.getName)
       .map { st =>
-        val blocks = CellStoreSource.footerBlocks(st.getPath, conf)
+        val blocks = CellStoreSource.footerBlocks(st.getPath)
         val ranges = blocks.flatMap(_.keyRange)
         def render(b: Array[Byte]): String = BytesBinaryCodec.encode(b)
         FileStat(
@@ -61,7 +59,7 @@ object StoreStats {
   /** Layout summary: (layout, buckets, files, rows, bytes). */
   def summary(spark: SparkSession, path: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val buckets = CellStoreSource.readBuckets(new Path(path), new Configuration())
+    val buckets = CellStoreSource.readBuckets(new Path(path))
     describe(spark, path).agg(
       lit(buckets.map(_ => "salted").getOrElse("range")).as("layout"),
       lit(buckets.getOrElse(0)).as("buckets"),

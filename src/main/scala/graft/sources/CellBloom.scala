@@ -1,7 +1,6 @@
 package graft.sources
 
 import graft.functions.{MinHashImpl, SimHashImpl}
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 
 /**
@@ -26,8 +25,11 @@ import org.apache.hadoop.fs.Path
  *    GC path to maintain, and nothing is ever re-encoded or re-parsed as
  *    JSON;
  *  - scan planning consults sidecars ONLY for pushed/runtime exact keys
- *    (GET / IN), and only for files that survived bucket/range pruning —
- *    one lazy 16 KiB read per candidate file. A file with no sidecar is
+ *    (GET / IN), one 16 KiB read per candidate file: on a salted store the
+ *    candidates are the files of the buckets the keys hash to; on a range
+ *    store they are ALL data files, and only the bloom survivors' parquet
+ *    footers are read for range pruning next — a GET then reads about one
+ *    footer per hit instead of one per region. A file with no sidecar is
  *    "may contain" — blooms are pure IO elision, never a correctness
  *    dependency, and the residual filter re-checks every row anyway. A
  *    racing truncate/append at worst leaves an orphan sidecar (ignored:
@@ -84,33 +86,33 @@ object CellBloom {
   private def isSidecar(name: String): Boolean =
     name.startsWith(".") && name.endsWith(BloomSuffix)
 
-  /** Lazily read ONE candidate file's bloom — 16 KiB, only ever called for
-    * files that survived bucket/range pruning under a GET/IN key set.
+  /** Read ONE candidate file's bloom — 16 KiB, only ever called under a
+    * GET/IN key set, before the file's footer is read (see the object doc
+    * for which files are candidates). One `getFileStatus` per sidecar.
     * None (no/short/unreadable sidecar) means "may contain". */
-  private[graft] def readOne(
-      dir: Path, conf: Configuration, dataFileName: String): Option[Array[Long]] =
+  private[graft] def readOne(dir: Path, dataFileName: String): Option[Array[Long]] =
     try {
-      val fs = dir.getFileSystem(conf)
+      val fs = HadoopConf.fs(dir)
       val p = sidecarPath(dir, dataFileName)
-      val st = if (fs.exists(p)) Some(fs.getFileStatus(p)) else None
-      st.filter(_.getLen == NumWords.toLong * 8).map { _ =>
+      // a missing sidecar throws FileNotFoundException, caught below
+      if (fs.getFileStatus(p).getLen != NumWords.toLong * 8) None
+      else {
         val in = fs.open(p)
         try {
           val bytes = new Array[Byte](NumWords * 8)
           in.readFully(0, bytes)
           val bb = java.nio.ByteBuffer.wrap(bytes)
-          Array.fill(NumWords)(bb.getLong())
+          Some(Array.fill(NumWords)(bb.getLong()))
         } finally in.close()
       }
     } catch {
-      // pure IO elision: an unreadable sidecar degrades to "may contain"
+      // pure IO elision: a missing or unreadable sidecar degrades to
+      // "may contain"
       case _: java.io.IOException => None
     }
 
-  private def writeOne(
-      dir: Path, conf: Configuration, dataFileName: String,
-      bits: Array[Long]): Unit = {
-    val fs = dir.getFileSystem(conf)
+  private def writeOne(dir: Path, dataFileName: String, bits: Array[Long]): Unit = {
+    val fs = HadoopConf.fs(dir)
     val bb = java.nio.ByteBuffer.allocate(bits.length * 8)
     bits.foreach(bb.putLong)
     val out = fs.create(sidecarPath(dir, dataFileName), true)
@@ -122,24 +124,23 @@ object CellBloom {
     * O(batch), not O(store). A truncate clears every sidecar first (it
     * rewrites the whole store anyway). */
   private[sources] def update(
-      dir: Path, conf: Configuration,
+      dir: Path,
       added: Map[String, Array[Long]],
       removed: Set[String],
       reset: Boolean): Unit = {
-    val fs = dir.getFileSystem(conf)
+    val fs = HadoopConf.fs(dir)
     if (reset && fs.exists(dir))
       fs.listStatus(dir)
         .filter(s => s.isFile && isSidecar(s.getPath.getName))
         .foreach(s => fs.delete(s.getPath, false))
     else removed.foreach(n => fs.delete(sidecarPath(dir, n), false))
-    added.foreach { case (n, bits) => writeOne(dir, conf, n, bits) }
+    added.foreach { case (n, bits) => writeOne(dir, n, bits) }
   }
 
   /** Sidecar names for the given data files, where present — what a
     * snapshot export copies along. */
-  private[graft] def sidecarsOf(
-      dir: Path, conf: Configuration, dataFiles: Seq[String]): Seq[String] = {
-    val fs = dir.getFileSystem(conf)
+  private[graft] def sidecarsOf(dir: Path, dataFiles: Seq[String]): Seq[String] = {
+    val fs = HadoopConf.fs(dir)
     dataFiles.map(n => sidecarPath(dir, n).getName)
       .filter(n => fs.exists(new Path(dir, n)))
   }

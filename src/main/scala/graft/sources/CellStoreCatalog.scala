@@ -2,7 +2,6 @@ package graft.sources
 
 import java.util.{Map => JMap}
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.{NoSuchFunctionException, NoSuchTableException}
@@ -36,13 +35,12 @@ class CellStoreCatalog extends TableCatalog with FunctionCatalog {
   }
   override def name(): String = catalogName
 
-  private def conf = new Configuration()
   private def dirOf(ident: Identifier): Path =
     new Path((root +: ident.namespace().toSeq :+ ident.name()).mkString("/"))
 
   override def listTables(namespace: Array[String]): Array[Identifier] = {
     val dir = new Path((root +: namespace.toSeq).mkString("/"))
-    val fs = dir.getFileSystem(conf)
+    val fs = HadoopConf.fs(dir)
     if (!fs.exists(dir)) Array.empty
     else fs.listStatus(dir).filter(_.isDirectory)
       .map(s => Identifier.of(namespace, s.getPath.getName))
@@ -50,7 +48,7 @@ class CellStoreCatalog extends TableCatalog with FunctionCatalog {
 
   override def loadTable(ident: Identifier): Table = {
     val dir = dirOf(ident)
-    if (!dir.getFileSystem(conf).exists(dir)) throw new NoSuchTableException(ident)
+    if (!HadoopConf.fs(dir).exists(dir)) throw new NoSuchTableException(ident)
     new CellStoreTable(dir.toString)
   }
 
@@ -62,7 +60,7 @@ class CellStoreCatalog extends TableCatalog with FunctionCatalog {
     require(schema.isEmpty || schema.fieldNames.sameElements(CellStoreSource.Schema.fieldNames),
       s"cellstore tables have the fixed cell schema, got ${schema.fieldNames.mkString(",")}")
     val dir = dirOf(ident)
-    dir.getFileSystem(conf).mkdirs(dir)
+    HadoopConf.fs(dir).mkdirs(dir)
     new CellStoreTable(dir.toString)
   }
 
@@ -71,11 +69,11 @@ class CellStoreCatalog extends TableCatalog with FunctionCatalog {
 
   override def dropTable(ident: Identifier): Boolean = {
     val dir = dirOf(ident)
-    dir.getFileSystem(conf).delete(dir, true)
+    HadoopConf.fs(dir).delete(dir, true)
   }
 
   override def renameTable(oldIdent: Identifier, newIdent: Identifier): Unit = {
-    val fs = dirOf(oldIdent).getFileSystem(conf)
+    val fs = HadoopConf.fs(dirOf(oldIdent))
     if (!fs.exists(dirOf(oldIdent))) throw new NoSuchTableException(oldIdent)
     if (!fs.rename(dirOf(oldIdent), dirOf(newIdent)))
       throw new java.io.IOException(s"rename $oldIdent -> $newIdent failed")

@@ -4,12 +4,9 @@ import java.util.{Map => JMap}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.{ColumnIOFactory, RecordReader}
 import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.catalyst.InternalRow
@@ -51,6 +48,11 @@ import org.apache.spark.unsafe.types.UTF8String
  *    the parquet read to the requested columns at the IO level
  *    (`setRequestedSchema`) — a key-only scan reads no value bytes, the
  *    `KeyOnlyFilter` semantics.
+ *  - **One loaded configuration.** Driver-side planning (listings, bloom
+ *    sidecars, footers) and every reader and writer share one loaded Hadoop
+ *    configuration per JVM ([[HadoopConf.shared]]), as the reference builds
+ *    its configuration once per tool run (`CopyRow.java:101`): a GET or a
+ *    store write loads none.
  *  - Pushed filters are also kept as Spark-side residuals, so pruning is a
  *    pure optimization and can never affect correctness.
  *
@@ -352,11 +354,6 @@ object CellStoreSource {
     case None => Some((v, incl))
   }
 
-  /** Per-file [min,max] of rowKey across all row groups, from the footer. */
-  private[sources] def footerKeyRange(
-      file: Path, conf: Configuration): Option[(Array[Byte], Array[Byte])] =
-    footerStats(file, conf)._2
-
   /** One row group's footer metadata. */
   private[graft] final case class BlockInfo(
       index: Int, rows: Long, compressedBytes: Long,
@@ -366,8 +363,8 @@ object CellStoreSource {
       qualRange: Option[(Array[Byte], Array[Byte])] = None)
 
   /** All row groups of a file, footer metadata only. */
-  private[graft] def footerBlocks(file: Path, conf: Configuration): Seq[BlockInfo] = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+  private[graft] def footerBlocks(file: Path): Seq[BlockInfo] = {
+    val reader = HadoopConf.openParquet(file)
     try reader.getRowGroups.asScala.toSeq.zipWithIndex.map { case (b, i) =>
       BlockInfo(i, b.getRowCount, b.getCompressedSize, rowGroupKeyRange(b),
         rowGroupTsRange(b), rowGroupFamRange(b), rowGroupQualRange(b))
@@ -376,8 +373,8 @@ object CellStoreSource {
 
   /** Per-file (rowCount, [min,max] of rowKey) from footer metadata only. */
   private[sources] def footerStats(
-      file: Path, conf: Configuration): (Long, Option[(Array[Byte], Array[Byte])]) = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+      file: Path): (Long, Option[(Array[Byte], Array[Byte])]) = {
+    val reader = HadoopConf.openParquet(file)
     try {
       val blocks = reader.getRowGroups.asScala
       val rows = blocks.map(_.getRowCount).sum
@@ -441,8 +438,8 @@ object CellStoreSource {
   }
 
   /** Read the store's bucket count (None = range layout). */
-  private[graft] def readBuckets(dir: Path, conf: Configuration): Option[Int] = {
-    val fs = dir.getFileSystem(conf)
+  private[graft] def readBuckets(dir: Path): Option[Int] = {
+    val fs = HadoopConf.fs(dir)
     val meta = new Path(dir, MetaFile)
     if (!fs.exists(meta)) None
     else {
@@ -452,8 +449,8 @@ object CellStoreSource {
     }
   }
 
-  private[sources] def writeBucketsMeta(dir: Path, conf: Configuration, n: Int): Unit = {
-    val fs = dir.getFileSystem(conf)
+  private[sources] def writeBucketsMeta(dir: Path, n: Int): Unit = {
+    val fs = HadoopConf.fs(dir)
     val out = fs.create(new Path(dir, MetaFile), true)
     try out.write(s"""{"buckets": $n}""".getBytes("UTF-8")) finally out.close()
   }
@@ -469,9 +466,9 @@ object CellStoreSource {
   private val CompactFilePattern = """_compact_(.+)\.json""".r
 
   private[sources] def writeCompactManifest(
-      dir: Path, conf: Configuration, id: String,
+      dir: Path, id: String,
       inputs: Seq[String], outputs: Seq[String]): Unit = {
-    val fs = dir.getFileSystem(conf)
+    val fs = HadoopConf.fs(dir)
     def arr(xs: Seq[String]) =
       xs.sorted.map(x => "\"" + x + "\"").mkString("[", ",", "]")
     val out = fs.create(new Path(dir, s"_compact_$id.json"), true)
@@ -481,9 +478,8 @@ object CellStoreSource {
   }
 
   /** All compaction manifests of a store (empty if none). */
-  private[graft] def readCompactManifests(
-      dir: Path, conf: Configuration): Seq[CompactManifest] = {
-    val fs = dir.getFileSystem(conf)
+  private[graft] def readCompactManifests(dir: Path): Seq[CompactManifest] = {
+    val fs = HadoopConf.fs(dir)
     if (!fs.exists(dir)) return Nil
     fs.listStatus(dir).toSeq
       .filter(_.isFile)
@@ -509,7 +505,7 @@ class CellStoreTable(path: String) extends Table
   /** Bucket count of a salted store (None = range-region layout). Read once
     * per table resolution — one tiny manifest file, driver-side. */
   lazy val buckets: Option[Int] =
-    CellStoreSource.readBuckets(new Path(path), new Configuration())
+    CellStoreSource.readBuckets(new Path(path))
 
   override def name(): String = s"cellstore(`$path`)"
   override def schema(): StructType = CellStoreSource.Schema
@@ -844,16 +840,15 @@ class CellStoreAggScan(
     s"CellStoreAggScan path=$path, aggs=${aggs.mkString("[", ",", "]")} (footer-only)"
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val conf = new Configuration()
     val dir = new Path(path)
-    val fs = dir.getFileSystem(conf)
+    val fs = HadoopConf.fs(dir)
     var rows = 0L
     var mn: Array[Byte] = null
     var mx: Array[Byte] = null
     fs.listStatus(dir)
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet") && s.getLen > 0)
       .foreach { st =>
-        val (r, range) = CellStoreSource.footerStats(st.getPath, conf)
+        val (r, range) = CellStoreSource.footerStats(st.getPath)
         rows += r
         range.foreach { case (lo, hi) =>
           if (mn == null || CellStoreSource.cmp(lo, mn) < 0) mn = lo
@@ -944,9 +939,8 @@ class CellStoreScan(val path: String, buckets: Option[Int],
 
   private def plan(): Array[InputPartition] = {
     val bounds = CellStoreSource.boundsSetOf(allFilters)
-    val conf = new Configuration()
     val dir = new Path(path)
-    val fs = dir.getFileSystem(conf)
+    val fs = HadoopConf.fs(dir)
     val files = fs.listStatus(dir)
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet") && s.getLen > 0)
       // pinned file subset (`files` option): scan exactly these committed
@@ -957,14 +951,17 @@ class CellStoreScan(val path: String, buckets: Option[Int],
     // Bloom elision for point lookups (HFile ROW bloom analogue): a pushed/
     // runtime GET/IN key set skips files whose bloom proves every key
     // absent — the in-range negative GET that min/max stats cannot serve.
-    // Sidecars are read LAZILY, one 16 KiB file per candidate that survived
-    // bucket/key pruning — planning never parses store-wide bloom state.
-    // A file with no sidecar is "may contain"; the residual filter
-    // re-checks rows, so this is pure IO elision.
+    // Only a GET/IN reads sidecars, one 16 KiB file per candidate: the files
+    // of the keys' buckets on a salted store; on a range store EVERY file's
+    // sidecar, BEFORE its footer — footers are then read only for bloom
+    // survivors, about one per hit instead of one per region. Planning never
+    // parses store-wide bloom state. A file with no sidecar is "may
+    // contain"; the residual filter re-checks rows, so this is pure IO
+    // elision.
     val getKeys = CellStoreSource.exactKeys(allFilters)
     def mayHave(name: String): Boolean = getKeys match {
       case Some(ks) =>
-        CellBloom.readOne(dir, conf, name)
+        CellBloom.readOne(dir, name)
           .forall(b => ks.exists(CellBloom.mayContain(b, _)))
       case None => true
     }
@@ -1006,7 +1003,7 @@ class CellStoreScan(val path: String, buckets: Option[Int],
         // Footers are read driver-side; a 100 TB deployment swaps this for a
         // cached region index with the same contract.
         files.filter(st => mayHave(st.getPath.getName)).flatMap { st =>
-          val blocks = CellStoreSource.footerBlocks(st.getPath, conf)
+          val blocks = CellStoreSource.footerBlocks(st.getPath)
           val chunks = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Long, Boolean)]
           blocks.foreach { b =>
             val hit = bounds.keep(b)
@@ -1089,9 +1086,8 @@ class CellStoreMicroBatchStream(path: String, required: StructType, pushed: Arra
   import org.apache.spark.sql.connector.read.streaming.{Offset => StreamOffset}
 
   private def listFiles(): Set[String] = {
-    val conf = new Configuration()
     val dir = new Path(path)
-    val fs = dir.getFileSystem(conf)
+    val fs = HadoopConf.fs(dir)
     if (!fs.exists(dir)) Set.empty
     else fs.listStatus(dir)
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet") && s.getLen > 0)
@@ -1111,7 +1107,7 @@ class CellStoreMicroBatchStream(path: String, required: StructType, pushed: Arra
     val now = end.asInstanceOf[CellStoreOffset].files
     // rewrites of fully-delivered inputs are committed without being read
     val rewritten = CellStoreSource
-      .readCompactManifests(new Path(path), new Configuration())
+      .readCompactManifests(new Path(path))
       .filter(m => m.inputs.nonEmpty && m.inputs.subsetOf(seen))
       .flatMap(_.outputs).toSet
     (now -- seen -- rewritten).toSeq.sorted
@@ -1256,8 +1252,7 @@ class CellStorePartitionReader(
     required: StructType,
     bounds: CellStoreSource.ScanBoundsSet) extends PartitionReader[InternalRow] {
 
-  private val reader =
-    ParquetFileReader.open(HadoopInputFile.fromPath(new Path(chunk.file), new Configuration()))
+  private val reader = HadoopConf.openParquet(new Path(chunk.file))
   private val fileSchema: MessageType = reader.getFooter.getFileMetaData.getSchema
   private val requestedSchema: MessageType =
     new MessageType(fileSchema.getName,

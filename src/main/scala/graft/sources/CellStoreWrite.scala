@@ -2,7 +2,6 @@ package graft.sources
 
 import java.util.UUID
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
@@ -56,7 +55,7 @@ class CellStoreWrite(path: String, info: LogicalWriteInfo, truncateFirst: Boolea
     val opted = Option(info.options.get("buckets")).map(_.toInt)
     val existing =
       if (truncateFirst) None
-      else CellStoreSource.readBuckets(new Path(path), new Configuration())
+      else CellStoreSource.readBuckets(new Path(path))
     (opted, existing) match {
       case (Some(o), Some(e)) =>
         require(o == e, s"store at $path is salted with $e buckets; got buckets=$o")
@@ -125,9 +124,8 @@ class CellStoreBatchWrite(path: String, queryId: String, schema: StructType,
     * micro-batch tail can mark the outputs delivered instead of replaying
     * rewritten cells. */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val conf = new Configuration()
     val dir = new Path(path)
-    val fs = dir.getFileSystem(conf)
+    val fs = HadoopConf.fs(dir)
     val superseded =
       if (truncateFirst)
         fs.listStatus(dir)
@@ -145,18 +143,18 @@ class CellStoreBatchWrite(path: String, queryId: String, schema: StructType,
       src.getName
     }
     if (replaceFiles.nonEmpty)
-      CellStoreSource.writeCompactManifest(dir, conf, queryId,
+      CellStoreSource.writeCompactManifest(dir, queryId,
         inputs = superseded.map(_.getName).toSeq, outputs = renamed.toSeq)
     // record per-file rowKey blooms: merge on append, reset on truncate,
     // drop superseded entries on file-scoped rewrites (pure IO elision —
     // a racing writer losing an entry only loses pruning, never rows)
-    CellBloom.update(dir, conf,
+    CellBloom.update(dir,
       added = committed.map(m => new Path(m.file).getName -> m.bloom).toMap,
       removed = superseded.map(_.getName).toSet,
       reset = truncateFirst)
     superseded.foreach(p => fs.delete(p, false))
     buckets match {
-      case Some(n) => CellStoreSource.writeBucketsMeta(dir, conf, n)
+      case Some(n) => CellStoreSource.writeBucketsMeta(dir, n)
       case None if truncateFirst =>
         // overwriting a salted store with a range layout: drop the manifest
         // or the new files would be misread as salted
@@ -167,7 +165,7 @@ class CellStoreBatchWrite(path: String, queryId: String, schema: StructType,
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(tmpDir).getFileSystem(new Configuration())
+    val fs = HadoopConf.fs(new Path(tmpDir))
     fs.delete(new Path(tmpDir), true)
   }
 }

@@ -71,7 +71,7 @@ object CellStoreIngest {
     import org.apache.spark.sql.functions.{col, lit}
     val spark = deltas.sparkSession
     val applyBatch: (DataFrame, Long) => Unit = (batch, batchId) => {
-      // the SESSION's Hadoop conf, not a bare new Configuration(): any
+      // the SESSION's Hadoop conf, not the bare-defaults `HadoopConf.shared`: any
       // spark.hadoop.* filesystem settings/credentials (object stores)
       // must apply to this probe too, or it misreports the store as absent
       val dir = new org.apache.hadoop.fs.Path(path)

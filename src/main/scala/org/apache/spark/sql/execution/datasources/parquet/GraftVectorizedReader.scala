@@ -2,28 +2,34 @@ package org.apache.spark.sql.execution.datasources.parquet
 
 import scala.jdk.CollectionConverters._
 
+import graft.sources.HadoopConf
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.column.page.PageReadStore
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.metadata.BlockMetaData
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.schema.MessageType
+import org.apache.hadoop.mapred.FileSplit
+import org.apache.hadoop.mapreduce.TaskAttemptID
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetInputFormat}
+import org.apache.parquet.hadoop.metadata.{BlockMetaData, ParquetMetadata}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
 /**
  * Version-boundary bridge (same pattern as `org.apache.spark.sql.graft.Shims`):
  * the cell store's columnar read path built on Spark's OWN vectorized parquet
- * decoder. `SpecificParquetRecordReaderBase.ParquetRowGroupReader` is
- * package-private, so the adapter that lets the store keep its statistics-based
- * row-group skipping has to live in this package.
+ * decoder, opened through the same `initialize(split, taskContext, inputFile,
+ * stream, footer)` entry Spark's `ParquetPartitionReaderFactory` uses.
  *
  * The store supplies the file, the pruned column set, and a per-row-group
- * keep predicate (its key-range skip); Spark's `VectorizedParquetRecordReader`
- * does the page decoding straight into `ColumnarBatch`es — ~10× less per-row
- * overhead than the parquet example `Group` API the row path used, and the
- * batches feed whole-stage codegen without a row pivot.
+ * keep predicate (its key-range skip). The footer is read once, and the
+ * decoder is handed a footer that lists only the kept row groups, so skipped
+ * groups cost no page IO. Spark's `VectorizedParquetRecordReader` does the
+ * page decoding straight into `ColumnarBatch`es — ~10× less per-row overhead
+ * than the parquet example `Group` API the row path uses, and the batches
+ * feed whole-stage codegen without a row pivot.
+ *
+ * Every open reads [[HadoopConf.shared]] through a per-reader copy that
+ * carries the read-support keys; no open loads a configuration.
  */
 object GraftVectorizedReader {
 
@@ -36,36 +42,38 @@ object GraftVectorizedReader {
       required: StructType,
       keep: (Int, BlockMetaData) => Boolean,
       capacity: Int): VectorizedParquetRecordReader = {
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new Path(file), new Configuration()))
+    val path = new Path(file)
+    val inputFile = HadoopConf.inputFile(path)
+    val stream = inputFile.newStream()
     try {
-      val fileSchema = reader.getFooter.getFileMetaData.getSchema
-      val requested = new MessageType(fileSchema.getName,
-        required.fieldNames.map(n => fileSchema.getType(Seq(n): _*)): _*)
-      reader.setRequestedSchema(requested)
-      val keepMask = reader.getRowGroups.asScala.zipWithIndex
-        .map { case (b, i) => keep(i, b) }.toArray
-      val totalRows = reader.getRowGroups.asScala.zip(keepMask)
-        .collect { case (b, true) => b.getRowCount }.sum
+      val footer = ParquetFileReader.readFooter(inputFile, HadoopConf.readOptions(), stream)
+      val kept = footer.getBlocks.asScala.zipWithIndex
+        .collect { case (b, i) if keep(i, b) => b }
       val vec = new VectorizedParquetRecordReader(false, capacity)
-      vec.initialize(fileSchema, requested,
-        new SkippingRowGroupReader(reader, keepMask), totalRows.toInt)
+      // the base class casts the split to the mapred FileSplit
+      vec.initialize(
+        new FileSplit(path, 0L, inputFile.getLength, Array.empty[String]),
+        new TaskAttemptContextImpl(readConf(required), new TaskAttemptID()),
+        Some(inputFile), Some(stream),
+        Some(new ParquetMetadata(footer.getFileMetaData, kept.asJava)))
       vec.initBatch(new StructType(), InternalRow.empty)
       vec
-    } catch { case t: Throwable => reader.close(); throw t }
+    } catch { case t: Throwable => stream.close(); throw t }
   }
 
-  /** Feeds the vectorized decoder only the row groups the store kept;
-    * skipped groups advance the file reader without page IO. */
-  private class SkippingRowGroupReader(reader: ParquetFileReader, keep: Array[Boolean])
-      extends SpecificParquetRecordReaderBase.ParquetRowGroupReader {
-    private var i = 0
-    override def readNextRowGroup(): PageReadStore = {
-      while (i < keep.length && !keep(i)) { reader.skipNextRowGroup(); i += 1 }
-      if (i >= keep.length) null
-      else { i += 1; reader.readNextRowGroup() }
-    }
-    override def close(): Unit = reader.close()
+  /** A copy of the shared conf with the keys `ParquetReadSupport` and the
+    * parquet-to-Spark schema converter read: the Spark schema to decode
+    * into, and the five converter flags pinned to false (the cell schema has
+    * no INT96, nanosecond or string-as-binary columns, so they are inert). */
+  private def readConf(required: StructType): Configuration = {
+    val conf = new Configuration(HadoopConf.shared)
+    conf.set(ParquetInputFormat.READ_SUPPORT_CLASS, classOf[ParquetReadSupport].getName)
+    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, required.json)
+    conf.set(ParquetWriteSupport.SPARK_ROW_SCHEMA, required.json)
+    Seq(SQLConf.PARQUET_BINARY_AS_STRING, SQLConf.PARQUET_INT96_AS_TIMESTAMP,
+      SQLConf.CASE_SENSITIVE, SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED,
+      SQLConf.LEGACY_PARQUET_NANOS_AS_LONG).foreach(e => conf.setBoolean(e.key, false))
+    conf
   }
 }
 
@@ -81,7 +89,7 @@ object GraftRowParquetWriter {
   def open(
       file: String,
       schema: StructType): org.apache.parquet.hadoop.ParquetWriter[InternalRow] = {
-    val conf = new Configuration()
+    val conf = new Configuration(HadoopConf.shared)
     ParquetWriteSupport.setSchema(schema, conf)
     // the keys ParquetWriteSupport.init + SparkToParquetSchemaConverter
     // require (Spark's own write path copies them from the session conf;

@@ -103,10 +103,8 @@ class CellStoreSourceSpec extends AnyFunSuite with SparkTestBase {
     val files = new java.io.File(dir).listFiles()
       .filter(_.getName.endsWith(".parquet"))
     assert(files.length == 1)
-    val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(files.head.getPath),
-        new org.apache.hadoop.conf.Configuration()))
+    val footer = graft.sources.HadoopConf.openParquet(
+      new org.apache.hadoop.fs.Path(files.head.getPath))
     val nGroups = try footer.getRowGroups.size() finally footer.close()
     assert(nGroups > 1, s"test setup needs a multi-row-group file, got $nGroups")
 

@@ -141,7 +141,7 @@ class CompactionSpec extends AnyFunSuite with SparkTestBase {
     assert(inputs.forall(!names.contains(_)))
     assert(names.exists(_.startsWith("_compact_")))
     val manifests = graft.sources.CellStoreSource.readCompactManifests(
-      new org.apache.hadoop.fs.Path(dir), new org.apache.hadoop.conf.Configuration())
+      new org.apache.hadoop.fs.Path(dir))
     assert(manifests.size == 1)
     assert(manifests.head.inputs == inputs.toSet)
     assert(manifests.head.outputs.nonEmpty &&

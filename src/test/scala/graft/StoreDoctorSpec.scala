@@ -37,7 +37,7 @@ class StoreDoctorSpec extends AnyFunSuite with SparkTestBase {
 
     // planted fault 1: delete one bloom sidecar → WARN names the file
     val hDir = new org.apache.hadoop.fs.Path(dir)
-    val fs = hDir.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = graft.sources.HadoopConf.fs(hDir)
     val dataFile = fs.listStatus(hDir)
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
       .head.getPath.getName
@@ -51,7 +51,7 @@ class StoreDoctorSpec extends AnyFunSuite with SparkTestBase {
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet")).head.getPath
     org.apache.hadoop.fs.FileUtil.copy(fs, stray, fs,
       new org.apache.hadoop.fs.Path(hDir, "stray.parquet"), false,
-      new org.apache.hadoop.conf.Configuration())
+      graft.sources.HadoopConf.shared)
     val err = StoreDoctor.diagnose(spark, dir).collect()
     val (st2, detail2) = statusOf(err, "layout")
     assert(st2 == "ERROR" && detail2.contains("stray.parquet"))
@@ -94,7 +94,7 @@ class StoreDoctorSpec extends AnyFunSuite with SparkTestBase {
     // dangling: drop the whole side table's rows → refs cannot resolve
     MobStore.reclaimMob(spark, dir) // first clear the orphan
     val mobDir = new org.apache.hadoop.fs.Path(s"$dir/mob")
-    val fs = mobDir.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = graft.sources.HadoopConf.fs(mobDir)
     spark.read.parquet(s"$dir/mob").limit(0)
       .write.mode("overwrite").parquet(s"$dir/mob_empty")
     fs.delete(mobDir, true)
