@@ -5,10 +5,6 @@ import java.util.{Map => JMap}
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
-import org.apache.parquet.io.{ColumnIOFactory, RecordReader}
-import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -45,9 +41,12 @@ import org.apache.spark.unsafe.types.UTF8String
  *    to named families) — a time-windowed or single-family scan of a
  *    time-ordered store reads only the row groups that can match.
  *  - **Column pruning (F2/S3).** `SupportsPushDownRequiredColumns` narrows
- *    the parquet read to the requested columns at the IO level
- *    (`setRequestedSchema`) — a key-only scan reads no value bytes, the
- *    `KeyOnlyFilter` semantics.
+ *    the parquet read to the requested columns at the IO level (the
+ *    decoder's requested schema) — a key-only scan reads no value bytes, the
+ *    `KeyOnlyFilter` semantics, and a count-only scan decodes no column.
+ *  - **One decoder.** Plain scans, grouped-aggregate partials and stream
+ *    batches all decode through Spark's vectorized parquet reader
+ *    ([[org.apache.spark.sql.execution.datasources.parquet.GraftVectorizedReader]]).
  *  - **One loaded configuration.** Driver-side planning (listings, bloom
  *    sidecars, footers) and every reader and writer share one loaded Hadoop
  *    configuration per JVM ([[HadoopConf.shared]]), as the reference builds
@@ -111,7 +110,6 @@ object CellStoreSource {
   private[sources] final case class TsRange(
       lower: Option[(Long, Boolean)],   // (bound, inclusive)
       upper: Option[(Long, Boolean)]) {
-    def isFull: Boolean = lower.isEmpty && upper.isEmpty
     /** Does [min,max] (both inclusive, from stats) intersect this range? */
     def overlaps(min: Long, max: Long): Boolean = {
       val aboveLower = lower.forall { case (l, incl) =>
@@ -701,25 +699,21 @@ class CellStoreGroupByScan(path: String, buckets: Option[Int],
 class CellStoreGroupByReaderFactory(
     inputSchema: StructType, groupCols: Seq[String], aggs: Seq[CellAggSpec])
     extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val chunks = partition match {
-      case CellStorePartition(chunk)          => Seq(chunk)
-      case CellStoreBucketPartition(_, files) => files.map(CellChunk(_, 0, Int.MaxValue))
-      case other =>
-        throw new IllegalArgumentException(s"unexpected partition: $other")
-    }
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new CellStoreGroupByReader(
-      new CellStoreFilesReader(chunks, inputSchema, CellStoreSource.boundsSetOf(Nil)),
+      new CellStoreColumnarReader(CellStoreReaderFactory.chunksOf(partition), inputSchema,
+        CellStoreSource.boundsSetOf(Nil)),
       inputSchema, groupCols, aggs)
-  }
 }
 
 /** Run-length partial aggregation over a sorted cell stream: accumulate
   * while consecutive rows share the group key, emit one partial row per
   * run. Constant state (one key + one accumulator set); duplicate groups
-  * across runs/files/partitions are merged by Spark's final aggregate. */
+  * across runs/files/partitions are merged by Spark's final aggregate.
+  * Rows are views into the decoder's column vectors, which the next batch
+  * overwrites, so the strings a run keeps are copied out ([[owned]]). */
 class CellStoreGroupByReader(
-    rows: PartitionReader[InternalRow],
+    batches: PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch],
     inputSchema: StructType,
     groupCols: Seq[String],
     aggs: Seq[CellAggSpec]) extends PartitionReader[InternalRow] {
@@ -733,6 +727,12 @@ class CellStoreGroupByReader(
   private var count = 0L
   private var out: InternalRow = _
   private var exhausted = false
+  private var rows: java.util.Iterator[InternalRow] = java.util.Collections.emptyIterator()
+
+  private def owned(v: Any): Any = v match {
+    case s: UTF8String => s.clone()
+    case other         => other
+  }
 
   private def cmpVals(a: Any, b: Any): Int = (a, b) match {
     case (x: Array[Byte], y: Array[Byte]) => CellStoreSource.cmp(x, y)
@@ -755,7 +755,7 @@ class CellStoreGroupByReader(
   }
 
   private def startRun(k: Array[Any]): Unit = {
-    curKey = k; states = new Array[Any](aggs.length); count = 0L
+    curKey = k.map(owned); states = new Array[Any](aggs.length); count = 0L
   }
 
   private def update(r: InternalRow): Unit = {
@@ -771,7 +771,7 @@ class CellStoreGroupByReader(
             val cur = states(i)
             if (cur == null ||
                 (if (m.isMin) cmpVals(v, cur) < 0 else cmpVals(v, cur) > 0))
-              states(i) = v
+              states(i) = owned(v)
           }
       }
       i += 1
@@ -795,8 +795,8 @@ class CellStoreGroupByReader(
   override def next(): Boolean = {
     out = null
     while (out == null) {
-      if (!exhausted && rows.next()) {
-        val r = rows.get()
+      if (!exhausted && hasRow) {
+        val r = rows.next()
         val k = new Array[Any](groupIdx.length)
         var i = 0
         while (i < groupIdx.length) {
@@ -815,8 +815,16 @@ class CellStoreGroupByReader(
     true
   }
 
+  private def hasRow: Boolean = {
+    while (!rows.hasNext) {
+      if (!batches.next()) return false
+      rows = batches.get().rowIterator()
+    }
+    true
+  }
+
   override def get(): InternalRow = out
-  override def close(): Unit = rows.close()
+  override def close(): Unit = batches.close()
 }
 
 /** Footer-only scan answering a pushed whole-store aggregation: one
@@ -1151,28 +1159,30 @@ final case class CellStoreBucketPartition(bucket: Int, files: Seq[String])
 class CellStoreReaderFactory(required: StructType, pushed: Array[Filter],
                              limit: Option[Int] = None)
     extends PartitionReaderFactory {
-  private def chunksOf(partition: InputPartition): Seq[CellChunk] = partition match {
+  /** Every partition reads columnar; the row entry point is never called. */
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException("cell-store partitions read columnar only")
+
+  /** Spark's vectorized parquet decoder fed by the store's row-group skip —
+    * page decode straight into ColumnarBatch, for every partition. A
+    * count-only scan requests no columns and gets batches that carry only
+    * their row counts. */
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
+  override def createColumnarReader(
+      partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
+    new CellStoreColumnarReader(CellStoreReaderFactory.chunksOf(partition), required,
+      CellStoreSource.boundsSetOf(pushed.toSeq), limit)
+}
+
+object CellStoreReaderFactory {
+  /** The chunks a scan partition reads: one region chunk, or every file of
+    * a salt bucket whole. */
+  def chunksOf(partition: InputPartition): Seq[CellChunk] = partition match {
     case CellStorePartition(chunk)          => Seq(chunk)
     case CellStoreBucketPartition(_, files) => files.map(CellChunk(_, 0, Int.MaxValue))
     case other =>
       throw new IllegalArgumentException(s"unexpected partition: $other")
   }
-
-  /** Row-based path: kept for the degenerate no-column scan (count-only),
-    * which Spark's vectorized parquet reader does not model. */
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new CellStoreFilesReader(chunksOf(partition), required,
-      CellStoreSource.boundsSetOf(pushed.toSeq), limit)
-
-  /** Columnar path: Spark's vectorized parquet decoder fed by the store's
-    * row-group skip — page decode straight into ColumnarBatch, no per-row
-    * Group materialization (the 100 TB scan path). */
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    required.nonEmpty
-  override def createColumnarReader(
-      partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    new CellStoreColumnarReader(chunksOf(partition), required,
-      CellStoreSource.boundsSetOf(pushed.toSeq), limit)
 }
 
 /** Sequential vectorized reader over a partition's chunks (usually one). */
@@ -1211,108 +1221,4 @@ class CellStoreColumnarReader(
   }
   override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = cur.resultBatch()
   override def close(): Unit = if (cur != null) { cur.close(); cur = null }
-}
-
-/** Sequential reader over a partition's chunks (usually one). */
-class CellStoreFilesReader(
-    chunks: Seq[CellChunk],
-    required: StructType,
-    bounds: CellStoreSource.ScanBoundsSet,
-    limit: Option[Int] = None) extends PartitionReader[InternalRow] {
-  private val it = chunks.iterator
-  private var cur: CellStorePartitionReader = _
-  private var emitted = 0L
-
-  override def next(): Boolean = {
-    if (limit.exists(emitted >= _)) return false
-    while (true) {
-      if (cur == null) {
-        if (!it.hasNext) return false
-        cur = new CellStorePartitionReader(it.next(), required, bounds)
-      }
-      if (cur.next()) { emitted += 1; return true }
-      cur.close()
-      cur = null
-    }
-    false // unreachable
-  }
-  override def get(): InternalRow = cur.get()
-  override def close(): Unit = if (cur != null) { cur.close(); cur = null }
-}
-
-/**
- * Reads one region file with the parquet example (`Group`) API: row groups
- * outside the pushed key range are skipped via statistics; only the
- * required columns are read (`setRequestedSchema`). Vectorized decoding is
- * an optimization the store can adopt later — the contract (pruned IO,
- * InternalRow out) stays the same.
- */
-class CellStorePartitionReader(
-    chunk: CellChunk,
-    required: StructType,
-    bounds: CellStoreSource.ScanBoundsSet) extends PartitionReader[InternalRow] {
-
-  private val reader = HadoopConf.openParquet(new Path(chunk.file))
-  private val fileSchema: MessageType = reader.getFooter.getFileMetaData.getSchema
-  private val requestedSchema: MessageType =
-    new MessageType(fileSchema.getName,
-      required.fieldNames.map(n => fileSchema.getType(Seq(n): _*)): _*)
-  reader.setRequestedSchema(requestedSchema)
-  private val blocks = reader.getRowGroups.asScala.toList
-
-  private var blockIdx = 0
-  private var recordReader: RecordReader[Group] = _
-  private var rowsLeft: Long = 0L
-  private var current: InternalRow = _
-
-  private def advanceRowGroup(): Boolean = {
-    while (blockIdx < blocks.length) {
-      val block = blocks(blockIdx)
-      val idx = blockIdx
-      blockIdx += 1
-      val inChunk = idx >= chunk.groupLo && idx < chunk.groupHi
-      val keep = inChunk && bounds.keep(block)
-      if (!keep) {
-        reader.skipNextRowGroup()
-      } else {
-        val pages = reader.readNextRowGroup()
-        if (pages != null) {
-          val columnIO = new ColumnIOFactory().getColumnIO(requestedSchema, fileSchema)
-          recordReader = columnIO.getRecordReader(pages, new GroupRecordConverter(requestedSchema))
-          rowsLeft = pages.getRowCount
-          if (rowsLeft > 0) return true
-        }
-      }
-    }
-    false
-  }
-
-  override def next(): Boolean = {
-    while (rowsLeft == 0L) if (!advanceRowGroup()) return false
-    val g = recordReader.read()
-    rowsLeft -= 1
-    current = toRow(g)
-    true
-  }
-
-  private def toRow(g: Group): InternalRow = {
-    val values = new Array[Any](required.length)
-    var i = 0
-    while (i < required.length) {
-      val name = required(i).name
-      values(i) =
-        if (g.getFieldRepetitionCount(name) == 0) null
-        else name match {
-          case "rowKey" | "qualifier" | "value" => g.getBinary(name, 0).getBytes
-          case "family" | "cellType"            => UTF8String.fromString(g.getString(name, 0))
-          case "ts"                             => g.getLong(name, 0)
-          case other => throw new IllegalArgumentException(s"unknown cell column: $other")
-        }
-      i += 1
-    }
-    new GenericInternalRow(values)
-  }
-
-  override def get(): InternalRow = current
-  override def close(): Unit = reader.close()
 }

@@ -53,67 +53,43 @@ object Tables {
     * a driver-side plan inspection, no job. */
   private val scanParts = new Memo[String, Int]
 
+  /** Tables whose consumers do heavy PER-ROW compute (tokenize / regex /
+    * hash / vector kernels) before their first exchange — the only loads
+    * [[parallelized]] may redistribute. */
+  private val HeavyRowTables = Set("documents", "embeddings")
+
   /**
-   * Scale-adaptive scan parallelization (round 19; the guide's "one huge
-   * unsplittable file → repartition immediately after the read", applied
-   * adaptively). The bench fixtures are SINGLE parquet files with one row
-   * group each — unsplittable below file granularity — so every scan
-   * stage, and with it ALL narrow per-row work (tokenize/regex/hash
-   * projections) and every map-side partial aggregation, ran on one or
-   * two tasks at ANY core count (measured at the synthesized sf1:
-   * redactPii 3.9 s on the 2-split scan vs 0.64 s redistributed across
-   * 32). When the scan's natural split count is below half the session's
-   * default parallelism, redistribute once right after the read; any
-   * production layout (many files / many row groups) fails the condition
-   * and this is a no-op — the knob derives from input layout and session
-   * cores, never a constant tuned to either scale.
+   * Scan parallelization for the heavy-per-row tables, one rule: a
+   * `documents` or `embeddings` load whose natural split count is below half
+   * the session's default parallelism is redistributed once right after the
+   * read (the guide's "one huge unsplittable file → repartition immediately
+   * after the read"). The fixtures are single parquet files with one row
+   * group each, so without it every tokenize/regex/hash/vector projection
+   * and map-side partial aggregation over them runs on one or two tasks at
+   * any core count (measured at the synthesized sf1: redactPii 3.9 s on the
+   * 2-split scan vs 0.64 s redistributed across 32). A production layout
+   * (many files / many row groups) fails the split condition and the rule
+   * is a no-op.
+   *
+   * Every other table loads as read, at any size and core count: their
+   * consumers are join/aggregation-shaped, their map work is light, and an
+   * added exchange is one more sequential AQE stage per consumer. Measured
+   * as a net loss at 8 cores on sf0.1 `lineitem` (q_rollup_served 0.26×,
+   * q_semi_join 0.52×) when a byte threshold scaled by the core count let
+   * the relational tables in too.
    *
    * Output-identical: round-robin repartition is retry-deterministic
    * (sortBeforeRepartition) and every declared query is partition-order
    * independent (the repo's oracle-determinism discipline — the driver
    * already benches the same queries at 8 and 32 cores).
    */
-  /** Tables whose consumers do heavy PER-ROW compute (tokenize / regex /
-    * hash / vector kernels) before their first exchange — the cases where
-    * an under-split scan serializes real work. The relational tables'
-    * consumers are join/aggregation-shaped: their map work is light, and
-    * the added exchange is one more sequential AQE stage per consumer —
-    * measured a NET LOSS on the short join queries (full-sweep A/B:
-    * q_semi_join 0.5x, q_set_ops 0.6x, q_pivot 0.5x) against wins that
-    * only the text/vector families actually realize (q_winnow 4.7x,
-    * q_redact 3.1x, q_rare_ngrams 2.5x, q_ann_bq 1.9x). */
-  private val HeavyRowTables = Set("documents", "embeddings")
-
-  private val tableSizes = new Memo[String, Long]
-
-  /** On-disk bytes of a fixture table: a file, or every regular file
-    * under a directory tree. */
-  private def tableBytes(path: String): Long =
-    tableSizes(path)(fileBytes(new java.io.File(path.stripPrefix("file:"))))
-
-  private[graft] def fileBytes(f: java.io.File): Long =
-    if (f.isDirectory) {
-      val children = f.listFiles()
-      if (children == null)
-        throw new java.io.IOException(s"cannot list table directory $f")
-      children.iterator.map(fileBytes).sum
-    } else f.length()
-
   private def parallelized(spark: SparkSession, path: String, name: String,
       df: DataFrame): DataFrame = {
+    if (!HeavyRowTables.contains(name)) return df
     val target = spark.sparkContext.defaultParallelism
     val parts = scanParts(s"$path#$target")(df.rdd.getNumPartitions)
-    if (parts * 2 > target) return df // properly split input: no-op
-    // heavy-per-row tables redistribute whenever under-split; the
-    // relational tables additionally need ≥ ~1 MB of input per core —
-    // below that the added exchange is one more sequential AQE stage that
-    // buys no real map work (measured: sf0.1 lineitem/orders consumers
-    // net-lost with unconditional redistribution, while the sf1 twin's
-    // 78 MB single-file lineitem gains multi-x on its aggregations)
-    if (HeavyRowTables.contains(name) ||
-        tableBytes(path) >= target.toLong * (1L << 20))
-      df.repartition(target)
-    else df
+    if (parts * 2 > target) df // properly split input: no-op
+    else df.repartition(target)
   }
 
   /** Raw events schema (pre-normalization) for streaming readers. */

@@ -24,9 +24,10 @@ import org.apache.spark.sql.types.StructType
  * keep predicate (its key-range skip). The footer is read once, and the
  * decoder is handed a footer that lists only the kept row groups, so skipped
  * groups cost no page IO. Spark's `VectorizedParquetRecordReader` does the
- * page decoding straight into `ColumnarBatch`es — ~10× less per-row overhead
- * than the parquet example `Group` API the row path uses, and the batches
- * feed whole-stage codegen without a row pivot.
+ * page decoding straight into `ColumnarBatch`es, which feed whole-stage
+ * codegen without a row pivot. It is the store's only decoder: an empty
+ * `required` (a count-only scan) yields batches that carry only row counts,
+ * and the grouped-aggregate reader walks batch rows.
  *
  * Every open reads [[HadoopConf.shared]] through a per-reader copy that
  * carries the read-support keys; no open loads a configuration.

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import graft.model.CellTable
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -75,15 +77,26 @@ class CellStoreSourceSpec extends AnyFunSuite with SparkTestBase {
     assert(filtered.count() == cells.filter(col("rowKey") >= lit(key(100L))).count())
   }
 
-  test("scan is vectorized: batches decode columnar, count-only scans fall back") {
+  test("scan is vectorized: batches decode columnar, count-only scans too") {
     val plan = store.select("rowKey", "ts").queryExecution.executedPlan.toString
     assert(plan.contains("ColumnarToRow"), s"expected a columnar scan in:\n$plan")
     // values survive the vectorized decode (binary + string + long columns)
     val row = store.filter(col("rowKey") === lit(key(7L)))
       .select(col("qualifier").cast("string"), col("ts")).collect()
     assert(row.length == 4 && row.forall(_.getLong(1) == CellTable.BaseTs))
-    // count-only scan (no columns) still answers through the row path
-    assert(store.count() == CellTable.fromTable(spark, sf001, "customer").count())
+    // a pinned file subset declines the footer aggregate, so its count()
+    // reaches the scan with no columns and reads zero-column batches
+    val files = new java.io.File(storePath).listFiles().map(_.getName)
+      .filter(_.endsWith(".parquet")).sorted.take(3)
+    val pinned = spark.read.format("cellstore").option("files", files.mkString(","))
+      .load(storePath).groupBy().count()
+    val expected = files.map(f => spark.read.parquet(s"$storePath/$f").count()).sum
+    assert(expected > 0 && pinned.collect().head.getLong(0) == expected)
+    // the adaptive plan inserts its columnar transitions per stage: read the
+    // final plan
+    val pinnedPlan = pinned.queryExecution.executedPlan.toString
+    assert(pinnedPlan.contains("CellStoreScan") && pinnedPlan.contains("ColumnarToRow"),
+      s"expected a columnar count-only scan in:\n$pinnedPlan")
   }
 
   test("a large region file splits into row-group-aligned chunk partitions") {
@@ -293,6 +306,49 @@ class CellStoreSourceSpec extends AnyFunSuite with SparkTestBase {
     assert(filtered.count() ==
       spark.read.parquet(storePath).filter(col("rowKey") >= lit(key(100L)))
         .select("rowKey").distinct().count())
+  }
+
+  test("grouped pushdown equals the plain read across batch boundaries") {
+    // one region file of 6,000 cells, decoded as a 4096-row batch and a
+    // 1904-row one. Without dictionary encoding a decoded string is a view
+    // into a vector the next batch overwrites, so each case keeps a string
+    // from the first batch whose bytes the second batch replaces: the
+    // family run that starts at row 400 and crosses the boundary (row 400
+    // of the second batch is another family), and min(family) = fam_a,
+    // which only the first batch holds.
+    val dir = java.nio.file.Files.createTempDirectory("cellstore_batches").toString
+    val k = CellTable.keyToLong(col("rowKey"))
+    CellTable.fromTable(spark, sf01, "customer")
+      .withColumn("family",
+        when(k < 100L, "fam_a").when(k < 1100L, "fam_m").otherwise("fam_q"))
+      .coalesce(1).sortWithinPartitions("rowKey", "family", "qualifier", "ts")
+      .write.mode("overwrite").option("parquet.enable.dictionary", "false").parquet(dir)
+    val file = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
+    assert(file.length == 1)
+    val footer = graft.sources.HadoopConf.openParquet(
+      new org.apache.hadoop.fs.Path(file.head.getPath))
+    try {
+      val blocks = footer.getRowGroups.asScala
+      assert(blocks.map(_.getRowCount).sum == 6000)
+      assert(blocks.forall(_.getColumns.asScala.forall(!_.hasDictionaryPage)),
+        "test setup needs plain-encoded strings")
+    } finally footer.close()
+    def both(f: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) = {
+      val pushed = f(spark.read.format("cellstore").load(dir))
+      val plan = pushed.queryExecution.executedPlan.toString
+      assert(plan.contains("CellStoreGroupByScan"), s"expected pushed group-by in:\n$plan")
+      (pushed, f(spark.read.parquet(dir)))
+    }
+    val cases = Seq(
+      both(_.groupBy("family").agg(count(lit(1)).as("n"), min(col("ts")).as("ts"))),
+      both(_.groupBy("cellType").agg(count(lit(1)).as("n"),
+        min(col("family")).as("lo"), max(col("family")).as("hi"))),
+      both(_.groupBy("cellType", "family").agg(count(lit(1)).as("n"),
+        min(col("rowKey")).as("k"))))
+    cases.foreach { case (pushed, plain) =>
+      assert(pushed.count() == plain.count())
+      assert(pushed.exceptAll(plain).isEmpty && plain.exceptAll(pushed).isEmpty)
+    }
   }
 
   test("rowKey blooms: in-range absent GET skips every file; present keys never miss") {

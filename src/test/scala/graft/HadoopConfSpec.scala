@@ -1,6 +1,5 @@
 package graft
 
-import java.util.concurrent.TimeUnit
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.SparkSession
@@ -17,16 +16,7 @@ class HadoopConfSpec extends AnyFunSuite with SparkTestBase {
   test("cell-store GETs and an 8-region store write load no Hadoop configuration") {
     // the probe installs its class loader before any Spark or Hadoop class
     // loads a configuration, so it runs in a second JVM
-    val javaBin = new java.io.File(new java.io.File(
-      sys.props("java.home"), "bin"), "java").getAbsolutePath
-    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments.toArray(Array.empty[String])
-      .filterNot(_.startsWith("-Xmx")).toSeq
-    val cmd = Seq(javaBin) ++ jvmArgs ++
-      Seq("-Xmx1g", "-cp", sys.props("java.class.path"), "graft.HadoopConfProbe", sf001)
-    val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
-    val out = scala.io.Source.fromInputStream(p.getInputStream).mkString
-    assert(p.waitFor(300, TimeUnit.SECONDS), "probe JVM hung")
+    val out = ChildJvm.run("graft.HadoopConfProbe", Seq(sf001), timeoutS = 300)
     val last = out.linesIterator.filter(_.startsWith("conf loads ")).toSeq.lastOption
     assert(last.contains("conf loads gets=0 write=0"), s"probe output: $out")
   }

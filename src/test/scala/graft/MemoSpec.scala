@@ -1,6 +1,6 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit, TimeoutException}
+import java.util.concurrent.{CountDownLatch, TimeoutException}
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.SparkSession
@@ -62,16 +62,7 @@ class MemoSpec extends AnyFunSuite {
 
   test("a DataFrame built under a stopped session is rebuilt under the new one") {
     // stopping a SparkContext is JVM-wide, so this runs in a second JVM
-    val javaBin = new java.io.File(new java.io.File(
-      sys.props("java.home"), "bin"), "java").getAbsolutePath
-    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments.toArray(Array.empty[String])
-      .filterNot(_.startsWith("-Xmx")).toSeq
-    val cmd = Seq(javaBin) ++ jvmArgs ++
-      Seq("-Xmx1g", "-cp", sys.props("java.class.path"), "graft.MemoFramesProbe")
-    val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
-    val out = scala.io.Source.fromInputStream(p.getInputStream).mkString
-    assert(p.waitFor(120, TimeUnit.SECONDS), "probe JVM hung")
+    val out = ChildJvm.run("graft.MemoFramesProbe", Nil, timeoutS = 120)
     val last = out.linesIterator.filter(_.startsWith("memo ")).toSeq.lastOption
     assert(last.contains("memo builds=2 rows=3 rebuiltUnderNew=true"),
       s"probe output: $out")
