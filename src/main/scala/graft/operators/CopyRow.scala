@@ -11,9 +11,12 @@ import org.apache.spark.sql.functions._
  * destination writer.
  *
  * Spark-first shape: `filter(rowKey = k) → withColumn(ts)` — a two-node
- * logical plan. The point filter on `BinaryType` is pushed into the Parquet
- * scan (min/max row-group pruning); at 100 TB against an HBase DSv2 source it
- * becomes a single-region GET. The timestamp rewrite (T1) is one projection;
+ * logical plan. On a cell store the point filter is pushed into the scan:
+ * bloom, region and row-group pruning leave the key's row groups, and when
+ * those are small the source reads them on the driver as a DSv2 `LocalScan`
+ * ([[graft.sources.CellStoreLocalScan]]), so the read side is one GET with
+ * no Spark job of its own, like the reference's single `table.get`
+ * (`CopyRow.java:109-111`). The timestamp rewrite (T1) is one projection;
  * cell immutability is native so the reference's `DEEP_COPY` has no analogue.
  */
 object CopyRow {

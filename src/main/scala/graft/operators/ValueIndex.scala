@@ -68,8 +68,12 @@ object ValueIndex {
   def candidateJoin(spark: SparkSession, indexPath: String, basePath: String,
       value: Array[Byte]): DataFrame = {
     val keyExpr = CellTable.bigEndianKey(xxhash64(lit(value)))
+    // the family conjunct holds for every index cell, but it stays a
+    // Filter over the probe: the key GET is answered inside the scan and
+    // leaves none, and Spark inserts the dynamic pruning that turns the
+    // base join into GETs only below a join side with a selective Filter
     val candidates = spark.read.format("cellstore").load(indexPath)
-      .filter(col("rowKey") === keyExpr)
+      .filter(col("rowKey") === keyExpr && col("family") === Family)
       .select(col("value").as("rowKey")).distinct()
     // graft.noRewrite: this base read IS the probe — the rewrite rule
     // must never re-splice a probe into it (a direct lookup()'s value

@@ -35,8 +35,10 @@ import graft.sources.CellStoreScan
  *
  * Matching is conservative, as [[RollupRewrite]]: the filter must sit
  * DIRECTLY over a plain [[CellStoreScan]] relation (post-pushdown shape
- * — this source returns every filter as a residual, so the equality is
- * always still present in the Filter), the scan's path must be
+ * — this source returns every value predicate as a residual, so the
+ * equality is always still present in the Filter; a small key-pinned read
+ * plans a `CellStoreLocalScan` instead, which a point GET answers more
+ * cheaply than the index would), the scan's path must be
  * registered, and one conjunct must be `value = <binary literal>`.
  * Output attributes keep their exprIds, so downstream operators bind
  * unchanged. `spark.graft.valueindex.enabled=false` is the kill switch.

@@ -31,7 +31,8 @@ import org.apache.hadoop.fs.Path
  *    footers are read for range pruning next — a GET then reads about one
  *    footer per hit instead of one per region. A file with no sidecar is
  *    "may contain" — blooms are pure IO elision, never a correctness
- *    dependency, and the residual filter re-checks every row anyway. A
+ *    dependency, and the residual filter (or the local scan's key check)
+ *    re-checks every row anyway. A
  *    racing truncate/append at worst leaves an orphan sidecar (ignored:
  *    lookups go data-file → sidecar, never the reverse) or a missing one
  *    (degrades to "may contain").

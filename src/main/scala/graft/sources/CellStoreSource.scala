@@ -28,10 +28,10 @@ import org.apache.spark.unsafe.types.UTF8String
  *    equality/range predicates are pushed into the scan
  *    (`SupportsPushDownFilters`); the planner reads each region's parquet
  *    footer and drops regions whose [min,max] key interval misses the
- *    requested range — a point GET plans exactly ONE partition no matter
- *    how many regions the table has. (At 100 TB the footer sweep becomes a
- *    cached region index, exactly like HBase's META table; the pruning
- *    contract is unchanged.)
+ *    requested range — a point GET plans exactly ONE region chunk no
+ *    matter how many regions the table has. (At 100 TB the footer sweep
+ *    becomes a cached region index, exactly like HBase's META table; the
+ *    pruning contract is unchanged.)
  *  - **Row-group skipping.** Inside a selected region the reader consults
  *    per-row-group statistics and skips groups outside the key range —
  *    the HFile-block-index analogue. The same statistics sweep prunes on
@@ -52,8 +52,18 @@ import org.apache.spark.unsafe.types.UTF8String
  *    configuration per JVM ([[HadoopConf.shared]]), as the reference builds
  *    its configuration once per tool run (`CopyRow.java:101`): a GET or a
  *    store write loads none.
- *  - Pushed filters are also kept as Spark-side residuals, so pruning is a
- *    pure optimization and can never affect correctness.
+ *  - **Point GETs run no job.** When the pushed filters pin `rowKey` to a
+ *    key set and the pruned row groups hold at most
+ *    [[CellStoreLocalScan.MaxRows]] cells by their footer row counts, the
+ *    scan is a DSv2 `LocalScan` that decodes those row groups on the driver
+ *    and keeps the matching cells: Spark plans it as a `LocalTableScan`, and
+ *    its collect schedules nothing, as the reference's CopyRow reads a row
+ *    with one `table.get` RPC (`CopyRow.java:109-111`). The bound counts
+ *    rows, not bytes, because that is the driver's work: the reader streams
+ *    decoder batches and keeps only the matches. The key-set conjuncts are
+ *    then answered by the scan and leave Spark's residuals.
+ *  - Every other pushed filter is also kept as a Spark-side residual, so
+ *    pruning is a pure optimization and can never affect correctness.
  *
  * Binary key ordering is unsigned-lexicographic everywhere (HBase
  * `Bytes.compareTo` == parquet BINARY stats ordering == Spark BinaryType
@@ -310,7 +320,7 @@ object CellStoreSource {
     case LessThan(`name`, v: Array[Byte])           => KeyRange(r.lower, minUpper(r.upper, v, incl = false))
     case LessThanOrEqual(`name`, v: Array[Byte])    => KeyRange(r.lower, minUpper(r.upper, v, incl = true))
     // an IN tightens to its [min, max] envelope (a correct superset; exact
-    // membership is re-checked by the residual filter)
+    // membership is re-checked by the residual filter or the local scan)
     case In(`name`, vs) if vs.nonEmpty && vs.forall(_.isInstanceOf[Array[Byte]]) =>
       val bs = vs.toSeq.map(_.asInstanceOf[Array[Byte]])
       val lo = bs.min(Ordering.fromLessThan[Array[Byte]](cmp(_, _) < 0))
@@ -334,6 +344,14 @@ object CellStoreSource {
     val sets = filters.flatMap(setsOf)
     if (sets.isEmpty) None
     else Some(sets.reduce((a, b) => a.filter(x => b.exists(y => cmp(x, y) == 0))))
+  }
+
+  /** Is this filter one of the key-set conjuncts [[exactKeys]] reads off
+    * the top level of a conjunction? A local scan answers these itself. */
+  private[sources] def pinsKeys(f: Filter): Boolean = f match {
+    case EqualTo("rowKey", _: Array[Byte]) => true
+    case In("rowKey", vs) => vs.nonEmpty && vs.forall(_.isInstanceOf[Array[Byte]])
+    case _ => false
   }
 
   private def maxLower(cur: Option[(Array[Byte], Boolean)], v: Array[Byte],
@@ -544,6 +562,13 @@ class CellStoreScanBuilder(path: String, buckets: Option[Int],
   private var aggPushed: Option[Aggregation] = None
   private var groupPushed: Option[(Seq[String], Seq[CellAggSpec])] = None
   private var limit: Option[Int] = None
+  /** The planning pass of a key-pinned read: run once in [[pushFilters]],
+    * where its row count picks the path, and handed to the scan [[build]]
+    * returns, so a GET lists, probes blooms and reads footers once. */
+  private var planned: Option[CellStorePlan] = None
+
+  private def local: Boolean =
+    planned.exists(_.keptRows <= CellStoreLocalScan.MaxRows)
 
   /** PARTIAL limit pushdown (isPartiallyPushed stays true): each partition
     * reader stops decoding once it has produced `limit` rows — a limit(1)
@@ -551,13 +576,17 @@ class CellStoreScanBuilder(path: String, buckets: Option[Int],
     * and Spark still applies the global limit on top. */
   override def pushLimit(n: Int): Boolean = { limit = Some(n); true }
 
-  /** Accept rowKey range predicates for pruning but return EVERY filter as
-    * a residual — Spark re-applies them post-scan, so pruning is purely an
+  /** Accept rowKey range predicates for pruning and return them as
+    * residuals — Spark re-applies them post-scan, so pruning is purely an
     * optimization (the reference's server-side Filter semantics with a
-    * client-side safety net). */
+    * client-side safety net). The one exception is a read the local scan
+    * answers: it keeps exactly the pinned keys, so the key-set conjuncts
+    * leave the residuals and Spark plans no operator over the scan. */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     pushed = filters.filter(CellStoreSource.prunable)
-    filters
+    planned = CellStoreSource.exactKeys(pushed.toSeq).map(_ =>
+      CellStoreScan.plan(path, buckets, pushed.toSeq, Nil, splitBytes, fileSubset))
+    if (local) filters.filterNot(CellStoreSource.pinsKeys) else filters
   }
   override def pushedFilters(): Array[Filter] = pushed
   override def pruneColumns(requiredSchema: StructType): Unit =
@@ -566,9 +595,10 @@ class CellStoreScanBuilder(path: String, buckets: Option[Int],
   // Aggregate pushdown — the HBase RowCounter analogue at ZERO data IO:
   // whole-store COUNT(*) / MIN(rowKey) / MAX(rowKey) are answered entirely
   // from parquet footer metadata (row counts + key statistics). Only safe
-  // when no filters are in play: this source keeps every pushed filter as a
-  // Spark-side residual, so Spark only offers aggregates on filterless
-  // scans — the guard below is belt and braces.
+  // when no filters are in play. Spark offers aggregates whenever no
+  // residual is left over the scan, which includes a GET the local scan
+  // answers (its key-set conjuncts leave the residuals), so the
+  // `pushed.isEmpty` guard below is what keeps a filtered count exact.
   private def isRowKey(e: Expression): Boolean = e match {
     case ref: NamedReference => ref.fieldNames.sameElements(Array("rowKey"))
     case _                   => false
@@ -642,9 +672,10 @@ class CellStoreScanBuilder(path: String, buckets: Option[Int],
     case (Some(agg), _)       => new CellStoreAggScan(path, agg)
     case (None, Some((g, a))) =>
       new CellStoreGroupByScan(path, buckets, g, a, splitBytes, fileSubset)
+    case _ if local => new CellStoreLocalScan(path, planned.get, pushed, required)
     case _ =>
       new CellStoreScan(path, buckets, pushed, required, splitBytes, limit,
-        fileSubset, noRewrite)
+        fileSubset, noRewrite, planned.map(_.partitions))
   }
 }
 
@@ -900,7 +931,8 @@ class CellStoreScan(val path: String, buckets: Option[Int],
                     splitBytes: Long = 128L << 20,
                     limit: Option[Int] = None,
                     fileSubset: Option[Set[String]] = None,
-                    val noRewrite: Boolean = false)
+                    val noRewrite: Boolean = false,
+                    preplanned: Option[Array[InputPartition]] = None)
     extends Scan with Batch
     with SupportsReportPartitioning with SupportsReportOrdering
     with SupportsRuntimeFiltering {
@@ -935,98 +967,18 @@ class CellStoreScan(val path: String, buckets: Option[Int],
     cached = null
   }
 
-  private def allFilters: Seq[Filter] = pushed.toSeq ++ runtime.toSeq
-
   /** Planned per filter state: `outputPartitioning`/`outputOrdering` must
-    * describe exactly the partitions `planInputPartitions` returns. */
-  @volatile private var cached: Array[InputPartition] = _
+    * describe exactly the partitions `planInputPartitions` returns. A
+    * key-pinned read arrives with the builder's planning pass. */
+  @volatile private var cached: Array[InputPartition] = preplanned.orNull
   private def partitions: Array[InputPartition] = {
     val cur = cached
-    if (cur != null) cur else { val p = plan(); cached = p; p }
-  }
-
-  private def plan(): Array[InputPartition] = {
-    val bounds = CellStoreSource.boundsSetOf(allFilters)
-    val dir = new Path(path)
-    val fs = HadoopConf.fs(dir)
-    val files = fs.listStatus(dir)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet") && s.getLen > 0)
-      // pinned file subset (`files` option): scan exactly these committed
-      // files — what an offset-aware compaction pass reads, so concurrent
-      // appends landing mid-pass are neither rewritten nor deleted
-      .filter(s => fileSubset.forall(_.contains(s.getPath.getName)))
-      .sortBy(_.getPath.getName)
-    // Bloom elision for point lookups (HFile ROW bloom analogue): a pushed/
-    // runtime GET/IN key set skips files whose bloom proves every key
-    // absent — the in-range negative GET that min/max stats cannot serve.
-    // Only a GET/IN reads sidecars, one 16 KiB file per candidate: the files
-    // of the keys' buckets on a salted store; on a range store EVERY file's
-    // sidecar, BEFORE its footer — footers are then read only for bloom
-    // survivors, about one per hit instead of one per region. Planning never
-    // parses store-wide bloom state. A file with no sidecar is "may
-    // contain"; the residual filter re-checks rows, so this is pure IO
-    // elision.
-    val getKeys = CellStoreSource.exactKeys(allFilters)
-    def mayHave(name: String): Boolean = getKeys match {
-      case Some(ks) =>
-        CellBloom.readOne(dir, name)
-          .forall(b => ks.exists(CellBloom.mayContain(b, _)))
-      case None => true
-    }
-    buckets match {
-      case Some(n) =>
-        // Salted layout: one partition per salt bucket. Keys pinned by the
-        // PUSHED filters (GET / IN) narrow which buckets are planned at all;
-        // otherwise ALL buckets are emitted — including empty ones — so two
-        // same-N stores always report identical partition values and stay
-        // SPJ-compatible. RUNTIME keys must not change the partition-value
-        // set (Spark checks), so they only empty the file lists of buckets
-        // no runtime key hashes into.
-        val byBucket: Map[Int, Seq[String]] = files.toSeq
-          .flatMap(st => CellStoreSource.bucketIdOf(st.getPath.getName)
-            .map(b => b -> st.getPath.toString))
-          .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-        val planned: Seq[Int] =
-          CellStoreSource.exactKeys(pushed.toSeq) match {
-            case Some(ks) => ks.map(CellBucketFunction.bucketOf(_, n)).distinct.sorted
-            case None     => 0 until n
-          }
-        val runtimeBuckets: Option[Set[Int]] =
-          CellStoreSource.exactKeys(runtime.toSeq)
-            .map(_.map(CellBucketFunction.bucketOf(_, n)).toSet)
-        planned.map { b =>
-          val fsOf =
-            if (runtimeBuckets.forall(_.contains(b)))
-              byBucket.getOrElse(b, Nil)
-                .filter(p => mayHave(new Path(p).getName))
-            else Nil
-          CellStoreBucketPartition(b, fsOf): InputPartition
-        }.toArray
-      case None =>
-        // Range-region layout: surviving region files split into row-group-
-        // aligned chunks of ~splitBytes (the maxPartitionBytes analogue — a
-        // 10 GB region file must parallelize across tasks, not become one).
-        // Chunks whose every row group misses the key range are dropped;
-        // the reader re-checks per-group stats inside a kept chunk.
-        // Footers are read driver-side; a 100 TB deployment swaps this for a
-        // cached region index with the same contract.
-        files.filter(st => mayHave(st.getPath.getName)).flatMap { st =>
-          val blocks = CellStoreSource.footerBlocks(st.getPath)
-          val chunks = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Long, Boolean)]
-          blocks.foreach { b =>
-            val hit = bounds.keep(b)
-            chunks.lastOption match {
-              case Some((lo, hi, bytes, anyHit))
-                  if hi == b.index && bytes + b.compressedBytes <= splitBytes =>
-                chunks(chunks.length - 1) = (lo, b.index + 1, bytes + b.compressedBytes, anyHit || hit)
-              case _ =>
-                chunks += ((b.index, b.index + 1, b.compressedBytes, hit))
-            }
-          }
-          chunks.collect { case (lo, hi, _, true) =>
-            CellStorePartition(CellChunk(st.getPath.toString, lo, hi)): InputPartition
-          }
-        }
+    if (cur != null) cur
+    else {
+      val p = CellStoreScan.plan(path, buckets, pushed.toSeq, runtime.toSeq, splitBytes,
+        fileSubset).partitions
+      cached = p
+      p
     }
   }
 
@@ -1070,6 +1022,169 @@ class CellStoreScan(val path: String, buckets: Option[Int],
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     new CellStoreMicroBatchStream(path, required, pushed)
+}
+
+/** One planning pass over a store: its scan partitions, and the footer row
+  * count of the row groups those partitions keep. */
+final case class CellStorePlan(partitions: Array[InputPartition], keptRows: Long)
+
+object CellStoreScan {
+  /** List the store, drop files by bloom and row-group chunks by footer
+    * statistics, for the `pushed` (planning-time) and `runtime` filters.
+    * `keptRows` is exact on a range store, whose footers planning reads
+    * anyway; a salted store reads its candidate files' footers for it only
+    * when `pushed` pins keys, and reports 0 otherwise. */
+  private[sources] def plan(path: String, buckets: Option[Int], pushed: Seq[Filter],
+      runtime: Seq[Filter], splitBytes: Long,
+      fileSubset: Option[Set[String]]): CellStorePlan = {
+    val bounds = CellStoreSource.boundsSetOf(pushed ++ runtime)
+    var rows = 0L
+    val dir = new Path(path)
+    val fs = HadoopConf.fs(dir)
+    val files = fs.listStatus(dir)
+      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet") && s.getLen > 0)
+      // pinned file subset (`files` option): scan exactly these committed
+      // files — what an offset-aware compaction pass reads, so concurrent
+      // appends landing mid-pass are neither rewritten nor deleted
+      .filter(s => fileSubset.forall(_.contains(s.getPath.getName)))
+      .sortBy(_.getPath.getName)
+    // Bloom elision for point lookups (HFile ROW bloom analogue): a pushed/
+    // runtime GET/IN key set skips files whose bloom proves every key
+    // absent — the in-range negative GET that min/max stats cannot serve.
+    // Only a GET/IN reads sidecars, one 16 KiB file per candidate: the files
+    // of the keys' buckets on a salted store; on a range store EVERY file's
+    // sidecar, BEFORE its footer — footers are then read only for bloom
+    // survivors, about one per hit instead of one per region. Planning never
+    // parses store-wide bloom state. A file with no sidecar is "may
+    // contain"; the residual filter (or the local scan's key check)
+    // re-checks rows, so this is pure IO elision.
+    val getKeys = CellStoreSource.exactKeys(pushed ++ runtime)
+    def mayHave(name: String): Boolean = getKeys match {
+      case Some(ks) =>
+        CellBloom.readOne(dir, name)
+          .forall(b => ks.exists(CellBloom.mayContain(b, _)))
+      case None => true
+    }
+    buckets match {
+      case Some(n) =>
+        // Salted layout: one partition per salt bucket. Keys pinned by the
+        // PUSHED filters (GET / IN) narrow which buckets are planned at all;
+        // otherwise ALL buckets are emitted — including empty ones — so two
+        // same-N stores always report identical partition values and stay
+        // SPJ-compatible. RUNTIME keys must not change the partition-value
+        // set (Spark checks), so they only empty the file lists of buckets
+        // no runtime key hashes into.
+        val byBucket: Map[Int, Seq[String]] = files.toSeq
+          .flatMap(st => CellStoreSource.bucketIdOf(st.getPath.getName)
+            .map(b => b -> st.getPath.toString))
+          .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+        val pinned = CellStoreSource.exactKeys(pushed)
+        val planned: Seq[Int] = pinned match {
+          case Some(ks) => ks.map(CellBucketFunction.bucketOf(_, n)).distinct.sorted
+          case None     => 0 until n
+        }
+        val runtimeBuckets: Option[Set[Int]] =
+          CellStoreSource.exactKeys(runtime)
+            .map(_.map(CellBucketFunction.bucketOf(_, n)).toSet)
+        val parts = planned.map { b =>
+          val fsOf =
+            if (runtimeBuckets.forall(_.contains(b)))
+              byBucket.getOrElse(b, Nil)
+                .filter(p => mayHave(new Path(p).getName))
+            else Nil
+          // bucket partitions read whole files: only a key-pinned read,
+          // which may take the local path, needs their footers here
+          if (pinned.isDefined) fsOf.foreach { f =>
+            rows += CellStoreSource.footerBlocks(new Path(f)).filter(bounds.keep).map(_.rows).sum
+          }
+          CellStoreBucketPartition(b, fsOf): InputPartition
+        }
+        CellStorePlan(parts.toArray, rows)
+      case None =>
+        // Range-region layout: surviving region files split into row-group-
+        // aligned chunks of ~splitBytes (the maxPartitionBytes analogue — a
+        // 10 GB region file must parallelize across tasks, not become one).
+        // Chunks whose every row group misses the key range are dropped;
+        // the reader re-checks per-group stats inside a kept chunk.
+        // Footers are read driver-side; a 100 TB deployment swaps this for a
+        // cached region index with the same contract.
+        val parts = files.filter(st => mayHave(st.getPath.getName)).flatMap { st =>
+          val blocks = CellStoreSource.footerBlocks(st.getPath)
+          val chunks = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Long, Boolean)]
+          blocks.foreach { b =>
+            val hit = bounds.keep(b)
+            if (hit) rows += b.rows
+            chunks.lastOption match {
+              case Some((lo, hi, bytes, anyHit))
+                  if hi == b.index && bytes + b.compressedBytes <= splitBytes =>
+                chunks(chunks.length - 1) = (lo, b.index + 1, bytes + b.compressedBytes, anyHit || hit)
+              case _ =>
+                chunks += ((b.index, b.index + 1, b.compressedBytes, hit))
+            }
+          }
+          chunks.collect { case (lo, hi, _, true) =>
+            CellStorePartition(CellChunk(st.getPath.toString, lo, hi)): InputPartition
+          }
+        }
+        CellStorePlan(parts, rows)
+    }
+  }
+}
+
+/**
+ * A key-pinned read answered on the driver — the cell store's `table.get`
+ * (`CopyRow.java:109-111`). The builder takes it when the pushed filters pin
+ * `rowKey` to a key set and the row groups planning keeps hold at most
+ * [[CellStoreLocalScan.MaxRows]] cells; Spark plans it as a
+ * `LocalTableScan`, so collecting a bare GET schedules no job. `rows()`
+ * decodes the planned chunks through the batch path's
+ * [[CellStoreColumnarReader]] (same row-group skip, same version and
+ * delete-marker cells: a scan returns cells, never resolved rows), keeps
+ * the cells whose key is in the set, and copies them out in the pruned
+ * schema. `rowKey` is decoded for the key check even when pruned away.
+ */
+class CellStoreLocalScan(path: String, val plan: CellStorePlan,
+                         pushed: Array[Filter], required: StructType)
+    extends LocalScan {
+  import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
+
+  private val keys = CellStoreSource.exactKeys(pushed.toSeq).get
+
+  override def readSchema(): StructType = required
+  override def description(): String =
+    s"CellStoreLocalScan path=$path, pushed=${pushed.mkString("[", ",", "]")}, " +
+      s"chunks=${plan.partitions.length}, rows=${plan.keptRows}, " +
+      s"columns=${required.fieldNames.mkString("[", ",", "]")}"
+
+  override def rows(): Array[InternalRow] = {
+    val decoded = StructType(CellStoreSource.Schema.filter(f =>
+      f.name == "rowKey" || required.fieldNames.contains(f.name)))
+    val keyIdx = decoded.fieldIndex("rowKey")
+    val wanted = keys.map(java.nio.ByteBuffer.wrap).toSet
+    val copyOut = UnsafeProjection.create(required.fields.toSeq.map(f =>
+      BoundReference(decoded.fieldIndex(f.name), f.dataType, f.nullable)))
+    val bounds = CellStoreSource.boundsSetOf(pushed.toSeq)
+    val out = Array.newBuilder[InternalRow]
+    plan.partitions.foreach { p =>
+      val reader = new CellStoreColumnarReader(CellStoreReaderFactory.chunksOf(p), decoded, bounds)
+      try while (reader.next()) {
+        val batch = reader.get()
+        val rowKeys = batch.column(keyIdx)
+        var i = 0
+        while (i < batch.numRows()) {
+          if (wanted.contains(java.nio.ByteBuffer.wrap(rowKeys.getBinary(i))))
+            out += copyOut(batch.getRow(i)).copy()
+          i += 1
+        }
+      } finally reader.close()
+    }
+    out.result()
+  }
+}
+
+object CellStoreLocalScan {
+  /** Most cells a driver-side read decodes: four decoder batches. */
+  val MaxRows: Long = 16384L
 }
 
 /**

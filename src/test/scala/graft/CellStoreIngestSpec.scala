@@ -47,7 +47,7 @@ class CellStoreIngestSpec extends AnyFunSuite with SparkTestBase {
     assert(new java.io.File(s"$dir/_cellstore_meta.json").exists())
     val get = store.filter(col("rowKey") ===
       lit(java.nio.ByteBuffer.allocate(8).putLong(2L).array()))
-    assert(get.rdd.getNumPartitions == 1)
+    assert(plannedChunks(get) == 1)
     val got = get.filter(col("qualifier").cast("string") === "text")
       .select(col("value").cast("string")).collect()
     assert(got.map(_.getString(0)).toSeq == Seq("bbb"))
@@ -122,7 +122,7 @@ class CellStoreIngestSpec extends AnyFunSuite with SparkTestBase {
     // exactly one closed session landed: user 7, [0, 10] minutes, 2 events
     val get = store.filter(col("rowKey") ===
       lit(java.nio.ByteBuffer.allocate(8).putLong(7L).array()))
-    assert(get.rdd.getNumPartitions == 1) // salted GET pruning on derived data
+    assert(plannedChunks(get) == 1) // salted GET pruning on derived data
     val byQual = get.collect().map(r =>
       new String(r.getAs[Array[Byte]]("qualifier")) ->
         new String(r.getAs[Array[Byte]]("value"))).toMap

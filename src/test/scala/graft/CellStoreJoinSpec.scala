@@ -72,7 +72,7 @@ class CellStoreJoinSpec extends AnyFunSuite with SparkTestBase {
     def key(k: Long): Array[Byte] =
       java.nio.ByteBuffer.allocate(8).putLong(k).array()
     val get = spark.table(s"$cat.cust").filter(col("rowKey") === lit(key(42L)))
-    assert(get.rdd.getNumPartitions == 1)
+    assert(plannedChunks(get) == 1)
     assert(get.count() == 4) // one cell per non-key customer column
   }
 

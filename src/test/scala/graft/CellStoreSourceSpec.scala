@@ -3,6 +3,9 @@ package graft
 import scala.jdk.CollectionConverters._
 
 import graft.model.CellTable
+import graft.sources.{CellStoreLocalScan, CellStoreScan}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -131,13 +134,13 @@ class CellStoreSourceSpec extends AnyFunSuite with SparkTestBase {
     assert(split.exceptAll(whole).isEmpty && whole.exceptAll(split).isEmpty)
     val get = split.filter(col("rowKey") === lit(key(42L)))
     assert(get.count() == 4)
-    assert(get.rdd.getNumPartitions < split.rdd.getNumPartitions,
+    assert(plannedChunks(get) < plannedChunks(split),
       "key range should prune chunks")
   }
 
   test("point GET prunes to a single region partition") {
     val get = store.filter(col("rowKey") === lit(key(42L)))
-    assert(get.rdd.getNumPartitions == 1)
+    assert(plannedChunks(get) == 1)
     val rows = get.collect()
     assert(rows.length == 4) // one cell per non-key customer column
     assert(rows.forall(_.getAs[Array[Byte]]("rowKey").sameElements(key(42L))))
@@ -178,7 +181,7 @@ class CellStoreSourceSpec extends AnyFunSuite with SparkTestBase {
 
   test("impossible range plans zero partitions") {
     val none = store.filter(col("rowKey") === lit(Array.fill[Byte](8)(-1)))
-    assert(none.rdd.getNumPartitions == 0)
+    assert(plannedChunks(none) == 0)
     assert(none.count() == 0)
   }
 
@@ -188,9 +191,9 @@ class CellStoreSourceSpec extends AnyFunSuite with SparkTestBase {
     val proj = store.select("rowKey", "ts").filter(col("rowKey") === lit(key(7L)))
     val rows = proj.collect()
     assert(rows.length == 4 && rows.forall(_.getLong(1) == CellTable.BaseTs))
-    // the scan description must reflect the pushdown reaching the source
-    val planStr = proj.queryExecution.executedPlan.toString
-    assert(planStr.contains("CellStoreScan"), planStr)
+    // the pruned columns must reach the source
+    assert(cellStoreScan(proj).readSchema().fieldNames.toSeq == Seq("rowKey", "ts"),
+      cellStoreScan(proj).description())
   }
 
   test("DSv2 write: planner-enforced region layout round-trips and prunes") {
@@ -206,7 +209,7 @@ class CellStoreSourceSpec extends AnyFunSuite with SparkTestBase {
     assert(back.rdd.getNumPartitions == 4)
     // region pruning works on the planner-produced layout too
     val get = back.filter(col("rowKey") === lit(key(42L)))
-    assert(get.rdd.getNumPartitions == 1)
+    assert(plannedChunks(get) == 1)
     assert(get.count() == 4)
 
     // overwrite replaces the store content
@@ -370,7 +373,7 @@ class CellStoreSourceSpec extends AnyFunSuite with SparkTestBase {
     val present = st.filter(col("rowKey") === lit(key(42)))
     assert(present.count() > 0, "no false negatives ever")
     val absent = st.filter(col("rowKey") === lit(key(43)))
-    assert(absent.rdd.getNumPartitions == 0,
+    assert(plannedChunks(absent) == 0,
       "bloom must eliminate every file for an in-range absent key")
     assert(absent.count() == 0)
 
@@ -424,5 +427,127 @@ class CellStoreSourceSpec extends AnyFunSuite with SparkTestBase {
       .collect()
     assert(out.nonEmpty)
     assert(out.forall(r => new String(r.getAs[Array[Byte]]("qualifier")) == "c_acctbal"))
+  }
+
+  /** `get` over the store at `dir` must take the local path and return
+    * exactly the plain parquet read's cells under `cond`. */
+  private def assertLocalEqualsPlain(dir: String, get: DataFrame => DataFrame): Unit = {
+    val local = get(spark.read.format("cellstore").load(dir))
+    val plain = get(spark.read.parquet(dir))
+    assert(cellStoreScan(local).isInstanceOf[CellStoreLocalScan],
+      s"expected the local path in:\n${local.queryExecution.optimizedPlan}")
+    assert(local.count() == plain.count())
+    assert(local.exceptAll(plain).isEmpty && plain.exceptAll(local).isEmpty)
+  }
+
+  test("point GETs run no Spark job, hit or miss") {
+    val gets = Seq(key(42L), key(7L), key(42L) :+ 0.toByte, key(100000L))
+      .map(k => store.filter(col("rowKey") === lit(k)))
+    gets.foreach(g => assert(cellStoreScan(g).isInstanceOf[CellStoreLocalScan]))
+    gets.foreach(_.collect()) // warm
+    val sc = spark.sparkContext
+    val group = "cellstore-local-get"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.add(Option(e.properties.getProperty("spark.job.description")).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "gets")
+    try {
+      val sizes = (0 until 20).map(i => gets(i % gets.size).collect().length)
+      assert(sizes.take(4) == Seq(4, 4, 0, 0))
+      // the listener bus is asynchronous and in order: once a marker job
+      // arrives, every job the GETs started has arrived before it
+      sc.setJobDescription("marker")
+      spark.range(1).collect()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!jobs.contains("marker") && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(jobs.contains("marker"), "listener never saw the marker job")
+      assert(jobs.asScala.toSeq.filter(_ != "marker").isEmpty,
+        s"GETs started ${jobs.size - 1} jobs")
+    } finally {
+      sc.clearJobGroup()
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("local GETs return the plain read's cells in every shape") {
+    def byKey(k: Array[Byte]): DataFrame => DataFrame = _.filter(col("rowKey") === lit(k))
+    // hits, an in-range miss (one byte past a stored key), an out-of-range miss
+    Seq(key(1L), key(42L), key(150L), key(42L) :+ 0.toByte, key(100000L))
+      .foreach(k => assertLocalEqualsPlain(storePath, byKey(k)))
+    // an isin whose keys sit in two regions (this store has no bloom
+    // sidecars, so the regions between them are planned too)
+    val two = store.filter(col("rowKey").isin(key(5L), key(140L)))
+    assert(plannedChunks(two) >= 2)
+    assertLocalEqualsPlain(storePath, _.filter(col("rowKey").isin(key(5L), key(140L))))
+    // a non-key predicate stays a Spark residual over the local scan
+    val residual: DataFrame => DataFrame = _.filter(col("rowKey") === lit(key(42L)) &&
+      col("qualifier").cast("string") === "c_name")
+    assertLocalEqualsPlain(storePath, residual)
+    assert(residual(store).count() == 1)
+    // column pruning: the scan decodes rowKey for its check, returns only
+    // the asked columns
+    val pruned: DataFrame => DataFrame =
+      byKey(key(42L)).andThen(_.select("qualifier", "value"))
+    assertLocalEqualsPlain(storePath, pruned)
+    assert(cellStoreScan(pruned(store)).readSchema().fieldNames.toSeq == Seq("qualifier", "value"))
+    // limit(1) and count(): the footer aggregate is still declined
+    val one = byKey(key(42L))(store).limit(1).collect()
+    assert(one.length == 1 && one.head.getAs[Array[Byte]]("rowKey").sameElements(key(42L)))
+    val cnt = byKey(key(42L))(store).groupBy().count()
+    assert(!cnt.queryExecution.executedPlan.toString.contains("CellStoreAggScan"))
+    assert(cnt.collect().head.getLong(0) == 4L && byKey(key(42L))(store).count() == 4L)
+  }
+
+  test("local GETs see every version and delete marker, on salted and pinned stores") {
+    val base = CellTable.fromTable(spark, sf001, "customer")
+    val k = CellTable.keyToLong(col("rowKey"))
+    val cells = CellTable.withDeleteMarkers(
+      CellTable.withExtraVersions(base, k % 3 === 0, n = 2),
+      k % 5 === 0, lit(CellTable.BaseTs + 1500L))
+    val dir = java.nio.file.Files.createTempDirectory("cellstore_local").toString + "/s"
+    cells.write.format("cellstore").option("numRegions", "4").mode("overwrite").save(dir)
+    val sdir = java.nio.file.Files.createTempDirectory("cellstore_local_salt").toString + "/s"
+    cells.write.format("cellstore").option("buckets", "4").mode("overwrite").save(sdir)
+    // 15 has two extra versions and delete markers, 30 the same, 9 only
+    // versions, 10 only markers, 7 neither
+    for (d <- Seq(dir, sdir); id <- Seq(7L, 9L, 10L, 15L, 30L)) {
+      assertLocalEqualsPlain(d, _.filter(col("rowKey") === lit(key(id))))
+    }
+    assert(spark.read.format("cellstore").load(dir)
+      .filter(col("rowKey") === lit(key(15L))).count() == 4 * 3 + 4)
+    assertLocalEqualsPlain(sdir, _.filter(col("rowKey").isin(key(3L), key(10L), key(44L))))
+    // a pinned file subset: a key outside the pinned files reads nothing
+    val files = new java.io.File(dir).listFiles().map(_.getName)
+      .filter(_.endsWith(".parquet")).sorted.take(2)
+    val pinned = spark.read.format("cellstore").option("files", files.mkString(",")).load(dir)
+    val plainPinned = spark.read.parquet(files.toSeq.map(f => s"$dir/$f"): _*)
+    for (id <- Seq(1L, 15L, 149L)) {
+      val get = pinned.filter(col("rowKey") === lit(key(id)))
+      val plain = plainPinned.filter(col("rowKey") === lit(key(id)))
+      assert(cellStoreScan(get).isInstanceOf[CellStoreLocalScan])
+      assert(get.count() == plain.count())
+      assert(get.exceptAll(plain).isEmpty && plain.exceptAll(get).isEmpty)
+    }
+    assert(pinned.filter(col("rowKey") === lit(key(149L))).count() == 0)
+  }
+
+  test("a key whose cells exceed the local bound plans the batch scan") {
+    val dir = java.nio.file.Files.createTempDirectory("cellstore_wide").toString + "/s"
+    val n = CellStoreLocalScan.MaxRows + 1
+    val wide = spark.range(n).select(
+      lit(key(1L)).as("rowKey"), lit("cf").as("family"),
+      CellTable.bigEndianKey(col("id")).as("qualifier"), lit(CellTable.BaseTs).as("ts"),
+      lit("Put").as("cellType"), col("id").cast("string").cast("binary").as("value"))
+    wide.write.format("cellstore").option("numRegions", "1").mode("overwrite").save(dir)
+    val get = spark.read.format("cellstore").load(dir).filter(col("rowKey") === lit(key(1L)))
+    assert(cellStoreScan(get).isInstanceOf[CellStoreScan],
+      s"expected the batch scan in:\n${get.queryExecution.optimizedPlan}")
+    assert(get.count() == n)
+    assert(get.exceptAll(wide).isEmpty)
   }
 }

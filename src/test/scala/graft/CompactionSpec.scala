@@ -37,7 +37,7 @@ class CompactionSpec extends AnyFunSuite with SparkTestBase {
       new String(r.getAs[Array[Byte]]("value")).endsWith("#v2")))
     // and the rewritten layout still prunes: point GET = 1 partition
     val key42 = java.nio.ByteBuffer.allocate(8).putLong(42L).array()
-    assert(after.filter(col("rowKey") === lit(key42)).rdd.getNumPartitions == 1)
+    assert(plannedChunks(after.filter(col("rowKey") === lit(key42))) == 1)
   }
 
   test("delete markers round-trip the DSv2 store; compaction purges them in place") {
@@ -160,9 +160,8 @@ class CompactionSpec extends AnyFunSuite with SparkTestBase {
     assert(store.count() == base.count())
     // salt layout preserved across the incremental pass
     assert(new java.io.File(s"$dir/_cellstore_meta.json").exists())
-    assert(store.filter(col("rowKey") ===
-      lit(java.nio.ByteBuffer.allocate(8).putLong(1L).array()))
-      .rdd.getNumPartitions == 1)
+    assert(plannedChunks(store.filter(col("rowKey") ===
+      lit(java.nio.ByteBuffer.allocate(8).putLong(1L).array()))) == 1)
     // nothing left to compact → no-op, and no new manifest confusion
     val again = Compaction.compactStoreIncremental(spark, dir, maxVersions = 1)
     assert(again.nonEmpty) // rewrites the (already-minimal) files idempotently
@@ -180,9 +179,8 @@ class CompactionSpec extends AnyFunSuite with SparkTestBase {
     assert(snap.count() == base.count())
     // the snapshot is itself a salted store: manifest copied, GET prunes
     assert(new java.io.File(s"$dest/_cellstore_meta.json").exists())
-    assert(snap.filter(col("rowKey") ===
-      lit(java.nio.ByteBuffer.allocate(8).putLong(3L).array()))
-      .rdd.getNumPartitions == 1)
+    assert(plannedChunks(snap.filter(col("rowKey") ===
+      lit(java.nio.ByteBuffer.allocate(8).putLong(3L).array()))) == 1)
     // the export is point-in-time: later appends do not leak into it
     base.withColumn("ts", col("ts") + 1000L)
       .write.format("cellstore").mode("append").save(dir)
@@ -207,7 +205,7 @@ class CompactionSpec extends AnyFunSuite with SparkTestBase {
     assert(store.count() == base.count()) // one surviving version per cell
     val get = store.filter(col("rowKey") ===
       lit(java.nio.ByteBuffer.allocate(8).putLong(3L).array()))
-    assert(get.rdd.getNumPartitions == 1)
+    assert(plannedChunks(get) == 1)
     assert(get.count() == 2) // one cell per non-key nation column (n_name, n_regionkey)
   }
 }

@@ -65,7 +65,7 @@ class StoreRebalanceSpec extends AnyFunSuite with SparkTestBase {
     val store = spark.read.format("cellstore").load(dir)
     assert(store.count() == cells.count())
     val get = store.filter(col("rowKey") === CellTable.bigEndianKey(lit(42L)))
-    assert(get.rdd.getNumPartitions == 1)
+    assert(plannedChunks(get) == 1)
     assert(get.count() > 0)
   }
 }

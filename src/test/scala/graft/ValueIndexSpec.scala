@@ -31,7 +31,9 @@ class ValueIndexSpec extends AnyFunSuite with SparkTestBase {
     // plan shape: the index side is a pushed GET (EqualTo on rowKey after
     // constant folding), the base side carries a runtime rowKey filter
     val plan = hit.queryExecution.executedPlan.toString
-    assert(plan.contains("pushed=[EqualTo(rowKey"), s"index GET not pushed in:\n$plan")
+    val scans = cellStoreScans(hit).map(_.description())
+    assert(scans.exists(d => d.contains(s"path=$base/index") && d.contains("pushed=[EqualTo(rowKey")),
+      s"index GET not pushed in:\n${scans.mkString("\n")}")
     assert(plan.contains("RuntimeFilters: [dynamicpruning") ||
       plan.contains("dynamicpruningexpression") || plan.contains("In(rowKey"),
       s"base scan missing runtime rowKey filter in:\n$plan")
@@ -78,10 +80,11 @@ class ValueIndexSpec extends AnyFunSuite with SparkTestBase {
       val served = userQuery
       val opt = served.queryExecution.optimizedPlan.toString
       assert(opt.contains("Join"), s"expected the index-probe join in:\n$opt")
-      val phys = served.queryExecution.executedPlan.toString
-      assert(phys.contains(s"$base/index"), s"index store not scanned in:\n$phys")
-      assert(phys.contains("pushed=[EqualTo(rowKey"),
-        s"index GET not pushed in:\n$phys")
+      val scans = cellStoreScans(served).map(_.description())
+      assert(scans.exists(_.contains(s"path=$base/index")),
+        s"index store not scanned in:\n${scans.mkString("\n")}")
+      assert(scans.exists(_.contains("pushed=[EqualTo(rowKey")),
+        s"index GET not pushed in:\n${scans.mkString("\n")}")
 
       // answers equal the unrewritten plan exactly
       spark.conf.set("spark.graft.valueindex.enabled", "false")
