@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.model.CellTable
+import graft.sources.CellStoreCompaction
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -27,11 +27,16 @@ import org.apache.spark.sql.functions._
  *  3. Version retention: keep the newest `maxVersions` surviving cells per
  *     (rowKey, family, qualifier) — HBase `VERSIONS`.
  *
- * Shape: one shuffle (the per-coordinate window, shared by the marker-max
- * and retention passes), then the writer's declared distribution re-ranges
- * the survivors into sorted region files. At 100 TB this runs
- * region-by-region (the layout makes regions independent units of work) —
- * same operator, partition-pruned input.
+ * Two forms, one set of rules:
+ *  - [[survivors]] / [[survivorsPerFamily]], the library form over any cell
+ *    DataFrame: one shuffle (the per-coordinate window, shared by the
+ *    marker-max and retention passes);
+ *  - [[compactStore]] / [[compactStoreIncremental]], the store pass: one
+ *    merge job ([[graft.sources.CellStoreCompaction]]) with one task per
+ *    region or salt bucket, which merges that region's sorted files and
+ *    applies the rules to each coordinate's run. No shuffle and no range
+ *    sampling; region boundaries are kept, as HBase keeps splits apart from
+ *    compaction ([[StoreRebalance]] re-regions a store).
  */
 object Compaction {
 
@@ -80,32 +85,23 @@ object Compaction {
     else puts
   }
 
-  /** Compact a cell-store directory in place via the DSv2 writer, keeping
-    * the store's layout: a salted store is re-salted with its manifest's
-    * bucket count (overwrite would otherwise silently fall back to range
-    * layout and break storage-partitioned joins), a range store is
-    * re-ranged. Full-store overwrite — requires exclusive access (no
-    * concurrent ingest or tail); [[compactStoreIncremental]] lifts both
-    * restrictions. */
+  /** Compact a cell-store directory in place, keeping its layout: a salted
+    * store keeps its buckets, a range store its regions. Files whose key
+    * intervals overlap (appends over regions) merge as one group, cut into
+    * one key-disjoint slice per region it spans.
+    * Full-store overwrite — requires exclusive access (no concurrent
+    * ingest or tail); [[compactStoreIncremental]] lifts both restrictions. */
   def compactStore(
       spark: SparkSession,
       path: String,
       maxVersions: Int = 1,
-      ttlWatermark: Long = Long.MinValue,
-      numRegions: Int = 8): Unit = {
-    val buckets = graft.sources.CellStoreSource.readBuckets(new org.apache.hadoop.fs.Path(path))
-    val out = survivors(spark.read.format("cellstore").load(path), maxVersions, ttlWatermark)
-      .write.format("cellstore").mode("overwrite")
-    buckets match {
-      case Some(n) => out.option("buckets", n.toString).save(path)
-      case None    => out.option("numRegions", numRegions.toString).save(path)
-    }
-  }
+      ttlWatermark: Long = Long.MinValue): Unit =
+    CellStoreCompaction.compact(spark, path, maxVersions, ttlWatermark, overwrite = true)
 
   /** Offset-aware compaction, safe under concurrent ingest and live tails:
     *
     *  1. Snapshot the committed file list (committed files are immutable).
-    *  2. Read EXACTLY those files (scan `files` option) and compact them.
+    *  2. Merge EXACTLY those files, as [[compactStore]] does.
     *  3. Commit with `replaceFiles` = the snapshot: only the snapshot files
     *     are deleted, so appends that landed mid-pass survive untouched —
     *     the HBase minor-compaction discipline.
@@ -119,25 +115,6 @@ object Compaction {
       spark: SparkSession,
       path: String,
       maxVersions: Int = 1,
-      ttlWatermark: Long = Long.MinValue,
-      numRegions: Int = 8): Seq[String] = {
-    val dir = new org.apache.hadoop.fs.Path(path)
-    val fs = graft.sources.HadoopConf.fs(dir)
-    if (!fs.exists(dir)) return Nil
-    val inputs = fs.listStatus(dir)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet") && s.getLen > 0)
-      .map(_.getPath.getName).sorted.toSeq
-    if (inputs.isEmpty) return Nil
-    val buckets = graft.sources.CellStoreSource.readBuckets(dir)
-    val snapshot = spark.read.format("cellstore")
-      .option("files", inputs.mkString(",")).load(path)
-    val out = survivors(snapshot, maxVersions, ttlWatermark)
-      .write.format("cellstore").mode("append")
-      .option("replaceFiles", inputs.mkString(","))
-    buckets match {
-      case Some(n) => out.option("buckets", n.toString).save(path)
-      case None    => out.option("numRegions", numRegions.toString).save(path)
-    }
-    inputs
-  }
+      ttlWatermark: Long = Long.MinValue): Seq[String] =
+    CellStoreCompaction.compact(spark, path, maxVersions, ttlWatermark, overwrite = false)
 }

@@ -135,8 +135,8 @@ object MobStore {
 
   /** Major-compact the MAIN store only; `dir/mob` is never rewritten. */
   def compactMain(spark: SparkSession, dir: String, maxVersions: Int = 1,
-      ttlWatermark: Long = Long.MinValue, numRegions: Int = 8): Unit =
-    Compaction.compactStore(spark, s"$dir/main", maxVersions, ttlWatermark, numRegions)
+      ttlWatermark: Long = Long.MinValue): Unit =
+    Compaction.compactStore(spark, s"$dir/main", maxVersions, ttlWatermark)
 
   /** Distinct content addresses of every PHYSICALLY PRESENT ref cell —
     * the liveness set reclaim and the store doctor share. */

@@ -90,26 +90,26 @@ class CellStoreWrite(path: String, info: LogicalWriteInfo, truncateFirst: Boolea
   override def requiredNumPartitions(): Int = buckets.getOrElse(
     Option(info.options.get("numRegions")).map(_.toInt).getOrElse(0))
 
-  /** File-scoped rewrite (`replaceFiles=a.parquet,b.parquet`): commit
-    * deletes exactly these files instead of the whole store — the append
-    * that a compaction pass uses so concurrent ingest survives it. */
-  private val replaceFiles: Seq[String] =
-    Option(info.options.get("replaceFiles")).toSeq
-      .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
-  require(replaceFiles.isEmpty || !truncateFirst,
-    "replaceFiles is an append-mode rewrite; it cannot combine with overwrite")
-
   override def toBatch: BatchWrite =
-    new CellStoreBatchWrite(path, info.queryId(), info.schema(), truncateFirst,
-      buckets, replaceFiles)
+    new CellStoreBatchWrite(path, info.queryId(), info.schema(), truncateFirst, buckets)
 }
 
+/** `replaceFiles` scopes a rewrite: the commit deletes exactly these files
+  * instead of the whole store — the append a compaction pass commits
+  * ([[CellStoreCompaction]]) so concurrent ingest survives it. */
 class CellStoreBatchWrite(path: String, queryId: String, schema: StructType,
                           truncateFirst: Boolean, buckets: Option[Int],
                           replaceFiles: Seq[String] = Nil) extends BatchWrite {
+  require(replaceFiles.isEmpty || !truncateFirst,
+    "replaceFiles is an append-mode rewrite; it cannot combine with overwrite")
   private val tmpDir = s"$path/_tmp_$queryId"
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
+    writerFactory
+
+  /** The task-side writers, outside a DSv2 plan: the merge compaction
+    * ([[CellStoreCompaction]]) runs its own job and commits here. */
+  def writerFactory: CellStoreWriterFactory =
     new CellStoreWriterFactory(tmpDir, schema, salted = buckets.isDefined)
 
   /** Overwrite is old-files-last: the superseded region files are listed
@@ -173,7 +173,7 @@ class CellStoreBatchWrite(path: String, queryId: String, schema: StructType,
 final case class CellFileCommitted(file: String, bloom: Array[Long])
     extends WriterCommitMessage
 
-class CellStoreWriterFactory(tmpDir: String, schema: StructType, salted: Boolean)
+class CellStoreWriterFactory(val tmpDir: String, schema: StructType, salted: Boolean)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new CellStoreDataWriter(tmpDir, schema, partitionId, taskId, salted)

@@ -1,5 +1,7 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.TaskContext
+import org.apache.spark.deploy.SparkHadoopUtil
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -24,4 +26,17 @@ object Shims {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "built-in")
+
+  /** The bytes this thread has read from Hadoop file systems since the
+    * call: what a file scan reports as its task's input bytes. */
+  def inputBytesCallback(): () => Long =
+    SparkHadoopUtil.get.getFSBytesReadOnThreadCallback()
+
+  /** Count a read made outside a Spark scan in the running task's input
+    * metrics, so stage metrics see it as they see a scan. */
+  def recordInput(rows: Long, bytes: Long): Unit = {
+    val metrics = TaskContext.get().taskMetrics().inputMetrics
+    metrics.incRecordsRead(rows)
+    metrics.incBytesRead(bytes)
+  }
 }
