@@ -34,17 +34,29 @@ object CopyRow {
       cells: DataFrame,
       rowKeyByteString: String,
       overrideTs: Boolean,
-      tsToUse: Long): DataFrame = {
-    val key = BytesBinaryCodec.decode(rowKeyByteString)
-    val selected = cells.filter(col("rowKey") === lit(key))
-    if (overrideTs) selected.withColumn("ts", lit(tsToUse)) else selected
-  }
+      tsToUse: Long): DataFrame =
+    withTs(get(cells, rowKeyByteString), overrideTs, tsToUse)
+
+  private def get(cells: DataFrame, rowKeyByteString: String): DataFrame =
+    cells.filter(col("rowKey") === lit(BytesBinaryCodec.decode(rowKeyByteString)))
+
+  private def withTs(cells: DataFrame, overrideTs: Boolean, tsToUse: Long): DataFrame =
+    if (overrideTs) cells.withColumn("ts", lit(tsToUse)) else cells
 
   /**
    * Execute the copy into a destination append. Mirrors the reference CLI
-   * behaviors: empty-row guard (T3, `CopyRow.java:114-117` — warn, write
-   * nothing) and the per-cell Put loop (K1) — except ours batches the write
-   * by partition instead of one RPC per cell.
+   * behaviors: one read of the row (`CopyRow.java:109-111`), the empty-row
+   * guard (T3, `CopyRow.java:114-117` — warn, write nothing) and the
+   * per-cell Put loop (K1) — except ours batches the write by partition
+   * instead of one RPC per cell.
+   *
+   * The row's cells are collected to the driver once, as the reference's
+   * `table.get` holds the row's `Result` client-side: on a cell store that
+   * collect is a bare GET, the source's local scan, and runs no Spark job
+   * (the ts rewrite is applied after it: a projection over the scan would
+   * make the collect a job). The guard checks the collected cells, and
+   * `write` receives a local DataFrame of them, so the read is never
+   * re-planned or re-split into tasks.
    *
    * @return number of cells copied (0 ⇒ the T3 guard fired)
    */
@@ -53,19 +65,17 @@ object CopyRow {
       rowKeyByteString: String,
       overrideTs: Boolean,
       tsToUse: Long)(write: DataFrame => Unit): Long = {
-    val p = plan(cells, rowKeyByteString, overrideTs, tsToUse)
-    // T3 guard: limit(1) probe instead of a full count — cheap at any scale.
-    if (p.limit(1).isEmpty) {
+    val selected = get(cells, rowKeyByteString)
+    val row = selected.collect()
+    if (row.isEmpty) {
       org.slf4j.LoggerFactory.getLogger(getClass)
         .warn(s"row '$rowKeyByteString' has no cells in source; nothing copied")
       0L
     } else {
-      val persisted = p.cache()
-      try {
-        val n = persisted.count()
-        write(persisted)
-        n
-      } finally persisted.unpersist()
+      val local = selected.sparkSession
+        .createDataFrame(java.util.Arrays.asList(row: _*), selected.schema)
+      write(withTs(local, overrideTs, tsToUse))
+      row.length.toLong
     }
   }
 }

@@ -34,7 +34,8 @@ object StoreDoctor {
   def diagnose(spark: SparkSession, path: String): DataFrame = {
     val dir = new Path(path)
     val fs = HadoopConf.fs(dir)
-    val files = fs.listStatus(dir)
+    val listing = fs.listStatus(dir)
+    val files = listing
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet") && s.getLen > 0)
       .sortBy(_.getPath.getName)
     val buckets = CellStoreSource.readBuckets(dir)
@@ -112,14 +113,20 @@ object StoreDoctor {
         s"$overlaps file(s) overlap an earlier key range — a major compaction would restore disjoint regions"))
     }
 
-    // 4. bloom coverage: a file without its sidecar degrades absent-key
-    //    GETs from zero-IO elision to a footer probe — correct but slower
-    val missing = files.map(_.getPath.getName)
-      .filterNot(f => fs.exists(CellBloom.sidecarPath(dir, f)))
-    rows += (if (missing.isEmpty)
-      CheckRow("bloom_coverage", path, "OK", s"${files.length}/${files.length} sidecars present")
+    // 4. bloom coverage: a file without a readable sidecar — missing, or
+    //    of a length the reader rejects — degrades absent-key GETs from
+    //    zero-IO elision to a footer probe: correct but slower
+    val sidecarLen = CellBloom.sidecarLengths(listing.toSeq)
+    val names = files.map(_.getPath.getName)
+    val missing = names.filterNot(sidecarLen.contains)
+    val malformed = names.filter(f => sidecarLen.get(f).exists(!CellBloom.validLength(_)))
+    val good = files.length - missing.length - malformed.length
+    rows += (if (good == files.length)
+      CheckRow("bloom_coverage", path, "OK", s"$good/${files.length} sidecars present")
     else CheckRow("bloom_coverage", path, "WARN",
-      s"${files.length - missing.size}/${files.length} sidecars; missing: ${missing.mkString(",")}"))
+      s"$good/${files.length} sidecars" +
+        (if (missing.nonEmpty) s"; missing: ${missing.mkString(",")}" else "") +
+        (if (malformed.nonEmpty) s"; malformed: ${malformed.mkString(",")}" else "")))
 
     import spark.implicits._
     rows.toSeq.toDF()

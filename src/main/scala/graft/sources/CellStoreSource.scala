@@ -539,8 +539,6 @@ class CellStoreTable(path: String) extends Table
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new CellStoreScanBuilder(path, buckets,
       Option(options.get("splitBytes")).map(_.toLong).getOrElse(128L << 20),
-      Option(options.get("files"))
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet),
       Option(options.get("graft.noRewrite")).exists(_.toBoolean))
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
@@ -550,7 +548,6 @@ class CellStoreTable(path: String) extends Table
 
 class CellStoreScanBuilder(path: String, buckets: Option[Int],
                            splitBytes: Long = 128L << 20,
-                           fileSubset: Option[Set[String]] = None,
                            noRewrite: Boolean = false)
     extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns
     with SupportsPushDownAggregates with SupportsPushDownLimit {
@@ -585,7 +582,7 @@ class CellStoreScanBuilder(path: String, buckets: Option[Int],
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     pushed = filters.filter(CellStoreSource.prunable)
     planned = CellStoreSource.exactKeys(pushed.toSeq).map(_ =>
-      CellStoreScan.plan(path, buckets, pushed.toSeq, Nil, splitBytes, fileSubset))
+      CellStoreScan.plan(path, buckets, pushed.toSeq, Nil, splitBytes))
     if (local) filters.filterNot(CellStoreSource.pinsKeys) else filters
   }
   override def pushedFilters(): Array[Filter] = pushed
@@ -660,9 +657,7 @@ class CellStoreScanBuilder(path: String, buckets: Option[Int],
   }
 
   override def pushAggregation(agg: Aggregation): Boolean =
-    // a pinned file subset must not answer whole-store footer aggregates
-    if (fileSubset.isDefined) false
-    else if (footerAnswerable(agg)) { aggPushed = Some(agg); true }
+    if (footerAnswerable(agg)) { aggPushed = Some(agg); true }
     else groupAnswerable(agg) match {
       case Some(gs) => groupPushed = Some(gs); true
       case None     => false
@@ -671,11 +666,11 @@ class CellStoreScanBuilder(path: String, buckets: Option[Int],
   override def build(): Scan = (aggPushed, groupPushed) match {
     case (Some(agg), _)       => new CellStoreAggScan(path, agg)
     case (None, Some((g, a))) =>
-      new CellStoreGroupByScan(path, buckets, g, a, splitBytes, fileSubset)
+      new CellStoreGroupByScan(path, buckets, g, a, splitBytes)
     case _ if local => new CellStoreLocalScan(path, planned.get, pushed, required)
     case _ =>
       new CellStoreScan(path, buckets, pushed, required, splitBytes, limit,
-        fileSubset, noRewrite, planned.map(_.partitions))
+        noRewrite, planned.map(_.partitions))
   }
 }
 
@@ -701,8 +696,7 @@ final case class CellMinMax(col: String, dataType: DataType, isMin: Boolean)
   * grouping and aggregated columns are decoded. */
 class CellStoreGroupByScan(path: String, buckets: Option[Int],
                            groupCols: Seq[String], aggs: Seq[CellAggSpec],
-                           splitBytes: Long,
-                           fileSubset: Option[Set[String]] = None)
+                           splitBytes: Long)
     extends Scan with Batch {
 
   /** Columns the reader must decode, in cell-schema order. */
@@ -711,7 +705,7 @@ class CellStoreGroupByScan(path: String, buckets: Option[Int],
       groupCols.contains(f.name) || aggs.exists(_.inputCol.contains(f.name))))
 
   private val delegate =
-    new CellStoreScan(path, buckets, Array.empty, inputSchema, splitBytes, None, fileSubset)
+    new CellStoreScan(path, buckets, Array.empty, inputSchema, splitBytes, None)
 
   override def readSchema(): StructType = StructType(
     groupCols.map(c => CellStoreSource.Schema(c)) ++
@@ -930,7 +924,6 @@ class CellStoreScan(val path: String, buckets: Option[Int],
                     val pushed: Array[Filter], required: StructType,
                     splitBytes: Long = 128L << 20,
                     limit: Option[Int] = None,
-                    fileSubset: Option[Set[String]] = None,
                     val noRewrite: Boolean = false,
                     preplanned: Option[Array[InputPartition]] = None)
     extends Scan with Batch
@@ -975,8 +968,7 @@ class CellStoreScan(val path: String, buckets: Option[Int],
     val cur = cached
     if (cur != null) cur
     else {
-      val p = CellStoreScan.plan(path, buckets, pushed.toSeq, runtime.toSeq, splitBytes,
-        fileSubset).partitions
+      val p = CellStoreScan.plan(path, buckets, pushed.toSeq, runtime.toSeq, splitBytes).partitions
       cached = p
       p
     }
@@ -1035,33 +1027,31 @@ object CellStoreScan {
     * anyway; a salted store reads its candidate files' footers for it only
     * when `pushed` pins keys, and reports 0 otherwise. */
   private[sources] def plan(path: String, buckets: Option[Int], pushed: Seq[Filter],
-      runtime: Seq[Filter], splitBytes: Long,
-      fileSubset: Option[Set[String]]): CellStorePlan = {
+      runtime: Seq[Filter], splitBytes: Long): CellStorePlan = {
     val bounds = CellStoreSource.boundsSetOf(pushed ++ runtime)
     var rows = 0L
     val dir = new Path(path)
     val fs = HadoopConf.fs(dir)
-    val files = fs.listStatus(dir)
+    val listing = fs.listStatus(dir)
+    val files = listing
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet") && s.getLen > 0)
-      // pinned file subset (`files` option): scan exactly these committed
-      // files — what an offset-aware compaction pass reads, so concurrent
-      // appends landing mid-pass are neither rewritten nor deleted
-      .filter(s => fileSubset.forall(_.contains(s.getPath.getName)))
       .sortBy(_.getPath.getName)
     // Bloom elision for point lookups (HFile ROW bloom analogue): a pushed/
     // runtime GET/IN key set skips files whose bloom proves every key
     // absent — the in-range negative GET that min/max stats cannot serve.
-    // Only a GET/IN reads sidecars, one 16 KiB file per candidate: the files
-    // of the keys' buckets on a salted store; on a range store EVERY file's
-    // sidecar, BEFORE its footer — footers are then read only for bloom
-    // survivors, about one per hit instead of one per region. Planning never
-    // parses store-wide bloom state. A file with no sidecar is "may
-    // contain"; the residual filter (or the local scan's key check)
-    // re-checks rows, so this is pure IO elision.
+    // Only a GET/IN reads sidecars, one small file per candidate (sized to
+    // its data file's keys, 16 KiB at most), its length taken from this
+    // listing: the files of the keys' buckets on a salted store; on a range
+    // store EVERY file's sidecar, BEFORE its footer — footers are then read
+    // only for bloom survivors, about one per hit instead of one per
+    // region. Planning never parses store-wide bloom state. A file with no
+    // sidecar is "may contain"; the residual filter (or the local scan's
+    // key check) re-checks rows, so this is pure IO elision.
     val getKeys = CellStoreSource.exactKeys(pushed ++ runtime)
+    lazy val sidecarLen = CellBloom.sidecarLengths(listing.toSeq)
     def mayHave(name: String): Boolean = getKeys match {
       case Some(ks) =>
-        CellBloom.readOne(dir, name)
+        sidecarLen.get(name).flatMap(CellBloom.readOne(dir, name, _))
           .forall(b => ks.exists(CellBloom.mayContain(b, _)))
       case None => true
     }

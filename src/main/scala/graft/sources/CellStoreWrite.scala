@@ -203,23 +203,34 @@ class CellStoreDataWriter(tmpDir: String, schema: StructType,
       f"$tmpDir/part-$partitionId%05d-$taskId-${UUID.randomUUID().toString.take(8)}%s.parquet"
   private var writer: org.apache.parquet.hadoop.ParquetWriter[InternalRow] = _
   private var wrote = false
-  // per-file rowKey bloom, folded during the write and shipped to the
-  // driver with the commit message (the HFile ROW bloom analogue)
+  // per-file rowKey bloom, filled during the write, folded to the file's
+  // distinct-key count on commit and shipped to the driver with the commit
+  // message (the HFile ROW bloom analogue). Rows arrive sorted, so a key
+  // differing from the previous one is a new key.
   private val rowKeyIdx = schema.fieldIndex("rowKey")
   private val bloom = CellBloom.empty()
+  private var prevKey: Array[Byte] = _
+  private var distinctKeys = 0L
 
   override def write(row: InternalRow): Unit = {
     if (writer == null)
       writer = org.apache.spark.sql.execution.datasources.parquet
         .GraftRowParquetWriter.open(file, schema)
     wrote = true
-    if (!row.isNullAt(rowKeyIdx)) CellBloom.add(bloom, row.getBinary(rowKeyIdx))
+    if (!row.isNullAt(rowKeyIdx)) {
+      val k = row.getBinary(rowKeyIdx)
+      if (prevKey == null || !java.util.Arrays.equals(prevKey, k)) {
+        CellBloom.add(bloom, k)
+        distinctKeys += 1
+        prevKey = k
+      }
+    }
     writer.write(row)
   }
 
   override def commit(): WriterCommitMessage = {
     if (writer != null) writer.close()
-    CellFileCommitted(if (wrote) file else "", bloom)
+    CellFileCommitted(if (wrote) file else "", CellBloom.fold(bloom, distinctKeys))
   }
 
   override def abort(): Unit = if (writer != null) writer.close()

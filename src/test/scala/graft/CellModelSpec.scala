@@ -255,6 +255,47 @@ class CellModelSpec extends AnyFunSuite with SparkTestBase {
     assert(n > 0 && seen == n)
   }
 
+  test("CopyRow from a cell store reads its row with no Spark job") {
+    val root = java.nio.file.Files.createTempDirectory("copyrow_store").toString
+    cells.write.format("cellstore").option("numRegions", "4").mode("overwrite").save(s"$root/src")
+    val store = spark.read.format("cellstore").load(s"$root/src")
+    val sc = spark.sparkContext
+    val (readGroup, writeGroup) = ("copyrow-read", "copyrow-write")
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    val n = try {
+      sc.setJobGroup(readGroup, "copy_row read")
+      val copied = CopyRow.run(store, "\\x00\\x00\\x00\\x00\\x00\\x00\\x00*",
+          overrideTs = true, tsToUse = 99L) { df =>
+        sc.setJobGroup(writeGroup, "copy_row write")
+        try df.write.format("cellstore").mode("append").save(s"$root/dst")
+        finally sc.setJobGroup(readGroup, "copy_row read")
+      }
+      // the listener bus is asynchronous and in order: once a marker job
+      // arrives, every job the copy started has arrived before it
+      sc.setJobGroup("marker", "marker")
+      spark.range(1).collect()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!groups.contains("marker") && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(groups.contains("marker"), "listener never saw the marker job")
+      assert(groups.contains(writeGroup), "the write callback ran no job")
+      assert(!groups.contains(readGroup), "the copy's read started a job")
+      copied
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    val dst = spark.read.format("cellstore").load(s"$root/dst").collect()
+    assert(n == 4L && dst.length == 4)
+    assert(dst.forall(r => r.getAs[Long]("ts") == 99L &&
+      java.nio.ByteBuffer.wrap(r.getAs[Array[Byte]]("rowKey")).getLong == 42L))
+  }
+
   test("CorruptScan: counters satisfy TOTAL = SUCCESS + FAILED; report formats M5") {
     val poisoned = col("qualifier").cast("string") === "c_acctbal" &&
       col("value").cast("string").cast("double") < 0

@@ -3,7 +3,7 @@ package graft
 import scala.jdk.CollectionConverters._
 
 import graft.model.CellTable
-import graft.sources.{CellStoreLocalScan, CellStoreScan}
+import graft.sources.{CellBloom, CellStoreLocalScan, CellStoreScan}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -87,19 +87,18 @@ class CellStoreSourceSpec extends AnyFunSuite with SparkTestBase {
     val row = store.filter(col("rowKey") === lit(key(7L)))
       .select(col("qualifier").cast("string"), col("ts")).collect()
     assert(row.length == 4 && row.forall(_.getLong(1) == CellTable.BaseTs))
-    // a pinned file subset declines the footer aggregate, so its count()
-    // reaches the scan with no columns and reads zero-column batches
-    val files = new java.io.File(storePath).listFiles().map(_.getName)
-      .filter(_.endsWith(".parquet")).sorted.take(3)
-    val pinned = spark.read.format("cellstore").option("files", files.mkString(","))
-      .load(storePath).groupBy().count()
-    val expected = files.map(f => spark.read.parquet(s"$storePath/$f").count()).sum
-    assert(expected > 0 && pinned.collect().head.getLong(0) == expected)
+    // a count over a union of two reads is not one the footer aggregate
+    // answers, so each read reaches the scan with no columns and decodes
+    // zero-column batches
+    val unioned = store.union(store).groupBy().count()
+    val expected = 2 * spark.read.parquet(storePath).count()
+    assert(expected > 0 && unioned.collect().head.getLong(0) == expected)
     // the adaptive plan inserts its columnar transitions per stage: read the
     // final plan
-    val pinnedPlan = pinned.queryExecution.executedPlan.toString
-    assert(pinnedPlan.contains("CellStoreScan") && pinnedPlan.contains("ColumnarToRow"),
-      s"expected a columnar count-only scan in:\n$pinnedPlan")
+    val unionPlan = unioned.queryExecution.executedPlan.toString
+    assert(unionPlan.contains("CellStoreScan") && unionPlan.contains("ColumnarToRow") &&
+      !unionPlan.contains("CellStoreAggScan"),
+      s"expected a columnar count-only scan in:\n$unionPlan")
   }
 
   test("a large region file splits into row-group-aligned chunk partitions") {
@@ -368,6 +367,11 @@ class CellStoreSourceSpec extends AnyFunSuite with SparkTestBase {
     dataFiles.foreach(n => assert(
       new java.io.File(dir, s".$n${graft.sources.CellBloom.BloomSuffix}").exists,
       s"missing bloom sidecar for $n"))
+    // each sidecar is folded to its own file's distinct keys
+    dataFiles.foreach { n =>
+      val keys = spark.read.parquet(s"$dir/$n").select("rowKey").distinct().count()
+      assert(sidecarBytes(dir, n) == foldedBytes(keys), s"sidecar of $n ($keys keys)")
+    }
 
     val st = spark.read.format("cellstore").load(dir)
     val present = st.filter(col("rowKey") === lit(key(42)))
@@ -381,6 +385,10 @@ class CellStoreSourceSpec extends AnyFunSuite with SparkTestBase {
     CellTable.fromTable(spark, sf001, "customer")
       .filter(CellTable.keyToLong(col("rowKey")) === 43)
       .write.format("cellstore").mode("append").save(dir)
+    // the one-key append's sidecar is a single 64-bit word
+    val appended = new java.io.File(dir).listFiles()
+      .map(_.getName).filter(n => n.endsWith(".parquet") && !dataFiles.contains(n))
+    assert(appended.length == 1 && sidecarBytes(dir, appended.head) == 8L)
     val st2 = spark.read.format("cellstore").load(dir)
     assert(st2.filter(col("rowKey") === lit(key(43))).count() > 0)
     assert(st2.filter(col("rowKey") === lit(key(42))).count() > 0)
@@ -391,6 +399,72 @@ class CellStoreSourceSpec extends AnyFunSuite with SparkTestBase {
     val sst = spark.read.format("cellstore").load(sdir)
     assert(sst.filter(col("rowKey") === lit(key(42))).count() > 0)
     assert(sst.filter(col("rowKey") === lit(key(43))).count() == 0)
+  }
+
+  /** The sidecar length the fold rule gives a file of `keys` distinct keys:
+    * the fewest power-of-two 64-bit words with 10 bits per key, 16 KiB at
+    * most. */
+  private def foldedBytes(keys: Long): Long = {
+    var words = 1L
+    while (words < 2048 && words * 64 < keys * 10) words *= 2
+    words * 8
+  }
+
+  private def sidecarBytes(dir: String, dataFile: String): Long =
+    new java.io.File(dir, s".$dataFile${CellBloom.BloomSuffix}").length()
+
+  test("folded blooms keep every key, size to the keys, and stay under 2% false positives") {
+    for (n <- Seq(0, 1, 188, 13000)) {
+      val bits = CellBloom.empty()
+      val keys = (0 until n).map(i => key(2L * i))
+      keys.foreach(CellBloom.add(bits, _))
+      val folded = CellBloom.fold(bits, n.toLong)
+      assert(folded.length * 8L == foldedBytes(n.toLong) &&
+        CellBloom.validLength(folded.length * 8L), s"$n keys")
+      assert(keys.forall(CellBloom.mayContain(folded, _)), s"a key of $n lost by the fold")
+    }
+    // 188 keys (a perfbench region) fold to 32 words; 10,000 absent keys
+    val bits = CellBloom.empty()
+    (0 until 188).foreach(i => CellBloom.add(bits, key(2L * i)))
+    val folded = CellBloom.fold(bits, 188L)
+    assert(folded.length == 32)
+    val falsePositives = (0 until 10000).count(i => CellBloom.mayContain(folded, key(2L * i + 1)))
+    assert(falsePositives < 200, s"$falsePositives false positives in 10,000")
+    assert(Seq(8L, 256L, 16384L).forall(CellBloom.validLength))
+    assert(Seq(0L, 12L, 24L, 100L, 16392L, 32768L).forall(!CellBloom.validLength(_)))
+  }
+
+  test("bloom sidecars: a 13,000-key file keeps 16 KiB; an unfolded 16 KiB sidecar still prunes") {
+    val dir = java.nio.file.Files.createTempDirectory("bloom_sizes").toString + "/s"
+    spark.range(13000).select(
+      CellTable.bigEndianKey(col("id") * 2).as("rowKey"), lit("cf").as("family"),
+      lit("q").cast("binary").as("qualifier"), lit(CellTable.BaseTs).as("ts"),
+      lit("Put").as("cellType"), col("id").cast("string").cast("binary").as("value"))
+      .write.format("cellstore").option("numRegions", "1").mode("overwrite").save(dir)
+    val dataFiles = new java.io.File(dir).listFiles().map(_.getName).filter(_.endsWith(".parquet"))
+    assert(dataFiles.length == 1 && sidecarBytes(dir, dataFiles.head) == 16384L)
+
+    // a sidecar written before folding: the full 128 Kbit filter, unfolded
+    val edir = java.nio.file.Files.createTempDirectory("bloom_old").toString + "/s"
+    CellTable.fromTable(spark, sf001, "customer")
+      .filter(pmod(CellTable.keyToLong(col("rowKey")), lit(2)) === 0)
+      .write.format("cellstore").option("numRegions", "2").mode("overwrite").save(edir)
+    new java.io.File(edir).listFiles().map(_.getName).filter(_.endsWith(".parquet")).foreach { n =>
+      val bits = CellBloom.empty()
+      spark.read.parquet(s"$edir/$n").select("rowKey").distinct().collect()
+        .foreach(r => CellBloom.add(bits, r.getAs[Array[Byte]](0)))
+      val bb = java.nio.ByteBuffer.allocate(bits.length * 8)
+      bits.foreach(bb.putLong)
+      val sidecar = CellBloom.sidecarPath(new org.apache.hadoop.fs.Path(edir), n)
+      val fs = graft.sources.HadoopConf.fs(sidecar)
+      val out = fs.create(sidecar, true)
+      try out.write(bb.array()) finally out.close()
+      assert(sidecarBytes(edir, n) == 16384L)
+    }
+    val st = spark.read.format("cellstore").load(edir)
+    assert(plannedChunks(st.filter(col("rowKey") === lit(key(43)))) == 0,
+      "an unfolded sidecar must still prune an in-range absent key")
+    assert(st.filter(col("rowKey") === lit(key(42))).count() == 4)
   }
 
   test("bloom sidecars: append commit cost is independent of store file count") {
@@ -521,19 +595,9 @@ class CellStoreSourceSpec extends AnyFunSuite with SparkTestBase {
     assert(spark.read.format("cellstore").load(dir)
       .filter(col("rowKey") === lit(key(15L))).count() == 4 * 3 + 4)
     assertLocalEqualsPlain(sdir, _.filter(col("rowKey").isin(key(3L), key(10L), key(44L))))
-    // a pinned file subset: a key outside the pinned files reads nothing
-    val files = new java.io.File(dir).listFiles().map(_.getName)
-      .filter(_.endsWith(".parquet")).sorted.take(2)
-    val pinned = spark.read.format("cellstore").option("files", files.mkString(",")).load(dir)
-    val plainPinned = spark.read.parquet(files.toSeq.map(f => s"$dir/$f"): _*)
-    for (id <- Seq(1L, 15L, 149L)) {
-      val get = pinned.filter(col("rowKey") === lit(key(id)))
-      val plain = plainPinned.filter(col("rowKey") === lit(key(id)))
-      assert(cellStoreScan(get).isInstanceOf[CellStoreLocalScan])
-      assert(get.count() == plain.count())
-      assert(get.exceptAll(plain).isEmpty && plain.exceptAll(get).isEmpty)
-    }
-    assert(pinned.filter(col("rowKey") === lit(key(149L))).count() == 0)
+    // keys at both ends of the range store and one past its last key
+    for (id <- Seq(1L, 149L, 150L, 151L))
+      assertLocalEqualsPlain(dir, _.filter(col("rowKey") === lit(key(id))))
   }
 
   test("a key whose cells exceed the local bound plans the batch scan") {

@@ -33,18 +33,32 @@ class StoreDoctorSpec extends AnyFunSuite with SparkTestBase {
       .write.format("cellstore").option("buckets", "4").mode("overwrite").save(dir)
     val rows = StoreDoctor.diagnose(spark, dir).collect()
     assert(statusOf(rows, "layout")._1 == "OK")
+    // the sidecars are folded to their files' keys and read OK
+    val hDir = new org.apache.hadoop.fs.Path(dir)
+    val fs = graft.sources.HadoopConf.fs(hDir)
+    val dataFiles = fs.listStatus(hDir)
+      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+      .map(_.getPath.getName).sorted
+    val sidecarLens = dataFiles.map(f => fs.getFileStatus(CellBloom.sidecarPath(hDir, f)).getLen)
+    assert(sidecarLens.forall(l => l < CellBloom.NumWords * 8L && CellBloom.validLength(l)),
+      sidecarLens.mkString(","))
     assert(statusOf(rows, "bloom_coverage")._1 == "OK")
 
     // planted fault 1: delete one bloom sidecar → WARN names the file
-    val hDir = new org.apache.hadoop.fs.Path(dir)
-    val fs = graft.sources.HadoopConf.fs(hDir)
-    val dataFile = fs.listStatus(hDir)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .head.getPath.getName
+    val dataFile = dataFiles.head
     fs.delete(CellBloom.sidecarPath(hDir, dataFile), false)
     val warned = StoreDoctor.diagnose(spark, dir).collect()
     val (st, detail) = statusOf(warned, "bloom_coverage")
     assert(st == "WARN" && detail.contains(dataFile))
+
+    // planted fault 1b: a 100-byte sidecar is no valid filter length → WARN
+    // names its data file
+    val malformed = dataFiles(1)
+    val out = fs.create(CellBloom.sidecarPath(hDir, malformed), true)
+    try out.write(new Array[Byte](100)) finally out.close()
+    val (st1b, detail1b) = statusOf(StoreDoctor.diagnose(spark, dir).collect(), "bloom_coverage")
+    assert(st1b == "WARN" && detail1b.contains(s"malformed: $malformed") &&
+      detail1b.contains(dataFile), detail1b)
 
     // planted fault 2: a foreign (non-bucket) file in a salted store → ERROR
     val stray = fs.listStatus(hDir)
