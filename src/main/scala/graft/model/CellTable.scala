@@ -71,7 +71,7 @@ object CellTable {
    * partitioning by rowKey ranges ≙ region splits.
    */
   def fromTable(spark: SparkSession, sfDir: String, table: String): DataFrame =
-    toCells(spark.read.parquet(s"$sfDir/$table.parquet"),
+    toCells(graft.sources.Tables.readParquet(spark, s"$sfDir/$table.parquet"),
       keyColumnsOf(table), table, lit(BaseTs))
 
   /** Generic row→cells derivation (streaming-safe: select + explode only) —
@@ -120,17 +120,17 @@ object CellTable {
   }
 
   /**
-   * Persist a cell table in region-split layout: range-partitioned by
-   * rowKey, key-sorted within each file — the columnar analogue of HBase
-   * regions + HFile ordering. Point GETs prune to one partition via
-   * min/max statistics; range scans read only overlapping partitions; a
-   * downstream sort-merge on rowKey needs no exchange when partitioning is
-   * reused. This is the layout the 100 TB store would use.
+   * Persist a cell table in region-split layout: `numRegions` key ranges,
+   * key-sorted within each file — the columnar analogue of HBase regions +
+   * HFile ordering. A write through the `cellstore` writer, so the layout is
+   * an ordinary cell store: snappy-compressed region files, a rowKey bloom
+   * sidecar per region and the rename commit. Point GETs prune to one
+   * region by footer statistics and blooms; range scans read only
+   * overlapping regions.
    */
   def writeRegionLayout(cells: DataFrame, path: String, numRegions: Int): Unit =
-    cells.repartitionByRange(numRegions, col("rowKey"))
-      .sortWithinPartitions("rowKey", "family", "qualifier", "ts")
-      .write.mode("overwrite").parquet(path)
+    cells.write.format("cellstore").option("numRegions", numRegions.toString)
+      .mode("overwrite").save(path)
 
   /**
    * Latest-version-wins read (SURVEY.md §1.4): HBase's default single-version

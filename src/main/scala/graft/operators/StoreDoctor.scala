@@ -128,6 +128,16 @@ object StoreDoctor {
         (if (missing.nonEmpty) s"; missing: ${missing.mkString(",")}" else "") +
         (if (malformed.nonEmpty) s"; malformed: ${malformed.mkString(",")}" else "")))
 
+    // 5. compression: a file with an uncompressed column chunk predates the
+    //    compressing writer (or came from another writer) — it reads
+    //    correctly but takes more disk bytes
+    val uncompressed = readable.collect { case (f, blocks) if blocks.exists(_.uncompressed) => f }
+    rows += (if (uncompressed.isEmpty)
+      CheckRow("compression", path, "OK", "every column chunk compressed")
+    else CheckRow("compression", path, "INFO",
+      s"${uncompressed.length} file(s) with uncompressed column chunks: " +
+        s"${uncompressed.mkString(",")} — a major compaction rewrites them compressed"))
+
     import spark.implicits._
     rows.toSeq.toDF()
   }

@@ -16,9 +16,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
- * DataSource V2 connector for the region-split cell store
- * (`CellTable.writeRegionLayout`): a directory of key-range-partitioned,
- * key-sorted parquet files — the columnar analogue of HBase regions +
+ * DataSource V2 connector for the region-split cell store (written by
+ * [[CellStoreWrite]]): a directory of key-range-partitioned, key-sorted,
+ * snappy-compressed parquet files — the columnar analogue of HBase regions +
  * HFiles (reference scan surface: `CorruptRowsMR.java:68-91`, one MR split
  * per region via `TableInputFormat`; here one `InputPartition` per region
  * file).
@@ -370,20 +370,24 @@ object CellStoreSource {
     case None => Some((v, incl))
   }
 
-  /** One row group's footer metadata. */
+  /** One row group's footer metadata; `uncompressed` when any of its
+    * column chunks is stored without a codec. */
   private[graft] final case class BlockInfo(
       index: Int, rows: Long, compressedBytes: Long,
       keyRange: Option[(Array[Byte], Array[Byte])],
       tsRange: Option[(Long, Long)] = None,
       famRange: Option[(Array[Byte], Array[Byte])] = None,
-      qualRange: Option[(Array[Byte], Array[Byte])] = None)
+      qualRange: Option[(Array[Byte], Array[Byte])] = None,
+      uncompressed: Boolean = false)
 
   /** All row groups of a file, footer metadata only. */
   private[graft] def footerBlocks(file: Path): Seq[BlockInfo] = {
     val reader = HadoopConf.openParquet(file)
     try reader.getRowGroups.asScala.toSeq.zipWithIndex.map { case (b, i) =>
       BlockInfo(i, b.getRowCount, b.getCompressedSize, rowGroupKeyRange(b),
-        rowGroupTsRange(b), rowGroupFamRange(b), rowGroupQualRange(b))
+        rowGroupTsRange(b), rowGroupFamRange(b), rowGroupQualRange(b),
+        b.getColumns.asScala.exists(_.getCodec ==
+          org.apache.parquet.hadoop.metadata.CompressionCodecName.UNCOMPRESSED))
     } finally reader.close()
   }
 

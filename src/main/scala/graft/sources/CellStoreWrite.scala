@@ -180,9 +180,9 @@ class CellStoreWriterFactory(val tmpDir: String, schema: StructType, salted: Boo
 }
 
 /** Streams sorted `InternalRow`s of one region/bucket slice straight into
-  * one parquet file via Spark's own `ParquetWriteSupport` (no per-field
-  * Group materialization — the write-side twin of the vectorized reader).
-  * Opens lazily so empty partitions commit nothing. */
+  * one snappy-compressed parquet file through [[GraftRowParquetWriter]]
+  * (the codec is its constant, not a write option). Opens lazily so empty
+  * partitions commit nothing. */
 class CellStoreDataWriter(tmpDir: String, schema: StructType,
                           partitionId: Int, taskId: Long, salted: Boolean)
     extends DataWriter[InternalRow] {

@@ -3,7 +3,8 @@ package graft.sources
 import graft.Memo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetSchema
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /**
  * Fixture-table source (TESTDATA.md). One parquet per table; at the 100 TB
@@ -37,17 +38,24 @@ object Tables {
   def rowCount(spark: SparkSession, sfDir: String, name: String): Long =
     counts(s"$sfDir/$name")(load(spark, sfDir, name).count())
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
     if (name == "events") {
       // harmless for µs fixtures; required so a ns fixture reads (as longs)
-      // instead of failing with PARQUET_TYPE_ILLEGAL
+      // instead of failing with PARQUET_TYPE_ILLEGAL. Set before the schema
+      // is read: the footer conversion reads the flag.
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      parallelized(spark, s"$sfDir/$name.parquet", name,
-        normalizeEventTs(spark.read.parquet(s"$sfDir/$name.parquet")))
+      parallelized(spark, path, name, normalizeEventTs(readParquet(spark, path)))
     } else {
-      parallelized(spark, s"$sfDir/$name.parquet", name,
-        spark.read.parquet(s"$sfDir/$name.parquet"))
+      parallelized(spark, path, name, readParquet(spark, path))
     }
+  }
+
+  /** `spark.read.parquet(path)` with its schema read from the footer on the
+    * driver ([[GraftParquetSchema]]): the same relation, and no inference
+    * job while the load is built. */
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(GraftParquetSchema.of(spark, path)).parquet(path)
 
   /** Natural scan split count per (path, session parallelism), memoized —
     * a driver-side plan inspection, no job. */
@@ -93,9 +101,9 @@ object Tables {
   }
 
   /** Raw events schema (pre-normalization) for streaming readers. */
-  def eventsRawSchema(spark: SparkSession, sfDir: String) = {
+  def eventsRawSchema(spark: SparkSession, sfDir: String): StructType = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$sfDir/events.parquet").schema
+    GraftParquetSchema.of(spark, s"$sfDir/events.parquet")
   }
 
   /** Normalize `ts` to session-zoned `TimestampType`, branching on the

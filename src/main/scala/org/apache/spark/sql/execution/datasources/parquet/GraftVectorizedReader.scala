@@ -8,8 +8,9 @@ import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapred.FileSplit
 import org.apache.hadoop.mapreduce.TaskAttemptID
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetInputFormat}
-import org.apache.parquet.hadoop.metadata.{BlockMetaData, ParquetMetadata}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader, ParquetInputFormat}
+import org.apache.parquet.hadoop.metadata.{BlockMetaData, CompressionCodecName, ParquetMetadata}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
@@ -83,9 +84,14 @@ object GraftVectorizedReader {
  * Spark `InternalRow`s straight through Spark's own `ParquetWriteSupport` —
  * no per-field example-`Group` materialization, the same converter the
  * built-in parquet sink uses. The store's writers stream their sorted
- * slices through this.
+ * slices through this, each file [[Codec]]-compressed as HBase compresses
+ * every HFile block. A constant, not an option: this is the only cell-store
+ * writer, and the readers decode any codec, so older files read as before.
  */
 object GraftRowParquetWriter {
+
+  /** Spark's default `spark.sql.parquet.compression.codec`. */
+  val Codec: CompressionCodecName = CompressionCodecName.SNAPPY
 
   def open(
       file: String,
@@ -105,6 +111,7 @@ object GraftRowParquetWriter {
     new RowWriterBuilder(new org.apache.hadoop.fs.Path(file))
       .withConf(conf)
       .withWriteMode(org.apache.parquet.hadoop.ParquetFileWriter.Mode.OVERWRITE)
+      .withCompressionCodec(Codec)
       .build()
   }
 
@@ -114,5 +121,29 @@ object GraftRowParquetWriter {
     override def getWriteSupport(conf: Configuration)
         : org.apache.parquet.hadoop.api.WriteSupport[InternalRow] =
       new ParquetWriteSupport()
+  }
+}
+
+/**
+ * `spark.read.parquet(path).schema` without Spark's schema-inference job:
+ * the footer of `path`'s first data file (a file, or a directory of parquet
+ * parts) is read on the driver and converted by Spark's own footer-to-schema
+ * rule ([[ParquetFileFormat.readSchema]], the session's converter flags).
+ * Spark's inference reads the same one footer, but in a one-task job.
+ */
+object GraftParquetSchema {
+
+  def of(spark: SparkSession, path: String): StructType = {
+    val p = new Path(path)
+    val fs = HadoopConf.fs(p)
+    val file =
+      if (!fs.getFileStatus(p).isDirectory) p
+      else fs.listStatus(p).map(_.getPath)
+        .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
+        .minBy(_.getName)
+    val reader = HadoopConf.openParquet(file)
+    val footer = try reader.getFooter finally reader.close()
+    ParquetFileFormat.readSchema(Seq(new Footer(file, footer)), spark)
+      .getOrElse(throw new IllegalStateException(s"no parquet schema in $file"))
   }
 }

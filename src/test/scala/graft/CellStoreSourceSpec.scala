@@ -553,8 +553,7 @@ class CellStoreSourceSpec extends AnyFunSuite with SparkTestBase {
     // hits, an in-range miss (one byte past a stored key), an out-of-range miss
     Seq(key(1L), key(42L), key(150L), key(42L) :+ 0.toByte, key(100000L))
       .foreach(k => assertLocalEqualsPlain(storePath, byKey(k)))
-    // an isin whose keys sit in two regions (this store has no bloom
-    // sidecars, so the regions between them are planned too)
+    // an isin whose keys sit in two regions
     val two = store.filter(col("rowKey").isin(key(5L), key(140L)))
     assert(plannedChunks(two) >= 2)
     assertLocalEqualsPlain(storePath, _.filter(col("rowKey").isin(key(5L), key(140L))))

@@ -228,11 +228,6 @@ class CompactionSpec extends AnyFunSuite with SparkTestBase {
         r.get(3), r.getString(4), hexOf(r.getAs[Array[Byte]](5))).mkString("|"))
       .sorted.toSeq
 
-  private def dataFiles(dir: String): Seq[File] =
-    new File(dir).listFiles().toSeq
-      .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
-      .sortBy(_.getName)
-
   /** A fresh copy of a fixture store: data files, sidecars, manifest. */
   private def copyStore(template: String): String = {
     val dir = Files.createTempDirectory("cellstore_compact_case")
@@ -310,7 +305,8 @@ class CompactionSpec extends AnyFunSuite with SparkTestBase {
     val prevBlock = hconf.get("parquet.block.size")
     hconf.setInt("parquet.block.size", 16384)
     try {
-      CellTable.writeRegionLayout(history(base), dir, numRegions = 4)
+      // Spark's sink honours the session block size; the cell-store writer does not
+      rawRegionLayout(history(base), dir, numRegions = 4)
       base.filter(CellTable.keyToLong(col("rowKey")) % 2 === 0)
         .withColumn("ts", col("ts") + 3000L)
         .coalesce(1).sortWithinPartitions("rowKey", "family", "qualifier", "ts")

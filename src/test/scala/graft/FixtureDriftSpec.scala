@@ -91,6 +91,46 @@ class FixtureDriftSpec extends AnyFunSuite with SparkTestBase {
         problems.mkString("\n  "))
   }
 
+  test("fixture loads read their schema from the footer and run no job") {
+    val path = (t: String) => s"$sf01/$t.parquet"
+    // what Tables.load sets before it reads events
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    Tables.All.foreach { t =>
+      assert(Tables.readParquet(spark, path(t)).schema == spark.read.parquet(path(t)).schema, t)
+    }
+    assert(Tables.eventsRawSchema(spark, sf01) == spark.read.parquet(path("events")).schema)
+
+    val sc = spark.sparkContext
+    val group = s"fixture-loads-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.add(Option(e.properties.getProperty("spark.job.description")).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "loads")
+    try {
+      Tables.All.foreach { t =>
+        Tables.load(spark, sf01, t)
+        if (graft.model.CellTable.PrimaryKeys.contains(t)) graft.model.CellTable.fromTable(spark, sf01, t)
+      }
+      Tables.eventsRawSchema(spark, sf01)
+      // the listener bus is asynchronous and in order: once the marker job
+      // arrives, every job the loads started has arrived before it
+      sc.setJobDescription("marker")
+      spark.range(1).collect()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!jobs.contains("marker") && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(jobs.contains("marker"), "listener never saw the marker job")
+      assert(jobs.size == 1, s"building the loads started ${jobs.size - 1} jobs")
+    } finally {
+      sc.clearJobGroup()
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
   private def roundTrip(dir: String): Unit = {
     val loaded = Tables.load(spark, dir, "events")
     assert(loaded.schema("ts").dataType === TimestampType)

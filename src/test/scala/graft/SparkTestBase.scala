@@ -1,10 +1,17 @@
 package graft
 
+import java.io.File
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.connector.read.Scan
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
+import org.apache.spark.sql.functions.col
 
-import graft.sources.{CellStoreLocalScan, CellStoreScan}
+import graft.sources.{CellStoreLocalScan, CellStoreScan, HadoopConf}
 
 /** One shared local session for the whole forked test JVM. */
 object SparkTestBase {
@@ -26,6 +33,30 @@ trait SparkTestBase {
   }
   val sf001 = "/root/testdata/sf0.001"
   val sf01 = "/root/testdata/sf0.01"
+
+  /** A range layout written by Spark's own parquet sink: range-split,
+    * key-sorted files with no bloom sidecars, compressed with `codec` and cut
+    * into row groups by the session's `parquet.block.size`. The cell-store
+    * writer honours none of these, so fixtures that need such files (a store
+    * written before the writer compressed, multi-row-group regions) use this. */
+  def rawRegionLayout(cells: DataFrame, dir: String, numRegions: Int,
+      codec: String = "snappy"): Unit =
+    cells.repartitionByRange(numRegions, col("rowKey"))
+      .sortWithinPartitions("rowKey", "family", "qualifier", "ts")
+      .write.mode("overwrite").option("compression", codec).parquet(dir)
+
+  /** The data files (`*.parquet`, not hidden) of a store directory, by name. */
+  def dataFiles(dir: String): Seq[File] =
+    new File(dir).listFiles().toSeq
+      .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
+      .sortBy(_.getName)
+
+  /** The codecs of every column chunk of a parquet file, from its footer. */
+  def codecsOf(file: File): Set[CompressionCodecName] = {
+    val reader = HadoopConf.openParquet(new Path(file.toURI))
+    try reader.getRowGroups.asScala.flatMap(_.getColumns.asScala.map(_.getCodec)).toSet
+    finally reader.close()
+  }
 
   /** The cell-store scans in `df`'s optimized plan: batch `CellStoreScan`s
     * and, for small key-pinned reads, `CellStoreLocalScan`s, which Spark

@@ -23,8 +23,35 @@ class StoreDoctorSpec extends AnyFunSuite with SparkTestBase {
     assert(statusOf(rows, "layout")._1 == "OK")
     assert(statusOf(rows, "file_order")._1 == "OK")
     assert(statusOf(rows, "region_overlap")._1 == "OK")
-    // writeRegionLayout is the raw-parquet path: no bloom sidecars — WARN
-    assert(statusOf(rows, "bloom_coverage")._1 == "WARN")
+    // writeRegionLayout goes through the cell-store writer: one sidecar per region
+    assert(statusOf(rows, "bloom_coverage") == ("OK", "4/4 sidecars present"))
+    assert(statusOf(rows, "compression")._1 == "OK")
+  }
+
+  test("a planted raw uncompressed file: missing sidecar WARN, compression INFO, both OK after compaction") {
+    val dir = java.nio.file.Files.createTempDirectory("doctor_raw").toString
+    val cells = CellTable.fromTable(spark, sf001, "customer")
+    CellTable.writeRegionLayout(cells, dir, numRegions = 2)
+    // a file of Spark's own parquet sink, uncompressed and with no sidecar
+    val raw = s"$dir.raw"
+    rawRegionLayout(cells.filter(CellTable.keyToLong(col("rowKey")) % 5 === 0)
+      .withColumn("ts", col("ts") + 1000L), raw, numRegions = 1, codec = "none")
+    val planted = dataFiles(raw).head
+    assert(codecsOf(planted) == Set(
+      org.apache.parquet.hadoop.metadata.CompressionCodecName.UNCOMPRESSED))
+    java.nio.file.Files.move(planted.toPath, java.nio.file.Paths.get(dir, planted.getName))
+
+    val rows = StoreDoctor.diagnose(spark, dir).collect()
+    val (bloomSt, bloomDetail) = statusOf(rows, "bloom_coverage")
+    assert(bloomSt == "WARN" && bloomDetail.contains(s"missing: ${planted.getName}"), bloomDetail)
+    val (st, detail) = statusOf(rows, "compression")
+    assert(st == "INFO" && detail.contains(planted.getName) &&
+      detail.contains("a major compaction rewrites them compressed"), detail)
+
+    graft.operators.Compaction.compactStore(spark, dir)
+    val healed = StoreDoctor.diagnose(spark, dir).collect()
+    assert(statusOf(healed, "compression")._1 == "OK")
+    assert(statusOf(healed, "bloom_coverage")._1 == "OK")
   }
 
   test("DSv2-written salted store: clean including bloom sidecars") {
