@@ -147,7 +147,7 @@ object CellStoreSource {
     * membership prune row groups via column statistics (the
     * setTimeRange / family-skip analogue — `CorruptRowsMR.java:80-86`
     * restricts scans to named families the same way). */
-  private[sources] def prunable(f: Filter): Boolean = f match {
+  private[graft] def prunable(f: Filter): Boolean = f match {
     case EqualTo("rowKey", _: Array[Byte])            => true
     case GreaterThan("rowKey", _: Array[Byte])        => true
     case GreaterThanOrEqual("rowKey", _: Array[Byte]) => true
@@ -333,7 +333,7 @@ object CellStoreSource {
   /** The exact key set a conjunction of filters pins `rowKey` to, if any:
     * EqualTo and In contribute sets, conjuncts intersect. None = not
     * key-set-constrained (range predicates don't enumerate keys). */
-  private[sources] def exactKeys(filters: Seq[Filter]): Option[Seq[Array[Byte]]] = {
+  private[graft] def exactKeys(filters: Seq[Filter]): Option[Seq[Array[Byte]]] = {
     def setsOf(f: Filter): Seq[Seq[Array[Byte]]] = f match {
       case EqualTo("rowKey", v: Array[Byte]) => Seq(Seq(v))
       case In("rowKey", vs) if vs.nonEmpty && vs.forall(_.isInstanceOf[Array[Byte]]) =>
