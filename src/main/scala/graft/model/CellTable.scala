@@ -227,22 +227,6 @@ object CellTable {
   }
 
   /**
-   * [[visibleLatest]] as ONE hash aggregation instead of two window
-   * passes — the read shape the read-modify-write operators
-   * ([[graft.operators.StoreMutations]], [[graft.operators.StoreCounters]])
-   * build on: per coordinate, the newest Put value, masked by Delete
-   * markers (marker at T hides every cell with ts ≤ T; a fully-masked
-   * coordinate disappears). Equivalent because the newest Put survives the
-   * mask iff its ts is beyond the newest marker — and then it IS the
-   * visible latest.
-   *
-   * `value` is the raw binary, so the final aggregate is a SortAggregate
-   * (binary buffers aren't UnsafeRow-mutable); callers whose value domain
-   * decodes to a primitive should copy this shape with the decode pushed
-   * before the groupBy ([[graft.operators.StoreCounters]] does) to get a
-   * map-side-combining HashAggregate.
-   */
-  /**
    * Wide-row view — SURVEY §1.4's optional `Result` mapping: one row per
    * (rowKey, family) with a qualifier→value MAP under delete-masked
    * latest-version visibility ([[visibleLatestValue]]), plus the column
@@ -273,6 +257,22 @@ object CellTable {
         max(col("ts")).as("ts"))
   }
 
+  /**
+   * [[visibleLatest]] as ONE hash aggregation instead of two window
+   * passes — the read shape the read-modify-write operators
+   * ([[graft.operators.StoreMutations]], [[graft.operators.StoreCounters]])
+   * build on: per coordinate, the newest Put value, masked by Delete
+   * markers (marker at T hides every cell with ts ≤ T; a fully-masked
+   * coordinate disappears). Equivalent because the newest Put survives the
+   * mask iff its ts is beyond the newest marker — and then it IS the
+   * visible latest.
+   *
+   * `value` is the raw binary, so the final aggregate is a SortAggregate
+   * (binary buffers aren't UnsafeRow-mutable); callers whose value domain
+   * decodes to a primitive should copy this shape with the decode pushed
+   * before the groupBy ([[graft.operators.StoreCounters]] does) to get a
+   * map-side-combining HashAggregate.
+   */
   def visibleLatestValue(cells: DataFrame): DataFrame = {
     val put = col("cellType") =!= "Delete"
     cells

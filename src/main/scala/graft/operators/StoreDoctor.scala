@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.{CellBloom, CellStoreSource, HadoopConf}
+import graft.sources.{CellBloom, CellStoreCompaction, CellStoreSource, HadoopConf}
 
 /**
  * `hbase hbck` for the cell store: consistency VERDICTS on top of the
@@ -34,10 +34,8 @@ object StoreDoctor {
   def diagnose(spark: SparkSession, path: String): DataFrame = {
     val dir = new Path(path)
     val fs = HadoopConf.fs(dir)
-    val listing = fs.listStatus(dir)
-    val files = listing
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet") && s.getLen > 0)
-      .sortBy(_.getPath.getName)
+    val listing = fs.listStatus(dir).toSeq
+    val files = CellStoreSource.dataFiles(listing)
     val buckets = CellStoreSource.readBuckets(dir)
     val rows = scala.collection.mutable.ArrayBuffer.empty[CheckRow]
 
@@ -80,8 +78,7 @@ object StoreDoctor {
     //    are gone)
     val unsorted = readable.collect {
       case (f, blocks) if blocks.flatMap(_.keyRange).sliding(2).exists {
-        case Seq((_, prevMax), (nextMin, _)) =>
-          java.util.Arrays.compareUnsigned(prevMax, nextMin) > 0
+        case Seq((_, prevMax), (nextMin, _)) => CellStoreSource.KeyOrder.gt(prevMax, nextMin)
         case _ => false
       } => f
     }
@@ -91,22 +88,14 @@ object StoreDoctor {
       s"row groups out of key order: ${unsorted.mkString(",")}"))
 
     // 3. region overlap (range layout): appends legitimately overlap the
-    //    base regions; flag as compaction advice, not an error. Sorted
-    //    sweep, not pairwise: sort by lo and compare each lo against the
-    //    running max hi — O(n log n) for the 10k-file store.
+    //    base regions; flag as compaction advice, not an error. The files
+    //    are grouped as the merge compaction groups them, so a file without
+    //    key statistics overlaps every file, as compaction merges it with
+    //    all; each group past its first file counts.
     if (buckets.isEmpty) {
-      val byteOrd = Ordering.fromLessThan[Array[Byte]](
-        java.util.Arrays.compareUnsigned(_, _) < 0)
-      val ranges = readable.flatMap { case (_, blocks) =>
-        val krs = blocks.flatMap(_.keyRange)
-        if (krs.isEmpty) None else Some((krs.map(_._1).min(byteOrd), krs.map(_._2).max(byteOrd)))
-      }.sortBy(_._1)(byteOrd)
-      var overlaps = 0
-      var maxHi: Option[Array[Byte]] = None
-      ranges.foreach { case (lo, hi) =>
-        if (maxHi.exists(h => java.util.Arrays.compareUnsigned(lo, h) <= 0)) overlaps += 1
-        if (maxHi.forall(h => java.util.Arrays.compareUnsigned(hi, h) > 0)) maxHi = Some(hi)
-      }
+      val overlaps = CellStoreCompaction.overlapping(
+        readable.map { case (f, blocks) => CellStoreCompaction.FileSpan(f, blocks) })
+        .map(_.size - 1).sum
       rows += (if (overlaps == 0)
         CheckRow("region_overlap", path, "OK", "region key ranges disjoint")
       else CheckRow("region_overlap", path, "INFO",
@@ -116,7 +105,7 @@ object StoreDoctor {
     // 4. bloom coverage: a file without a readable sidecar — missing, or
     //    of a length the reader rejects — degrades absent-key GETs from
     //    zero-IO elision to a footer probe: correct but slower
-    val sidecarLen = CellBloom.sidecarLengths(listing.toSeq)
+    val sidecarLen = CellBloom.sidecarLengths(listing)
     val names = files.map(_.getPath.getName)
     val missing = names.filterNot(sidecarLen.contains)
     val malformed = names.filter(f => sidecarLen.get(f).exists(!CellBloom.validLength(_)))

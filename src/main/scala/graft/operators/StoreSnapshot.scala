@@ -72,9 +72,7 @@ object StoreSnapshot {
     val held = scala.collection.mutable.Map[(String, Long), String]()
     prior.foreach(p => manifest(p).foreach { case (n, l, h) =>
       held((n, l)) = h })
-    val pinned = sfs.listStatus(src)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet") && s.getLen > 0)
-      .map(_.getPath.getName).sorted.toSeq
+    val pinned = CellStoreSource.dataFiles(sfs.listStatus(src).toSeq).map(_.getPath.getName)
     // side metadata travels with the data files (absent entries are fine:
     // a store without a salt manifest is a range store, one without bloom
     // sidecars just loses point-GET file elision). The salt manifest and

@@ -26,32 +26,24 @@ object StoreStats {
       minKey: Option[String],
       maxKey: Option[String])
 
-  /** One row per store file, footer metadata only. */
+  /** One row per store file, footer metadata only. A file whose footer
+    * lacks key statistics for some row group reports null keys: it may hold
+    * any key ([[CellStoreSource.keyRangeOf]]). */
   def describe(spark: SparkSession, path: String): DataFrame = {
     val dir = new Path(path)
     val fs = HadoopConf.fs(dir)
-    val stats = fs.listStatus(dir)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet") && s.getLen > 0)
-      .sortBy(_.getPath.getName)
-      .map { st =>
-        val blocks = CellStoreSource.footerBlocks(st.getPath)
-        val ranges = blocks.flatMap(_.keyRange)
-        def render(b: Array[Byte]): String = BytesBinaryCodec.encode(b)
-        FileStat(
-          file = st.getPath.getName,
-          bucket = CellStoreSource.bucketIdOf(st.getPath.getName),
-          rows = blocks.map(_.rows).sum,
-          bytes = st.getLen,
-          rowGroups = blocks.length,
-          minKey = if (ranges.isEmpty) None
-            else Some(render(ranges.map(_._1)
-              .min(Ordering.fromLessThan[Array[Byte]](
-                java.util.Arrays.compareUnsigned(_, _) < 0)))),
-          maxKey = if (ranges.isEmpty) None
-            else Some(render(ranges.map(_._2)
-              .max(Ordering.fromLessThan[Array[Byte]](
-                java.util.Arrays.compareUnsigned(_, _) < 0)))))
-      }.toSeq
+    val stats = CellStoreSource.dataFiles(fs.listStatus(dir).toSeq).map { st =>
+      val blocks = CellStoreSource.footerBlocks(st.getPath)
+      val range = CellStoreSource.keyRangeOf(blocks)
+      FileStat(
+        file = st.getPath.getName,
+        bucket = CellStoreSource.bucketIdOf(st.getPath.getName),
+        rows = blocks.map(_.rows).sum,
+        bytes = st.getLen,
+        rowGroups = blocks.length,
+        minKey = range.map(r => BytesBinaryCodec.encode(r._1)),
+        maxKey = range.map(r => BytesBinaryCodec.encode(r._2)))
+    }
     import spark.implicits._
     stats.toDF()
   }

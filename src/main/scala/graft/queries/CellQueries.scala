@@ -4,6 +4,7 @@ package queries
 import graft.model.CellTable
 import graft.operators._
 import graft.queries.QueryDef.sql
+import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -225,7 +226,7 @@ object CellQueries {
     * orders-per-customer cell population — variable per-key weights, so
     * the rank walk is non-trivial; n=8 regions. */
   private def regionSplitsQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val cells = spark.read.parquet(s"$sfDir/orders.parquet")
+    val cells = Tables.readParquet(spark, s"$sfDir/orders.parquet")
       .select(CellTable.bigEndianKey(col("o_custkey")).as("rowKey"))
     StoreRebalance.splitPoints(cells, 8)
       .select(col("split_idx"),
@@ -238,7 +239,7 @@ object CellQueries {
     * spend_floor counter that does not exist yet — increments create it
     * from 0). Output: the new counter versions, values decoded. */
   private def counterIncrQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val cust = spark.read.parquet(s"$sfDir/customer.parquet")
+    val cust = Tables.readParquet(spark, s"$sfDir/customer.parquet")
     val base = cust.select(
       CellTable.bigEndianKey(col("c_custkey")).as("rowKey"),
       lit("counters").as("family"),
@@ -253,7 +254,7 @@ object CellQueries {
       base,
       pmod(CellTable.keyToLong(col("rowKey")), lit(9)) === 0,
       lit(CellTable.BaseTs))
-    val orders = spark.read.parquet(s"$sfDir/orders.parquet")
+    val orders = Tables.readParquet(spark, s"$sfDir/orders.parquet")
     val deltas = orders.select(
         CellTable.bigEndianKey(col("o_custkey")).as("rowKey"),
         lit("counters").as("family"),
@@ -286,7 +287,7 @@ object CellQueries {
       col("qualifier").cast("string") === "c_mktsegment" &&
         pmod(CellTable.keyToLong(col("rowKey")), lit(5)) === 0,
       lit(CellTable.BaseTs))
-    val cust = spark.read.parquet(s"$sfDir/customer.parquet")
+    val cust = Tables.readParquet(spark, s"$sfDir/customer.parquet")
     def mut(target: String, value: String, check: String, expected: Option[String],
         onlyEven: Boolean) = {
       val src = if (onlyEven) cust.filter(pmod(col("c_custkey"), lit(2)) === 0) else cust
@@ -322,7 +323,7 @@ object CellQueries {
       col("qualifier").cast("string") === "c_name" &&
         pmod(CellTable.keyToLong(col("rowKey")), lit(10)) === 0,
       lit(CellTable.BaseTs))
-    val cust = spark.read.parquet(s"$sfDir/customer.parquet")
+    val cust = Tables.readParquet(spark, s"$sfDir/customer.parquet")
     def app(suffix: String, mod: Int) = cust
       .filter(pmod(col("c_custkey"), lit(mod)) === 0)
       .select(
@@ -654,7 +655,7 @@ object CellQueries {
   private def zorderScanQuery(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = WorkDirs.once(s"zorder_$sfDir") { dir =>
       operators.ZOrderLayout.write(
-        spark.read.parquet(s"$sfDir/lineitem.parquet")
+        Tables.readParquet(spark, s"$sfDir/lineitem.parquet")
           .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey", "l_quantity"),
         "l_partkey", "l_suppkey", dir, numFiles = 16)
     }
@@ -678,7 +679,7 @@ object CellQueries {
     * `\xHH` rendering ([[rowKeySql]]). */
   private def sqlSurfaceQuery(spark: SparkSession, sfDir: String): DataFrame = {
     graft.functions.GraftFunctionRegistry.registerAll(spark)
-    spark.read.parquet(s"$sfDir/orders.parquet")
+    Tables.readParquet(spark, s"$sfDir/orders.parquet")
       .createOrReplaceTempView("graft_orders_v")
     spark.sql(
       """SELECT o_orderkey,

@@ -4,6 +4,7 @@ package queries
 import graft.operators._
 import graft.queries.OracleSql._
 import graft.queries.QueryDef.sql
+import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -15,7 +16,7 @@ object SearchQueries {
   /** Per-doc tf-idf keywords: rational idf (N+1)/(df+1) — two IEEE ops
     * per score, no sums, bit-exact cross-engine. Top 3 per doc. */
   private def tfidfQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = Tables.readParquet(spark, s"$sfDir/documents.parquet")
     InvertedIndex.tfidfTopTerms(docs, k = 3)
       .select(col("doc_id"), col("term"), col("score"), col("rank"))
   }
@@ -25,7 +26,7 @@ object SearchQueries {
   private def invIndexDir(spark: SparkSession, sfDir: String): String =
     WorkDirs.once(s"invidx_$sfDir") { dir =>
       InvertedIndex.buildIndex(spark,
-        spark.read.parquet(s"$sfDir/documents.parquet"), dir)
+        Tables.readParquet(spark, s"$sfDir/documents.parquet"), dir)
     }
 
   /** BM25 through the same index store: length-normalized Okapi ranking

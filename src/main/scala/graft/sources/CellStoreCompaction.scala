@@ -17,6 +17,8 @@ import org.apache.spark.sql.graft.Shims
 import org.apache.spark.sql.sources.{Filter, GreaterThanOrEqual, LessThan}
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.sources.CellStoreSource.KeyOrder
+
 /**
  * Merge compaction of a cell store — HBase's region compaction: a task
  * merges the sorted files of one region, keeps the cells a read can still
@@ -70,9 +72,7 @@ object CellStoreCompaction {
     val dir = new Path(path)
     val fs = HadoopConf.fs(dir)
     if (!fs.exists(dir)) return Nil
-    val inputs = fs.listStatus(dir).toSeq
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet") && s.getLen > 0)
-      .map(_.getPath).sortBy(_.getName)
+    val inputs = CellStoreSource.dataFiles(fs.listStatus(dir).toSeq).map(_.getPath)
     if (inputs.isEmpty) return Nil
     val buckets = CellStoreSource.readBuckets(dir)
     val groups = plan(inputs, buckets)
@@ -91,47 +91,41 @@ object CellStoreCompaction {
         .groupBy(_._1).toSeq.sortBy(_._1)
         .map { case (b, fs) => MergeGroup(b, fs.map(_._2)) }
     case None =>
-      val spans = files.map(f => FileSpan(f.toString, CellStoreSource.footerBlocks(f)))
-        .filter(_.blocks.exists(_.rows > 0))
-      overlapping(spans).flatMap(slices)
-        .zipWithIndex.map { case (g, i) => g.copy(partitionId = i) }
+      overlapping(files.map(f => FileSpan(f.toString, CellStoreSource.footerBlocks(f))))
+        .flatMap(slices).zipWithIndex.map { case (g, i) => g.copy(partitionId = i) }
   }
 
   /** A range-store file and its row groups; `range` is its rowKey
-    * `[min, max]`, None when a row group has no key statistics. */
-  private final case class FileSpan(file: String, blocks: Seq[CellStoreSource.BlockInfo]) {
-    lazy val range: Option[(Array[Byte], Array[Byte])] =
-      if (blocks.exists(b => b.rows > 0 && b.keyRange.isEmpty)) None
-      else {
-        val ranges = blocks.flatMap(_.keyRange)
-        Some((ranges.map(_._1).min(KeyOrder), ranges.map(_._2).max(KeyOrder)))
-      }
+    * `[min, max]` ([[CellStoreSource.keyRangeOf]]). */
+  private[graft] final case class FileSpan(file: String, blocks: Seq[CellStoreSource.BlockInfo]) {
+    lazy val range: Option[(Array[Byte], Array[Byte])] = CellStoreSource.keyRangeOf(blocks)
   }
 
-  private val KeyOrder: Ordering[Array[Byte]] = (a, b) => CellStoreSource.cmp(a, b)
-
-  /** Files whose key intervals overlap, transitively; a file without key
-    * statistics could hold any key, so it joins every file in one group. */
-  private def overlapping(spans: Seq[FileSpan]): Seq[Seq[FileSpan]] =
+  /** The files that hold rows, grouped where their key intervals overlap,
+    * transitively; a file without key statistics could hold any key, so it
+    * joins every file in one group. */
+  private[graft] def overlapping(files: Seq[FileSpan]): Seq[Seq[FileSpan]] = {
+    val spans = files.filter(_.blocks.exists(_.rows > 0))
     if (spans.exists(_.range.isEmpty)) Seq(spans)
     else {
       val groups = ArrayBuffer.empty[ArrayBuffer[FileSpan]]
       var hi: Array[Byte] = null
       spans.sortBy(_.range.get._1)(KeyOrder).foreach { s =>
         val (min, max) = s.range.get
-        if (hi != null && CellStoreSource.cmp(min, hi) <= 0) groups.last += s
+        if (hi != null && KeyOrder.lteq(min, hi)) groups.last += s
         else groups += ArrayBuffer(s)
-        if (hi == null || CellStoreSource.cmp(max, hi) > 0) hi = max
+        if (hi == null || KeyOrder.gt(max, hi)) hi = max
       }
       groups.map(_.toSeq).toSeq
     }
+  }
 
   /** The regions an overlapping group spans: the most pairwise key-disjoint
     * files it holds (greedy by max key, which is optimal for intervals). */
   private def regionsIn(group: Seq[FileSpan]): Int =
     group.flatMap(_.range).sortBy(_._2)(KeyOrder)
       .foldLeft((0, Option.empty[Array[Byte]])) { case ((n, end), (min, max)) =>
-        if (end.forall(CellStoreSource.cmp(min, _) > 0)) (n + 1, Some(max)) else (n, end)
+        if (end.forall(KeyOrder.gt(min, _))) (n + 1, Some(max)) else (n, end)
       }._1
 
   /** A key-disjoint region file as is; an overlapping group cut at row-group
@@ -147,18 +141,22 @@ object CellStoreCompaction {
     var last = blocks.head._1
     var rows = 0L
     blocks.foreach { case (min, rowCount) =>
-      if (rows >= target && cuts.size < n - 1 && CellStoreSource.cmp(min, last) > 0) {
+      if (rows >= target && cuts.size < n - 1 && KeyOrder.gt(min, last)) {
         cuts += min; last = min; rows = 0L
       }
       rows += rowCount
     }
     val bounds = None +: cuts.map(Some(_)).toSeq
     bounds.zip(bounds.tail :+ None).map { case (lo, hi) =>
-      val slice = CellStoreSource.KeyRange(lo.map((_, true)), hi.map((_, false)))
-      MergeGroup(0, group.filter(_.range.forall { case (mn, mx) => slice.overlaps(mn, mx) })
+      val slice = CellStoreSource.boundsOf(sliceFilters(lo, hi))
+      MergeGroup(0, group.filter(_.range.forall { case (mn, mx) => slice.keeps("rowKey", mn, mx) })
         .map(_.file), lo, hi)
     }
   }
+
+  /** The filters that keep a slice's rows: rowKey in `[lo, hi)`. */
+  private def sliceFilters(lo: Option[Array[Byte]], hi: Option[Array[Byte]]): Seq[Filter] =
+    lo.map(GreaterThanOrEqual("rowKey", _)).toSeq ++ hi.map(LessThan("rowKey", _))
 
   /** Run one task per group and return their commit messages. On failure,
     * wait until every task of the job has ended before the caller aborts:
@@ -196,9 +194,8 @@ object CellStoreCompaction {
   private def mergeTask(factory: CellStoreWriterFactory, g: MergeGroup,
       maxVersions: Int, ttlWatermark: Long): WriterCommitMessage = {
     val ctx = TaskContext.get()
-    val filters: Seq[Filter] =
-      g.lo.map(GreaterThanOrEqual("rowKey", _)).toSeq ++ g.hi.map(LessThan("rowKey", _))
-    val slice = CellStoreSource.rangeOf(filters)
+    val filters = sliceFilters(g.lo, g.hi)
+    val slice = CellStoreSource.boundsOf(filters)
     val bytesRead = Shims.inputBytesCallback()
     var rowsRead = 0L
     def mergeInto(files: Seq[String], keepMarkers: Boolean)(write: UnsafeRow => Unit): Unit = {
@@ -207,7 +204,7 @@ object CellStoreCompaction {
         CellStoreSource.boundsSetOf(filters)))
       try {
         val streams = readers.map(r => cellsOf(r, ctx, rowsRead += _)
-          .filter(c => slice.overlaps(c.key, c.key)))
+          .filter(c => slice.keeps("rowKey", c.key, c.key)))
         survivors(merged(streams), maxVersions, ttlWatermark, keepMarkers).foreach(write)
       } finally readers.foreach(_.close())
     }
@@ -268,9 +265,9 @@ object CellStoreCompaction {
     if (a == null) { if (b == null) 0 else -1 } else if (b == null) 1 else cmp(a, b)
 
   private def coordinateCmp(a: Cell, b: Cell): Int = {
-    var c = CellStoreSource.cmp(a.key, b.key)
+    var c = KeyOrder.compare(a.key, b.key)
     if (c == 0) c = nullsFirst(a.family, b.family)(_ binaryCompare _)
-    if (c == 0) c = nullsFirst(a.qualifier, b.qualifier)(CellStoreSource.cmp)
+    if (c == 0) c = nullsFirst(a.qualifier, b.qualifier)(KeyOrder.compare)
     c
   }
 

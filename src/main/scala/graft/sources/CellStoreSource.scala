@@ -1,15 +1,19 @@
 package graft.sources
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.util.{Map => JMap}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.column.statistics.{BinaryStatistics, LongStatistics}
+import org.apache.parquet.hadoop.metadata.{BlockMetaData, CompressionCodecName}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -35,11 +39,22 @@ import org.apache.spark.unsafe.types.UTF8String
  *  - **Row-group skipping.** Inside a selected region the reader consults
  *    per-row-group statistics and skips groups outside the key range —
  *    the HFile-block-index analogue. The same statistics sweep prunes on
- *    the OTHER cell dimensions: `ts` bounds (the `Scan.setTimeRange`
- *    analogue of the reference's version dimension, `CopyRow.java:133`)
- *    and `family` membership (`CorruptRowsMR.java:80-86` restricts scans
- *    to named families) — a time-windowed or single-family scan of a
- *    time-ordered store reads only the row groups that can match.
+ *    the OTHER cell dimensions: `ts` (the `Scan.setTimeRange` analogue of
+ *    the reference's version dimension, `CopyRow.java:133`), `family`
+ *    (`CorruptRowsMR.java:80-86` restricts scans to named families) and
+ *    `qualifier` — a time-windowed or single-family scan of a time-ordered
+ *    store reads only the row groups that can match.
+ *  - **One bound per column.** Every prunable column gets one
+ *    [[CellStoreSource.Bound]] from the pushed filters: the interval its
+ *    comparisons allow and the values its `EqualTo`/`In` pin it to, in the
+ *    column's order (unsigned bytes; `family` as UTF-8 bytes; longs for
+ *    `ts`). A row group is kept when every column's statistics can hold a
+ *    value of its bound; an `Or` of conjunctions keeps it when any branch
+ *    does (the MultiRowRangeFilter shape).
+ *  - **Chunks.** A range-store scan splits each surviving region file into
+ *    row-group-aligned chunks of at most Spark's
+ *    `spark.sql.files.maxPartitionBytes` compressed bytes, one
+ *    `InputPartition` each; a salted store reads one partition per bucket.
  *  - **Column pruning (F2/S3).** `SupportsPushDownRequiredColumns` narrows
  *    the parquet read to the requested columns at the IO level (the
  *    decoder's requested schema) — a key-only scan reads no value bytes, the
@@ -94,187 +109,124 @@ object CellStoreSource {
     StructField("cellType", StringType),
     StructField("value", BinaryType)))
 
-  private[sources] def cmp(a: Array[Byte], b: Array[Byte]): Int =
-    java.util.Arrays.compareUnsigned(a, b)
+  /** Unsigned lexicographic byte order: HBase `Bytes.compareTo`, parquet
+    * BINARY statistics and Spark's BinaryType all order keys this way. */
+  private[graft] val KeyOrder: Ordering[Array[Byte]] =
+    (a, b) => java.util.Arrays.compareUnsigned(a, b)
 
-  /** Key interval derived from pushed filters; `None` bound = unbounded. */
-  private[sources] final case class KeyRange(
-      lower: Option[(Array[Byte], Boolean)],   // (bound, inclusive)
-      upper: Option[(Array[Byte], Boolean)]) {
-    /** Does [min,max] (both inclusive, from stats) intersect this range? */
-    def overlaps(min: Array[Byte], max: Array[Byte]): Boolean = {
-      val aboveLower = lower.forall { case (l, incl) =>
-        if (incl) cmp(max, l) >= 0 else cmp(max, l) > 0 }
-      val belowUpper = upper.forall { case (u, incl) =>
-        if (incl) cmp(min, u) <= 0 else cmp(min, u) < 0 }
-      aboveLower && belowUpper
+  /** The data files of a store listing: its non-empty `.parquet` files, by
+    * name (bloom sidecars, manifests and checksum files are not). */
+  private[graft] def dataFiles(listing: Seq[FileStatus]): Seq[FileStatus] =
+    listing.filter(s => s.isFile && s.getPath.getName.endsWith(".parquet") && s.getLen > 0)
+      .sortBy(_.getPath.getName)
+
+  // Footer-statistics pruning ----------------------------------------------
+
+  /** The order each prunable column's values and statistics compare in:
+    * bytes for `rowKey` and `qualifier`, `family` as its UTF-8 bytes (which
+    * order as its code points do, as Spark compares strings), longs for `ts`. */
+  private val ColumnOrder: Map[String, Ordering[Any]] = Map(
+    "rowKey" -> KeyOrder, "family" -> KeyOrder, "qualifier" -> KeyOrder, "ts" -> Ordering.Long)
+    .map { case (c, o) => c -> o.asInstanceOf[Ordering[Any]] }
+
+  /** A pushed literal in its column's order; None when the column is not
+    * prunable or the literal is not of the column's type. */
+  private def valueOf(col: String, v: Any): Option[Any] = (col, v) match {
+    case ("rowKey" | "qualifier", b: Array[Byte]) => Some(b)
+    case ("family", s: String)                    => Some(s.getBytes(UTF_8))
+    case ("ts", n @ (_: java.lang.Long | _: java.lang.Integer | _: java.lang.Short)) =>
+      Some(n.asInstanceOf[Number].longValue)
+    case _ => None
+  }
+
+  /** One column's pruning bound: the interval its range conjuncts allow
+    * (`(value, inclusive)` ends, None = unbounded) and the values its
+    * `EqualTo` / `In` conjuncts pin it to (None = any value). */
+  private[graft] final case class Bound(col: String,
+      lower: Option[(Any, Boolean)] = None, upper: Option[(Any, Boolean)] = None,
+      values: Option[Seq[Any]] = None) {
+    private val ord = ColumnOrder(col)
+
+    /** Both bounds at once: the tighter end on each side, the common values. */
+    def and(o: Bound): Bound = Bound(col,
+      (lower ++ o.lower).reduceOption(tighter(1)), (upper ++ o.upper).reduceOption(tighter(-1)),
+      (values ++ o.values).reduceOption((a, b) => a.filter(x => b.exists(ord.equiv(x, _)))))
+
+    private def tighter(side: Int)(a: (Any, Boolean), b: (Any, Boolean)): (Any, Boolean) = {
+      val c = side * ord.compare(a._1, b._1)
+      if (c > 0 || c == 0 && !a._2) a else b
+    }
+
+    private def overlaps(min: Any, max: Any): Boolean =
+      lower.forall { case (l, incl) => ord.gt(max, l) || incl && ord.equiv(max, l) } &&
+        upper.forall { case (u, incl) => ord.lt(min, u) || incl && ord.equiv(min, u) }
+
+    /** The pinned values inside the interval, sorted. */
+    private lazy val pinned = values.map(_.filter(v => overlaps(v, v)).sorted(ord).toIndexedSeq)
+
+    /** Can values spanning `[min, max]` (both inclusive) hold a match? */
+    def keeps(min: Any, max: Any): Boolean = pinned match {
+      case Some(vs) =>
+        val i = vs.search(min)(ord).insertionPoint
+        i < vs.size && ord.lteq(vs(i), max)
+      case None => overlaps(min, max)
     }
   }
 
-  private[sources] val FullRange = KeyRange(None, None)
-
-  /** Version/time interval from pushed `ts` predicates — the columnar
-    * analogue of `Scan.setTimeRange` (the reference's version dimension,
-    * `CopyRow.java:133`): row groups whose ts [min,max] misses the interval
-    * are skipped without page IO. */
-  private[sources] final case class TsRange(
-      lower: Option[(Long, Boolean)],   // (bound, inclusive)
-      upper: Option[(Long, Boolean)]) {
-    /** Does [min,max] (both inclusive, from stats) intersect this range? */
-    def overlaps(min: Long, max: Long): Boolean = {
-      val aboveLower = lower.forall { case (l, incl) =>
-        if (incl) max >= l else max > l }
-      val belowUpper = upper.forall { case (u, incl) =>
-        if (incl) min <= u else min < u }
-      aboveLower && belowUpper
-    }
-  }
-
-  private[sources] val FullTsRange = TsRange(None, None)
-
-  /** Long-valued literal as pushed for a LongType column. */
-  private object TsLong {
-    def unapply(v: Any): Option[Long] = v match {
-      case l: java.lang.Long    => Some(l)
-      case i: java.lang.Integer => Some(i.toLong)
-      case s: java.lang.Short   => Some(s.toLong)
-      case _                    => None
-    }
-  }
-
-  /** Is this a predicate the scan can use for region/row-group pruning?
-    * rowKey bounds prune regions AND row groups; ts bounds and family
-    * membership prune row groups via column statistics (the
-    * setTimeRange / family-skip analogue — `CorruptRowsMR.java:80-86`
-    * restricts scans to named families the same way). */
-  private[graft] def prunable(f: Filter): Boolean = f match {
-    case EqualTo("rowKey", _: Array[Byte])            => true
-    case GreaterThan("rowKey", _: Array[Byte])        => true
-    case GreaterThanOrEqual("rowKey", _: Array[Byte]) => true
-    case LessThan("rowKey", _: Array[Byte])           => true
-    case LessThanOrEqual("rowKey", _: Array[Byte])    => true
-    case In("rowKey", vs) =>
-      vs.nonEmpty && vs.forall(_.isInstanceOf[Array[Byte]])
-    case EqualTo("ts", TsLong(_))                     => true
-    case GreaterThan("ts", TsLong(_))                 => true
-    case GreaterThanOrEqual("ts", TsLong(_))          => true
-    case LessThan("ts", TsLong(_))                    => true
-    case LessThanOrEqual("ts", TsLong(_))             => true
-    case In("ts", vs) =>
-      vs.nonEmpty && vs.forall(TsLong.unapply(_).isDefined)
-    case EqualTo("family", _: String)                 => true
-    case In("family", vs) =>
-      vs.nonEmpty && vs.forall(_.isInstanceOf[String])
-    // qualifier bounds (HBase ColumnPrefixFilter/ColumnRangeFilter): pay
-    // off on WIDE-ROW stores, where a row group holds one row's many
-    // columns and its qualifier stats are tight; on tall stores the
-    // qualifier cycles per row and the stats span everything (kept = all,
-    // pruning a no-op — still correct, residuals re-check)
-    case EqualTo("qualifier", _: Array[Byte])            => true
-    case GreaterThan("qualifier", _: Array[Byte])        => true
-    case GreaterThanOrEqual("qualifier", _: Array[Byte]) => true
-    case LessThan("qualifier", _: Array[Byte])           => true
-    case LessThanOrEqual("qualifier", _: Array[Byte])    => true
-    case In("qualifier", vs) =>
-      vs.nonEmpty && vs.forall(_.isInstanceOf[Array[Byte]])
-    // one prunable side is enough: the bound folds skip conjuncts they do
-    // not understand, so a pushed And(rowKey bound, other predicate) still
-    // yields its region/row-group pruning (residuals keep correctness)
-    case And(l, r)                                    => prunable(l) || prunable(r)
-    // a disjunction prunes only if BOTH branches do: one opaque branch
-    // could match anywhere, making the whole Or unable to skip any block
-    // (the MultiRowRangeFilter analogue — see boundsSetOf)
-    case Or(l, r)                                     => prunable(l) && prunable(r)
-    case _                                            => false
-  }
-
-  /** Fold pushed filters into one conjunctive key range. */
-  private[sources] def rangeOf(filters: Seq[Filter]): KeyRange =
-    filters.foldLeft(FullRange)(tighten)
-
-  /** Fold pushed filters into one conjunctive qualifier byte range. */
-  private[sources] def qualRangeOf(filters: Seq[Filter]): KeyRange =
-    filters.foldLeft(FullRange)(tightenCol("qualifier"))
-
-  /** Fold pushed filters into one conjunctive ts interval. */
-  private[sources] def tsRangeOf(filters: Seq[Filter]): TsRange =
-    filters.foldLeft(FullTsRange)(tightenTs)
-
-  private def tightenTs(r: TsRange, f: Filter): TsRange = f match {
-    case EqualTo("ts", TsLong(v)) =>
-      tightenTs(tightenTs(r, GreaterThanOrEqual("ts", v)), LessThanOrEqual("ts", v))
-    case GreaterThan("ts", TsLong(v)) =>
-      TsRange(maxLowerTs(r.lower, v, incl = false), r.upper)
-    case GreaterThanOrEqual("ts", TsLong(v)) =>
-      TsRange(maxLowerTs(r.lower, v, incl = true), r.upper)
-    case LessThan("ts", TsLong(v)) =>
-      TsRange(r.lower, minUpperTs(r.upper, v, incl = false))
-    case LessThanOrEqual("ts", TsLong(v)) =>
-      TsRange(r.lower, minUpperTs(r.upper, v, incl = true))
-    // an IN tightens to its [min, max] envelope (correct superset; exact
-    // membership is re-checked by the residual filter)
-    case In("ts", vs) if vs.nonEmpty && vs.forall(TsLong.unapply(_).isDefined) =>
-      val ls = vs.toSeq.map(TsLong.unapply(_).get)
-      tightenTs(tightenTs(r, GreaterThanOrEqual("ts", ls.min)), LessThanOrEqual("ts", ls.max))
-    case And(l, rr) => tightenTs(tightenTs(r, l), rr)
-    case _          => r
-  }
-
-  private def maxLowerTs(cur: Option[(Long, Boolean)], v: Long,
-                         incl: Boolean): Option[(Long, Boolean)] = cur match {
-    case Some((b, bi)) => if (v > b || (v == b && !incl)) Some((v, incl)) else Some((b, bi))
-    case None          => Some((v, incl))
-  }
-
-  private def minUpperTs(cur: Option[(Long, Boolean)], v: Long,
-                         incl: Boolean): Option[(Long, Boolean)] = cur match {
-    case Some((b, bi)) => if (v < b || (v == b && !incl)) Some((v, incl)) else Some((b, bi))
-    case None          => Some((v, incl))
-  }
-
-  /** The family set a conjunction of filters pins `family` to, if any
-    * (EqualTo / In contribute sets, conjuncts intersect). None = not
-    * family-constrained. */
-  private[sources] def familiesOf(filters: Seq[Filter]): Option[Set[String]] = {
-    def setsOf(f: Filter): Seq[Set[String]] = f match {
-      case EqualTo("family", s: String) => Seq(Set(s))
-      case In("family", vs) if vs.nonEmpty && vs.forall(_.isInstanceOf[String]) =>
-        Seq(vs.map(_.asInstanceOf[String]).toSet)
-      case And(l, r) => setsOf(l) ++ setsOf(r)
-      case _         => Nil
-    }
-    val sets = filters.flatMap(setsOf)
-    if (sets.isEmpty) None else Some(sets.reduce(_ intersect _))
-  }
-
-  /** All pruning dimensions of a pushed-filter conjunction, applied to a
-    * row group's footer statistics. Missing stats on a dimension keep the
-    * group (pruning is pure IO elision; residuals keep correctness). */
-  private[graft] final case class ScanBounds(
-      key: KeyRange, ts: TsRange, families: Option[Set[String]],
-      qual: KeyRange = FullRange) {
-    def keep(info: BlockInfo): Boolean = {
-      val famHit = (families, info.famRange) match {
-        case (Some(fs), Some((mn, mx))) =>
-          fs.exists { f =>
-            val b = f.getBytes("UTF-8")
-            cmp(b, mn) >= 0 && cmp(b, mx) <= 0
-          }
-        case _ => true
+  /** The bound one leaf filter puts on its column: a comparison, `EqualTo`
+    * or non-empty `In` on a prunable column, with literals of its type. */
+  private object Leaf {
+    def unapply(f: Filter): Option[Bound] = {
+      def on(c: String, vs: Seq[Any])(bound: Seq[Any] => Bound): Option[Bound] = {
+        val xs = vs.flatMap(valueOf(c, _))
+        if (vs.nonEmpty && xs.size == vs.size) Some(bound(xs)) else None
       }
-      info.keyRange.forall { case (mn, mx) => key.overlaps(mn, mx) } &&
-        info.tsRange.forall { case (mn, mx) => ts.overlaps(mn, mx) } &&
-        info.qualRange.forall { case (mn, mx) => qual.overlaps(mn, mx) } &&
-        famHit
+      f match {
+        case EqualTo(c, v)            => on(c, Seq(v))(xs => Bound(c, values = Some(xs)))
+        case In(c, vs)                => on(c, vs.toSeq)(xs => Bound(c, values = Some(xs)))
+        case GreaterThan(c, v)        => on(c, Seq(v))(xs => Bound(c, lower = Some((xs.head, false))))
+        case GreaterThanOrEqual(c, v) => on(c, Seq(v))(xs => Bound(c, lower = Some((xs.head, true))))
+        case LessThan(c, v)           => on(c, Seq(v))(xs => Bound(c, upper = Some((xs.head, false))))
+        case LessThanOrEqual(c, v)    => on(c, Seq(v))(xs => Bound(c, upper = Some((xs.head, true))))
+        case _                        => None
+      }
     }
-    def keep(block: org.apache.parquet.hadoop.metadata.BlockMetaData): Boolean =
-      keep(BlockInfo(0, 0L, 0L, rowGroupKeyRange(block),
-        rowGroupTsRange(block), rowGroupFamRange(block), rowGroupQualRange(block)))
+  }
+
+  /** Is this a predicate the scan can prune regions and row groups by?
+    * `rowKey` bounds prune regions and row groups; `ts` bounds (the
+    * `Scan.setTimeRange` analogue, `CopyRow.java:133`), `family`
+    * (`CorruptRowsMR.java:80-86` restricts scans to named families) and
+    * `qualifier` bounds (ColumnRangeFilter; tight only on wide-row stores)
+    * prune row groups. One prunable side makes an `And` prunable, since the
+    * fold skips conjuncts it does not know; an `Or` needs both, since an
+    * opaque branch could match anywhere. */
+  private[graft] def prunable(f: Filter): Boolean = f match {
+    case And(l, r) => prunable(l) || prunable(r)
+    case Or(l, r)  => prunable(l) && prunable(r)
+    case Leaf(_)   => true
+    case _         => false
+  }
+
+  /** The leaf bounds of a conjunction, nested `And`s included. */
+  private def leaves(f: Filter): Seq[Bound] = f match {
+    case And(l, r) => leaves(l) ++ leaves(r)
+    case Leaf(b)   => Seq(b)
+    case _         => Nil
+  }
+
+  /** The bounds a conjunction of pushed filters puts on each column. */
+  private[graft] final case class ScanBounds(cols: Map[String, Bound]) {
+    /** Can values of `col` spanning `[min, max]` match? */
+    def keeps(col: String, min: Any, max: Any): Boolean = cols.get(col).forall(_.keeps(min, max))
+    /** Can this row group hold a match? A column without statistics keeps
+      * it: pruning only skips IO, and residual filters re-check rows. */
+    def keep(info: BlockInfo): Boolean =
+      cols.keys.forall(c => info.stats.get(c).forall { case (mn, mx) => keeps(c, mn, mx) })
   }
 
   private[graft] def boundsOf(filters: Seq[Filter]): ScanBounds =
-    ScanBounds(rangeOf(filters), tsRangeOf(filters), familiesOf(filters),
-      qualRangeOf(filters))
+    ScanBounds(filters.flatMap(leaves).groupMapReduce(_.col)(identity)(_ and _))
 
   /** A DISJUNCTION of conjunctive scan bounds — the pruning shape of
     * HBase's MultiRowRangeFilter: a multi-range scan (several key ranges,
@@ -282,8 +234,7 @@ object CellStoreSource {
     * keeps it. The conjunctive [[ScanBounds]] is the 1-branch case. */
   private[graft] final case class ScanBoundsSet(branches: Seq[ScanBounds]) {
     def keep(info: BlockInfo): Boolean = branches.exists(_.keep(info))
-    def keep(block: org.apache.parquet.hadoop.metadata.BlockMetaData): Boolean =
-      branches.exists(_.keep(block))
+    def keep(block: BlockMetaData): Boolean = keep(blockInfo(0, block))
   }
 
   /** Expand one filter to its disjunctive branches (each a conjunction). */
@@ -293,158 +244,75 @@ object CellStoreSource {
     case leaf      => Seq(Seq(leaf))
   }
 
+  /** Most branches a pushed-filter disjunction expands to. */
+  private val MaxBranches = 16
+
   /** Fold pushed filters (a conjunction) into a bounds DISJUNCTION via
-    * per-filter DNF expansion. Expansion is capped: a filter whose cross
-    * product would exceed the cap is dropped from the bounds — correct
-    * (fewer constraints only keep more blocks; residual filters re-check
-    * rows), and it bounds planner work on adversarial predicates. */
-  private[graft] def boundsSetOf(filters: Seq[Filter],
-      maxBranches: Int = 16): ScanBoundsSet = {
+    * per-filter DNF expansion. A filter whose cross product would exceed
+    * [[MaxBranches]] is dropped from the bounds — correct (fewer
+    * constraints only keep more blocks; residual filters re-check rows),
+    * and it bounds planner work on adversarial predicates. */
+  private[graft] def boundsSetOf(filters: Seq[Filter]): ScanBoundsSet = {
     val branches = filters.foldLeft(Seq(Seq.empty[Filter])) { (acc, f) =>
       val fb = dnfBranches(f)
-      if (acc.size.toLong * fb.size > maxBranches) acc
+      if (acc.size.toLong * fb.size > MaxBranches) acc
       else for (a <- acc; b <- fb) yield a ++ b
     }
     ScanBoundsSet(branches.map(boundsOf))
   }
 
-  private def tighten(r: KeyRange, f: Filter): KeyRange = tightenCol("rowKey")(r, f)
-
-  /** [[tighten]] parameterized by the BINARY column the bounds fold over
-    * (`rowKey` for region pruning, `qualifier` for the column-range form). */
-  private def tightenCol(name: String)(r: KeyRange, f: Filter): KeyRange = f match {
-    case EqualTo(`name`, v: Array[Byte]) =>
-      tightenCol(name)(tightenCol(name)(r, GreaterThanOrEqual(name, v)), LessThanOrEqual(name, v))
-    case GreaterThan(`name`, v: Array[Byte])        => KeyRange(maxLower(r.lower, v, incl = false), r.upper)
-    case GreaterThanOrEqual(`name`, v: Array[Byte]) => KeyRange(maxLower(r.lower, v, incl = true), r.upper)
-    case LessThan(`name`, v: Array[Byte])           => KeyRange(r.lower, minUpper(r.upper, v, incl = false))
-    case LessThanOrEqual(`name`, v: Array[Byte])    => KeyRange(r.lower, minUpper(r.upper, v, incl = true))
-    // an IN tightens to its [min, max] envelope (a correct superset; exact
-    // membership is re-checked by the residual filter or the local scan)
-    case In(`name`, vs) if vs.nonEmpty && vs.forall(_.isInstanceOf[Array[Byte]]) =>
-      val bs = vs.toSeq.map(_.asInstanceOf[Array[Byte]])
-      val lo = bs.min(Ordering.fromLessThan[Array[Byte]](cmp(_, _) < 0))
-      val hi = bs.max(Ordering.fromLessThan[Array[Byte]](cmp(_, _) < 0))
-      tightenCol(name)(tightenCol(name)(r, GreaterThanOrEqual(name, lo)), LessThanOrEqual(name, hi))
-    case And(l, rr) => tightenCol(name)(tightenCol(name)(r, l), rr)
-    case _          => r
-  }
-
   /** The exact key set a conjunction of filters pins `rowKey` to, if any:
     * EqualTo and In contribute sets, conjuncts intersect. None = not
     * key-set-constrained (range predicates don't enumerate keys). */
-  private[graft] def exactKeys(filters: Seq[Filter]): Option[Seq[Array[Byte]]] = {
-    def setsOf(f: Filter): Seq[Seq[Array[Byte]]] = f match {
-      case EqualTo("rowKey", v: Array[Byte]) => Seq(Seq(v))
-      case In("rowKey", vs) if vs.nonEmpty && vs.forall(_.isInstanceOf[Array[Byte]]) =>
-        Seq(vs.toSeq.map(_.asInstanceOf[Array[Byte]]))
-      case And(l, r) => setsOf(l) ++ setsOf(r)
-      case _ => Nil
-    }
-    val sets = filters.flatMap(setsOf)
-    if (sets.isEmpty) None
-    else Some(sets.reduce((a, b) => a.filter(x => b.exists(y => cmp(x, y) == 0))))
-  }
+  private[graft] def exactKeys(filters: Seq[Filter]): Option[Seq[Array[Byte]]] =
+    boundsOf(filters).cols.get("rowKey").flatMap(_.values).map(_.map(_.asInstanceOf[Array[Byte]]))
 
   /** Is this filter one of the key-set conjuncts [[exactKeys]] reads off
     * the top level of a conjunction? A local scan answers these itself. */
   private[sources] def pinsKeys(f: Filter): Boolean = f match {
-    case EqualTo("rowKey", _: Array[Byte]) => true
-    case In("rowKey", vs) => vs.nonEmpty && vs.forall(_.isInstanceOf[Array[Byte]])
-    case _ => false
+    case Leaf(b) => b.col == "rowKey" && b.values.isDefined
+    case _       => false
   }
 
-  private def maxLower(cur: Option[(Array[Byte], Boolean)], v: Array[Byte],
-                       incl: Boolean): Option[(Array[Byte], Boolean)] = cur match {
-    case Some((b, bi)) =>
-      val c = cmp(v, b)
-      if (c > 0 || (c == 0 && !incl)) Some((v, incl)) else Some((b, bi))
-    case None => Some((v, incl))
+  /** One row group's footer metadata: `stats` holds each prunable column's
+    * `[min, max]` in its bound's order (absent without statistics), and
+    * `uncompressed` is set when any column chunk is stored without a codec. */
+  private[graft] final case class BlockInfo(index: Int, rows: Long, compressedBytes: Long,
+      stats: Map[String, (Any, Any)], uncompressed: Boolean = false) {
+    def keyRange: Option[(Array[Byte], Array[Byte])] = stats.get("rowKey").map {
+      case (mn, mx) => (mn.asInstanceOf[Array[Byte]], mx.asInstanceOf[Array[Byte]])
+    }
   }
 
-  private def minUpper(cur: Option[(Array[Byte], Boolean)], v: Array[Byte],
-                       incl: Boolean): Option[(Array[Byte], Boolean)] = cur match {
-    case Some((b, bi)) =>
-      val c = cmp(v, b)
-      if (c < 0 || (c == 0 && !incl)) Some((v, incl)) else Some((b, bi))
-    case None => Some((v, incl))
+  private def blockInfo(index: Int, block: BlockMetaData): BlockInfo = {
+    val chunks = block.getColumns.asScala.toSeq
+    BlockInfo(index, block.getRowCount, block.getCompressedSize,
+      chunks.flatMap[(String, (Any, Any))] { c =>
+        (c.getPath.toDotString, Option(c.getStatistics).filter(_.hasNonNullValue)) match {
+          case ("ts", Some(st: LongStatistics)) => Some("ts" -> (st.getMin, st.getMax))
+          case (n @ ("rowKey" | "family" | "qualifier"), Some(st: BinaryStatistics)) =>
+            Some(n -> (st.getMinBytes, st.getMaxBytes))
+          case _ => None
+        }
+      }.toMap,
+      chunks.exists(_.getCodec == CompressionCodecName.UNCOMPRESSED))
   }
-
-  /** One row group's footer metadata; `uncompressed` when any of its
-    * column chunks is stored without a codec. */
-  private[graft] final case class BlockInfo(
-      index: Int, rows: Long, compressedBytes: Long,
-      keyRange: Option[(Array[Byte], Array[Byte])],
-      tsRange: Option[(Long, Long)] = None,
-      famRange: Option[(Array[Byte], Array[Byte])] = None,
-      qualRange: Option[(Array[Byte], Array[Byte])] = None,
-      uncompressed: Boolean = false)
 
   /** All row groups of a file, footer metadata only. */
   private[graft] def footerBlocks(file: Path): Seq[BlockInfo] = {
     val reader = HadoopConf.openParquet(file)
-    try reader.getRowGroups.asScala.toSeq.zipWithIndex.map { case (b, i) =>
-      BlockInfo(i, b.getRowCount, b.getCompressedSize, rowGroupKeyRange(b),
-        rowGroupTsRange(b), rowGroupFamRange(b), rowGroupQualRange(b),
-        b.getColumns.asScala.exists(_.getCodec ==
-          org.apache.parquet.hadoop.metadata.CompressionCodecName.UNCOMPRESSED))
-    } finally reader.close()
+    try reader.getRowGroups.asScala.toSeq.zipWithIndex.map { case (b, i) => blockInfo(i, b) }
+    finally reader.close()
   }
 
-  /** Per-file (rowCount, [min,max] of rowKey) from footer metadata only. */
-  private[sources] def footerStats(
-      file: Path): (Long, Option[(Array[Byte], Array[Byte])]) = {
-    val reader = HadoopConf.openParquet(file)
-    try {
-      val blocks = reader.getRowGroups.asScala
-      val rows = blocks.map(_.getRowCount).sum
-      val ranges = blocks.flatMap(rowGroupKeyRange)
-      val range =
-        if (ranges.isEmpty) None
-        else Some((ranges.map(_._1).min(Ordering.fromLessThan[Array[Byte]](cmp(_, _) < 0)),
-                   ranges.map(_._2).max(Ordering.fromLessThan[Array[Byte]](cmp(_, _) < 0))))
-      (rows, range)
-    } finally reader.close()
+  /** A file's rowKey `[min, max]` from its row groups' statistics. None when
+    * a row group with rows has none (parquet keeps no min/max for a chunk
+    * whose min and max reach 4 KiB together): such a file may hold any key. */
+  private[graft] def keyRangeOf(blocks: Seq[BlockInfo]): Option[(Array[Byte], Array[Byte])] = {
+    val ranges = blocks.filter(_.rows > 0).map(_.keyRange)
+    if (ranges.isEmpty || ranges.contains(None)) None
+    else Some((ranges.flatten.map(_._1).min(KeyOrder), ranges.flatten.map(_._2).max(KeyOrder)))
   }
-
-  private def colStats(
-      block: org.apache.parquet.hadoop.metadata.BlockMetaData,
-      name: String): Option[org.apache.parquet.column.statistics.Statistics[_]] =
-    block.getColumns.asScala
-      .find(_.getPath.toDotString == name)
-      .flatMap(c => Option(c.getStatistics).filter(_.hasNonNullValue))
-
-  private[sources] def rowGroupKeyRange(
-      block: org.apache.parquet.hadoop.metadata.BlockMetaData): Option[(Array[Byte], Array[Byte])] =
-    colStats(block, "rowKey").map(st => (st.getMinBytes, st.getMaxBytes))
-
-  /** ts column [min,max] of one row group (INT64 statistics). */
-  private[sources] def rowGroupTsRange(
-      block: org.apache.parquet.hadoop.metadata.BlockMetaData): Option[(Long, Long)] =
-    colStats(block, "ts").collect {
-      case st: org.apache.parquet.column.statistics.LongStatistics =>
-        (st.getMin, st.getMax)
-    }
-
-  /** family column [min,max] bytes of one row group. UTF-8 byte order is
-    * code-point order, and parquet UTF8/BINARY stats are byte-ordered, so
-    * unsigned byte comparison against these bounds is exact. */
-  private[sources] def rowGroupFamRange(
-      block: org.apache.parquet.hadoop.metadata.BlockMetaData): Option[(Array[Byte], Array[Byte])] =
-    colStats(block, "family").collect {
-      case st: org.apache.parquet.column.statistics.BinaryStatistics =>
-        (st.getMinBytes, st.getMaxBytes)
-    }
-
-  /** qualifier column [min,max] bytes of one row group — tight on
-    * wide-row stores (one row's columns per group), trivially wide on
-    * tall stores where every group cycles the full qualifier set. */
-  private[sources] def rowGroupQualRange(
-      block: org.apache.parquet.hadoop.metadata.BlockMetaData): Option[(Array[Byte], Array[Byte])] =
-    colStats(block, "qualifier").collect {
-      case st: org.apache.parquet.column.statistics.BinaryStatistics =>
-        (st.getMinBytes, st.getMaxBytes)
-    }
 
   // Salted-layout manifest -------------------------------------------------
 
@@ -542,7 +410,6 @@ class CellStoreTable(path: String) extends Table
       TableCapability.OVERWRITE_BY_FILTER)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new CellStoreScanBuilder(path, buckets,
-      Option(options.get("splitBytes")).map(_.toLong).getOrElse(128L << 20),
       Option(options.get("graft.noRewrite")).exists(_.toBoolean))
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
@@ -551,7 +418,6 @@ class CellStoreTable(path: String) extends Table
 }
 
 class CellStoreScanBuilder(path: String, buckets: Option[Int],
-                           splitBytes: Long = 128L << 20,
                            noRewrite: Boolean = false)
     extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns
     with SupportsPushDownAggregates with SupportsPushDownLimit {
@@ -586,7 +452,7 @@ class CellStoreScanBuilder(path: String, buckets: Option[Int],
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     pushed = filters.filter(CellStoreSource.prunable)
     planned = CellStoreSource.exactKeys(pushed.toSeq).map(_ =>
-      CellStoreScan.plan(path, buckets, pushed.toSeq, Nil, splitBytes))
+      CellStoreScan.plan(path, buckets, pushed.toSeq, Nil))
     if (local) filters.filterNot(CellStoreSource.pinsKeys) else filters
   }
   override def pushedFilters(): Array[Filter] = pushed
@@ -641,7 +507,7 @@ class CellStoreScanBuilder(path: String, buckets: Option[Int],
     // the strictly better no-shuffle plan; every other case (range layout,
     // or a grouping the salt cannot co-locate) shuffles either way, and
     // pushed run-length partials shrink what crosses that shuffle.
-    if (buckets.isDefined && org.apache.spark.sql.internal.SQLConf.get.v2BucketingEnabled &&
+    if (buckets.isDefined && SQLConf.get.v2BucketingEnabled &&
         agg.groupByExpressions.exists {
           case ref: NamedReference => ref.fieldNames.sameElements(Array("rowKey"))
           case _                   => false
@@ -670,10 +536,10 @@ class CellStoreScanBuilder(path: String, buckets: Option[Int],
   override def build(): Scan = (aggPushed, groupPushed) match {
     case (Some(agg), _)       => new CellStoreAggScan(path, agg)
     case (None, Some((g, a))) =>
-      new CellStoreGroupByScan(path, buckets, g, a, splitBytes)
+      new CellStoreGroupByScan(path, buckets, g, a)
     case _ if local => new CellStoreLocalScan(path, planned.get, pushed, required)
     case _ =>
-      new CellStoreScan(path, buckets, pushed, required, splitBytes, limit,
+      new CellStoreScan(path, buckets, pushed, required, limit,
         noRewrite, planned.map(_.partitions))
   }
 }
@@ -699,8 +565,7 @@ final case class CellMinMax(col: String, dataType: DataType, isMin: Boolean)
   * aggregates over its sorted cell stream instead of raw cells. Only the
   * grouping and aggregated columns are decoded. */
 class CellStoreGroupByScan(path: String, buckets: Option[Int],
-                           groupCols: Seq[String], aggs: Seq[CellAggSpec],
-                           splitBytes: Long)
+                           groupCols: Seq[String], aggs: Seq[CellAggSpec])
     extends Scan with Batch {
 
   /** Columns the reader must decode, in cell-schema order. */
@@ -709,7 +574,7 @@ class CellStoreGroupByScan(path: String, buckets: Option[Int],
       groupCols.contains(f.name) || aggs.exists(_.inputCol.contains(f.name))))
 
   private val delegate =
-    new CellStoreScan(path, buckets, Array.empty, inputSchema, splitBytes, None)
+    new CellStoreScan(path, buckets, Array.empty, inputSchema, None)
 
   override def readSchema(): StructType = StructType(
     groupCols.map(c => CellStoreSource.Schema(c)) ++
@@ -764,7 +629,7 @@ class CellStoreGroupByReader(
   }
 
   private def cmpVals(a: Any, b: Any): Int = (a, b) match {
-    case (x: Array[Byte], y: Array[Byte]) => CellStoreSource.cmp(x, y)
+    case (x: Array[Byte], y: Array[Byte]) => CellStoreSource.KeyOrder.compare(x, y)
     case (x: UTF8String, y: UTF8String)   => x.compareTo(y)
     case (x: java.lang.Long, y: java.lang.Long) => java.lang.Long.compare(x, y)
     case _ => throw new IllegalStateException(s"incomparable agg values: $a / $b")
@@ -878,21 +743,31 @@ class CellStoreAggScan(
 
   override def planInputPartitions(): Array[InputPartition] = {
     val dir = new Path(path)
-    val fs = HadoopConf.fs(dir)
-    var rows = 0L
-    var mn: Array[Byte] = null
-    var mx: Array[Byte] = null
-    fs.listStatus(dir)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet") && s.getLen > 0)
-      .foreach { st =>
-        val (r, range) = CellStoreSource.footerStats(st.getPath)
-        rows += r
-        range.foreach { case (lo, hi) =>
-          if (mn == null || CellStoreSource.cmp(lo, mn) < 0) mn = lo
-          if (mx == null || CellStoreSource.cmp(hi, mx) > 0) mx = hi
-        }
+    val files = CellStoreSource.dataFiles(HadoopConf.fs(dir).listStatus(dir).toSeq).map { st =>
+      val blocks = CellStoreSource.footerBlocks(st.getPath)
+      (blocks.map(_.rows).sum, CellStoreSource.keyRangeOf(blocks).orElse(decodedKeyRange(st.getPath)))
+    }
+    val ranges = files.flatMap(_._2)
+    Array(CellStoreAggPartition(files.map(_._1).sum,
+      ranges.map(_._1).minOption(CellStoreSource.KeyOrder),
+      ranges.map(_._2).maxOption(CellStoreSource.KeyOrder)))
+  }
+
+  /** The rowKey `[min, max]` of a file whose footer lacks key statistics,
+    * decoded from its rowKey column on the driver; None for a file of no rows. */
+  private def decodedKeyRange(file: Path): Option[(Array[Byte], Array[Byte])] = {
+    val reader = new CellStoreColumnarReader(Seq(CellChunk(file.toString, 0, Int.MaxValue)),
+      StructType(Seq(CellStoreSource.Schema("rowKey"))), CellStoreSource.boundsSetOf(Nil))
+    var range = Option.empty[(Array[Byte], Array[Byte])]
+    try while (reader.next()) {
+      val batch = reader.get()
+      (0 until batch.numRows()).foreach { i =>
+        val k = batch.column(0).getBinary(i)
+        range = Some(range.fold((k, k)) { case (lo, hi) =>
+          (CellStoreSource.KeyOrder.min(lo, k), CellStoreSource.KeyOrder.max(hi, k)) })
       }
-    Array(CellStoreAggPartition(rows, Option(mn), Option(mx)))
+    } finally reader.close()
+    range
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -926,7 +801,6 @@ class CellStoreAggReaderFactory(cols: Seq[String]) extends PartitionReaderFactor
 
 class CellStoreScan(val path: String, buckets: Option[Int],
                     val pushed: Array[Filter], required: StructType,
-                    splitBytes: Long = 128L << 20,
                     limit: Option[Int] = None,
                     val noRewrite: Boolean = false,
                     preplanned: Option[Array[InputPartition]] = None)
@@ -972,7 +846,7 @@ class CellStoreScan(val path: String, buckets: Option[Int],
     val cur = cached
     if (cur != null) cur
     else {
-      val p = CellStoreScan.plan(path, buckets, pushed.toSeq, runtime.toSeq, splitBytes).partitions
+      val p = CellStoreScan.plan(path, buckets, pushed.toSeq, runtime.toSeq).partitions
       cached = p
       p
     }
@@ -1025,21 +899,20 @@ class CellStoreScan(val path: String, buckets: Option[Int],
 final case class CellStorePlan(partitions: Array[InputPartition], keptRows: Long)
 
 object CellStoreScan {
-  /** List the store, drop files by bloom and row-group chunks by footer
-    * statistics, for the `pushed` (planning-time) and `runtime` filters.
+  /** List the store, drop files by bloom and row-group chunks whose footer
+    * statistics miss every branch of the filters' per-column bounds
+    * ([[CellStoreSource.boundsSetOf]]), for the `pushed` (planning-time) and
+    * `runtime` filters.
     * `keptRows` is exact on a range store, whose footers planning reads
     * anyway; a salted store reads its candidate files' footers for it only
     * when `pushed` pins keys, and reports 0 otherwise. */
   private[sources] def plan(path: String, buckets: Option[Int], pushed: Seq[Filter],
-      runtime: Seq[Filter], splitBytes: Long): CellStorePlan = {
+      runtime: Seq[Filter]): CellStorePlan = {
     val bounds = CellStoreSource.boundsSetOf(pushed ++ runtime)
     var rows = 0L
     val dir = new Path(path)
-    val fs = HadoopConf.fs(dir)
-    val listing = fs.listStatus(dir)
-    val files = listing
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet") && s.getLen > 0)
-      .sortBy(_.getPath.getName)
+    val listing = HadoopConf.fs(dir).listStatus(dir).toSeq
+    val files = CellStoreSource.dataFiles(listing)
     // Bloom elision for point lookups (HFile ROW bloom analogue): a pushed/
     // runtime GET/IN key set skips files whose bloom proves every key
     // absent — the in-range negative GET that min/max stats cannot serve.
@@ -1052,7 +925,7 @@ object CellStoreScan {
     // sidecar is "may contain"; the residual filter (or the local scan's
     // key check) re-checks rows, so this is pure IO elision.
     val getKeys = CellStoreSource.exactKeys(pushed ++ runtime)
-    lazy val sidecarLen = CellBloom.sidecarLengths(listing.toSeq)
+    lazy val sidecarLen = CellBloom.sidecarLengths(listing)
     def mayHave(name: String): Boolean = getKeys match {
       case Some(ks) =>
         sidecarLen.get(name).flatMap(CellBloom.readOne(dir, name, _))
@@ -1068,7 +941,7 @@ object CellStoreScan {
         // SPJ-compatible. RUNTIME keys must not change the partition-value
         // set (Spark checks), so they only empty the file lists of buckets
         // no runtime key hashes into.
-        val byBucket: Map[Int, Seq[String]] = files.toSeq
+        val byBucket: Map[Int, Seq[String]] = files
           .flatMap(st => CellStoreSource.bucketIdOf(st.getPath.getName)
             .map(b => b -> st.getPath.toString))
           .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
@@ -1096,12 +969,14 @@ object CellStoreScan {
         CellStorePlan(parts.toArray, rows)
       case None =>
         // Range-region layout: surviving region files split into row-group-
-        // aligned chunks of ~splitBytes (the maxPartitionBytes analogue — a
-        // 10 GB region file must parallelize across tasks, not become one).
-        // Chunks whose every row group misses the key range are dropped;
-        // the reader re-checks per-group stats inside a kept chunk.
+        // aligned chunks of at most Spark's `spark.sql.files.maxPartitionBytes`
+        // compressed bytes (a 10 GB region file must parallelize across
+        // tasks, not become one; a row group larger than that is a chunk of
+        // its own). Chunks whose every row group the bounds prune are
+        // dropped; the reader re-checks per-group stats inside a kept chunk.
         // Footers are read driver-side; a 100 TB deployment swaps this for a
         // cached region index with the same contract.
+        val maxBytes = SQLConf.get.filesMaxPartitionBytes
         val parts = files.filter(st => mayHave(st.getPath.getName)).flatMap { st =>
           val blocks = CellStoreSource.footerBlocks(st.getPath)
           val chunks = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Long, Boolean)]
@@ -1110,7 +985,7 @@ object CellStoreScan {
             if (hit) rows += b.rows
             chunks.lastOption match {
               case Some((lo, hi, bytes, anyHit))
-                  if hi == b.index && bytes + b.compressedBytes <= splitBytes =>
+                  if hi == b.index && bytes + b.compressedBytes <= maxBytes =>
                 chunks(chunks.length - 1) = (lo, b.index + 1, bytes + b.compressedBytes, anyHit || hit)
               case _ =>
                 chunks += ((b.index, b.index + 1, b.compressedBytes, hit))
@@ -1120,7 +995,7 @@ object CellStoreScan {
             CellStorePartition(CellChunk(st.getPath.toString, lo, hi)): InputPartition
           }
         }
-        CellStorePlan(parts, rows)
+        CellStorePlan(parts.toArray, rows)
     }
   }
 }
@@ -1206,9 +1081,7 @@ class CellStoreMicroBatchStream(path: String, required: StructType, pushed: Arra
     val dir = new Path(path)
     val fs = HadoopConf.fs(dir)
     if (!fs.exists(dir)) Set.empty
-    else fs.listStatus(dir)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet") && s.getLen > 0)
-      .map(_.getPath.getName).toSet
+    else CellStoreSource.dataFiles(fs.listStatus(dir).toSeq).map(_.getPath.getName).toSet
   }
 
   override def initialOffset(): StreamOffset = CellStoreOffset(Set.empty)
@@ -1307,7 +1180,7 @@ class CellStoreColumnarReader(
   private var cur: VectorizedParquetRecordReader = _
 
   private def keep(chunk: CellChunk)(
-      idx: Int, block: org.apache.parquet.hadoop.metadata.BlockMetaData): Boolean =
+      idx: Int, block: BlockMetaData): Boolean =
     idx >= chunk.groupLo && idx < chunk.groupHi && bounds.keep(block)
 
   private var emitted = 0L

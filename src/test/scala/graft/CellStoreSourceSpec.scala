@@ -80,6 +80,32 @@ class CellStoreSourceSpec extends AnyFunSuite with SparkTestBase {
     assert(filtered.count() == cells.filter(col("rowKey") >= lit(key(100L))).count())
   }
 
+  test("pushed MIN/MAX(rowKey) decode the keys of a file without key statistics") {
+    // parquet keeps no min/max for a binary column chunk whose min plus max
+    // reach 4,096 bytes: a 5,000-byte key leaves its file without them
+    val longKeys = Seq("largest" -> Array.fill[Byte](5000)(-1), "smallest" -> Array.fill[Byte](5000)(0))
+    for ((which, longKey) <- longKeys; regions <- Seq(1, 2)) {
+      val dir = java.nio.file.Files.createTempDirectory("cellstore_longkey").toString + "/s"
+      val keys = longKey +: (0L until 40L).map(i => 1.toByte +: key(i))
+      val rows = keys.map(k => org.apache.spark.sql.Row(
+        k, "cf", "q".getBytes("UTF-8"), CellTable.BaseTs, "Put", "v".getBytes("UTF-8")))
+      spark.createDataFrame(rows.asJava, graft.sources.CellStoreSource.Schema)
+        .write.format("cellstore").option("numRegions", regions.toString).mode("overwrite").save(dir)
+      def agg(df: DataFrame) =
+        df.agg(max(col("rowKey")).as("hi"), min(col("rowKey")).as("lo"), count(lit(1)).as("n"))
+      val pushed = agg(spark.read.format("cellstore").load(dir))
+      val plan = pushed.queryExecution.executedPlan.toString
+      assert(plan.contains("CellStoreAggScan"), s"expected pushed min/max in:\n$plan")
+      val got = pushed.collect().head
+      val want = agg(spark.read.parquet(dir)).collect().head
+      val label = s"$which key of 5,000 bytes, $regions region(s)"
+      def bytes(r: org.apache.spark.sql.Row, c: String) = Option(r.getAs[Array[Byte]](c)).map(_.toSeq)
+      assert(bytes(got, "hi") == bytes(want, "hi"), label)
+      assert(bytes(got, "lo") == bytes(want, "lo"), label)
+      assert(got.getAs[Long]("n") == want.getAs[Long]("n") && want.getAs[Long]("n") == 41L, label)
+    }
+  }
+
   test("scan is vectorized: batches decode columnar, count-only scans too") {
     val plan = store.select("rowKey", "ts").queryExecution.executedPlan.toString
     assert(plan.contains("ColumnarToRow"), s"expected a columnar scan in:\n$plan")
@@ -102,39 +128,40 @@ class CellStoreSourceSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("a large region file splits into row-group-aligned chunk partitions") {
-    val dir = java.nio.file.Files.createTempDirectory("cellstore_split").toString
-    val cells = CellTable.fromTable(spark, sf01, "customer")
-    // ONE region file, forced into many small row groups
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val prevBlock = hconf.get("parquet.block.size")
-    hconf.setInt("parquet.block.size", 16384)
-    try cells.coalesce(1)
-      .sortWithinPartitions("rowKey", "family", "qualifier", "ts")
-      .write.mode("overwrite").parquet(dir)
-    finally {
-      if (prevBlock == null) hconf.unset("parquet.block.size")
-      else hconf.set("parquet.block.size", prevBlock)
-    }
-    val files = new java.io.File(dir).listFiles()
-      .filter(_.getName.endsWith(".parquet"))
-    assert(files.length == 1)
-    val footer = graft.sources.HadoopConf.openParquet(
-      new org.apache.hadoop.fs.Path(files.head.getPath))
-    val nGroups = try footer.getRowGroups.size() finally footer.close()
-    assert(nGroups > 1, s"test setup needs a multi-row-group file, got $nGroups")
+    withMaxPartitionBytes(32768) {
+      val dir = java.nio.file.Files.createTempDirectory("cellstore_split").toString
+      val cells = CellTable.fromTable(spark, sf01, "customer")
+      // ONE region file, forced into many small row groups
+      val hconf = spark.sparkContext.hadoopConfiguration
+      val prevBlock = hconf.get("parquet.block.size")
+      hconf.setInt("parquet.block.size", 16384)
+      try cells.coalesce(1)
+        .sortWithinPartitions("rowKey", "family", "qualifier", "ts")
+        .write.mode("overwrite").parquet(dir)
+      finally {
+        if (prevBlock == null) hconf.unset("parquet.block.size")
+        else hconf.set("parquet.block.size", prevBlock)
+      }
+      val files = new java.io.File(dir).listFiles()
+        .filter(_.getName.endsWith(".parquet"))
+      assert(files.length == 1)
+      val footer = graft.sources.HadoopConf.openParquet(
+        new org.apache.hadoop.fs.Path(files.head.getPath))
+      val nGroups = try footer.getRowGroups.size() finally footer.close()
+      assert(nGroups > 1, s"test setup needs a multi-row-group file, got $nGroups")
 
-    val split = spark.read.format("cellstore")
-      .option("splitBytes", "32768").load(dir)
-    assert(split.rdd.getNumPartitions > 1,
-      s"expected chunked partitions, got ${split.rdd.getNumPartitions}")
-    // identical content to the unsplit read, and GET pruning still works
-    val whole = spark.read.format("cellstore").load(dir)
-    assert(split.count() == cells.count())
-    assert(split.exceptAll(whole).isEmpty && whole.exceptAll(split).isEmpty)
-    val get = split.filter(col("rowKey") === lit(key(42L)))
-    assert(get.count() == 4)
-    assert(plannedChunks(get) < plannedChunks(split),
-      "key range should prune chunks")
+      val split = spark.read.format("cellstore").load(dir)
+      assert(split.rdd.getNumPartitions > 1,
+        s"expected chunked partitions, got ${split.rdd.getNumPartitions}")
+      // identical content to the unsplit read, and GET pruning still works
+      val whole = spark.read.format("cellstore").load(dir)
+      assert(split.count() == cells.count())
+      assert(split.exceptAll(whole).isEmpty && whole.exceptAll(split).isEmpty)
+      val get = split.filter(col("rowKey") === lit(key(42L)))
+      assert(get.count() == 4)
+      assert(plannedChunks(get) < plannedChunks(split),
+        "key range should prune chunks")
+    }
   }
 
   test("point GET prunes to a single region partition") {
@@ -244,45 +271,49 @@ class CellStoreSourceSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("ts-range pushdown skips row groups outside the time interval") {
-    val dir = timeCorrelatedStore(famSplit = false)
-    val full = spark.read.format("cellstore").option("splitBytes", "32768").load(dir)
-    val hi = CellTable.BaseTs + 100000L // keys <= 100 of 0..1499
-    val scan = full.filter(col("ts") <= lit(hi))
-    // the ts bound reaches the scan and prunes row-group chunks
-    val plan = scan.queryExecution.executedPlan.toString
-    assert(plan.contains("LessThanOrEqual(ts"), s"expected pushed ts bound in:\n$plan")
-    assert(full.rdd.getNumPartitions > 1)
-    assert(scan.rdd.getNumPartitions < full.rdd.getNumPartitions,
-      s"ts filter should prune chunks: ${scan.rdd.getNumPartitions} vs ${full.rdd.getNumPartitions}")
-    // and the result is exactly the plain parquet answer
-    val expected = spark.read.parquet(dir).filter(col("ts") <= lit(hi))
-    assert(scan.count() == expected.count() && scan.count() > 0)
-    assert(scan.exceptAll(expected).isEmpty && expected.exceptAll(scan).isEmpty)
-    // a ts interval before all data plans zero partitions
-    val none = full.filter(col("ts") < lit(CellTable.BaseTs))
-    assert(none.rdd.getNumPartitions == 0 && none.count() == 0)
+    withMaxPartitionBytes(32768) {
+      val dir = timeCorrelatedStore(famSplit = false)
+      val full = spark.read.format("cellstore").load(dir)
+      val hi = CellTable.BaseTs + 100000L // keys <= 100 of 0..1499
+      val scan = full.filter(col("ts") <= lit(hi))
+      // the ts bound reaches the scan and prunes row-group chunks
+      val plan = scan.queryExecution.executedPlan.toString
+      assert(plan.contains("LessThanOrEqual(ts"), s"expected pushed ts bound in:\n$plan")
+      assert(full.rdd.getNumPartitions > 1)
+      assert(scan.rdd.getNumPartitions < full.rdd.getNumPartitions,
+        s"ts filter should prune chunks: ${scan.rdd.getNumPartitions} vs ${full.rdd.getNumPartitions}")
+      // and the result is exactly the plain parquet answer
+      val expected = spark.read.parquet(dir).filter(col("ts") <= lit(hi))
+      assert(scan.count() == expected.count() && scan.count() > 0)
+      assert(scan.exceptAll(expected).isEmpty && expected.exceptAll(scan).isEmpty)
+      // a ts interval before all data plans zero partitions
+      val none = full.filter(col("ts") < lit(CellTable.BaseTs))
+      assert(none.rdd.getNumPartitions == 0 && none.count() == 0)
+    }
   }
 
   test("family pushdown skips row groups of other families") {
-    val dir = timeCorrelatedStore(famSplit = true)
-    val full = spark.read.format("cellstore").option("splitBytes", "32768").load(dir)
-    val scan = full.filter(col("family") === "fam_b")
-    val plan = scan.queryExecution.executedPlan.toString
-    assert(plan.contains("EqualTo(family,fam_b)"), s"expected pushed family in:\n$plan")
-    assert(scan.rdd.getNumPartitions < full.rdd.getNumPartitions,
-      s"family filter should prune chunks: ${scan.rdd.getNumPartitions} vs ${full.rdd.getNumPartitions}")
-    val expected = spark.read.parquet(dir).filter(col("family") === "fam_b")
-    assert(scan.count() == expected.count() && scan.count() > 0)
-    // IN over families prunes too, and membership stays exact (residual)
-    val in = full.filter(col("family").isin("fam_a", "no_such"))
-    assert(in.count() == spark.read.parquet(dir).filter(col("family") === "fam_a").count())
-    assert(in.rdd.getNumPartitions < full.rdd.getNumPartitions)
-    // conjunction: ts AND family compose with rowKey pruning
-    val both = full.filter(col("family") === "fam_a" &&
-      col("ts") <= lit(CellTable.BaseTs + 100000L))
-    val bothExpected = spark.read.parquet(dir).filter(col("family") === "fam_a" &&
-      col("ts") <= lit(CellTable.BaseTs + 100000L))
-    assert(both.count() == bothExpected.count() && both.count() > 0)
+    withMaxPartitionBytes(32768) {
+      val dir = timeCorrelatedStore(famSplit = true)
+      val full = spark.read.format("cellstore").load(dir)
+      val scan = full.filter(col("family") === "fam_b")
+      val plan = scan.queryExecution.executedPlan.toString
+      assert(plan.contains("EqualTo(family,fam_b)"), s"expected pushed family in:\n$plan")
+      assert(scan.rdd.getNumPartitions < full.rdd.getNumPartitions,
+        s"family filter should prune chunks: ${scan.rdd.getNumPartitions} vs ${full.rdd.getNumPartitions}")
+      val expected = spark.read.parquet(dir).filter(col("family") === "fam_b")
+      assert(scan.count() == expected.count() && scan.count() > 0)
+      // IN over families prunes too, and membership stays exact (residual)
+      val in = full.filter(col("family").isin("fam_a", "no_such"))
+      assert(in.count() == spark.read.parquet(dir).filter(col("family") === "fam_a").count())
+      assert(in.rdd.getNumPartitions < full.rdd.getNumPartitions)
+      // conjunction: ts AND family compose with rowKey pruning
+      val both = full.filter(col("family") === "fam_a" &&
+        col("ts") <= lit(CellTable.BaseTs + 100000L))
+      val bothExpected = spark.read.parquet(dir).filter(col("family") === "fam_a" &&
+        col("ts") <= lit(CellTable.BaseTs + 100000L))
+      assert(both.count() == bothExpected.count() && both.count() > 0)
+    }
   }
 
   test("grouped COUNT/MIN/MAX push down as run-length partials") {

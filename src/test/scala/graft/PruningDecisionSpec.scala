@@ -19,10 +19,11 @@ class PruningDecisionSpec extends AnyFunSuite {
       key: Option[(Long, Long)] = None, ts: Option[(Long, Long)] = None,
       fam: Option[(String, String)] = None,
       qual: Option[(String, String)] = None): BlockInfo =
-    BlockInfo(0, 10L, 100L,
-      key.map { case (lo, hi) => (k(lo), k(hi)) }, ts,
-      fam.map { case (lo, hi) => (b(lo), b(hi)) },
-      qual.map { case (lo, hi) => (b(lo), b(hi)) })
+    BlockInfo(0, 10L, 100L, Map[String, Option[(Any, Any)]](
+      "rowKey" -> key.map { case (lo, hi) => (k(lo), k(hi)) }, "ts" -> ts,
+      "family" -> fam.map { case (lo, hi) => (b(lo), b(hi)) },
+      "qualifier" -> qual.map { case (lo, hi) => (b(lo), b(hi)) })
+      .collect { case (c, Some(range)) => c -> range })
 
   /** The row groups every case is decided over; a case's `kept` string has
     * one digit per block, in this order. */
@@ -47,7 +48,8 @@ class PruningDecisionSpec extends AnyFunSuite {
     ("rowKey >=", Seq(GreaterThanOrEqual("rowKey", k(199))), "1", "01111", None),
     ("rowKey <", Seq(LessThan("rowKey", k(100))), "1", "10010", None),
     ("rowKey <=", Seq(LessThanOrEqual("rowKey", k(100))), "1", "11010", None),
-    ("rowKey IN", Seq(In("rowKey", Array(k(50), k(250)))), "1", "11111", Some(Seq(50L, 250L))),
+    // an IN prunes by membership, not by the [min, max] envelope of its values
+    ("rowKey IN", Seq(In("rowKey", Array(k(50), k(250)))), "1", "10111", Some(Seq(50L, 250L))),
     ("rowKey IN of one", Seq(In("rowKey", Array(k(50)))), "1", "10010", Some(Seq(50L))),
     ("rowKey IN of none", Seq(In("rowKey", Array.empty[Any])), "0", "11111", None),
     ("rowKey = of a string", Seq(EqualTo("rowKey", "50")), "0", "11111", None),
@@ -57,16 +59,16 @@ class PruningDecisionSpec extends AnyFunSuite {
     ("ts >=", Seq(GreaterThanOrEqual("ts", 2999L)), "1", "01111", None),
     ("ts <", Seq(LessThan("ts", 1000L)), "1", "00011", None),
     ("ts <=", Seq(LessThanOrEqual("ts", 1000L)), "1", "10011", None),
-    ("ts IN", Seq(In("ts", Array(1500L, 3500L))), "1", "11111", None),
+    ("ts IN", Seq(In("ts", Array(1500L, 3500L))), "1", "10111", None),
     ("family =", Seq(EqualTo("family", "a")), "1", "11011", None),
     ("family = inside a block's range", Seq(EqualTo("family", "b")), "1", "01011", None),
     ("family IN", Seq(In("family", Array("b", "e"))), "1", "01011", None),
     ("family IN with a null", Seq(In("family", Array("a", null))), "0", "11111", None),
-    ("family >", Seq(GreaterThan("family", "c")), "0", "11111", None),
-    ("family <", Seq(LessThan("family", "b")), "0", "11111", None),
+    ("family >", Seq(GreaterThan("family", "c")), "1", "00111", None),
+    ("family <", Seq(LessThan("family", "b")), "1", "11011", None),
     ("qualifier =", Seq(EqualTo("qualifier", b("q5"))), "1", "01011", None),
     ("qualifier >=", Seq(GreaterThanOrEqual("qualifier", b("q7"))), "1", "00111", None),
-    ("qualifier IN", Seq(In("qualifier", Array(b("q2"), b("q8")))), "1", "11111", None),
+    ("qualifier IN", Seq(In("qualifier", Array(b("q2"), b("q8")))), "1", "10111", None),
     ("unknown leaf", Seq(opaque), "0", "11111", None),
     ("Not of a key leaf", Seq(Not(rk(50))), "0", "11111", None),
     ("two conjuncts on one column",

@@ -41,39 +41,46 @@ class QualifierPruningSpec extends AnyFunSuite with SparkTestBase {
     dir
   }
 
-  private def wide = spark.read.format("cellstore")
-    .option("splitBytes", "16384").load(widePath)
+  /** The wide store, read in chunks of at most 16 KiB while a test runs
+    * under [[withMaxPartitionBytes]]. */
+  private def wide = spark.read.format("cellstore").load(widePath)
 
   test("qualifier range prunes row-group chunks on a wide-row store") {
-    val full = wide.rdd.getNumPartitions
-    assert(full > 4, s"fixture must split into many chunks, got $full")
-    val ranged = wide.filter(
-      col("qualifier") >= lit(qual(100)) && col("qualifier") < lit(qual(200)))
-    assert(ranged.rdd.getNumPartitions < full,
-      s"qualifier bounds must prune chunks: ${ranged.rdd.getNumPartitions} vs $full")
-    assert(ranged.count() == 3L * 100)
-    // residual exactness vs the plain parquet read
-    val expected = spark.read.parquet(widePath).filter(
-      col("qualifier") >= lit(qual(100)) && col("qualifier") < lit(qual(200)))
-    assert(ranged.exceptAll(expected).isEmpty && expected.exceptAll(ranged).isEmpty)
+    withMaxPartitionBytes(16384) {
+      val full = wide.rdd.getNumPartitions
+      assert(full > 4, s"fixture must split into many chunks, got $full")
+      val ranged = wide.filter(
+        col("qualifier") >= lit(qual(100)) && col("qualifier") < lit(qual(200)))
+      assert(ranged.rdd.getNumPartitions < full,
+        s"qualifier bounds must prune chunks: ${ranged.rdd.getNumPartitions} vs $full")
+      assert(ranged.count() == 3L * 100)
+      // residual exactness vs the plain parquet read
+      val expected = spark.read.parquet(widePath).filter(
+        col("qualifier") >= lit(qual(100)) && col("qualifier") < lit(qual(200)))
+      assert(ranged.exceptAll(expected).isEmpty && expected.exceptAll(ranged).isEmpty)
+    }
   }
 
   test("single-qualifier GET across all rows touches a fraction of the chunks") {
-    val one = wide.filter(col("qualifier") === lit(qual(1500)))
-    assert(one.count() == 3)
-    assert(one.rdd.getNumPartitions <= wide.rdd.getNumPartitions / 2,
-      s"${one.rdd.getNumPartitions} of ${wide.rdd.getNumPartitions} chunks for one column")
+    withMaxPartitionBytes(16384) {
+      val one = wide.filter(col("qualifier") === lit(qual(1500)))
+      assert(one.count() == 3)
+      assert(one.rdd.getNumPartitions <= wide.rdd.getNumPartitions / 2,
+        s"${one.rdd.getNumPartitions} of ${wide.rdd.getNumPartitions} chunks for one column")
+    }
   }
 
   test("qualifier bounds compose with rowKey bounds (both dimensions prune)") {
-    val both = wide.filter(
-      col("rowKey") === lit(java.nio.ByteBuffer.allocate(8).putLong(2L).array()) &&
-      col("qualifier") >= lit(qual(QualsPerRow - 100)))
-    assert(both.count() == 100)
-    val keyOnly = wide.filter(
-      col("rowKey") === lit(java.nio.ByteBuffer.allocate(8).putLong(2L).array()))
-    assert(both.rdd.getNumPartitions < keyOnly.rdd.getNumPartitions,
-      s"${both.rdd.getNumPartitions} vs key-only ${keyOnly.rdd.getNumPartitions}")
+    withMaxPartitionBytes(16384) {
+      val both = wide.filter(
+        col("rowKey") === lit(java.nio.ByteBuffer.allocate(8).putLong(2L).array()) &&
+        col("qualifier") >= lit(qual(QualsPerRow - 100)))
+      assert(both.count() == 100)
+      val keyOnly = wide.filter(
+        col("rowKey") === lit(java.nio.ByteBuffer.allocate(8).putLong(2L).array()))
+      assert(both.rdd.getNumPartitions < keyOnly.rdd.getNumPartitions,
+        s"${both.rdd.getNumPartitions} vs key-only ${keyOnly.rdd.getNumPartitions}")
+    }
   }
 
   test("tall store: qualifier stats span every group — no pruning, rows exact") {

@@ -45,6 +45,17 @@ trait SparkTestBase {
       .sortWithinPartitions("rowKey", "family", "qualifier", "ts")
       .write.mode("overwrite").option("compression", codec).parquet(dir)
 
+  /** Run `body` with the session's `spark.sql.files.maxPartitionBytes`, the
+    * most compressed bytes a range-store scan chunk holds, set to `bytes`.
+    * Scans plan their chunks when they execute, so `body` holds the reads
+    * and their assertions. */
+  def withMaxPartitionBytes[A](bytes: Long)(body: => A): A = {
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, bytes)
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   /** The data files (`*.parquet`, not hidden) of a store directory, by name. */
   def dataFiles(dir: String): Seq[File] =
     new File(dir).listFiles().toSeq

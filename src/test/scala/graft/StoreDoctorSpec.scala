@@ -110,6 +110,20 @@ class StoreDoctorSpec extends AnyFunSuite with SparkTestBase {
     assert(st == "INFO" && detail.contains("compaction"))
   }
 
+  test("a file without key statistics overlaps every region, as compaction groups it") {
+    val dir = java.nio.file.Files.createTempDirectory("doctor_nostats").toString
+    val cells = CellTable.fromTable(spark, sf001, "customer")
+    CellTable.writeRegionLayout(cells, dir, numRegions = 4)
+    // a 5,000-byte key: parquet keeps no min/max for its file's rowKey chunk
+    cells.limit(1).withColumn("rowKey", lit(Array.fill[Byte](5000)(-1)))
+      .write.format("cellstore").mode("append").option("numRegions", "1").save(dir)
+    val rows = StoreDoctor.diagnose(spark, dir).collect()
+    assert(statusOf(rows, "region_overlap") == ("INFO",
+      "4 file(s) overlap an earlier key range — a major compaction would restore disjoint regions"))
+    val stats = graft.operators.StoreStats.describe(spark, dir).collect()
+    assert(stats.count(r => r.isNullAt(r.fieldIndex("minKey")) && r.isNullAt(r.fieldIndex("maxKey"))) == 1)
+  }
+
   test("MOB root: dangling refs ERROR, orphan blobs INFO, healthy OK") {
     val dir = java.nio.file.Files.createTempDirectory("doctor_mob").toString
     import spark.implicits._
