@@ -89,15 +89,19 @@ object StoreDoctor {
 
     // 3. region overlap (range layout): appends legitimately overlap the
     //    base regions; flag as compaction advice, not an error. The files
-    //    are grouped as the merge compaction groups them, so a file without
-    //    key statistics overlaps every file, as compaction merges it with
-    //    all; each group past its first file counts.
+    //    are grouped as the merge compaction groups them; each group past
+    //    its first file counts. A file without key statistics overlaps
+    //    every file, as compaction merges it with all, and a compaction
+    //    writes it without statistics again: it is named instead of advice.
     if (buckets.isEmpty) {
-      val overlaps = CellStoreCompaction.overlapping(
-        readable.map { case (f, blocks) => CellStoreCompaction.FileSpan(f, blocks) })
-        .map(_.size - 1).sum
+      val spans = readable.map { case (f, blocks) => CellStoreCompaction.FileSpan(f, blocks) }
+      val overlaps = CellStoreCompaction.overlapping(spans).map(_.size - 1).sum
+      val keyless = spans.filter(s => s.blocks.exists(_.rows > 0) && s.range.isEmpty).map(_.file)
       rows += (if (overlaps == 0)
         CheckRow("region_overlap", path, "OK", "region key ranges disjoint")
+      else if (keyless.nonEmpty) CheckRow("region_overlap", path, "INFO",
+        s"$overlaps file(s) overlap an earlier key range; without key statistics (keys too long " +
+          s"for parquet's min/max), ${keyless.mkString(",")} overlap every region, also after a compaction")
       else CheckRow("region_overlap", path, "INFO",
         s"$overlaps file(s) overlap an earlier key range — a major compaction would restore disjoint regions"))
     }

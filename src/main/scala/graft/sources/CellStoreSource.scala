@@ -46,9 +46,10 @@ import org.apache.spark.unsafe.types.UTF8String
  *    store reads only the row groups that can match.
  *  - **One bound per column.** Every prunable column gets one
  *    [[CellStoreSource.Bound]] from the pushed filters: the interval its
- *    comparisons allow and the values its `EqualTo`/`In` pin it to, in the
- *    column's order (unsigned bytes; `family` as UTF-8 bytes; longs for
- *    `ts`). A row group is kept when every column's statistics can hold a
+ *    comparisons allow and the values its `EqualTo`/`In` pin it to, all as
+ *    bytes in one unsigned order (`family` as UTF-8 bytes; `ts` big-endian
+ *    with its sign bit flipped, so that it orders as the longs do). A row
+ *    group is kept when every column's statistics can hold a
  *    value of its bound; an `Or` of conjunctions keeps it when any branch
  *    does (the MultiRowRangeFilter shape).
  *  - **Chunks.** A range-store scan splits each surviving region file into
@@ -122,20 +123,24 @@ object CellStoreSource {
 
   // Footer-statistics pruning ----------------------------------------------
 
-  /** The order each prunable column's values and statistics compare in:
-    * bytes for `rowKey` and `qualifier`, `family` as its UTF-8 bytes (which
-    * order as its code points do, as Spark compares strings), longs for `ts`. */
-  private val ColumnOrder: Map[String, Ordering[Any]] = Map(
-    "rowKey" -> KeyOrder, "family" -> KeyOrder, "qualifier" -> KeyOrder, "ts" -> Ordering.Long)
-    .map { case (c, o) => c -> o.asInstanceOf[Ordering[Any]] }
+  /** A column's `[min, max]` as bytes. Every prunable column's values and
+    * statistics compare in [[KeyOrder]]: `rowKey` and `qualifier` as they
+    * are, `family` as its UTF-8 bytes (which order as its code points do, as
+    * Spark compares strings), `ts` as [[tsBytes]]. */
+  private[graft] type MinMax = (Array[Byte], Array[Byte])
 
-  /** A pushed literal in its column's order; None when the column is not
+  /** A `ts` as 8 bytes that order unsigned as the longs do: big-endian with
+    * the sign bit flipped. */
+  private[graft] def tsBytes(ts: Long): Array[Byte] =
+    java.nio.ByteBuffer.allocate(8).putLong(ts ^ Long.MinValue).array()
+
+  /** A pushed literal as its column's bytes; None when the column is not
     * prunable or the literal is not of the column's type. */
-  private def valueOf(col: String, v: Any): Option[Any] = (col, v) match {
+  private def valueOf(col: String, v: Any): Option[Array[Byte]] = (col, v) match {
     case ("rowKey" | "qualifier", b: Array[Byte]) => Some(b)
     case ("family", s: String)                    => Some(s.getBytes(UTF_8))
     case ("ts", n @ (_: java.lang.Long | _: java.lang.Integer | _: java.lang.Short)) =>
-      Some(n.asInstanceOf[Number].longValue)
+      Some(tsBytes(n.asInstanceOf[Number].longValue))
     case _ => None
   }
 
@@ -143,32 +148,30 @@ object CellStoreSource {
     * (`(value, inclusive)` ends, None = unbounded) and the values its
     * `EqualTo` / `In` conjuncts pin it to (None = any value). */
   private[graft] final case class Bound(col: String,
-      lower: Option[(Any, Boolean)] = None, upper: Option[(Any, Boolean)] = None,
-      values: Option[Seq[Any]] = None) {
-    private val ord = ColumnOrder(col)
-
+      lower: Option[(Array[Byte], Boolean)] = None, upper: Option[(Array[Byte], Boolean)] = None,
+      values: Option[Seq[Array[Byte]]] = None) {
     /** Both bounds at once: the tighter end on each side, the common values. */
     def and(o: Bound): Bound = Bound(col,
       (lower ++ o.lower).reduceOption(tighter(1)), (upper ++ o.upper).reduceOption(tighter(-1)),
-      (values ++ o.values).reduceOption((a, b) => a.filter(x => b.exists(ord.equiv(x, _)))))
+      (values ++ o.values).reduceOption((a, b) => a.filter(x => b.exists(KeyOrder.equiv(x, _)))))
 
-    private def tighter(side: Int)(a: (Any, Boolean), b: (Any, Boolean)): (Any, Boolean) = {
-      val c = side * ord.compare(a._1, b._1)
+    private def tighter(side: Int)(a: (Array[Byte], Boolean), b: (Array[Byte], Boolean)) = {
+      val c = side * KeyOrder.compare(a._1, b._1)
       if (c > 0 || c == 0 && !a._2) a else b
     }
 
-    private def overlaps(min: Any, max: Any): Boolean =
-      lower.forall { case (l, incl) => ord.gt(max, l) || incl && ord.equiv(max, l) } &&
-        upper.forall { case (u, incl) => ord.lt(min, u) || incl && ord.equiv(min, u) }
+    private def overlaps(min: Array[Byte], max: Array[Byte]): Boolean =
+      lower.forall { case (l, incl) => KeyOrder.gt(max, l) || incl && KeyOrder.equiv(max, l) } &&
+        upper.forall { case (u, incl) => KeyOrder.lt(min, u) || incl && KeyOrder.equiv(min, u) }
 
     /** The pinned values inside the interval, sorted. */
-    private lazy val pinned = values.map(_.filter(v => overlaps(v, v)).sorted(ord).toIndexedSeq)
+    private lazy val pinned = values.map(_.filter(v => overlaps(v, v)).sorted(KeyOrder).toIndexedSeq)
 
     /** Can values spanning `[min, max]` (both inclusive) hold a match? */
-    def keeps(min: Any, max: Any): Boolean = pinned match {
+    def keeps(min: Array[Byte], max: Array[Byte]): Boolean = pinned match {
       case Some(vs) =>
-        val i = vs.search(min)(ord).insertionPoint
-        i < vs.size && ord.lteq(vs(i), max)
+        val i = vs.search(min)(KeyOrder).insertionPoint
+        i < vs.size && KeyOrder.lteq(vs(i), max)
       case None => overlaps(min, max)
     }
   }
@@ -177,7 +180,7 @@ object CellStoreSource {
     * or non-empty `In` on a prunable column, with literals of its type. */
   private object Leaf {
     def unapply(f: Filter): Option[Bound] = {
-      def on(c: String, vs: Seq[Any])(bound: Seq[Any] => Bound): Option[Bound] = {
+      def on(c: String, vs: Seq[Any])(bound: Seq[Array[Byte]] => Bound): Option[Bound] = {
         val xs = vs.flatMap(valueOf(c, _))
         if (vs.nonEmpty && xs.size == vs.size) Some(bound(xs)) else None
       }
@@ -218,7 +221,8 @@ object CellStoreSource {
   /** The bounds a conjunction of pushed filters puts on each column. */
   private[graft] final case class ScanBounds(cols: Map[String, Bound]) {
     /** Can values of `col` spanning `[min, max]` match? */
-    def keeps(col: String, min: Any, max: Any): Boolean = cols.get(col).forall(_.keeps(min, max))
+    def keeps(col: String, min: Array[Byte], max: Array[Byte]): Boolean =
+      cols.get(col).forall(_.keeps(min, max))
     /** Can this row group hold a match? A column without statistics keeps
       * it: pruning only skips IO, and residual filters re-check rows. */
     def keep(info: BlockInfo): Boolean =
@@ -265,7 +269,7 @@ object CellStoreSource {
     * EqualTo and In contribute sets, conjuncts intersect. None = not
     * key-set-constrained (range predicates don't enumerate keys). */
   private[graft] def exactKeys(filters: Seq[Filter]): Option[Seq[Array[Byte]]] =
-    boundsOf(filters).cols.get("rowKey").flatMap(_.values).map(_.map(_.asInstanceOf[Array[Byte]]))
+    boundsOf(filters).cols.get("rowKey").flatMap(_.values)
 
   /** Is this filter one of the key-set conjuncts [[exactKeys]] reads off
     * the top level of a conjunction? A local scan answers these itself. */
@@ -275,21 +279,19 @@ object CellStoreSource {
   }
 
   /** One row group's footer metadata: `stats` holds each prunable column's
-    * `[min, max]` in its bound's order (absent without statistics), and
+    * `[min, max]` as its bound's bytes (absent without statistics), and
     * `uncompressed` is set when any column chunk is stored without a codec. */
   private[graft] final case class BlockInfo(index: Int, rows: Long, compressedBytes: Long,
-      stats: Map[String, (Any, Any)], uncompressed: Boolean = false) {
-    def keyRange: Option[(Array[Byte], Array[Byte])] = stats.get("rowKey").map {
-      case (mn, mx) => (mn.asInstanceOf[Array[Byte]], mx.asInstanceOf[Array[Byte]])
-    }
+      stats: Map[String, MinMax], uncompressed: Boolean = false) {
+    def keyRange: Option[MinMax] = stats.get("rowKey")
   }
 
   private def blockInfo(index: Int, block: BlockMetaData): BlockInfo = {
     val chunks = block.getColumns.asScala.toSeq
     BlockInfo(index, block.getRowCount, block.getCompressedSize,
-      chunks.flatMap[(String, (Any, Any))] { c =>
+      chunks.flatMap[(String, MinMax)] { c =>
         (c.getPath.toDotString, Option(c.getStatistics).filter(_.hasNonNullValue)) match {
-          case ("ts", Some(st: LongStatistics)) => Some("ts" -> (st.getMin, st.getMax))
+          case ("ts", Some(st: LongStatistics)) => Some("ts" -> (tsBytes(st.getMin), tsBytes(st.getMax)))
           case (n @ ("rowKey" | "family" | "qualifier"), Some(st: BinaryStatistics)) =>
             Some(n -> (st.getMinBytes, st.getMaxBytes))
           case _ => None
@@ -308,7 +310,7 @@ object CellStoreSource {
   /** A file's rowKey `[min, max]` from its row groups' statistics. None when
     * a row group with rows has none (parquet keeps no min/max for a chunk
     * whose min and max reach 4 KiB together): such a file may hold any key. */
-  private[graft] def keyRangeOf(blocks: Seq[BlockInfo]): Option[(Array[Byte], Array[Byte])] = {
+  private[graft] def keyRangeOf(blocks: Seq[BlockInfo]): Option[MinMax] = {
     val ranges = blocks.filter(_.rows > 0).map(_.keyRange)
     if (ranges.isEmpty || ranges.contains(None)) None
     else Some((ranges.flatten.map(_._1).min(KeyOrder), ranges.flatten.map(_._2).max(KeyOrder)))
@@ -721,13 +723,16 @@ class CellStoreGroupByReader(
   override def close(): Unit = batches.close()
 }
 
-/** Footer-only scan answering a pushed whole-store aggregation: one
-  * partition, one row, no page IO. */
+/** Scan answering a pushed whole-store aggregation from the footers: one
+  * partition, one row. A row group without rowKey statistics (parquet keeps
+  * none for a chunk whose min and max reach 4 KiB together) has its rowKey
+  * column decoded on the driver; every other row group costs no page IO. */
 class CellStoreAggScan(
     path: String,
     agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
     extends Scan with Batch {
   import org.apache.spark.sql.connector.expressions.aggregate.{CountStar, Max, Min}
+  import CellStoreSource.{KeyOrder, MinMax}
 
   private val aggs = agg.aggregateExpressions.toSeq
 
@@ -739,32 +744,32 @@ class CellStoreAggScan(
   })
   override def toBatch: Batch = this
   override def description(): String =
-    s"CellStoreAggScan path=$path, aggs=${aggs.mkString("[", ",", "]")} (footer-only)"
+    s"CellStoreAggScan path=$path, aggs=${aggs.mkString("[", ",", "]")} (footer statistics)"
 
   override def planInputPartitions(): Array[InputPartition] = {
     val dir = new Path(path)
-    val files = CellStoreSource.dataFiles(HadoopConf.fs(dir).listStatus(dir).toSeq).map { st =>
-      val blocks = CellStoreSource.footerBlocks(st.getPath)
-      (blocks.map(_.rows).sum, CellStoreSource.keyRangeOf(blocks).orElse(decodedKeyRange(st.getPath)))
+    val blocks = CellStoreSource.dataFiles(HadoopConf.fs(dir).listStatus(dir).toSeq)
+      .map(st => st.getPath -> CellStoreSource.footerBlocks(st.getPath))
+    val ranges = blocks.flatMap { case (file, bs) =>
+      val (ranged, keyless) = bs.filter(_.rows > 0).partition(_.keyRange.isDefined)
+      ranged.flatMap(_.keyRange) ++ decodedKeyRange(file, keyless.map(_.index))
     }
-    val ranges = files.flatMap(_._2)
-    Array(CellStoreAggPartition(files.map(_._1).sum,
-      ranges.map(_._1).minOption(CellStoreSource.KeyOrder),
-      ranges.map(_._2).maxOption(CellStoreSource.KeyOrder)))
+    Array(CellStoreAggPartition(blocks.flatMap(_._2).map(_.rows).sum,
+      ranges.map(_._1).minOption(KeyOrder), ranges.map(_._2).maxOption(KeyOrder)))
   }
 
-  /** The rowKey `[min, max]` of a file whose footer lacks key statistics,
-    * decoded from its rowKey column on the driver; None for a file of no rows. */
-  private def decodedKeyRange(file: Path): Option[(Array[Byte], Array[Byte])] = {
-    val reader = new CellStoreColumnarReader(Seq(CellChunk(file.toString, 0, Int.MaxValue)),
+  /** The rowKey `[min, max]` of some row groups of a file, decoded from
+    * their rowKey column on the driver; None for no groups. */
+  private def decodedKeyRange(file: Path, groups: Seq[Int]): Option[MinMax] = {
+    if (groups.isEmpty) return None
+    val reader = new CellStoreColumnarReader(groups.map(g => CellChunk(file.toString, g, g + 1)),
       StructType(Seq(CellStoreSource.Schema("rowKey"))), CellStoreSource.boundsSetOf(Nil))
-    var range = Option.empty[(Array[Byte], Array[Byte])]
+    var range = Option.empty[MinMax]
     try while (reader.next()) {
       val batch = reader.get()
       (0 until batch.numRows()).foreach { i =>
         val k = batch.column(0).getBinary(i)
-        range = Some(range.fold((k, k)) { case (lo, hi) =>
-          (CellStoreSource.KeyOrder.min(lo, k), CellStoreSource.KeyOrder.max(hi, k)) })
+        range = Some(range.fold((k, k)) { case (lo, hi) => (KeyOrder.min(lo, k), KeyOrder.max(hi, k)) })
       }
     } finally reader.close()
     range

@@ -128,33 +128,36 @@ class CellStoreSourceSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("a large region file splits into row-group-aligned chunk partitions") {
-    withMaxPartitionBytes(32768) {
-      val dir = java.nio.file.Files.createTempDirectory("cellstore_split").toString
-      val cells = CellTable.fromTable(spark, sf01, "customer")
-      // ONE region file, forced into many small row groups
-      val hconf = spark.sparkContext.hadoopConfiguration
-      val prevBlock = hconf.get("parquet.block.size")
-      hconf.setInt("parquet.block.size", 16384)
-      try cells.coalesce(1)
-        .sortWithinPartitions("rowKey", "family", "qualifier", "ts")
-        .write.mode("overwrite").parquet(dir)
-      finally {
-        if (prevBlock == null) hconf.unset("parquet.block.size")
-        else hconf.set("parquet.block.size", prevBlock)
-      }
-      val files = new java.io.File(dir).listFiles()
-        .filter(_.getName.endsWith(".parquet"))
-      assert(files.length == 1)
-      val footer = graft.sources.HadoopConf.openParquet(
-        new org.apache.hadoop.fs.Path(files.head.getPath))
-      val nGroups = try footer.getRowGroups.size() finally footer.close()
-      assert(nGroups > 1, s"test setup needs a multi-row-group file, got $nGroups")
+    val dir = java.nio.file.Files.createTempDirectory("cellstore_split").toString
+    val cells = CellTable.fromTable(spark, sf01, "customer")
+    // ONE region file, forced into many small row groups
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val prevBlock = hconf.get("parquet.block.size")
+    hconf.setInt("parquet.block.size", 16384)
+    try cells.coalesce(1)
+      .sortWithinPartitions("rowKey", "family", "qualifier", "ts")
+      .write.mode("overwrite").parquet(dir)
+    finally {
+      if (prevBlock == null) hconf.unset("parquet.block.size")
+      else hconf.set("parquet.block.size", prevBlock)
+    }
+    val files = new java.io.File(dir).listFiles()
+      .filter(_.getName.endsWith(".parquet"))
+    assert(files.length == 1)
+    val footer = graft.sources.HadoopConf.openParquet(
+      new org.apache.hadoop.fs.Path(files.head.getPath))
+    val nGroups = try footer.getRowGroups.size() finally footer.close()
+    assert(nGroups > 1, s"test setup needs a multi-row-group file, got $nGroups")
 
+    // the unsplit read, at the default maxPartitionBytes: one chunk
+    val unsplit = spark.read.format("cellstore").load(dir)
+    assert(unsplit.rdd.getNumPartitions == 1)
+    val whole = spark.createDataFrame(unsplit.collect().toSeq.asJava, unsplit.schema)
+    withMaxPartitionBytes(32768) {
       val split = spark.read.format("cellstore").load(dir)
       assert(split.rdd.getNumPartitions > 1,
         s"expected chunked partitions, got ${split.rdd.getNumPartitions}")
       // identical content to the unsplit read, and GET pruning still works
-      val whole = spark.read.format("cellstore").load(dir)
       assert(split.count() == cells.count())
       assert(split.exceptAll(whole).isEmpty && whole.exceptAll(split).isEmpty)
       val get = split.filter(col("rowKey") === lit(key(42L)))

@@ -19,8 +19,9 @@ class PruningDecisionSpec extends AnyFunSuite {
       key: Option[(Long, Long)] = None, ts: Option[(Long, Long)] = None,
       fam: Option[(String, String)] = None,
       qual: Option[(String, String)] = None): BlockInfo =
-    BlockInfo(0, 10L, 100L, Map[String, Option[(Any, Any)]](
-      "rowKey" -> key.map { case (lo, hi) => (k(lo), k(hi)) }, "ts" -> ts,
+    BlockInfo(0, 10L, 100L, Map(
+      "rowKey" -> key.map { case (lo, hi) => (k(lo), k(hi)) },
+      "ts" -> ts.map { case (lo, hi) => (CellStoreSource.tsBytes(lo), CellStoreSource.tsBytes(hi)) },
       "family" -> fam.map { case (lo, hi) => (b(lo), b(hi)) },
       "qualifier" -> qual.map { case (lo, hi) => (b(lo), b(hi)) })
       .collect { case (c, Some(range)) => c -> range })
@@ -59,6 +60,8 @@ class PruningDecisionSpec extends AnyFunSuite {
     ("ts >=", Seq(GreaterThanOrEqual("ts", 2999L)), "1", "01111", None),
     ("ts <", Seq(LessThan("ts", 1000L)), "1", "00011", None),
     ("ts <=", Seq(LessThanOrEqual("ts", 1000L)), "1", "10011", None),
+    ("ts > a negative", Seq(GreaterThan("ts", -1L)), "1", "11111", None),
+    ("ts < a negative", Seq(LessThan("ts", -1L)), "1", "00011", None),
     ("ts IN", Seq(In("ts", Array(1500L, 3500L))), "1", "10111", None),
     ("family =", Seq(EqualTo("family", "a")), "1", "11011", None),
     ("family = inside a block's range", Seq(EqualTo("family", "b")), "1", "01011", None),
