@@ -83,27 +83,47 @@ class CellStoreSourceSpec extends AnyFunSuite with SparkTestBase {
   test("pushed MIN/MAX(rowKey) decode the keys of a file without key statistics") {
     // parquet keeps no min/max for a binary column chunk whose min plus max
     // reach 4,096 bytes: a 5,000-byte key leaves its file without them
-    val longKeys = Seq("largest" -> Array.fill[Byte](5000)(-1), "smallest" -> Array.fill[Byte](5000)(0))
-    for ((which, longKey) <- longKeys; regions <- Seq(1, 2)) {
-      val dir = java.nio.file.Files.createTempDirectory("cellstore_longkey").toString + "/s"
-      val keys = longKey +: (0L until 40L).map(i => 1.toByte +: key(i))
-      val rows = keys.map(k => org.apache.spark.sql.Row(
-        k, "cf", "q".getBytes("UTF-8"), CellTable.BaseTs, "Put", "v".getBytes("UTF-8")))
-      spark.createDataFrame(rows.asJava, graft.sources.CellStoreSource.Schema)
-        .write.format("cellstore").option("numRegions", regions.toString).mode("overwrite").save(dir)
-      def agg(df: DataFrame) =
-        df.agg(max(col("rowKey")).as("hi"), min(col("rowKey")).as("lo"), count(lit(1)).as("n"))
+    def cells(keys: Seq[Array[Byte]]) = spark.createDataFrame(keys.map(k => org.apache.spark.sql.Row(
+      k, "cf", "q".getBytes("UTF-8"), CellTable.BaseTs, "Put", "v".getBytes("UTF-8"))).asJava,
+      graft.sources.CellStoreSource.Schema)
+    def agg(df: DataFrame) =
+      df.agg(max(col("rowKey")).as("hi"), min(col("rowKey")).as("lo"), count(lit(1)).as("n"))
+    def bytes(r: org.apache.spark.sql.Row, c: String) = Option(r.getAs[Array[Byte]](c)).map(_.toSeq)
+    def check(dir: String, rows: Long, label: String): Unit = {
       val pushed = agg(spark.read.format("cellstore").load(dir))
       val plan = pushed.queryExecution.executedPlan.toString
       assert(plan.contains("CellStoreAggScan"), s"expected pushed min/max in:\n$plan")
       val got = pushed.collect().head
       val want = agg(spark.read.parquet(dir)).collect().head
-      val label = s"$which key of 5,000 bytes, $regions region(s)"
-      def bytes(r: org.apache.spark.sql.Row, c: String) = Option(r.getAs[Array[Byte]](c)).map(_.toSeq)
       assert(bytes(got, "hi") == bytes(want, "hi"), label)
       assert(bytes(got, "lo") == bytes(want, "lo"), label)
-      assert(got.getAs[Long]("n") == want.getAs[Long]("n") && want.getAs[Long]("n") == 41L, label)
+      assert(got.getAs[Long]("n") == want.getAs[Long]("n") && want.getAs[Long]("n") == rows, label)
     }
+    val largest = Array.fill[Byte](5000)(-1)
+    for ((which, longKey) <- Seq("largest" -> largest, "smallest" -> Array.fill[Byte](5000)(0));
+         regions <- Seq(1, 2)) {
+      val dir = java.nio.file.Files.createTempDirectory("cellstore_longkey").toString + "/s"
+      cells(longKey +: (0L until 40L).map(i => 1.toByte +: key(i)))
+        .write.format("cellstore").option("numRegions", regions.toString).mode("overwrite").save(dir)
+      check(dir, 41L, s"$which key of 5,000 bytes, $regions region(s)")
+    }
+    // one file of several row groups: only the last, which holds the long
+    // key, lacks statistics; the others answer from the footer
+    val dir = java.nio.file.Files.createTempDirectory("cellstore_longkey_groups").toString
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val prevBlock = hconf.get("parquet.block.size")
+    hconf.setInt("parquet.block.size", 16384)
+    try cells((0L until 4000L).map(key) :+ largest).coalesce(1).sortWithinPartitions("rowKey")
+      .write.mode("overwrite").parquet(dir)
+    finally {
+      if (prevBlock == null) hconf.unset("parquet.block.size")
+      else hconf.set("parquet.block.size", prevBlock)
+    }
+    val blocks = graft.sources.CellStoreSource.footerBlocks(
+      new org.apache.hadoop.fs.Path(dataFiles(dir).head.getPath))
+    assert(blocks.size > 1 && blocks.init.forall(_.keyRange.isDefined) && blocks.last.keyRange.isEmpty,
+      s"test setup needs key statistics on every row group but the last: ${blocks.map(_.keyRange.isDefined)}")
+    check(dir, 4001L, "largest key of 5,000 bytes in the last of several row groups")
   }
 
   test("scan is vectorized: batches decode columnar, count-only scans too") {
